@@ -1,4 +1,5 @@
 package graft
+import graft.Verify.jsonString
 import org.apache.spark.sql.SparkSession
 
 /** Headline bench. Prints TWO JSON lines and writes ONE file:
@@ -253,7 +254,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val wallT0 = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus()
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     // HARD wall-clock budget for the whole run. Round 16's 32-core driver
     // bench died on the driver's external timeout (BENCH_r16.json:
@@ -277,16 +278,7 @@ object Bench {
       over
     }
     ensureLocaldata()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.tools.Tuning.localDir)
-      .config("spark.sql.join.preferSortMergeJoin",
-        graft.tools.Tuning.preferSortMergeJoin)
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // session warmup (JIT, codegen, FileSystem init, ops codegen paths)
     // on the smallest sf, outside the timings
@@ -741,18 +733,13 @@ object Bench {
         s""","cap_sec":$smokeCapSec,"capped":$cap$adj$rowsJ}"""
     }.getOrElse("")
 
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
     val failedJson =
       if (failures.isEmpty) ""
       else s""","failed":${failures.map { case (n, e) =>
-        s"${jstr(n)}:${jstr(e)}" }.mkString("{", ",", "}")}"""
+        s"${jsonString(n)}:${jsonString(e)}" }.mkString("{", ",", "}")}"""
     val budgetJson = s""","budget_sec":${num(budgetSec)},"wall_sec":${num(elapsedSec)}""" +
       (if (budgetSkipped.isEmpty) ""
-       else s""","budget_skipped":${budgetSkipped.map(jstr).mkString("[", ",", "]")}""")
+       else s""","budget_skipped":${budgetSkipped.map(jsonString).mkString("[", ",", "]")}""")
     val detail = s"""{"metric":"detail","value":${num(total)},"unit":"sec"""" +
       s""","queries":${obj(main, _._1)},"spread":${obj(main, _._2)}""" +
       s""","reps":$reps,"sf":"$sfDir"$sf1Json$smokeJson$failedJson$regsJson$budgetJson}"""
@@ -797,8 +784,8 @@ object Bench {
     val failedHead =
       if (failures.isEmpty) ""
       else {
-        val names = failures.keys.take(15).map(jstr) ++
-          (if (failures.size > 15) Seq(jstr(s"+${failures.size - 15} more")) else Nil)
+        val names = failures.keys.take(15).map(jsonString) ++
+          (if (failures.size > 15) Seq(jsonString(s"+${failures.size - 15} more")) else Nil)
         s""","failed_count":${failures.size},"failed":${names.mkString("[", ",", "]")}"""
       }
     // regression block on the headline: count + worst few names only

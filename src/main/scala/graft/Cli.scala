@@ -1,13 +1,18 @@
 package graft
 
 import graft.engine.GraftEngine
-import org.apache.spark.sql.SparkSession
 
 /** CLI entry point — the analogue of the reference's Main.scala:11-22
   * (`query.sparql mappings.ttl config [master]`): runs one SPARQL query
   * over the configured data lake and prints up to 20 rows + the count.
   */
 object Cli {
+  /** The innermost cause (chain walk bounded against cause cycles):
+    * Spark wraps task failures, and the outer message names the wrapper,
+    * not what went wrong. */
+  private def rootCause(e: Throwable): Throwable =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(32).toSeq.last
+
   def main(args: Array[String]): Unit = {
     if (args.length < 3) {
       System.err.println("usage: graft.Cli <query.sparql> <mappings.ttl> <config.json> " +
@@ -22,9 +27,7 @@ object Cli {
       val s = scala.io.Source.fromFile(p)
       try s.mkString finally s.close()
     }
-    val spark = GraftSession
-      .builder(master, sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-      .getOrCreate()
+    val spark = GraftSession.builder(master, GraftSession.cpus()).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
       // `sqlgen` picks the SQL-generation engine — the counterpart of the
@@ -45,7 +48,8 @@ object Cli {
       println(s"total: ${df.count()} rows")
     } catch {
       case e: Exception =>
-        System.err.println(s"query failed: ${e.getMessage}")
+        val root = rootCause(e)
+        System.err.println(s"query failed: ${root.getClass.getName}: ${root.getMessage}")
         sys.exit(1)
     } finally spark.stop()
   }

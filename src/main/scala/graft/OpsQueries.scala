@@ -1,5 +1,6 @@
 package graft
 
+import graft.fixtures.TpchLake
 import graft.ops.{Dedup, EventAnalytics, Multimodal, Pipeline, Retrieval, Similarity, TemporalJoin, TextOps}
 import graft.sources.NtSource
 import graft.streaming.EventStreams
@@ -2728,9 +2729,9 @@ object OpsQueries {
     // and consistent with the driver-side stats.
     ("l02_compact_small_files",
       (s, sf) => {
-        val label = new java.io.File(sf).getName
-        val in = s"/root/repo/target/derived/$label/compact_in"
-        val out = s"/root/repo/target/derived/$label/compact_out"
+        val derived = TpchLake.derivedDir(sf)
+        val in = s"$derived/compact_in"
+        val out = s"$derived/compact_out"
         if (!new java.io.File(s"$in/_SUCCESS").exists())
           docs(s, sf).repartition(40).write.mode("overwrite").parquet(in)
         val inBytes = new java.io.File(in).listFiles()
@@ -2756,8 +2757,7 @@ object OpsQueries {
     // gone (they would double-count rows on this directory scan)
     ("l07_vacuum_orphans",
       (s, sf) => {
-        val label = new java.io.File(sf).getName
-        val dir = s"/root/repo/target/derived/$label/vacuum_tbl"
+        val dir = s"${TpchLake.derivedDir(sf)}/vacuum_tbl"
         val hconf = s.sparkContext.hadoopConfiguration
         val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(hconf)
         // fresh fixture every run — vacuum mutates the directory
@@ -2792,8 +2792,7 @@ object OpsQueries {
     // the scan, before any I/O) is plan-guarded in PlanQualitySpec.
     ("l03_partitioned_lake",
       (s, sf) => {
-        val label = new java.io.File(sf).getName
-        val dir = s"/root/repo/target/derived/$label/lake_by_lang"
+        val dir = s"${TpchLake.derivedDir(sf)}/lake_by_lang"
         if (!new java.io.File(s"$dir/_SUCCESS").exists())
           graft.ops.Layout.writePartitioned(docs(s, sf), dir, Seq("lang"))
         s.read.parquet(dir).filter(col("lang") === "en")
@@ -2813,8 +2812,7 @@ object OpsQueries {
     // one-field query
     ("q58_nested_pruning",
       (s, sf) => {
-        val label = new java.io.File(sf).getName
-        val dir = s"/root/repo/target/derived/$label/nested_events"
+        val dir = s"${TpchLake.derivedDir(sf)}/nested_events"
         if (!new java.io.File(s"$dir/_SUCCESS").exists())
           EventStreams.readEvents(s, s"$sf/events.parquet")
             .select(col("event_id"),
@@ -2834,8 +2832,7 @@ object OpsQueries {
     // the source table exactly
     ("q57_text_lines",
       (s, sf) => {
-        val label = new java.io.File(sf).getName
-        val dir = s"/root/repo/target/derived/$label/text_lines"
+        val dir = s"${TpchLake.derivedDir(sf)}/text_lines"
         if (!new java.io.File(s"$dir/_SUCCESS").exists())
           docs(s, sf).select(concat(col("doc_id").cast("string"), lit("\t"),
               col("text")).as("value"))
@@ -2858,8 +2855,7 @@ object OpsQueries {
     // (text_match must be true for every row), plus the byte length
     ("mm08_binaryfile_ingest",
       (s, sf) => {
-        val label = new java.io.File(sf).getName
-        val dir = new java.io.File(s"/root/repo/target/derived/$label/bin_media")
+        val dir = new java.io.File(s"${TpchLake.derivedDir(sf)}/bin_media")
         if (!new java.io.File(dir, "_DONE").exists()) {
           dir.mkdirs()
           docs(s, sf).filter(col("doc_id") < 20)
@@ -2890,8 +2886,7 @@ object OpsQueries {
     // deletes; batch 2: %11 updates with %5 deletes plus new keys)
     ("l05_time_travel",
       (s, sf) => {
-        val label = new java.io.File(sf).getName
-        val dir = s"/root/repo/target/derived/$label/cdc_ledger"
+        val dir = s"${TpchLake.derivedDir(sf)}/cdc_ledger"
         if (!new java.io.File(s"$dir/batch=2/_SUCCESS").exists()) {
           val d = docs(s, sf).select(col("doc_id"), col("text"))
           d.write.mode("overwrite").parquet(s"$dir/base")
@@ -2940,8 +2935,7 @@ object OpsQueries {
     // property verdict that pruning actually engaged
     ("l06_stats_skipping",
       (s, sf) => {
-        val label = new java.io.File(sf).getName
-        val dir = s"/root/repo/target/derived/$label/stats_lake"
+        val dir = s"${TpchLake.derivedDir(sf)}/stats_lake"
         if (!new java.io.File(s"${dir}_manifest/_SUCCESS").exists())
           graft.ops.Layout.writeWithManifest(s,
             docs(s, sf).repartitionByRange(8, col("doc_id")), dir, "doc_id")
@@ -2964,8 +2958,7 @@ object OpsQueries {
     // data bytes.
     ("l04_schema_evolution",
       (s, sf) => {
-        val label = new java.io.File(sf).getName
-        val dir = s"/root/repo/target/derived/$label/evolving_lake"
+        val dir = s"${TpchLake.derivedDir(sf)}/evolving_lake"
         if (!new java.io.File(s"$dir/batch=2/_SUCCESS").exists()) {
           docs(s, sf).filter(col("doc_id") % 2 === 0)
             .select(col("doc_id"), col("text"))
@@ -6333,8 +6326,7 @@ object OpsQueries {
 
     ("st16_late_drop_audit",
       (s, sf) => {
-        val label = new java.io.File(sf).getName
-        val dir = s"/root/repo/target/derived/$label/latedrop"
+        val dir = s"${TpchLake.derivedDir(sf)}/latedrop"
         val hconf = s.sparkContext.hadoopConfiguration
         val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(hconf)
         fs.delete(new org.apache.hadoop.fs.Path(dir), true)
@@ -6744,9 +6736,9 @@ object OpsQueries {
 
     ("dq03_schema_drift",
       (s, sf) => {
-        val label = new java.io.File(sf).getName
-        val v1 = s"/root/repo/target/derived/$label/drift_v1"
-        val v2 = s"/root/repo/target/derived/$label/drift_v2"
+        val derived = TpchLake.derivedDir(sf)
+        val v1 = s"$derived/drift_v1"
+        val v2 = s"$derived/drift_v2"
         val o = s.read.parquet(s"$sf/orders.parquet")
         if (!new java.io.File(s"$v1/_SUCCESS").exists())
           o.select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
@@ -7276,7 +7268,7 @@ object OpsQueries {
             val delta = full.filter(col("vec_id") % 10 === 0)
             val tomb = full.filter(col("vec_id") % 7 === 3)
             val fit = annIvfAuto(base)
-            val dir = "/root/repo/target/derived/ivf_e17"
+            val dir = TpchLake.derivedDir("ivf_e17")
             Similarity.saveIvf(fit, dir)
             val reloaded = Similarity.loadIvf(s, dir)
             centsOk = reloaded.centroids.length == fit.centroids.length &&
@@ -7702,15 +7694,15 @@ object OpsQueries {
     // oracle's plain join
     ("l11_bucketed_join",
       (s, sf) => {
-        val label = new java.io.File(sf).getName
-        val tag = label.replace('.', '_')
+        val derived = TpchLake.derivedDir(sf)
+        val tag = new java.io.File(sf).getName.replace('.', '_')
         val ot = s"bucketed_orders_$tag"; val ct = s"bucketed_customer_$tag"
         if (!s.catalog.tableExists(ot))
           graft.ops.Layout.writeBucketed(s, s.read.parquet(s"$sf/orders.parquet"),
-            s"/root/repo/target/derived/$label/bucketed_orders", ot, 8, "o_custkey")
+            s"$derived/bucketed_orders", ot, 8, "o_custkey")
         if (!s.catalog.tableExists(ct))
           graft.ops.Layout.writeBucketed(s, s.read.parquet(s"$sf/customer.parquet"),
-            s"/root/repo/target/derived/$label/bucketed_customer", ct, 8, "c_custkey")
+            s"$derived/bucketed_customer", ct, 8, "c_custkey")
         graft.ops.Layout.bucketedJoin(s, ot, ct, "o_custkey", "c_custkey")
           .groupBy(col("c_mktsegment").as("segment"))
           .agg(count(lit(1)).as("n_orders"),
@@ -7758,8 +7750,7 @@ object OpsQueries {
     // timed unit is one ADC scan + exact re-rank. Gate-identical knobs.
     "s09_pq_topk" -> ((s, sf) => {
       val e = emb(s, sf).filter(col("vec_id") =!= 0)
-      val label = new java.io.File(sf).getName
-      val dir = s"/root/repo/target/derived/$label/pq"
+      val dir = s"${TpchLake.derivedDir(sf)}/pq"
       if (!new java.io.File(s"$dir/codes/_SUCCESS").exists())
         Similarity.savePq(Similarity.buildPq(e, col("vec_id"), col("embedding"),
           m = 16, kCode = 16), dir)
@@ -7773,8 +7764,7 @@ object OpsQueries {
     // with s01's full-width brute scan. Gate-identical rerank rule.
     "s10_sq8_topk" -> ((s, sf) => {
       val e = emb(s, sf).filter(col("vec_id") =!= 0)
-      val label = new java.io.File(sf).getName
-      val dir = s"/root/repo/target/derived/$label/sq8"
+      val dir = s"${TpchLake.derivedDir(sf)}/sq8"
       if (!new java.io.File(s"$dir/codes/_SUCCESS").exists())
         Similarity.saveSq8(Similarity.buildSq8(e, col("vec_id"), col("embedding")), dir)
       Similarity.loadSq8(s, dir, e, col("vec_id"), col("embedding"))
@@ -7790,8 +7780,7 @@ object OpsQueries {
     // this; the recall/row-identity gate stays in `queries`.
     "e16_ivf_delete" -> ((s, sf) => {
       val e = emb(s, sf)
-      val label = new java.io.File(sf).getName
-      val dir = s"/root/repo/target/derived/$label/ivf_bench"
+      val dir = s"${TpchLake.derivedDir(sf)}/ivf_bench"
       if (!new java.io.File(s"$dir/assigned/_SUCCESS").exists()) {
         val (nLists, _) = Similarity.autoIvfParams(e.count())
         Similarity.saveIvf(

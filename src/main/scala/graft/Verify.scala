@@ -1,9 +1,33 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.{ArrayType, MapType, StructField, StructType}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+
+  /** JSON string literal: backslash, quote, and ALL control chars (<0x20)
+    * escaped — a tab or CR in hand-written oracle SQL would otherwise
+    * make the oracle compare's json.load reject the whole file. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** Output-portability guard: the pandas-based oracle compare cannot
+    * sort top-level array/struct/map columns (t47's TypeError: unhashable
+    * numpy.ndarray). Verify fails such gates at run time; PlanAudit flags
+    * them across all registered gates. Returns `name:type` per column. */
+  private[graft] def nonPortableColumns(schema: StructType): Seq[String] =
+    schema.fields.toSeq.collect {
+      case StructField(name, t @ (_: ArrayType | _: StructType | _: MapType), _, _) =>
+        s"$name:${t.simpleString}"
+    }
+
   def main(args: Array[String]): Unit = {
     // args: sfDir outDir [comma-separated query-name filter — local
     // debugging aid; the driver always runs the full set]
@@ -14,13 +38,8 @@ object Verify {
     // red that only reproduced at high core counts (split sizing depends
     // on defaultParallelism) because local verification ran at 4 CPUs.
     // Override with SPARK_GRAFT_CPUS for quick low-core debug runs.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.cpus(default = 32)
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // A gate that throws must surface as a RED row, not a silent absence:
@@ -33,20 +52,12 @@ object Verify {
       .foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
-        // Output-portability guard (r13 verdict item 3): the driver's
-        // pandas oracle harness cannot sort top-level array/struct/map
-        // columns (t47's TypeError: unhashable numpy.ndarray). Fail the
-        // gate fast, with the stringify recipe, instead of letting a
-        // non-portable schema reach the driver.
-        val bad = df.schema.fields.filter(f => f.dataType match {
-          case _: org.apache.spark.sql.types.ArrayType
-             | _: org.apache.spark.sql.types.StructType
-             | _: org.apache.spark.sql.types.MapType => true
-          case _ => false
-        })
+        // fail a non-portable schema fast, with the stringify recipe,
+        // instead of letting it reach the oracle compare
+        val bad = nonPortableColumns(df.schema)
         if (bad.nonEmpty)
           throw new IllegalStateException(
-            s"non-portable output columns ${bad.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(", ")}" +
+            s"non-portable output columns ${bad.mkString(", ")}" +
             " — stringify with concat_ws(' ', col) (Spark) / array_to_string(..., ' ') (oracle)")
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       }
@@ -55,22 +66,10 @@ object Verify {
         errors(name) = s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("")}".take(500)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val errJson = errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }
+    val errJson = errors.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/_errors.json"), errJson)
     spark.stop()

@@ -19,9 +19,12 @@ object TpchLake {
 
   val NS = "http://graft.io/schema/"
 
-  /** Derived CSV copies live under target/ (never in /root/testdata). */
-  private def derivedDir(sfDir: String): String = {
-    val label = new java.io.File(sfDir).getName
+  /** Derived fixtures live under target/ (never in the testdata lake),
+    * one directory per `key`: an sf dir (by its base name), or the name
+    * of a gate's own scale-independent fixture. The only place the
+    * derived-fixture root is spelled. */
+  private[graft] def derivedDir(key: String): String = {
+    val label = new java.io.File(key).getName
     s"/root/repo/target/derived/$label"
   }
 

@@ -575,7 +575,7 @@ object Dedup {
     * shingle. The default 1e-9 puts the expected false flags of a 10⁸-
     * shingle corpus below 0.1 — and unlike spark-sketch's filter, whose
     * 32-bit hashing floors the real rate near 3e-6 no matter the bits
-    * (measured, `graft.tools.BloomProbe`), the full-width construction
+    * (measured, see [[graft.functions.BloomSet]]), the full-width construction
     * actually delivers it.
     *
     * The eval hash set is collected to the driver to build the bitset —

@@ -109,7 +109,7 @@ object JdbcUpsertSink {
     ensureTable(url, table, plan.schema)
     spark.streams.active.filter(_.name == "jdbc_upsert").foreach(_.stop())
     val ckpt = java.nio.file.Files.createTempDirectory("graft_jdbc_ckpt").toString
-    graft.tools.Tuning.withStreamShuffle(spark) {
+    EventStreams.withStreamShuffle(spark) {
       val q = plan.writeStream.outputMode("update")
         .foreachBatch { (batch: DataFrame, _: Long) =>
           upsertBatch(batch, url, table, Seq("user_id"))

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import graft.GraftSession
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Deterministic sf1-scale data generator (10× the sf0.1 tables, same
@@ -53,13 +54,8 @@ object DataGen {
     val only: Option[Set[String]] =
       args.drop(2).headOption.map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SRC_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.cpus()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def n(base: Long) = math.max(1L, (base * scale).toLong)
 

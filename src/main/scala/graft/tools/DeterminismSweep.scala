@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 import org.apache.spark.sql.SparkSession
 
 /** Full-suite partition-layout determinism sweep — DeterminismSpec's
@@ -18,12 +18,7 @@ import org.apache.spark.sql.SparkSession
 object DeterminismSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val base = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val base = GraftSession.builder(s"local[${GraftSession.cpus()}]", 4).getOrCreate()
     base.sparkContext.setLogLevel("ERROR")
     val alt = base.newSession()
     alt.conf.set("spark.sql.shuffle.partitions", "13")

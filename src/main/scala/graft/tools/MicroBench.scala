@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 
 /** Times selected queries N times in one JVM — separates steady-state cost
   * from JIT/cache warmup that single-shot Bench runs conflate. */
@@ -9,15 +8,8 @@ object MicroBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", Tuning.localDir)
-      .config("spark.sql.join.preferSortMergeJoin", Tuning.preferSortMergeJoin)
-      .getOrCreate()
+    val cpus = GraftSession.cpus()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     for (name <- args) {
       // benchQueries, not queries: MicroBench exists to explain Bench

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry, Verify}
 import org.apache.spark.sql.execution.SparkPlan
 
 /** Physical-plan anti-pattern sweep over EVERY registered gate — the
@@ -39,12 +38,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[${GraftSession.cpus()}]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def nodes(p: SparkPlan): Seq[SparkPlan] =
@@ -61,21 +55,11 @@ object PlanAudit {
     names.foreach { name =>
       try {
         val df = SparkEntry.queries(name)(spark, sfDir)
-        // Output-portability sweep (r13 verdict item 3): the driver's
-        // pandas oracle harness cannot sort top-level array/struct/map
-        // columns — Verify fails such gates at run time; this catches
-        // them at audit time across ALL registered gates.
-        val nonPortable = df.schema.fields.filter(f => f.dataType match {
-          case _: org.apache.spark.sql.types.ArrayType
-             | _: org.apache.spark.sql.types.StructType
-             | _: org.apache.spark.sql.types.MapType => true
-          case _ => false
-        })
+        val nonPortable = Verify.nonPortableColumns(df.schema)
         if (nonPortable.nonEmpty) {
           flagged += 1
           println(s"FLAG $name: non-portable output column(s) " +
-            nonPortable.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(", ") +
-            " — stringify with concat_ws(' ', col)")
+            nonPortable.mkString(", ") + " — stringify with concat_ws(' ', col)")
         }
         val plan = df.queryExecution.executedPlan
         val all = nodes(plan)

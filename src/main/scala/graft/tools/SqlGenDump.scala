@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Verify.{jsonString => q}
 import java.nio.file.{Files, Paths}
 
 /** Dump every sg gate's LOWERED SQL string + the (view, parquet path)
@@ -15,15 +16,6 @@ import java.nio.file.{Files, Paths}
 object SqlGenDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outFile) = args
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val entries = graft.EngineQueries.sqlGenLowerings(sfDir).map {
       case (name, l, oracle) =>
         val tables = l.tables.map { t =>
