@@ -328,40 +328,50 @@ object OpsQueries {
     * workers a happens-before view of the built index). The old
     * per-query driver loop was ~40 sequential jobs per gate — the
     * gates' dominant cost at every SF, since corpus size is fixed. */
-  private def annRecallGateOn(s: SparkSession, all: DataFrame, floorPct: Int)(
+  private[graft] def annRecallGateOn(s: SparkSession, all: DataFrame, floorPct: Int)(
       ann: (DataFrame, Seq[Double]) => DataFrame): DataFrame = {
     import s.implicits._
     val corpus = all.filter(col("vec_id") >= 20).cache()
-    val qs = all.filter(col("vec_id") < 20)
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .as[(Long, Seq[Double])].collect().sortBy(_._1)
-    val exact: Map[Long, Set[Long]] = Similarity.bruteForceTopKBatch(
-      corpus, col("vec_id"), col("embedding"),
-      qs.map { case (qid, qv) => (qid, qv.toSeq) }.toSeq, k = 10)
-    def annIds(qv: Seq[Double]): Set[Long] =
-      ann(corpus, qv).select(col("vec_id").cast("long")).as[Long].collect().toSet
-    val annRes = new Array[Set[Long]](qs.length)
-    annRes(0) = annIds(qs.head._2) // sequential: builds the gate's index
-    if (qs.length > 1) {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(8, qs.length - 1))
-      try {
-        val futs = (1 until qs.length).map { i =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            def call(): Unit = annRes(i) = annIds(qs(i)._2)
-          })
-        }
-        futs.foreach(_.get())
-      } finally pool.shutdown()
-    }
-    val recalls = qs.zipWithIndex.map { case ((qid, _), i) =>
-      (annRes(i) & exact.getOrElse(qid, Set.empty)).size / 10.0
-    }
-    corpus.unpersist()
-    val avg = recalls.sum / recalls.length
-    s.createDataFrame(Seq((qs.length, floorPct, avg * 100 >= floorPct)))
-      .toDF("n_queries", "floor_pct", "recall_floor_met")
+    try {
+      val qs = all.filter(col("vec_id") < 20)
+        .select(col("vec_id"), col("embedding").cast("array<double>"))
+        .as[(Long, Seq[Double])].collect().sortBy(_._1)
+      val exact: Map[Long, Set[Long]] = Similarity.bruteForceTopKBatch(
+        corpus, col("vec_id"), col("embedding"),
+        qs.map { case (qid, qv) => (qid, qv.toSeq) }.toSeq, k = 10)
+      def annIds(qv: Seq[Double]): Set[Long] =
+        ann(corpus, qv).select(col("vec_id").cast("long")).as[Long].collect().toSet
+      val annRes = new Array[Set[Long]](qs.length)
+      annRes(0) = annIds(qs.head._2) // sequential: builds the gate's index
+      if (qs.length > 1) {
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(
+          math.min(8, qs.length - 1), (r: Runnable) => new Thread(r, AnnProbeThread))
+        try {
+          val futs = (1 until qs.length).map { i =>
+            pool.submit(new java.util.concurrent.Callable[Unit] {
+              def call(): Unit = annRes(i) = annIds(qs(i)._2)
+            })
+          }
+          futs.foreach(_.get())
+        } catch {
+          // a failed probe: stop the others before surfacing its cause
+          case e: java.util.concurrent.ExecutionException =>
+            pool.shutdownNow()
+            pool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)
+            throw Option(e.getCause).getOrElse(e)
+        } finally pool.shutdown()
+      }
+      val recalls = qs.zipWithIndex.map { case ((qid, _), i) =>
+        (annRes(i) & exact.getOrElse(qid, Set.empty)).size / 10.0
+      }
+      val avg = recalls.sum / recalls.length
+      s.createDataFrame(Seq((qs.length, floorPct, avg * 100 >= floorPct)))
+        .toDF("n_queries", "floor_pct", "recall_floor_met")
+    } finally corpus.unpersist()
   }
+
+  /** Name of the ANN recall gates' probe-pool threads. */
+  private[graft] val AnnProbeThread = "graft-ann-probe"
 
   val oracleSuite: Seq[(String, (SparkSession, String) => DataFrame, String)] = Seq(
 
@@ -716,9 +726,9 @@ object OpsQueries {
     // chunk banding has guaranteed recall 1 at hamming ≤ 3 (pigeonhole),
     // so banded output ≡ the oracle's brute-force pairs
     ("d04_simhash_pairs",
-      // default tokenHash = the native per-row portable signature
-      // (bit-identical to the explicit portableTokenHash aggregate
-      // formulation — spec-asserted — with no explode shuffle)
+      // native per-row portable signatures (bit-identical to the
+      // explode + aggregate reference formulation in OpsSpec, with no
+      // explode shuffle)
       (s, sf) => Dedup.simHashNearDups(docs(s, sf), col("doc_id"), col("text"),
         maxHamming = 3),
       """WITH tok AS (

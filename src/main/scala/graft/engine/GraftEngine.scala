@@ -13,17 +13,17 @@ import org.apache.spark.sql.functions._
   * semantic column pruning, filters below joins) → inner equi-join chain →
   * GROUP BY/aggregates → ORDER BY → projection (+DISTINCT) → LIMIT.
   *
+  * Every plan fact (sources per star, expansions, join edges, variable
+  * resolution, residual filters) comes from [[StarSpec]], shared with
+  * [[SqlGenExecutor]]; this object renders it as Columns.
+  *
   * Everything stays a lazy logical plan; Catalyst applies predicate
-  * pushdown / column pruning / join selection, and AQE (enabled by callers)
+  * pushdown / column pruning / join selection, and AQE (Spark's default)
   * re-plans broadcast and skew at runtime. No temp views, no SQL strings,
   * no driver-side data movement.
   */
 object GraftEngine {
-
-  final case class JoinEdge(fromStar: String, toStar: String) {
-    def leftCol: String = StarCompiler.varCol(fromStar, toStar)
-    def rightCol: String = StarCompiler.idCol(toStar)
-  }
+  import StarSpec.{JoinEdge, Scan}
 
   def execute(spark: SparkSession, queryText: String, mappingsText: String,
       configText: String, reorderJoins: Boolean = false): DataFrame =
@@ -33,6 +33,8 @@ object GraftEngine {
   def executeParsed(spark: SparkSession, q: ParsedQuery,
       mappings: MappingsDoc, config: LakeConfig,
       reorderJoins: Boolean = false): DataFrame = {
+
+    val describeScans = q.describe.map(StarSpec.describeScans(q, _, mappings))
 
     // { A } UNION { B }: compile each branch body independently, bag-union
     // by name (a var unbound in one branch surfaces as null there)
@@ -65,15 +67,9 @@ object GraftEngine {
     // sequential withColumn: later BINDs may reference earlier outputs
     for (b <- q.binds) df = df.withColumn(b.outVar, bindColumn(b.expr))
 
-    // --- residual FILTERs: conditions on vars no star binds (BIND
-    // outputs, subquery outputs) were invisible to the per-star compile —
-    // apply them here, where those columns exist. An unknown var now
-    // fails analysis instead of silently dropping the condition.
-    val starTargeted: Set[String] = {
-      val pats = if (q.unionBranches.nonEmpty) q.unionBranches.flatMap(_._1) else q.patterns
-      pats.collect { case TriplePattern(_, _, ObjVar(v)) => v }.toSet ++ pats.map(_.subject)
-    }
-    for (f <- q.filters if !starTargeted(f.varName))
+    // --- residual FILTERs (vars no star binds); an unknown var fails
+    // analysis instead of silently dropping the condition
+    for (f <- StarSpec.residualFilters(q))
       df = df.filter(StarCompiler.predicate(col(f.varName), f))
 
     // --- modifiers (reference Run.scala:266-306 order:
@@ -143,44 +139,18 @@ object GraftEngine {
         sliced.select(col(t.subject).cast("string").as("s"),
           lit(t.predicate).as("p"), oCol.as("o"))
       }.reduce(_.union(_)).distinct()
-    } else if (q.describe.isDefined) {
+    } else if (describeScans.isDefined) {
       // DESCRIBE ?v: expand every mapped predicate (plus rdf:type) of the
       // star's relevant sources for the resources the body binds to ?v.
       // One scan branch per predicate, all semi-joined with the (usually
       // small, AQE-broadcastable) described-id set; a triple set →
       // distinct. Net-new vs the reference (its eval drops DESCRIBE).
-      val v = q.describe.get
-      require(q.stars.contains(v),
-        s"DESCRIBE ?$v requires ?$v to be a star subject in the WHERE body")
-      val patterns = q.stars(v)
-      val preds = patterns.collect {
-        case TriplePattern(_, p, ObjVar(_)) if p != TriplePattern.RdfType => p
-      }.distinct
-      val classIri = patterns.collectFirst {
-        case TriplePattern(_, TriplePattern.RdfType, ObjIri(c)) => c
-      }
-      val relevant = mappings.relevantFor(preds, classIri)
-      require(relevant.nonEmpty, s"no relevant source for DESCRIBE ?$v")
-      val ids = sliced.select(col(v).as("sid")).distinct()
-      val branches = relevant.flatMap { m =>
-        val raw = StarCompiler.loadSource(spark, m, config)
-        def rendered(attr: String): Column = {
-          val fns = m.attrTransforms.getOrElse(attr, Nil)
-          if (fns.isEmpty) col(attr) else Transforms(col(attr), fns)
-        }
-        val idC = {
-          val fns = m.attrTransforms.getOrElse("", Nil)
-          if (fns.isEmpty) col(m.idAttr) else Transforms(col(m.idAttr), fns)
-        }
-        val typeBranch = m.classIri.map(c => raw.select(idC.as("sid"),
-          lit(TriplePattern.RdfType).as("p"), lit(c).as("o")))
-        val predBranches = m.predicateToAttr.toSeq.sortBy(_._1).map {
-          case (p0, attr) => raw.select(idC.as("sid"), lit(p0).as("p"),
-            rendered(attr).cast("string").as("o"))
-        }
-        typeBranch.toSeq ++ predBranches
-      }
-      branches.reduce(_.unionByName(_))
+      val ids = sliced.select(col(q.describe.get).as("sid")).distinct()
+      scanDFs(spark, describeScans.get, config) { sc =>
+        Seq(StarCompiler.render(sc.id).as(sc.id.outCol), lit(sc.predicate).as("p"),
+          sc.value.fold(lit(sc.mapping.classIri.get))(
+            StarCompiler.render(_).cast("string")).as("o"))
+      }.reduce(_.unionByName(_))
         .join(ids, Seq("sid"), "left_semi")
         .select(col("sid").cast("string").as("s"), col("p"), col("o"))
         .distinct()
@@ -188,30 +158,17 @@ object GraftEngine {
   }
 
   /** Compile the WHERE body (stars → join chain → bare-variable columns),
-    * without solution modifiers. */
+    * without solution modifiers: the Column rendering of [[StarSpec.body]]. */
   private def compileBody(spark: SparkSession, q: ParsedQuery,
       mappings: MappingsDoc, config: LakeConfig,
       reorderJoins: Boolean): DataFrame = {
 
+    val plan = StarSpec.body(q)
     val starNames = q.stars.keys.toSeq.sorted
-    val needed = neededVars(q)
-
-    // --- arbitrary-length paths: FILTER/VALUES on a closure's object var
-    // apply to the REACHABLE endpoint, not the one-hop edge — keep them
-    // out of the per-star compile (which would push them into the scan,
-    // i.e. onto every intermediate hop) and apply them after the closure.
-    // Subject-side constraints MAY stay in the scan: they restrict the
-    // start set of `base`, and the edge relation is rebuilt unconstrained
-    // below (closureEdges).
-    val closureVars = q.closures.map(_.objVar).toSet
-    val qStar =
-      if (closureVars.isEmpty) q
-      else q.copy(filters = q.filters.filterNot(f => closureVars(f.varName)),
-        values = q.values.filterNot(v => closureVars(v._1)))
 
     // --- per-star ParSets (reference SparkExecutor.query, stage 6 of §3.1)
     val baseDFs: Map[String, DataFrame] = starNames.map { s =>
-      val df = StarCompiler.compile(spark, qStar, s, mappings, config, needed)
+      val df = StarCompiler.compile(spark, plan.query, s, mappings, config, plan.needed)
       s -> StarCompiler.applyInlineTransforms(df, s, q)
     }.toMap
 
@@ -219,37 +176,12 @@ object GraftEngine {
     // the values of every mapped predicate of its relevant sources except
     // the excluded ones (string-cast — the expansion mixes column types)
     val withNegations: Map[String, DataFrame] = q.negations.foldLeft(baseDFs) { (m, ng) =>
-      require(q.stars.contains(ng.subjVar),
-        s"negated path subject ?${ng.subjVar} needs at least one other pattern " +
-          "(typically `a <Class>`) to select its sources")
-      val pats = q.stars(ng.subjVar)
-      val preds = pats.collect {
-        case TriplePattern(_, p, ObjVar(_)) if p != TriplePattern.RdfType => p
-      }.distinct
-      val classIri = pats.collectFirst {
-        case TriplePattern(_, TriplePattern.RdfType, ObjIri(c)) => c
-      }
-      val sCol = StarCompiler.idCol(ng.subjVar)
-      val oCol = StarCompiler.varCol(ng.subjVar, ng.objVar)
-      val branches = mappings.relevantFor(preds, classIri).flatMap { mp =>
-        val raw = StarCompiler.loadSource(spark, mp, config)
-        def rendered(attr: String): Column = {
-          val fns = mp.attrTransforms.getOrElse(attr, Nil)
-          if (fns.isEmpty) col(attr) else Transforms(col(attr), fns)
-        }
-        val idC = {
-          val fns = mp.attrTransforms.getOrElse("", Nil)
-          if (fns.isEmpty) col(mp.idAttr) else Transforms(col(mp.idAttr), fns)
-        }
-        mp.predicateToAttr.toSeq.sortBy(_._1)
-          .filterNot { case (p, _) => ng.excluded.contains(p) }
-          .map { case (_, attr) =>
-            raw.select(idC.as(sCol), rendered(attr).cast("string").as(oCol))
-          }
-      }
-      require(branches.nonEmpty,
-        s"negated property set on ?${ng.subjVar} excludes every mapped predicate")
-      m.updated(ng.subjVar, m(ng.subjVar).join(branches.reduce(_.unionByName(_)), Seq(sCol)))
+      val expansion = scanDFs(spark, StarSpec.negationScans(q, ng, mappings), config) { sc =>
+        Seq(StarCompiler.render(sc.id).as(sc.id.outCol),
+          StarCompiler.render(sc.value.get).cast("string").as(sc.value.get.outCol))
+      }.reduce(_.unionByName(_))
+      m.updated(ng.subjVar,
+        m(ng.subjVar).join(expansion, Seq(StarCompiler.idCol(ng.subjVar))))
     }
 
     // --- close each p+/p* star: replace the one-hop (subject, object)
@@ -309,22 +241,14 @@ object GraftEngine {
       val rejoined = base.join(
         pairs.select(col("src").as(sCol), col("dst").as(oCol)), Seq(sCol))
       // deferred endpoint constraints on the REACHABLE var
-      val filtered = q.filters.filter(_.varName == cl.objVar)
+      val filtered = plan.deferredFilters.filter(_.varName == cl.objVar)
         .foldLeft(rejoined)((d, f) => d.filter(StarCompiler.predicate(col(oCol), f)))
-      val valued = q.values.filter(_._1 == cl.objVar)
+      val valued = plan.deferredValues.filter(_._1 == cl.objVar)
         .foldLeft(filtered) { case (d, (_, vals)) =>
           d.filter(StarCompiler.valuesCondition(d, oCol, vals))
         }
       m.updated(cl.subjVar, valued)
     }
-
-    // --- join plan: star A joins star B iff A has an object var that is
-    // B's subject var (reference Planner.scala:62-88)
-    val edges: Seq[JoinEdge] = for {
-      s <- starNames
-      TriplePattern(_, p, ObjVar(o)) <- q.stars(s)
-      if p != TriplePattern.RdfType && q.stars.contains(o) && o != s
-    } yield JoinEdge(s, o)
 
     // optional weight-heuristic join ordering (reference
     // Planner.scala:90-170: per-store weight from config + filter bonus;
@@ -332,100 +256,54 @@ object GraftEngine {
     // AQE re-plans physically at runtime either way; this only seeds the
     // left-deep chain with the heaviest edge first.
     val ordered =
-      if (!reorderJoins) edges.distinct
+      if (!reorderJoins) plan.edges
       else {
         val weight: Map[String, Int] = starNames.map { s =>
-          val preds = q.stars(s).collect {
-            case TriplePattern(_, p, ObjVar(_)) if p != TriplePattern.RdfType => p
-          }
-          val classIri = q.stars(s).collectFirst {
-            case TriplePattern(_, TriplePattern.RdfType, ObjIri(c)) => c
-          }
-          val storeW = mappings.relevantFor(preds, classIri).headOption
+          val storeW = StarSpec.relevant(q, s, mappings)._2.headOption
             .flatMap(m => config.weights.get(m.storeType)).getOrElse(1)
           val vars = q.stars(s).collect { case TriplePattern(_, _, ObjVar(v)) => v }.toSet
           val filterBonus = if (q.filters.exists(f => vars(f.varName) || f.varName == s)) 1 else 0
           s -> (storeW + filterBonus)
         }.toMap
-        edges.distinct.sortBy(e => -(weight(e.fromStar) + weight(e.toStar)))
+        plan.edges.sortBy(e => -(weight(e.fromStar) + weight(e.toStar)))
       }
 
-    val joined = joinChain(starDFs, ordered, q.optionalStars, q.minusStars,
-      q.existsStars)
-
-    // --- rename to bare variable names; star prefixes disappear here.
-    // MINUS/EXISTS-star bindings are not part of the solution (anti/semi
-    // joins keep only the preserved side's columns). Negated-path vars
-    // (bound by the expansion, not by a pattern) resolve to their star's
-    // expansion column.
-    val negRes = q.negations.filter(n => needed(n.objVar))
-      .map(n => n.objVar -> StarCompiler.varCol(n.subjVar, n.objVar))
-    val resolution = (resolveKept(q, needed) ++ negRes)
-      .foldLeft(Vector.empty[(String, String)]) { (acc, vc) =>
-        if (acc.exists(_._1 == vc._1)) acc else acc :+ vc
-      }
-    joined.select(resolution.map { case (v, c) => col(c).as(v) }: _*)
+    // --- rename to bare variable names; star prefixes disappear here
+    joinChain(starDFs, ordered, q.optionalStars, q.minusStars, q.existsStars)
+      .select(plan.resolution.map { case (v, c) => col(c).as(v) }: _*)
   }
 
-  /** Unconstrained one-hop edge relation of a closure's path predicate:
-    * a fresh (id, attr) scan of every relevant source that maps the
-    * predicate, transforms applied, dst cast to src's type — the same
-    * source-expansion shape as the negated-set handling. Deliberately
-    * NOT derived from the star DataFrame: that one carries the star's
-    * FILTER/VALUES, which would remove intermediate hops (judged wrong
-    * in round 5 — a subject-seeded `p+` returned only one hop). */
+  /** Scan DataFrames of a source expansion, one source load per mapping. */
+  private def scanDFs(spark: SparkSession, scans: Seq[Scan], config: LakeConfig)(
+      cols: Scan => Seq[Column]): Seq[DataFrame] = {
+    val raw = scans.map(_.mapping).distinct
+      .map(m => m -> StarCompiler.loadSource(spark, m, config)).toMap
+    scans.map(sc => raw(sc.mapping).select(cols(sc): _*))
+  }
+
+  /** Unconstrained one-hop edge relation of a closure ([[StarSpec.pathHops]]):
+    * per hop, the union of its (src, dst) scans with dst cast to src's
+    * type; a composite group (p1/p2/…) joins the hops into one chain. */
   private def closureEdges(spark: SparkSession, q: ParsedQuery, cl: PathClosure,
       mappings: MappingsDoc, config: LakeConfig): DataFrame = {
-    val pats = q.stars(cl.subjVar)
-    val preds = pats.collect {
-      case TriplePattern(_, p, ObjVar(_)) if p != TriplePattern.RdfType => p
-    }.distinct
-    val classIri = pats.collectFirst {
-      case TriplePattern(_, TriplePattern.RdfType, ObjIri(c)) => c
+    val hops = StarSpec.pathHops(q, cl, mappings).map { scans =>
+      scanDFs(spark, scans, config) { sc =>
+        Seq(StarCompiler.render(sc.id).as(sc.id.outCol),
+          StarCompiler.render(sc.value.get).as(sc.value.get.outCol))
+      }.map(sel => sel.select(col("src"),
+        col("dst").cast(sel.schema("src").dataType).as("dst")))
+        .reduce(_.unionByName(_))
     }
-    val head = predEdges(spark, cl.predicate,
-      mappings.relevantFor(preds, classIri), config)
-    // composite group (p1/p2/…): the closed "edge" is the hop chain —
-    // one inner join per extra predicate, each hop drawn from EVERY
-    // source mapping it (intermediate hops may live in entities the
-    // star's own sources don't cover)
-    cl.morePredicates.foldLeft(head) { (acc, p) =>
+    hops.tail.foldLeft(hops.head) { (acc, hop) =>
       // rename the probe side before joining: the hops usually scan the
       // SAME source, and fresh projection attrs sidestep self-join
       // column ambiguity
-      val nxt = predEdges(spark, p, mappings.relevantFor(Seq(p), None), config)
-        .select(col("src").as("__hs"), col("dst").as("__hd"))
+      val nxt = hop.select(col("src").as("__hs"), col("dst").as("__hd"))
       acc.join(nxt, col("dst") === col("__hs"))
         .select(col("src"), col("__hd").as("dst"))
     }
   }
 
-  /** One predicate's (src, dst) edge scan over the given candidate
-    * mappings, transforms applied, dst cast to src's type. */
-  private def predEdges(spark: SparkSession, predicate: String,
-      candidates: Seq[graft.model.EntityMapping], config: LakeConfig): DataFrame = {
-    val branches = candidates
-      .filter(_.predicateToAttr.contains(predicate))
-      .map { mp =>
-        val raw = StarCompiler.loadSource(spark, mp, config)
-        def rendered(attr: String, fns: Seq[TransformFn]): Column =
-          if (fns.isEmpty) col(attr) else Transforms(col(attr), fns)
-        val attr = mp.predicateToAttr(predicate)
-        val sel = raw.select(
-          rendered(mp.idAttr, mp.attrTransforms.getOrElse("", Nil)).as("src"),
-          rendered(attr, mp.attrTransforms.getOrElse(attr, Nil)).as("dst"))
-        sel.select(col("src"), col("dst").cast(sel.schema("src").dataType).as("dst"))
-      }
-    require(branches.nonEmpty,
-      s"no relevant source maps the path predicate <$predicate>")
-    branches.reduce(_.unionByName(_))
-  }
-
-  /** A closure star carrying any FILTER/VALUES on its subject or sibling
-    * vars has a restricted start set — frontier BFS from it beats the
-    * full closure. Constraints on the closure's own object var don't
-    * count: they are deferred past the closure (they bound the REACHABLE
-    * end, not the start). */
   /** Finite literal seed set for a closure's OBJECT endpoint: an `=`
     * filter or a VALUES list on the reachable var. One constraint's set
     * suffices as the seed (constraints are ANDed and all re-apply after
@@ -438,6 +316,11 @@ object GraftEngine {
     eq.orElse(q.values.collectFirst { case (v, vals) if v == cl.objVar => vals })
   }
 
+  /** A closure star carrying any FILTER/VALUES on its subject or sibling
+    * vars has a restricted start set — frontier BFS from it beats the
+    * full closure. Constraints on the closure's own object var don't
+    * count: they are deferred past the closure (they bound the REACHABLE
+    * end, not the start). */
   private def closureSeeded(q: ParsedQuery, cl: PathClosure): Boolean = {
     val deferred = q.closures.filter(_.subjVar == cl.subjVar).map(_.objVar).toSet
     val starVars = q.stars(cl.subjVar).collect {
@@ -514,64 +397,13 @@ object GraftEngine {
     c.as(a.alias)
   }
 
-  /** Semantic column pruning (reference Planner.getNeededPredicates,
-    * Planner.scala:24-60): a var's column is materialized iff it is
-    * SELECTed, filtered, grouped, ordered, aggregated, a join key, a
-    * transform operand, or a repeated object var. */
-  private[engine] def neededVars(q: ParsedQuery): Set[String] = {
-    if (q.selectAll)
-      return q.patterns.collect { case TriplePattern(_, _, ObjVar(v)) => v }.toSet ++
-        q.stars.keySet
-    val objVars = q.patterns.collect { case TriplePattern(_, _, ObjVar(v)) => v }
-    val repeated = objVars.groupBy(identity).collect { case (v, occ) if occ.size > 1 => v }
-    val joinVars = objVars.filter(q.stars.contains)
-    val bindOperands = q.binds.flatMap(_.expr.vars)
-    val bindOutputs = q.binds.map(_.outVar).toSet
-    // a var shared with a subquery is a join key — materialize it even
-    // when the outer query neither selects nor filters it
-    val subVars = q.subqueries.flatMap(s =>
-      s.selectVarNames ++ s.aggregates.map(_.alias)) ++
-      q.negations.map(_.objVar)
-    (q.selectVarNames ++ q.aggregates.map(_.varName).filter(_ != "*") ++
-      q.filters.map(_.varName) ++ q.values.map(_._1) ++ q.groupBy ++
-      q.orderBy.map(_.varName) ++ q.transforms.map(_.rightVar) ++
-      joinVars ++ repeated ++ bindOperands ++ subVars).toSet -- bindOutputs
-  }
-
-  /** var -> concrete post-join column, restricted to columns a KEPT
-    * (non-MINUS/EXISTS) star contributes — anti/semi joins keep only the
-    * preserved side's columns. Shared by both engines (the DataFrame
-    * engine and [[SqlGenExecutor]]) so the resolution semantics cannot
-    * drift.
-    *
-    * A var survives iff a kept star binds it:
-    *  - subject of a kept star → that star's ID column;
-    *  - otherwise, the FIRST kept star binding it as an object var → that
-    *    star's var column (one-binding invariant, reference Run.scala:73).
-    * Note the order: a var that names a DROPPED star's subject but is
-    * also the object of a kept star (SELECT ?v WHERE { ?x :p ?v .
-    * FILTER EXISTS { ?v :q ?w } }) resolves to the kept star's column —
-    * it is part of the solution, not anti/semi-joined away. */
-  private[engine] def resolveKept(q: ParsedQuery, needed: Set[String]): Seq[(String, String)] = {
-    val dropStars = q.minusStars ++ q.existsStars
-    val keptSubjects = q.stars.keySet -- dropStars
-    val keptBinding: Map[String, String] =
-      q.patterns.collect {
-        case TriplePattern(s, p, ObjVar(o))
-            if p != TriplePattern.RdfType && keptSubjects.contains(s) => o -> s
-      }.reverse.toMap // reverse + toMap = first binding wins
-    needed.toSeq.sorted.flatMap { v =>
-      if (keptSubjects.contains(v)) Some(v -> StarCompiler.idCol(v))
-      else keptBinding.get(v).map(s => v -> StarCompiler.varCol(s, v))
-    }
-  }
-
   /** Left-deep join chain with the reference's pending-queue semantics
     * (SparkExecutor.scala:247-359), extended with left-outer attachment of
     * OPTIONAL stars: required-required edges join inner (processed first);
-    * attaching an optional star preserves the already-joined side. A
-    * genuinely disconnected component becomes a cross join (the reference
-    * would never drain it). */
+    * attaching an optional star preserves the already-joined side; a
+    * MINUS/EXISTS star is a leaf ([[StarSpec.body]] checks it) attached
+    * anti/semi. A genuinely disconnected component becomes a cross join
+    * (the reference would never drain it). */
   private[engine] def joinChain(starDFs: Map[String, DataFrame], edges: Seq[JoinEdge],
       optionalStars: Set[String] = Set.empty,
       minusStars: Set[String] = Set.empty,
@@ -583,13 +415,6 @@ object GraftEngine {
     }
     def opt(s: String) = optionalStars.contains(s) || minusStars.contains(s) ||
       existsStars.contains(s)
-    // a MINUS/EXISTS star leaves no columns behind (anti/semi join) — it
-    // must be a leaf of the join graph
-    for (m <- minusStars ++ existsStars) {
-      val touching = edges.count(e => e.fromStar == m || e.toStar == m)
-      require(touching == 1,
-        s"MINUS/EXISTS star ?$m must connect to the rest of the query by exactly one join")
-    }
     // inner edges first so every required star is joined before any
     // left-outer/anti attachment can touch it
     val (innerEdges, outerEdges) = edges.partition(e => !opt(e.fromStar) && !opt(e.toStar))

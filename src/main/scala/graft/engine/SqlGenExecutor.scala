@@ -3,11 +3,12 @@ package graft.engine
 import graft.model._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Second execution engine: lowers the same star IR the DataFrame engine
-  * compiles into ONE nested ANSI SQL string — the counterpart of the
-  * reference's Presto executor (PrestoExecutor.scala:404-518, which
-  * string-builds a nested per-star SQL query via
-  * model/DataQueryFrame.scala:5-86 and ships it to Presto). The reference
+/** Second execution engine: renders the same [[StarSpec]] plan the
+  * DataFrame engine renders as Columns into ONE nested ANSI SQL string —
+  * the counterpart of the reference's Presto executor
+  * (PrestoExecutor.scala:404-518, which string-builds a nested per-star
+  * SQL query via model/DataQueryFrame.scala:5-86 and ships it to
+  * Presto). The reference
   * offers its users a SQL-engine path beside the Spark path; this is that
   * capability re-expressed for the offline lake: the generated string is
   * plain ANSI (no dialect functions), so any SQL engine with the tables
@@ -48,7 +49,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * TRANSFORMs (FK/ID column rewrites with skp filters on the
   * transformed value). Not lowered (the Column engine remains the
   * full-coverage path, exactly as the reference keeps Spark beside
-  * Presto): jdbc/rdf/connector stores, streaming.
+  * Presto): jdbc/rdf/connector stores, streaming, disconnected join
+  * graphs (the Column engine cross-joins them), a MINUS/EXISTS star
+  * joined to another one, and the GROUP_CONCAT/SAMPLE aggregates.
   */
 object SqlGenExecutor {
 
@@ -100,7 +103,7 @@ object SqlGenExecutor {
     // ASK → a non-correlated EXISTS probe over the body (both target
     // engines short-circuit it): rewrite as SELECT of the first pattern's
     // subject var, LIMIT 1, and wrap — one boolean column `ask`, the
-    // same shape the Column engine returns (GraftEngine line ~128)
+    // same shape the Column engine's ASK branch returns
     if (q.ask) {
       val probeVar = q.patterns.headOption.map(_.subject).getOrElse(
         sys.error("ASK without patterns is not SQL-lowered"))
@@ -176,6 +179,7 @@ object SqlGenExecutor {
           case other => sys.error(s"transform '$other' is not SQL-lowered")
         }
       }
+    def tx(cs: StarSpec.ColSpec): String = fnSql(cs.attr, cs.fns)
 
     // ---- CONSTRUCT: instantiate each template triple over the solution
     // body (recursively lowered with its modifiers intact, shared via a
@@ -212,33 +216,16 @@ object SqlGenExecutor {
     // described-id set the body binds — the SQL image of GraftEngine's
     // describe branch.
     for (v <- q.describe) {
-      require(q.stars.contains(v),
-        s"DESCRIBE ?$v requires ?$v to be a star subject in the WHERE body")
+      val scans = StarSpec.describeScans(q, v, mappings)
       val inner = lower(q.copy(describe = None, selectAll = false,
         selectItems = Seq(SelectVar(v))), mappings, config)
       inner.tables.foreach(t => tables(t.name) = t)
-      val patterns = q.stars(v)
-      val preds = patterns.collect {
-        case TriplePattern(_, p, ObjVar(_)) if p != TriplePattern.RdfType => p
-      }.distinct
-      val classIri = patterns.collectFirst {
-        case TriplePattern(_, TriplePattern.RdfType, ObjIri(c)) => c
-      }
-      val relevant = mappings.relevantFor(preds, classIri)
-      require(relevant.nonEmpty, s"no relevant source for DESCRIBE ?$v")
-      val branches = relevant.flatMap { mp =>
-        val tbl = registerTable(mp, s"DESCRIBE ?$v")
-        val idExpr = fnSql(mp.idAttr, mp.attrTransforms.getOrElse("", Nil))
-        val typeBranch = mp.classIri.map(c =>
-          s"SELECT $idExpr AS sid, ${litSql(TriplePattern.RdfType)} AS p, " +
-            s"${litSql(c)} AS o FROM $tbl")
-        val predBranches = mp.predicateToAttr.toSeq.sortBy(_._1).map {
-          case (p0, attr) =>
-            val e = fnSql(attr, mp.attrTransforms.getOrElse(attr, Nil))
-            s"SELECT $idExpr AS sid, ${litSql(p0)} AS p, " +
-              s"CAST($e AS STRING) AS o FROM $tbl"
-        }
-        typeBranch.toSeq ++ predBranches
+      val branches = scans.map { sc =>
+        val tbl = registerTable(sc.mapping, s"DESCRIBE ?$v")
+        val o = sc.value.fold(litSql(sc.mapping.classIri.get))(c =>
+          s"CAST(${tx(c)} AS STRING)")
+        s"SELECT ${tx(sc.id)} AS ${sc.id.outCol}, ${litSql(sc.predicate)} AS p, " +
+          s"$o AS o FROM $tbl"
       }
       return Lowered(
         s"WITH g_ids AS (SELECT DISTINCT $v AS sid FROM (${inner.sql}) g_d) " +
@@ -259,31 +246,21 @@ object SqlGenExecutor {
     }
 
     /** One WHERE body (stars → join chain → bare-var resolution) → its
-      * resolution SELECT plus the resolved (var, column) list. Called once
-      * for a plain query, once per branch for UNION bodies. */
-    def resolvedSql(qb0: ParsedQuery): (String, Seq[(String, String)]) = {
-    // FILTER/VALUES on a closure's object var constrain the REACHABLE
-    // endpoint, not the one-hop edge: strip them from the per-star
-    // pushdown and re-apply inside the closure wrapper (the SQL image of
-    // GraftEngine.compileBody's qStar deferral)
-    val closureVars = qb0.closures.map(_.objVar).toSet
-    val deferredFilters = qb0.filters.filter(f => closureVars(f.varName))
-    val deferredValues = qb0.values.filter(v => closureVars(v._1))
-    val qb = if (closureVars.isEmpty) qb0 else qb0.copy(
-      filters = qb0.filters.filterNot(f => closureVars(f.varName)),
-      values = qb0.values.filterNot(v => closureVars(v._1)))
-    val starNames = qb.stars.keys.toSeq.sorted
+      * resolution SELECT plus the resolved (var, column) list: the SQL
+      * rendering of [[StarSpec.body]]. Called once for a plain query, once
+      * per branch for UNION bodies. */
+    def resolvedSql(q0: ParsedQuery): (String, Seq[(String, String)]) = {
+    val body = StarSpec.body(q0)
+    val qb = body.query
     val dropStars = qb.minusStars ++ qb.existsStars
-    val keptNames = starNames.filterNot(dropStars.contains)
-    val needed = GraftEngine.neededVars(qb)
+    val keptNames = qb.stars.keys.toSeq.sorted.filterNot(dropStars.contains)
 
     /** One star → aliased subquery: per-source SELECT+rename (+UNION ALL),
       * wrapped with this star's filters/VALUES on the renamed columns —
       * the SQL rendering of the SAME [[StarSpec]] description
       * StarCompiler renders as Columns. */
-    def starSubquery(s: String): String = {
-      val spec = StarSpec.build(qb, s, mappings, needed)
-      def tx(cs: StarSpec.ColSpec): String = fnSql(cs.attr, cs.fns)
+    def starSubquery(spec: StarSpec.Spec): String = {
+      val s = spec.star
       val selects = spec.sources.map { src =>
         val m = src.mapping
         val tbl = registerTable(m, s"star ?$s")
@@ -309,33 +286,13 @@ object SqlGenExecutor {
       * every non-excluded mapped predicate of the star's relevant
       * sources, string-cast (the SQL image of the Column engine's
       * expansion, GraftEngine.compileBody withNegations). */
-    def negationSubquery(ng: NegatedPath): String = {
-      require(qb.stars.contains(ng.subjVar),
-        s"negated path subject ?${ng.subjVar} needs at least one other pattern " +
-          "(typically `a <Class>`) to select its sources")
-      val pats = qb.stars(ng.subjVar)
-      val preds = pats.collect {
-        case TriplePattern(_, p, ObjVar(_)) if p != TriplePattern.RdfType => p
-      }.distinct
-      val classIri = pats.collectFirst {
-        case TriplePattern(_, TriplePattern.RdfType, ObjIri(c)) => c
-      }
-      val sCol = idc(ng.subjVar)
-      val oCol = vc(ng.subjVar, ng.objVar)
-      val branches = mappings.relevantFor(preds, classIri).flatMap { mp =>
-        val tbl = registerTable(mp, s"negated set on ?${ng.subjVar}")
-        val idExpr = fnSql(mp.idAttr, mp.attrTransforms.getOrElse("", Nil))
-        mp.predicateToAttr.toSeq.sortBy(_._1)
-          .filterNot { case (p, _) => ng.excluded.contains(p) }
-          .map { case (_, attr) =>
-            val e = fnSql(attr, mp.attrTransforms.getOrElse(attr, Nil))
-            s"SELECT $idExpr AS $sCol, CAST($e AS STRING) AS $oCol FROM $tbl"
-          }
-      }
-      require(branches.nonEmpty,
-        s"negated property set on ?${ng.subjVar} excludes every mapped predicate")
-      branches.mkString(" UNION ALL ")
-    }
+    def negationSubquery(ng: NegatedPath): String =
+      StarSpec.negationScans(qb, ng, mappings).map { sc =>
+        val tbl = registerTable(sc.mapping, s"negated set on ?${ng.subjVar}")
+        val v = sc.value.get
+        s"SELECT ${tx(sc.id)} AS ${sc.id.outCol}, " +
+          s"CAST(${tx(v)} AS STRING) AS ${v.outCol} FROM $tbl"
+      }.mkString(" UNION ALL ")
 
     /** `p+`/`p*` star: replace the one-hop binding column with the
       * transitive closure, computed as a SQL:2016 recursive CTE over the
@@ -355,37 +312,17 @@ object SqlGenExecutor {
       val sCol = idc(s)
       val oCol = vc(s, cl.objVar)
       val baseCols = priorCols.filterNot(_ == oCol)
-      val pats = qb.stars(s)
-      val preds = pats.collect {
-        case TriplePattern(_, p, ObjVar(_)) if p != TriplePattern.RdfType => p
-      }.distinct
-      val classIri = pats.collectFirst {
-        case TriplePattern(_, TriplePattern.RdfType, ObjIri(c)) => c
-      }
-      def predBranches(p: String,
-          candidates: Seq[graft.model.EntityMapping]): Seq[String] = {
-        val bs = candidates.filter(_.predicateToAttr.contains(p)).map { mp =>
-          val tbl = registerTable(mp, s"path closure on ?$s")
-          val idExpr = fnSql(mp.idAttr, mp.attrTransforms.getOrElse("", Nil))
-          val attr = mp.predicateToAttr(p)
-          val aExpr = fnSql(attr, mp.attrTransforms.getOrElse(attr, Nil))
-          s"SELECT $idExpr AS src, $aExpr AS dst FROM $tbl"
-        }
-        require(bs.nonEmpty, s"no relevant source maps the path predicate <$p>")
-        bs
-      }
-      val edgeBranches = predBranches(cl.predicate,
-        mappings.relevantFor(preds, classIri))
+      val hops = StarSpec.pathHops(qb, cl, mappings).map(_.map { sc =>
+        val tbl = registerTable(sc.mapping, s"path closure on ?$s")
+        s"SELECT ${tx(sc.id)} AS src, ${tx(sc.value.get)} AS dst FROM $tbl"
+      })
       val tag = s"${s}_$i"
       // composite group (p1/p2/…): the edge CTE is the hop join chain —
-      // h0 ⋈ h1 ⋈ … on dst = src, each hop drawn from every source
-      // mapping its predicate (same derivation as the Column engine)
+      // h0 ⋈ h1 ⋈ … on dst = src
       val edgeSelect =
-        if (cl.morePredicates.isEmpty)
-          s"SELECT src, dst FROM (${edgeBranches.mkString(" UNION ALL ")}) g_eb_$tag"
+        if (hops.size == 1)
+          s"SELECT src, dst FROM (${hops.head.mkString(" UNION ALL ")}) g_eb_$tag"
         else {
-          val hops = edgeBranches +: cl.morePredicates.map(p =>
-            predBranches(p, mappings.relevantFor(Seq(p), None)))
           val froms = hops.zipWithIndex.map { case (bs, j) =>
             s"(${bs.mkString(" UNION ALL ")}) h${j}_$tag"
           }
@@ -399,9 +336,9 @@ object SqlGenExecutor {
       val zeroHop =
         if (cl.reflexive) s" UNION SELECT $sCol AS src, $sCol AS dst FROM g_cb_$tag"
         else ""
-      val conds = deferredFilters.filter(_.varName == cl.objVar)
+      val conds = body.deferredFilters.filter(_.varName == cl.objVar)
         .map(f => condSql("p.dst", f)) ++
-        deferredValues.filter(_._1 == cl.objVar).map { case (_, vals) =>
+        body.deferredValues.filter(_._1 == cl.objVar).map { case (_, vals) =>
           s"p.dst IN (${vals.map(litSql).mkString(", ")})"
         }
       val where = if (conds.isEmpty) "" else conds.mkString(" WHERE ", " AND ", "")
@@ -427,9 +364,9 @@ object SqlGenExecutor {
       * engine's `.join(expansion, Seq(sCol))`) and any `p+`/`p*` closures
       * wrapped as recursive CTEs. */
     def starSql(s: String): String = {
-      var cols = StarSpec.build(qb, s, mappings, needed)
-        .sources.head.cols.map(_.outCol)
-      var sql = starSubquery(s)
+      val spec = StarSpec.build(qb, s, mappings, body.needed)
+      var cols = spec.sources.head.cols.map(_.outCol)
+      var sql = starSubquery(spec)
       // inline TRANSFORM(?l?r.side.fns): rewrite this star's FK column
       // (side 'l') or ID column (side 'r') through the FnO chain, skp
       // values filtered on the TRANSFORMED value in an outer wrapper
@@ -461,27 +398,15 @@ object SqlGenExecutor {
     }
 
     // ---- join chain (textual image of GraftEngine.joinChain) ----------
-    val edges = (for {
-      s <- starNames
-      TriplePattern(_, p, ObjVar(o)) <- qb.stars(s)
-      if p != TriplePattern.RdfType && qb.stars.contains(o) && o != s
-    } yield GraftEngine.JoinEdge(s, o)).distinct
-
-    // MINUS / FILTER (NOT) EXISTS stars leave the join chain and become
-    // correlated [NOT] EXISTS subqueries — the SQL image of the engine's
-    // anti/semi attachment. Same leaf requirement as joinChain: exactly
-    // one edge to the rest of the query, and that edge's other endpoint
-    // must be a kept star.
-    val (dropEdges, keptEdges) = edges.partition(e =>
+    // MINUS / FILTER (NOT) EXISTS stars (leaves, one edge each) leave the
+    // join chain and become correlated [NOT] EXISTS subqueries — the SQL
+    // image of the engine's anti/semi attachment; that edge's other
+    // endpoint must be a kept star.
+    val (dropEdges, keptEdges) = body.edges.partition(e =>
       dropStars.contains(e.fromStar) || dropStars.contains(e.toStar))
-    for (m <- dropStars) {
-      val touching = dropEdges.filter(e => e.fromStar == m || e.toStar == m)
-      require(touching.size == 1,
-        s"MINUS/EXISTS star ?$m must connect to the rest of the query by exactly one join")
-      require(touching.forall(e =>
-        !(dropStars.contains(e.fromStar) && dropStars.contains(e.toStar))),
+    for (m <- dropStars; e <- dropEdges if e.fromStar == m || e.toStar == m)
+      require(!(dropStars.contains(e.fromStar) && dropStars.contains(e.toStar)),
         s"MINUS/EXISTS star ?$m may not join another MINUS/EXISTS star")
-    }
     val existsConds = dropEdges.map { e =>
       val m = if (dropStars.contains(e.fromStar)) e.fromStar else e.toStar
       // correlate on the join edge: the subquery side qualified by its
@@ -507,7 +432,7 @@ object SqlGenExecutor {
       var joined = Set(seed)
       fromSql ++= s"${starSql(seed)} g_$seed"
       var pending = keptEdges.toList
-      def attach(newStar: String, e: GraftEngine.JoinEdge): Unit = {
+      def attach(newStar: String, e: StarSpec.JoinEdge): Unit = {
         val jt = if (opt(newStar)) "LEFT JOIN" else "JOIN"
         fromSql ++= s" $jt ${starSql(newStar)} g_$newStar ON ${e.leftCol} = ${e.rightCol}"
         joined += newStar
@@ -527,18 +452,8 @@ object SqlGenExecutor {
       }
     }
 
-    // ---- bare-variable resolution — the SAME shared rule the DataFrame
-    // engine uses (GraftEngine.resolveKept), so anti/semi-joined-away
-    // bindings and kept-star fallbacks cannot drift between engines.
-    // Negated-path vars (bound by the expansion, not a pattern) resolve
-    // to their star's expansion column, first binding wins — mirrors
-    // GraftEngine.compileBody's negRes.
-    val negRes = qb.negations.filter(n => needed(n.objVar))
-      .map(n => n.objVar -> vc(n.subjVar, n.objVar))
-    val resolution = (GraftEngine.resolveKept(qb, needed) ++ negRes)
-      .foldLeft(Vector.empty[(String, String)]) { (acc, vcol) =>
-        if (acc.exists(_._1 == vcol._1)) acc else acc :+ vcol
-      }
+    // ---- bare-variable resolution (the shared rule)
+    val resolution = body.resolution
     require(resolution.nonEmpty, "query resolves no variables")
     val innerConds = cycleConds.result() ++ existsConds
     val innerWhere =
@@ -598,11 +513,11 @@ object SqlGenExecutor {
         }
       }
 
-    // ---- BIND computed variables (image of GraftEngine.bindColumn's
-    // arithmetic/concat core; SPARQL 1.1 builtins stay Column-engine
-    // only). One wrapper per BIND so later binds can reference earlier
-    // outputs; `/` is double division and CONCAT casts every operand to
-    // string in BOTH target engines, matching the Column semantics. ----
+    // ---- BIND computed variables (image of GraftEngine.bindColumn,
+    // arithmetic and the SPARQL 1.1 builtins). One wrapper per BIND so
+    // later binds can reference earlier outputs; `/` is double division
+    // and CONCAT casts every operand to string in BOTH target engines,
+    // matching the Column semantics. ----
     def bindSql(e: BindExpr): String = e match {
       case BVar(v) => v
       case BNum(n) => n
@@ -648,17 +563,9 @@ object SqlGenExecutor {
         s"SELECT g_b$i.*, ${bindSql(b.expr)} AS ${b.outVar} FROM ($prev) g_b$i"
     }
 
-    // ---- residual FILTERs: conditions on vars no star binds (subquery
-    // outputs, BIND outputs) were invisible to the per-star pushdown —
-    // the SQL image of GraftEngine's residual-filter pass, applied after
-    // binds so bind outputs are filterable
-    val starTargeted: Set[String] = {
-      val pats = if (q.unionBranches.nonEmpty) q.unionBranches.flatMap(_._1)
-        else q.patterns
-      pats.collect { case TriplePattern(_, _, ObjVar(v)) => v }.toSet ++
-        pats.map(_.subject)
-    }
-    val residual = q.filters.filterNot(f => starTargeted(f.varName))
+    // ---- residual FILTERs (vars no star binds), applied after binds so
+    // bind outputs are filterable
+    val residual = StarSpec.residualFilters(q)
     val bodySql =
       if (residual.isEmpty) bodyBound
       else s"SELECT * FROM ($bodyBound) g_rf WHERE " +

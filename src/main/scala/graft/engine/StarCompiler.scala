@@ -43,8 +43,12 @@ object StarCompiler {
     applyStarFilters(unioned, spec)
   }
 
+  /** A column spec's source attribute through its FnO transform chain. */
+  private[engine] def render(cs: StarSpec.ColSpec): Column =
+    if (cs.fns.isEmpty) col(cs.attr) else Transforms(col(cs.attr), cs.fns)
+
   /** Load a mapping's raw source (config options merged in) — shared by
-    * the star compiler and DESCRIBE's all-predicates expansion. */
+    * the star compiler and the source expansions ([[StarSpec.Scan]]). */
   def loadSource(spark: SparkSession, m: EntityMapping, config: LakeConfig): DataFrame = {
     val sourceCfg = config.sources.find(_.source == m.source)
       .getOrElse(SourceConfig(m.name, m.storeType, m.source, Map.empty))
@@ -55,13 +59,8 @@ object StarCompiler {
       spark: SparkSession,
       src: StarSpec.SourceSpec,
       config: LakeConfig): DataFrame = {
-    val m = src.mapping
-    val raw = loadSource(spark, m, config)
-
-    def rendered(cs: StarSpec.ColSpec): Column =
-      if (cs.fns.isEmpty) col(cs.attr) else Transforms(col(cs.attr), cs.fns)
-
-    var df = raw.select(src.cols.map(cs => rendered(cs).as(cs.outCol)): _*)
+    val raw = loadSource(spark, src.mapping, config)
+    var df = raw.select(src.cols.map(cs => render(cs).as(cs.outCol)): _*)
     // FnO skp(v) = row filter on the transformed target column
     for ((target, v) <- src.skips) df = df.filter(col(target.outCol) =!= lit(v))
     df

@@ -357,7 +357,7 @@ case class MinHashLanes(left: Expression, right: Expression)
 
 /** 64-bit portable SimHash signature of a token array in ONE pass per
   * row — the per-row replacement for the explode + 64-sum-aggregate
-  * formulation (`Dedup.simHash`): per token, the two-lane polynomial
+  * formulation (the reference in OpsSpec): per token, the two-lane polynomial
   * hash (th = polyHash(tok, 31, 1e9+7)·2³² + polyHash(tok, 131,
   * 998244353) — [[PolyHash]]'s exact arithmetic); per bit i, the count
   * of tokens with bit i set minus the count without; signature bit i = 1

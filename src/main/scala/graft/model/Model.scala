@@ -22,15 +22,17 @@ final case class ObjVar(name: String) extends ObjectTerm
 final case class ObjIri(iri: String) extends ObjectTerm
 final case class ObjLit(lexical: String) extends ObjectTerm
 
-/** FILTER condition. `op` is one of = != < <= > >= regex. Value keeps its
+/** FILTER condition. `op` is one of = != < <= > >= regex, or `in` /
+  * `not in` with the member literals in `values`. Value keeps its
   * lexical form; typing is decided at compile time against the column. */
 final case class FilterCond(varName: String, op: String, value: String,
     values: Seq[String] = Nil)
 
 final case class OrderKey(varName: String, ascending: Boolean)
 
-/** Aggregate in the SELECT list: fn in {sum,min,max,avg,count};
-  * alias is the output column name (user-supplied via AS, or `fn(var)`
+/** Aggregate in the SELECT list: fn in {sum, min, max, avg, count,
+  * group_concat, sample} (GROUP_CONCAT sorts its elements and SAMPLE
+  * picks the minimum, so both are deterministic); alias is the output column name (user-supplied via AS, or `fn(var)`
   * to match the reference's default naming, Run.scala:273).
   * `distinct` supports COUNT(DISTINCT ?v) / SUM(DISTINCT ?v) — absent
   * from the reference (SURVEY §2.4). */
@@ -46,7 +48,9 @@ final case class SelectAgg(agg: AggSpec) extends SelectItem
 
 /** BIND(expr AS ?out) expression AST (net-new vs the reference):
   * variables, numeric/string literals, binary arithmetic with standard
-  * precedence and parentheses, and function calls (CONCAT/STR/ABS). */
+  * precedence and parentheses, and function calls: CONCAT, STR, ABS and
+  * the SPARQL 1.1 builtins STRLEN, UCASE, LCASE, CONTAINS, STRSTARTS,
+  * STRENDS, SUBSTR, REPLACE, CEIL, FLOOR, ROUND, COALESCE and IF. */
 sealed trait BindExpr {
   /** Variables referenced anywhere in the expression (for pruning). */
   def vars: Set[String] = this match {
@@ -62,6 +66,8 @@ final case class BStr(value: String) extends BindExpr
 final case class BOp(op: String, left: BindExpr, right: BindExpr) extends BindExpr
 final case class BFun(name: String, args: Seq[BindExpr]) extends BindExpr
 
+/** One BIND(expr AS ?outVar): `expr` is any [[BindExpr]] — arithmetic,
+  * a rename, or a builtin call. */
 final case class BindSpec(outVar: String, expr: BindExpr)
 
 /** Length modifier of a property path (SPARQL 1.1 §9.1): `+` one or
@@ -142,9 +148,10 @@ final case class ParsedQuery(
     /** VALUES ?v { lit... } inline data, single-variable form — compiled
       * to an isin filter pushed below the joins. Net-new vs reference. */
     values: Seq[(String, Seq[String])] = Nil,
-    /** BIND(expr AS ?v) computed variables: operand op operand where an
-      * operand is a var or numeric literal, op ∈ + - * /; or a plain
-      * rename BIND(?x AS ?y). Net-new vs the reference. */
+    /** BIND(expr AS ?v) computed variables, in query order (a later BIND
+      * may use an earlier one's output): arithmetic (+ - * /), a plain
+      * rename BIND(?x AS ?y), or a builtin call ([[BindExpr]]). Net-new
+      * vs the reference. */
     binds: Seq[BindSpec] = Nil,
     /** ASK query form: the result is one boolean row (`ask`) — true iff
       * the WHERE body has at least one solution. Net-new vs reference. */

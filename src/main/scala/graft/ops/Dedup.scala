@@ -395,35 +395,15 @@ object Dedup {
     graft.functions.HashFunctions.polyHash(tok, 31, 1000000007L) * lit(4294967296L) +
       graft.functions.HashFunctions.polyHash(tok, 131, 998244353L)
 
-  /** 64-bit SimHash over whitespace tokens: per bit, sign of the sum of
-    * ±1 token-hash bit contributions (explode + 64 codegen'd sum-
-    * aggregates; one shuffle). A per-row formulation with higher-order
-    * `aggregate` lanes was measured ~3× slower — HOF lambdas evaluate
-    * interpreted per element, codegen'd hash aggregates don't.
-    * `tokenHash` defaults to xxhash64 (fastest); pass
-    * [[portableTokenHash]] for cross-engine-verifiable signatures. */
-  def simHash(df: DataFrame, id: Column, text: Column,
-      tokenHash: Column => Column = xxhash64(_)): DataFrame = {
-    val ex = ensureParallelism(df.select(id.as("sid"),
-      explode(split(normText(text), "\\s+")).as("tok")))
-      .withColumn("th", tokenHash(col("tok")))
-    val bitSums = (0 until 64).map(i =>
-      sum(when(shiftright(col("th"), i).bitwiseAND(1) === 1, 1).otherwise(-1)).as(s"b$i"))
-    val agged = ex.groupBy(col("sid")).agg(bitSums.head, bitSums.tail: _*)
-    val sim = (0 until 64).map(i =>
-      when(col(s"b$i") > 0, shiftleft(lit(1L), i)).otherwise(0L))
-      .reduce((a, b) => a.bitwiseOR(b))
-    agged.select(col("sid"), sim.as("simhash"))
-  }
-
-  /** Portable-hash SimHash signatures computed PER ROW by the native
-    * [[graft.functions.SimHashPortable]] expression — bit-identical to
-    * `simHash(df, id, text, portableTokenHash)` (integer bit-count sums
-    * are order-independent; spec-asserted), but ONE scan-stage pass:
-    * no token explode through a shuffle, no 64-column hash aggregate.
-    * The r17 before-run measured the aggregate formulation at 7.5 s
-    * (sf1, 32c) for d04; the signature stage is now scan-bound, the
-    * same shape as the MinHash lanes. Rows whose text is NULL drop out
+  /** 64-bit SimHash signatures over whitespace tokens with the portable
+    * token hash: per bit, the sign of the sum of ±1 token-hash bit
+    * contributions, computed PER ROW by the native
+    * [[graft.functions.SimHashPortable]] expression in ONE scan-stage
+    * pass. OpsSpec keeps the explode + 64-sum-aggregate formulation as
+    * the reference it is asserted bit-identical to (integer bit-count
+    * sums are order-independent); that formulation measured 7.5 s (sf1,
+    * 32c) for d04 against a scan-bound signature stage here, the same
+    * shape as the MinHash lanes. Rows whose text is NULL drop out
     * (explode-of-null semantics, preserved by the isNotNull filter). */
   def simHashPortableSignatures(df: DataFrame, id: Column, text: Column): DataFrame = {
     ensureParallelism(df.select(id.as("sid"),
@@ -434,20 +414,12 @@ object Dedup {
 
   /** SimHash near-dups with Hamming distance ≤ maxHamming, candidates by
     * 16-bit chunk banding (pigeonhole: ≤3 differing bits over 4 chunks ⇒
-    * ≥1 identical chunk), verified with bit_count(xor).
-    *
-    * `tokenHash = None` (default) rides the native per-row portable
-    * signature ([[simHashPortableSignatures]]); passing an explicit hash
-    * keeps the aggregate formulation (the spec's equality twin and the
-    * xxhash64 variant). */
+    * ≥1 identical chunk), verified with bit_count(xor), over the
+    * [[simHashPortableSignatures]]. */
   def simHashNearDups(df: DataFrame, id: Column, text: Column,
-      maxHamming: Int = 3, tokenHash: Option[Column => Column] = None): DataFrame = {
+      maxHamming: Int = 3): DataFrame = {
     require(maxHamming <= 3, "4-chunk banding guarantees recall only for hamming <= 3")
-    val hashed = tokenHash match {
-      case Some(h) => simHash(df, id, text, h)
-      case None => simHashPortableSignatures(df, id, text)
-    }
-    val banded = hashed.select(col("sid"), col("simhash"),
+    val banded = simHashPortableSignatures(df, id, text).select(col("sid"), col("simhash"),
       posexplode(array((0 until 4).map(c =>
         shiftright(col("simhash"), c * 16).bitwiseAND(0xFFFF)): _*))
         .as(Seq("chunk", "cval")))

@@ -3,7 +3,7 @@ package graft
 import graft.functions.VectorFunctions
 import graft.ops.{Dedup, Multimodal, Similarity, TextOps}
 import graft.streaming.EventStreams
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,6 +18,24 @@ class OpsSpec extends AnyFunSuite {
   import spark.implicits._
 
   private val sf = "/root/testdata/sf0.001"
+
+  /** Reference SimHash formulation: explode the whitespace tokens, then
+    * per bit the sign of the sum of ±1 token-hash bit contributions (64
+    * sum-aggregates). The native per-row signature
+    * ([[Dedup.simHashPortableSignatures]]) is asserted bit-identical to
+    * it with the portable token hash. */
+  private def referenceSimHash(df: DataFrame, id: Column, text: Column,
+      tokenHash: Column => Column = xxhash64(_)): DataFrame = {
+    val ex = df.select(id.as("sid"), explode(split(Dedup.normText(text), "\\s+")).as("tok"))
+      .withColumn("th", tokenHash(col("tok")))
+    val bitSums = (0 until 64).map(i =>
+      sum(when(shiftright(col("th"), i).bitwiseAND(1) === 1, 1).otherwise(-1)).as(s"b$i"))
+    val agged = ex.groupBy(col("sid")).agg(bitSums.head, bitSums.tail: _*)
+    val sim = (0 until 64).map(i =>
+      when(col(s"b$i") > 0, shiftleft(lit(1L), i)).otherwise(0L))
+      .reduce((a, b) => a.bitwiseOR(b))
+    agged.select(col("sid"), sim.as("simhash"))
+  }
 
   test("CosineSimilarity expression: known vectors, codegen path") {
     VectorFunctions.register(spark)
@@ -87,7 +105,7 @@ class OpsSpec extends AnyFunSuite {
     val a = "the quick brown fox jumps over the lazy dog " * 10
     val b = a.replace("lazy", "sleepy")
     val df = Seq((1L, a), (2L, a), (3L, b)).toDF("id", "text")
-    val h = Dedup.simHash(df, col("id"), col("text"))
+    val h = referenceSimHash(df, col("id"), col("text"))
       .as[(Long, Long)].collect().toMap
     assert(h(1L) == h(2L))
     assert(java.lang.Long.bitCount(h(1L) ^ h(3L)) < 16)
@@ -108,6 +126,24 @@ class OpsSpec extends AnyFunSuite {
       assert(brute.get(id).forall(b => math.abs(b - c) < 1e-9)) }
   }
 
+  test("ANN recall gate: a failing probe surfaces its cause and leaks no cache or thread") {
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    val calls = new java.util.concurrent.atomic.AtomicInteger
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.size
+    val e = intercept[IllegalStateException] {
+      OpsQueries.annRecallGateOn(spark, emb, 50) { (corpus, _) =>
+        // the first probe runs on the caller's thread; fail a pooled one
+        if (calls.incrementAndGet() == 3) throw new IllegalStateException("probe 3 failed")
+        corpus.select(col("vec_id")).limit(10)
+      }
+    }
+    assert(e.getMessage == "probe 3 failed")
+    assert(spark.sparkContext.getPersistentRDDs.size == persistedBefore)
+    val probes = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(t => t.getName == OpsQueries.AnnProbeThread && t.isAlive)
+    assert(probes.isEmpty, s"${probes.length} probe threads still alive")
+  }
+
   test("SimHashPortable: native per-row signature == explode+aggregate formulation") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       // include multi-byte and whitespace edge cases alongside the fixture
@@ -115,7 +151,7 @@ class OpsSpec extends AnyFunSuite {
       .unionByName(Seq(
         (900001L, ""), (900002L, "  "), (900003L, "héllo wörld € héllo"),
         (900004L, "one"), (900005L, "a\tb\nc")).toDF("doc_id", "text"))
-    val agg = Dedup.simHash(docs, col("doc_id"), col("text"),
+    val agg = referenceSimHash(docs, col("doc_id"), col("text"),
         Dedup.portableTokenHash)
       .as[(Long, Long)].collect().toMap
     val native = Dedup.simHashPortableSignatures(docs, col("doc_id"), col("text"))
@@ -129,13 +165,15 @@ class OpsSpec extends AnyFunSuite {
       col("h") + lit(0L)) // keep plan shape; parity is covered by collect
       .as[(Long, Long)].collect().toMap
     assert(interp == agg)
-    // end-to-end: near-dup pairs identical through the default (native)
-    // and the explicit aggregate paths
+    // end-to-end: the banded near-dup pairs equal every pair of the
+    // reference signatures within Hamming distance 3
     val a = Dedup.simHashNearDups(docs, col("doc_id"), col("text"), 3)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val b = Dedup.simHashNearDups(docs, col("doc_id"), col("text"), 3,
-        tokenHash = Some(Dedup.portableTokenHash))
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    val ids = agg.keys.toSeq.sorted
+    val b = (for {
+      x <- ids; y <- ids
+      if x < y && java.lang.Long.bitCount(agg(x) ^ agg(y)) <= 3
+    } yield (x, y)).toSet
     assert(a == b)
   }
 

@@ -104,6 +104,30 @@ class SqlGenSpec extends AnyFunSuite {
         |}""".stripMargin, "SELECT *")
   }
 
+  test("both engines refuse the same bad queries with the same message") {
+    val (m, c) = TpchLake.lake(sf)
+    val bad = Seq(
+      "SELECT ?x ?v WHERE { ?x g:noSuchPredicate ?v }" -> "no relevant source for star ?x",
+      """SELECT ?o WHERE {
+        |  ?o g:customer ?c . ?o2 g:customer ?c .
+        |  MINUS { ?c g:custName ?n }
+        |}""".stripMargin -> "must connect to the rest of the query by exactly one join",
+      "DESCRIBE ?n WHERE { ?c g:custName ?n }" -> "DESCRIBE ?n requires ?n to be a star subject",
+      "SELECT ?r ?v WHERE { ?r a g:Region . ?r !g:regionName ?v }" ->
+        "excludes every mapped predicate",
+      "SELECT ?r ?t WHERE { ?r (g:regionName/g:noSuchHop)+ ?t }" ->
+        "no relevant source maps the path predicate <http://graft.io/schema/noSuchHop>")
+    for ((sparql, needle) <- bad) {
+      val q = SparqlParser.parse(FixP + sparql)
+      val viaColumns = intercept[IllegalArgumentException] {
+        graft.engine.GraftEngine.executeParsed(spark, q, m, c)
+      }
+      val viaSql = intercept[IllegalArgumentException] { SqlGenExecutor.lower(q, m, c) }
+      assert(viaColumns.getMessage.contains(needle), viaColumns.getMessage)
+      assert(viaSql.getMessage == viaColumns.getMessage)
+    }
+  }
+
   private val FixP = "PREFIX g: <http://graft.io/schema/>\n"
   private def fixtureMappings(entries: Seq[(String, String, String, String)]): String =
     s"""@prefix g: <http://graft.io/schema/>
