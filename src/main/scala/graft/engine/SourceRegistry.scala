@@ -1,7 +1,12 @@
 package graft.engine
 
 import graft.model.SourceConfig
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import scala.collection.mutable
+import scala.util.control.NonFatal
+import scala.util.hashing.MurmurHash3
 
 /** Pluggable source loaders keyed by store type — same option contract as the
   * reference's config (evaluation/input_files/config:2-53; dispatch
@@ -9,6 +14,38 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * formats; mongodb/cassandra/elasticsearch keep the reference's option
   * shape but need their DSv2 connector jars on the classpath at runtime
   * (not available in this offline build — they fail with a clear error).
+  *
+  * `load` is the one place both engines load a source, and it resolves
+  * each file source once per session (Presto reads files through a Hive
+  * metastore for the same reason; Spark SQL separates the catalog-resolved
+  * relation from the per-query plan built on it). A fresh read costs a
+  * file listing, a schema-inference job (parquet footers, the whole of a
+  * JSON source, a CSV with `inferSchema`, the predicate pass of an
+  * N-Triples source) and a new relation; on a tiny lake that is half of a
+  * query's wall time. The rule:
+  *  - memoised stores: those whose `source` is a file path — `parquet`
+  *    (not with `bucketed_table`, which reads through the catalog),
+  *    `csv`, `json`, `orc` and `rdf`. `jdbc` and the connector stores
+  *    resolve by a database round-trip, not a listing, and are read
+  *    afresh; so is a path with glob characters.
+  *  - key: session + store type + path + reader options, so at most one
+  *    entry per source per session.
+  *  - validity stamp, kept next to the DataFrame: a digest of the
+  *    recursive listing (file count, total bytes, max mtime, a hash of
+  *    the (path, length, mtime) triples) and the session's explicitly set
+  *    confs (`spark.conf.getAll`). Every `load` lists the files, as a
+  *    fresh read does; a changed listing or conf resolves the source
+  *    again and the new resolution replaces the entry. A query therefore
+  *    sees exactly the files a fresh read would see, and skips only the
+  *    schema inference.
+  *  - listing: `FileSystem.listStatus`, walked recursively. Not
+  *    `listFiles`/`listLocatedStatus`: on the local FS a located status
+  *    loads each file's permissions, which made a one-source build slower
+  *    than the fresh read it replaces (90 → 125 ms; `listStatus` 7 ms).
+  *  - errors: a path that cannot be listed falls through to the plain
+  *    read, so a missing path raises Spark's own `PATH_NOT_FOUND`.
+  *  - lifetime: entries of a stopped session are dropped on the next
+  *    `load`; `register(storeType, …)` drops that store type's entries.
   */
 object SourceRegistry {
 
@@ -72,10 +109,66 @@ object SourceRegistry {
             s"$name connector not on classpath; add its Spark connector jar", e)
       }
 
-  def register(storeType: String, loader: Loader): Unit =
-    synchronized { loaders += storeType -> loader }
+  def register(storeType: String, loader: Loader): Unit = synchronized {
+    loaders += storeType -> loader
+    memo.values.foreach(_.filterInPlace((k, _) => k.storeType != storeType))
+  }
 
-  def load(spark: SparkSession, sc: SourceConfig): DataFrame =
-    loaders.getOrElse(sc.storeType,
-      sys.error(s"unknown store type '${sc.storeType}' for source ${sc.source}"))(spark, sc)
+  /** The loader registered for `storeType` (to wrap or restore it). */
+  private[graft] def loader(storeType: String): Loader =
+    loaders.getOrElse(storeType, sys.error(s"unknown store type '$storeType'"))
+
+  def load(spark: SparkSession, sc: SourceConfig): DataFrame = {
+    val read = loaders.getOrElse(sc.storeType,
+      sys.error(s"unknown store type '${sc.storeType}' for source ${sc.source}"))
+    synchronized { memo.filterInPlace((s, _) => !s.sparkContext.isStopped) }
+    val stamp = if (memoised(sc)) listing(spark, sc.source) else None
+    stamp.fold(read(spark, sc)) { files =>
+      val key = Key(sc.storeType, sc.source, sc.options)
+      val confs = spark.conf.getAll
+      synchronized(memo.get(spark).flatMap(_.get(key))) match {
+        case Some(r) if r.files == files && r.confs == confs => r.df
+        case _ =>
+          val df = read(spark, sc)
+          synchronized {
+            memo.getOrElseUpdate(spark, mutable.Map.empty)(key) = Resolved(df, files, confs)
+          }
+          df
+      }
+    }
+  }
+
+  private val FileStores = Set("parquet", "csv", "json", "orc", "rdf")
+
+  private def memoised(sc: SourceConfig): Boolean =
+    FileStores(sc.storeType) && !sc.options.contains("bucketed_table") &&
+      !sc.source.exists("{}[]*?\\".contains(_))
+
+  private final case class Key(storeType: String, path: String, options: Map[String, String])
+  private final case class Listing(files: Int, bytes: Long, maxMtime: Long, digest: Int)
+  private final case class Resolved(df: DataFrame, files: Listing, confs: Map[String, String])
+
+  /** Resolved sources per live session (guarded by this object's lock). */
+  private val memo = mutable.Map.empty[SparkSession, mutable.Map[Key, Resolved]]
+
+  /** (session, store type, path) of every memo entry, for tests. */
+  private[graft] def memoEntries: Seq[(SparkSession, String, String)] = synchronized {
+    memo.toSeq.flatMap { case (s, m) => m.keys.map(k => (s, k.storeType, k.path)) }
+  }
+
+  /** Digest of the files under `path` (recursive `listStatus`); None when
+    * it cannot be listed, so the caller reads without the memo. */
+  private def listing(spark: SparkSession, path: String): Option[Listing] =
+    try {
+      val p = new Path(path)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val files = mutable.ArrayBuffer.empty[FileStatus]
+      def walk(st: FileStatus): Unit =
+        if (st.isDirectory) fs.listStatus(st.getPath).foreach(walk) else files += st
+      fs.listStatus(p).foreach(walk)
+      Some(Listing(files.size, files.map(_.getLen).sum,
+        files.map(_.getModificationTime).maxOption.getOrElse(0L),
+        MurmurHash3.unorderedHash(
+          files.map(f => (f.getPath.toString, f.getLen, f.getModificationTime)))))
+    } catch { case NonFatal(_) => None }
 }

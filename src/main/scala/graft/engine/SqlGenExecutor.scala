@@ -83,7 +83,9 @@ object SqlGenExecutor {
 
   /** Run the lowered SQL on Spark's own SQL engine over temp views
     * (loaded through the same [[SourceRegistry]] the Column engine
-    * uses, so reader options cannot drift between engines). */
+    * uses, so reader options cannot drift between engines, and a file
+    * source is resolved once per session while its listing is unchanged
+    * — the memo rule in [[SourceRegistry]]'s header). */
   def execute(spark: SparkSession, q: ParsedQuery,
       mappings: MappingsDoc, config: LakeConfig): DataFrame = {
     val l = lower(q, mappings, config)

@@ -48,7 +48,9 @@ object StarCompiler {
     if (cs.fns.isEmpty) col(cs.attr) else Transforms(col(cs.attr), cs.fns)
 
   /** Load a mapping's raw source (config options merged in) — shared by
-    * the star compiler and the source expansions ([[StarSpec.Scan]]). */
+    * the star compiler and the source expansions ([[StarSpec.Scan]]).
+    * A file source is resolved once per session while its listing is
+    * unchanged (the memo rule in [[SourceRegistry]]'s header). */
   def loadSource(spark: SparkSession, m: EntityMapping, config: LakeConfig): DataFrame = {
     val sourceCfg = config.sources.find(_.source == m.source)
       .getOrElse(SourceConfig(m.name, m.storeType, m.source, Map.empty))

@@ -440,6 +440,13 @@ object Dedup {
     * transitive closure as one duplicate group (one kept doc per
     * component).
     *
+    * Precondition (not checked at run time — it would cost a job per
+    * call): every pair endpoint is an id in `ids`. An endpoint missing
+    * from `ids` still joins the pair graph, so components merge through
+    * it, and it can be the smallest id of a component, so a label can be
+    * an id that `ids` does not contain. Pairs derived from `ids` itself
+    * (the near-dup joins above) satisfy it by construction.
+    *
     * Each round combines min-label propagation over the symmetric edge
     * list with pointer jumping (label ← label of one's own label), so
     * convergence is O(log n) rounds even on a path graph — neighbor

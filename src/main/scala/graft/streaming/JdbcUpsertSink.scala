@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
+import scala.util.Using
+
 /** Streaming → relational-database egress with UPSERT semantics, via
   * `foreachBatch`: each micro-batch DELETEs its keys and re-INSERTs the
   * fresh rows inside one transaction per partition. Structured Streaming
@@ -66,29 +68,35 @@ object JdbcUpsertSink {
     // even on disjoint keys — a server-grade RDBMS with row-level
     // locking can raise this to N disjoint-key writer partitions
     df.coalesce(1).foreachPartition { (rows: Iterator[Row]) =>
-      if (rows.nonEmpty) {
-        val conn = java.sql.DriverManager.getConnection(url)
+      if (rows.nonEmpty) Using.resource(java.sql.DriverManager.getConnection(url)) { conn =>
+        conn.setAutoCommit(false)
         try {
-          conn.setAutoCommit(false)
-          val del = conn.prepareStatement(delSql)
-          val ins = conn.prepareStatement(insSql)
-          rows.foreach { r =>
-            keyIdx.zipWithIndex.foreach { case (ki, pi) =>
-              del.setObject(pi + 1, r.get(ki)) }
-            del.addBatch()
-            schema.indices.foreach { i =>
-              ins.setObject(i + 1, r.get(i) match {
-                case d: java.math.BigDecimal => d
-                case bd: scala.math.BigDecimal => bd.bigDecimal
-                case x => x
-              })
-            }
-            ins.addBatch()
+          Using.resources(conn.prepareStatement(delSql), conn.prepareStatement(insSql)) {
+            (del, ins) =>
+              rows.foreach { r =>
+                keyIdx.zipWithIndex.foreach { case (ki, pi) =>
+                  del.setObject(pi + 1, r.get(ki)) }
+                del.addBatch()
+                schema.indices.foreach { i =>
+                  ins.setObject(i + 1, r.get(i) match {
+                    case d: java.math.BigDecimal => d
+                    case bd: scala.math.BigDecimal => bd.bigDecimal
+                    case x => x
+                  })
+                }
+                ins.addBatch()
+              }
+              del.executeBatch(); ins.executeBatch()
           }
-          del.executeBatch(); ins.executeBatch()
           conn.commit()
-          del.close(); ins.close()
-        } finally conn.close()
+        } catch {
+          // roll back before the connection closes: closing it with the
+          // transaction open throws (Derby SQLState 25001), and that
+          // error would replace this one
+          case e: Throwable =>
+            try conn.rollback() catch { case r: java.sql.SQLException => e.addSuppressed(r) }
+            throw e
+        }
       }
     }
   }

@@ -1090,6 +1090,17 @@ class OpsSpec extends AnyFunSuite {
     assert(got.length == 201 && got.forall(_._2 == 0L))
   }
 
+  test("connectedComponents precondition: c01's pair endpoints are all document ids") {
+    // the gate's own inputs (OpsQueries c01_dedup_clusters): every
+    // endpoint of the near-dup pairs must be an id of `ids`, or components
+    // would merge through, and be labeled by, an id outside the corpus
+    val d = spark.read.parquet(s"$sf/documents.parquet")
+    val pairs = Dedup.minHashNearDups(d, col("doc_id"), col("text"), n = 3, threshold = 0.8)
+    val endpoints = pairs.select(col("id_a").as("e")).union(pairs.select(col("id_b").as("e")))
+    assert(!endpoints.isEmpty, "c01 has no near-dup pairs at sf0.001; the check would be vacuous")
+    assert(endpoints.join(d, col("e") === col("doc_id"), "left_anti").isEmpty)
+  }
+
   test("decontamination flags planted n-gram overlap, leaves clean docs alone") {
     val eval = Seq((900L, "the secret benchmark answer is forty two exactly"))
       .toDF("doc_id", "text")
@@ -3315,6 +3326,37 @@ class OpsSpec extends AnyFunSuite {
       .option("driver", "org.apache.derby.jdbc.EmbeddedDriver").load()
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
     assert(got == Set((1L, 11.0), (2L, 20.0), (3L, 30.0)))
+  }
+
+  test("JdbcUpsertSink: a failed batch rolls back and surfaces its own error") {
+    import graft.streaming.JdbcUpsertSink
+    val url = "jdbc:derby:memory:graftdb;create=true"
+    val t = "UPSERT_NN_SPEC"
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      val st = conn.createStatement()
+      try {
+        st.executeUpdate(s"CREATE TABLE $t (k BIGINT, v VARCHAR(255) NOT NULL)")
+        st.executeUpdate(s"INSERT INTO $t VALUES (1, 'a')")
+      } finally st.close()
+    } finally conn.close()
+    // DELETE of key 1 succeeds inside the transaction, the INSERT of a
+    // NULL into the NOT NULL column fails (SQLState 23502)
+    val e = intercept[Exception] {
+      JdbcUpsertSink.upsertBatch(Seq((1L, null: String), (2L, "b")).toDF("k", "v"),
+        url, t, Seq("k"))
+    }
+    val states = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .flatMap {
+        case s: java.sql.SQLException =>
+          Iterator.iterate(s)(_.getNextException).takeWhile(_ != null).map(_.getSQLState)
+        case _ => Iterator.empty
+      }.toSet
+    assert(states("23502") && !states("25001"), s"SQLStates in the cause chain: $states")
+    val got = spark.read.format("jdbc").option("url", url).option("dbtable", t)
+      .option("driver", "org.apache.derby.jdbc.EmbeddedDriver").load()
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(got == Set((1L, "a")))
   }
 
   test("dedupLinesInDoc keeps first occurrences in order; capPerGroup binds and is salt-stable") {
