@@ -738,8 +738,7 @@ object EngineQueries {
       // (and silently vanished from every driver CORRECTNESS artifact,
       // rounds 5–9) whenever Verify started from a fresh target/ dir,
       // while its identical twin sg34, hashed later in the map, passed.
-      TpchLake.ensureDerived(spark, sfDir)
-      if (sparql.contains("jdbc")) TpchLake.ensureJdbc(spark, sfDir)
+      TpchLake.provision(spark, sfDir, jdbc = sparql.contains("jdbc"))
       val (m, c) = TpchLake.lake(sfDir)
       graft.engine.SqlGenExecutor.execute(spark,
         graft.sparql.SparqlParser.parse(P + sparql), m, c)

@@ -235,8 +235,23 @@ object TpchLake {
     s"""{"sources":[${(parquetEntries ++ csvEntries :+ orgEntry :+ rdfEntry :+ jdbcEntry).mkString(",")}],"weights":$weights}"""
   }
 
-  /** Generate the derived CSV/NT sources (idempotent: SaveMode.Ignore). */
+  /** The directories [[ensureDerived]] writes under `derivedDir(sfDir)`. */
+  private val derivedSources =
+    Seq("nation_csv", "nation_json", "nation_orc", "part_shifted_csv", "org_parquet", "nation_nt")
+  private val derivedFor = scala.collection.mutable.Set.empty[String]
+
+  /** Generate the derived CSV/NT sources (idempotent: SaveMode.Ignore),
+    * once per JVM and sf: a later call only checks that every derived
+    * directory still exists, and regenerates when one is missing. */
   def ensureDerived(spark: SparkSession, sfDir: String): Unit = synchronized {
+    val d = derivedDir(sfDir)
+    if (!derivedFor(sfDir) || !derivedSources.forall(s => new java.io.File(s"$d/$s").exists())) {
+      writeDerived(spark, sfDir)
+      derivedFor += sfDir
+    }
+  }
+
+  private def writeDerived(spark: SparkSession, sfDir: String): Unit = {
     val d = derivedDir(sfDir)
     spark.read.parquet(s"$sfDir/nation.parquet")
       .coalesce(1).write.mode(SaveMode.Ignore).option("header", "true")
@@ -295,6 +310,15 @@ object TpchLake {
       true
     })
 
+  /** Everything the lake's mappings read beyond `sfDir` itself: the
+    * derived sources and, when `jdbc`, the Derby table. Both are memoised
+    * per JVM and sf, so the gates call this on every run while Bench
+    * calls it once per directory, before that directory's timed sweep. */
+  def provision(spark: SparkSession, sfDir: String, jdbc: Boolean): Unit = {
+    ensureDerived(spark, sfDir)
+    if (jdbc) ensureJdbc(spark, sfDir)
+  }
+
   private val cache = scala.collection.concurrent.TrieMap.empty[String, (MappingsDoc, LakeConfig)]
 
   def lake(sfDir: String): (MappingsDoc, LakeConfig) =
@@ -306,8 +330,7 @@ object TpchLake {
     // the events table stores TIMESTAMP(NANOS); read as long everywhere
     // (only affects nanos-typed columns)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ensureDerived(spark, sfDir)
-    if (sparql.contains("jdbc")) ensureJdbc(spark, sfDir)
+    provision(spark, sfDir, jdbc = sparql.contains("jdbc"))
     val (m, c) = lake(sfDir)
     GraftEngine.executeParsed(spark, SparqlParser.parse(sparql), m, c)
   }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry}
+import graft.{Bench, GraftSession, SparkEntry}
 
 /** Times selected queries N times in one JVM — separates steady-state cost
   * from JIT/cache warmup that single-shot Bench runs conflate. */
@@ -11,19 +11,13 @@ object MicroBench {
     val cpus = GraftSession.cpus()
     val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    Bench.provision(spark, sfDir)
     for (name <- args) {
       // benchQueries, not queries: MicroBench exists to explain Bench
       // numbers, so it must time the same per-query unit (the ANN
       // overrides time one operator invocation, not the recall harness)
       val fn = SparkEntry.benchQueries(name)
-      val times = (1 to reps).map { _ =>
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        // full materialization via the noop sink — Bench's timing unit
-        // (count() lets Catalyst prune entire branches; see Bench.time)
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      }
+      val times = (1 to reps).map(_ => Bench.time(spark, fn, sfDir))
       println(f"$name: ${times.map(t => f"$t%.1f").mkString(" ")}")
     }
     spark.stop()

@@ -3040,41 +3040,25 @@ class OpsSpec extends AnyFunSuite {
   test("bench baseline loader: own format preferred; driver tail scraped segment-aware") {
     val dir = java.nio.file.Files.createTempDirectory("bl").toFile
     val valid = Set("d02_ngram_jaccard", "q04_join2", "s01_cosine_topk")
-    // no files at all → explicit "none", empty maps
-    assert(Bench.loadBaseline(valid, dir.getPath) == ((Map.empty, Map.empty, "none")))
-    // driver BENCH file: escaped stdout tail with an INTACT "queries"
-    // block — spread values for the same names must NOT shadow the query
-    // mins, non-gate keys (rc) are dropped, sf1_queries parsed separately
-    val tail = """\"queries\":{\"d02_ngram_jaccard\":1.500,\"q04_join2\":0.004},""" +
-      """\"spread\":{\"d02_ngram_jaccard\":9.999},\"reps\":3,""" +
-      """\"sf1_queries\":{\"d02_ngram_jaccard\":8.800}"""
+    // no files at all → no baseline (source "none")
+    assert(Bench.Baseline.load(dir.getPath, valid).isEmpty)
+    // BENCH_r*.json files alone are not a baseline, even one whose
+    // escaped stdout tail carries an intact "queries" block
     java.nio.file.Files.writeString(new java.io.File(dir, "BENCH_r07.json").toPath,
-      s"""{"n": 7, "rc": 0, "tail": "$tail"}""")
-    val (q7, s7, src7) = Bench.loadBaseline(valid, dir.getPath)
-    assert(src7 == "BENCH_r07.json" && q7 == Map("d02_ngram_jaccard" -> 1.5,
-      "q04_join2" -> 0.004) && s7 == Map("d02_ngram_jaccard" -> 8.8))
-    // the newest round wins (numeric, not lexicographic) — and a tail cut
-    // mid-"spread" (no intact queries opener) yields NO baseline rather
-    // than silently adopting spread values as mins (the r11 tail did
-    // exactly this cut)
-    java.nio.file.Files.writeString(new java.io.File(dir, "BENCH_r10.json").toPath,
-      """{"n": 10, "tail": "gaccard\":0.700,\"q04_join2\":0.008,\"reps\":3"}""")
-    assert(Bench.loadBaseline(valid, dir.getPath) ==
-      ((Map.empty, Map.empty, "none")))
-    // own bench_baseline.json beats every driver file
+      """{"n": 7, "rc": 0, "tail": "\"queries\":{\"d02_ngram_jaccard\":1.500}"}""")
+    assert(Bench.Baseline.load(dir.getPath, valid).isEmpty)
+    // own bench_baseline.json: per-gate mins, non-gate keys dropped
     java.nio.file.Files.writeString(new java.io.File(dir, "bench_baseline.json").toPath,
-      """{"sf":"x","reps":3,"queries":{"s01_cosine_topk":0.200},""" +
+      """{"sf":"x","reps":3,"queries":{"s01_cosine_topk":0.200,"zz_notagate":1.000},""" +
         """"sf1_queries":{"s01_cosine_topk":2.000}}""")
-    assert(Bench.loadBaseline(valid, dir.getPath) ==
-      ((Map("s01_cosine_topk" -> 0.2), Map("s01_cosine_topk" -> 2.0),
-        "bench_baseline.json")))
+    val b = Bench.Baseline.load(dir.getPath, valid).get
+    assert(b.queries == Map("s01_cosine_topk" -> 0.2) &&
+      b.sf1Queries == Map("s01_cosine_topk" -> 2.0))
   }
 
   test("bench variance band: median-of-history loader (r13 verdict item 2)") {
     val dir = java.nio.file.Files.createTempDirectory("bh").toFile
     val valid = Set("c03_label_propagation", "q04_join2")
-    // no file → empty histories
-    assert(Bench.loadHistory(valid, dir.getPath) == ((Map.empty, Map.empty)))
     // history blocks parse per-gate arrays; non-gate keys dropped; the
     // sf1 block is independent; empty arrays stay empty (held gates)
     java.nio.file.Files.writeString(new java.io.File(dir, "bench_baseline.json").toPath,
@@ -3082,7 +3066,8 @@ class OpsSpec extends AnyFunSuite {
         """"sf1_queries":{"q04_join2":2.000},""" +
         """"history":{"c03_label_propagation":[2.100,3.200,2.800,1.418],"zz_notagate":[9.9],"q04_join2":[]},""" +
         """"sf1_history":{"q04_join2":[2.000,2.100,1.900]}}""")
-    val (h01, h1) = Bench.loadHistory(valid, dir.getPath)
+    val b = Bench.Baseline.load(dir.getPath, valid).get
+    val (h01, h1) = (b.history, b.sf1History)
     assert(h01 == Map("c03_label_propagation" -> List(2.1, 3.2, 2.8, 1.418),
       "q04_join2" -> Nil))
     assert(h1 == Map("q04_join2" -> List(2.0, 2.1, 1.9)))
@@ -3091,8 +3076,9 @@ class OpsSpec extends AnyFunSuite {
     // (< 2×2.45) no longer flags, while a true 6 s regression still does
     val m = Bench.median(h01("c03_label_propagation"))
     assert(math.abs(m - 2.45) < 1e-9)
-    assert(!(3.2 > 2 * math.max(1.418, m)))
-    assert(6.0 > 2 * math.max(1.418, m))
+    assert(Bench.tripwire(b, Seq("c03_label_propagation" -> ((3.2, 0.0))), None).isEmpty)
+    assert(Bench.tripwire(b, Seq("c03_label_propagation" -> ((6.0, 0.0))), None) ==
+      Seq(Bench.Regression("c03_label_propagation", m, 6.0, "sf0.1")))
     assert(Bench.median(Seq(1.0, 5.0, 3.0)) == 3.0)
   }
 

@@ -28,7 +28,8 @@ class SessionConfigSpec extends AnyFunSuite {
 
   test("no source reads a retired tuning knob") {
     val knobs = Seq("SPARK_GRAFT_LOCAL_DIR", "SPARK_GRAFT_PREFER_SMJ",
-      "SPARK_GRAFT_STREAM_PARTITIONS")
+      "SPARK_GRAFT_STREAM_PARTITIONS", "SPARK_GRAFT_ADJ_REPS", "SPARK_GRAFT_SMOKE_CAP",
+      "SPARK_GRAFT_SMOKE_ALPHA", "SPARK_GRAFT_SMOKE_ADJ_REPS")
     val readers = for ((p, text) <- sources; k <- knobs if text.contains(k)) yield s"$p: $k"
     assert(readers.isEmpty)
   }
