@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** A semantic-data-lake binding of the driver's TPC-H-ish test tables
-  * (/root/repo/TESTDATA.md) — the analogue of the reference's BSBM
+  * (TESTDATA.md) — the analogue of the reference's BSBM
   * mappings.ttl + config (evaluation/input_files/). Exercises every
   * reference behavior on local deterministic data: star decomposition, id
   * templates, FK equi-join chains, rdf:type source selection, multi-source
@@ -19,14 +19,13 @@ object TpchLake {
 
   val NS = "http://graft.io/schema/"
 
-  /** Derived fixtures live under target/ (never in the testdata lake),
-    * one directory per `key`: an sf dir (by its base name), or the name
-    * of a gate's own scale-independent fixture. The only place the
+  /** Derived fixtures live under `target/derived` of the working
+    * directory (never in the testdata lake), as an absolute path, one
+    * directory per `key`: an sf dir (by its base name), or the name of a
+    * gate's own scale-independent fixture. The only place the
     * derived-fixture root is spelled. */
-  private[graft] def derivedDir(key: String): String = {
-    val label = new java.io.File(key).getName
-    s"/root/repo/target/derived/$label"
-  }
+  private[graft] def derivedDir(key: String): String =
+    new java.io.File("target/derived", new java.io.File(key).getName).getAbsolutePath
 
   def mappingsText(sfDir: String): String = {
     val d = derivedDir(sfDir)

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import scala.reflect.runtime.universe.TypeTag
+
 /** Byte-pair-encoding merge learning (Sennrich et al. 2016) — the
   * tokenizer-training pass of an LLM data pipeline, run where the corpus
   * lives instead of streaming it to a single-node trainer.
@@ -14,9 +16,8 @@ import org.apache.spark.sql.functions._
   * pair-count aggregation over that table plus a driver argmax of a
   * single row; the merge application is a fold over each word's symbol
   * array (`aggregate` higher-order function — no UDF, no shuffle). The
-  * word table is localCheckpoint'ed per iteration so the plan does not
-  * grow with the merge count (the iterative-DataFrame contract shared
-  * with [[Graph.pageRank]]).
+  * word table is checkpointed per iteration ([[Ckpt]]) so the plan does
+  * not grow with the merge count.
   *
   * Determinism: pair counts are exact integers and ties break by
   * (count DESC, left ASC, right ASC), so the merge sequence is a pure
@@ -59,36 +60,15 @@ object Bpe {
     * remains. Pair counting is per POSITION (a word with "aaa" counts
     * (a,a) twice per occurrence), the standard BPE statistic. */
   def learnMerges(df: DataFrame, text: Column, numMerges: Int): DataFrame = {
-    val spark = df.sparkSession
     require(numMerges >= 1, "numMerges must be >= 1")
-    var words = df.select(explode(TextOps.tokens(text)).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-      .select(col("cnt"), split(col("w"), "").as("syms"))
-      .localCheckpoint()
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var done = false
-    for (rank <- 1 to numMerges if !done) {
-      // adjacent pairs with overlap, weighted by word count; the zip of
-      // the array with its own tail keeps this a scan-stage expression
-      val best = words
-        .select(col("cnt"), explode(arrays_zip(
-          slice(col("syms"), lit(1), greatest(size(col("syms")) - 1, lit(0))),
-          slice(col("syms"), lit(2), greatest(size(col("syms")) - 1, lit(0))))).as("pr"))
-        .groupBy(col("pr.0").as("l"), col("pr.1").as("r"))
-        .agg(sum(col("cnt")).as("pc"))
+    mergeLoop(df, text, numMerges) { (words, rank) =>
+      pairCounts(words)
         .orderBy(col("pc").desc, col("l").asc, col("r").asc)
-        .head(1)
-      if (best.isEmpty) done = true
-      else {
-        val (l, r, pc) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-        merges += ((rank, l, r, pc))
-        words = words
-          .select(col("cnt"), applyMerge(col("syms"), l, r).as("syms"))
-          .localCheckpoint()
-      }
-    }
-    import spark.implicits._
-    merges.toSeq.toDF("rank", "lhs", "rhs", "pair_count")
+        .head(1).headOption.map { b =>
+          val (l, r) = (b.getString(0), b.getString(1))
+          (l, r, (rank, l, r, b.getLong(2)))
+        }
+    }.toDF("rank", "lhs", "rhs", "pair_count")
   }
 
   /** Learn WordPiece merges: the same greedy loop as [[learnMerges]]
@@ -104,44 +84,59 @@ object Bpe {
     * Output: (rank, lhs, rhs, pair_count, score9). */
   def learnWordPieceMerges(df: DataFrame, text: Column,
       numMerges: Int): DataFrame = {
-    val spark = df.sparkSession
     require(numMerges >= 1, "numMerges must be >= 1")
-    var words = df.select(explode(TextOps.tokens(text)).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-      .select(col("cnt"), split(col("w"), "").as("syms"))
-      .localCheckpoint()
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long, Long)]
-    var done = false
-    for (rank <- 1 to numMerges if !done) {
-      val pairs = words
-        .select(col("cnt"), explode(arrays_zip(
-          slice(col("syms"), lit(1), greatest(size(col("syms")) - 1, lit(0))),
-          slice(col("syms"), lit(2), greatest(size(col("syms")) - 1, lit(0))))).as("pr"))
-        .groupBy(col("pr.0").as("l"), col("pr.1").as("r"))
-        .agg(sum(col("cnt")).as("pc"))
+    mergeLoop(df, text, numMerges) { (words, rank) =>
       val syms = words
         .select(col("cnt"), explode(col("syms")).as("s"))
         .groupBy(col("s")).agg(sum(col("cnt")).as("sc"))
-      val best = pairs
+      pairCounts(words)
         .join(syms.select(col("s").as("l"), col("sc").as("cl")), Seq("l"))
         .join(syms.select(col("s").as("r"), col("sc").as("cr")), Seq("r"))
         .select(col("l"), col("r"), col("pc"),
           expr("pc * 1000000000L div (cl * cr)").as("score9"))
         .orderBy(col("score9").desc, col("l").asc, col("r").asc)
-        .head(1)
-      if (best.isEmpty) done = true
-      else {
-        val (l, r, pc, sc) = (best(0).getString(0), best(0).getString(1),
-          best(0).getLong(2), best(0).getLong(3))
-        merges += ((rank, l, r, pc, sc))
-        words = words
-          .select(col("cnt"), applyMerge(col("syms"), l, r).as("syms"))
-          .localCheckpoint()
-      }
-    }
-    import spark.implicits._
-    merges.toSeq.toDF("rank", "lhs", "rhs", "pair_count", "score9")
+        .head(1).headOption.map { b =>
+          val (l, r) = (b.getString(0), b.getString(1))
+          (l, r, (rank, l, r, b.getLong(2), b.getLong(3)))
+        }
+    }.toDF("rank", "lhs", "rhs", "pair_count", "score9")
   }
+
+  /** (l, r, pc): every adjacent symbol pair of the (cnt, syms) word
+    * table with its count weighted by word count. The zip of the array
+    * with its own tail keeps this a scan-stage expression. */
+  private def pairCounts(words: DataFrame): DataFrame =
+    words
+      .select(col("cnt"), explode(arrays_zip(
+        slice(col("syms"), lit(1), greatest(size(col("syms")) - 1, lit(0))),
+        slice(col("syms"), lit(2), greatest(size(col("syms")) - 1, lit(0))))).as("pr"))
+      .groupBy(col("pr.0").as("l"), col("pr.1").as("r"))
+      .agg(sum(col("cnt")).as("pc"))
+
+  /** The greedy loop both learners share, over the (cnt, syms) table of
+    * distinct words. Round `rank` asks `best` for the next merge
+    * (lhs, rhs, its output row), None when no adjacent pair remains,
+    * and re-checkpoints the word table with the merge applied. Returns
+    * the output rows as a local frame, which reads none of the loop's
+    * checkpoints. */
+  private def mergeLoop[M <: Product : TypeTag](df: DataFrame, text: Column,
+      numMerges: Int)(best: (DataFrame, Int) => Option[(String, String, M)]): DataFrame =
+    Ckpt.run { loop =>
+      val init = loop.checkpoint(df.select(explode(TextOps.tokens(text)).as("w"))
+        .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
+        .select(col("cnt"), split(col("w"), "").as("syms")))._1
+      val ((_, merges), _) = loop.iterate((init, Vector.empty[M]), numMerges) {
+        case ((words, merges), rank) =>
+          best(words, rank) match {
+            case None => ((words, merges), 0L)
+            case Some((l, r, m)) =>
+              ((loop.checkpoint(words
+                .select(col("cnt"), applyMerge(col("syms"), l, r).as("syms")))._1,
+                merges :+ m), 1L)
+          }
+      }
+      df.sparkSession.createDataFrame(merges)
+    }
 
   /** Encode a text column with a learned merge table: tokenize, split
     * each word to characters, and apply every merge in rank order via

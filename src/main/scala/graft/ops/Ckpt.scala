@@ -1,41 +1,105 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{count, lit}
 
-/** Release discipline for loop-carried `localCheckpoint` state — the
-  * kCore "prevCkpt ladder", shared. `Dataset.unpersist` is a NO-OP for
-  * checkpoint storage (it is not CacheManager-tracked), so an iterative
-  * op that checkpoints per round without releasing the superseded
-  * round's RDD accretes one dead block set per round per invocation.
-  * Measured: four back-to-back g16 invocations in one JVM climbed
-  * 14.2 → 24.9 s as dead label-table blocks piled into the storage
-  * memory the live shuffles wanted (round-16 optimization notes). */
+import scala.collection.mutable
+
+/** The loop combinator of the driver-paced iterative operators (graph
+  * ranking and peeling, closures, connected components, the suffix
+  * ladder, BPE merge learning). Its contract:
+  *
+  *  - One checkpoint call. Every loop-carried checkpoint is
+  *    [[Loop.checkpoint]]: an eager `localCheckpoint` of the plan with a
+  *    fresh `Observation` of the loop's "changed rows" count on that same
+  *    plan, so the checkpoint's one job also delivers the count.
+  *  - Convergence without a second job. [[Loop.iterate]] stops when a
+  *    round reports 0 changed rows, or after `maxRounds` ([[Loop.rounds]]
+  *    always runs them all). A fixpoint that is not a row count (an
+  *    edge-set equality, a BPE argmax) is decided inside the step, which
+  *    then reports 0.
+  *  - Ownership instead of guessing. A [[Loop]] releases only checkpoints
+  *    it made. After each round it releases every checkpoint of the
+  *    previous state that the new state does not read ("reads" = every
+  *    `LogicalRDD` of the analyzed plan). A loop that accumulates its
+  *    checkpoints into the state therefore keeps them to the end.
+  *  - One `finally` ([[run]]). On return it releases every checkpoint
+  *    the loop made that the result does not read; on a throw (a failed
+  *    step, or the operator's own non-convergence error) it releases all
+  *    of them and the original exception propagates.
+  *
+  * Release is needed at all because `Dataset.unpersist` is a no-op for
+  * checkpoint storage (it is not CacheManager-tracked): a loop that
+  * checkpoints per round without releasing accretes one dead block set
+  * per round per call. Measured: four back-to-back g16 calls in one JVM
+  * climbed 14.2 → 24.9 s as dead label tables piled into the storage
+  * memory the live shuffles wanted. */
 private[graft] object Ckpt {
 
-  /** Handle on a localCheckpoint'ed DataFrame's persisted RDD. Returns
-    * None for plans that are not checkpoint-rooted (safe to call on the
-    * pre-loop lazy state). Caveat: on a lazy projection OVER a
-    * checkpoint it returns that underlying checkpoint — only release
-    * states whose underlying checkpoint really is superseded. A plan
-    * containing MORE than one LogicalRDD (e.g. a join of two
-    * checkpointed frames) has no well-defined "its" checkpoint: the
-    * old collectFirst silently released an arbitrary one, so this now
-    * returns None and logs — a bounded leak instead of a silent
-    * release of a frame someone still reads (round-16 ADVICE). */
-  def rddOf(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] = {
-    val rdds = df.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd }
-    if (rdds.size > 1) {
-      System.err.println(s"[Ckpt] release skipped: plan contains ${rdds.size} " +
-        "checkpoint roots (ambiguous owner); blocks leak until JVM exit")
-      None
-    } else rdds.headOption
+  /** Every checkpoint RDD `df`'s analyzed plan reads. */
+  def rddsOf(df: Dataset[_]): Seq[RDD[_]] =
+    df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }
+
+  /** Runs one operator's body with a fresh [[Loop]] and returns its
+    * result; the loop's checkpoints the result does not read are
+    * released however the body ends. */
+  def run(body: Loop => DataFrame): DataFrame = {
+    val loop = new Loop
+    var kept = Set.empty[Int]
+    try { val out = body(loop); kept = loop.reads(out); out }
+    finally loop.releaseAllBut(kept)
   }
 
-  /** Release a SUPERSEDED checkpoint's blocks. Only call once nothing
-    * will read `df` again — i.e. after the next round's checkpoint has
-    * eagerly materialized (localCheckpoint's default), never on the
-    * final state a caller still consumes. */
-  def release(df: DataFrame): Unit =
-    rddOf(df).foreach(_.unpersist(blocking = false))
+  final class Loop private[Ckpt] {
+    private val owned = mutable.LinkedHashMap.empty[Int, RDD[_]]
+
+    /** Eagerly checkpoint `df`, observing the aggregate `changed` on the
+      * plan the checkpoint runs. Returns the checkpointed frame and the
+      * observed value, both from the checkpoint's one job. */
+    def checkpoint(df: DataFrame, changed: Column = count(lit(1))): (DataFrame, Long) = {
+      val obs = Observation()
+      val c = df.observe(obs, changed.as("changed")).localCheckpoint()
+      rddsOf(c).foreach(r => owned(r.id) = r)
+      (c, obs.get("changed").asInstanceOf[Number].longValue)
+    }
+
+    /** Run `step(state, round)` for rounds 1, 2, … until it reports 0
+      * changed rows or `maxRounds` rounds have run. `initChanged` is the
+      * changed count of `init` where the caller observed one (0: `init`
+      * is already a fixpoint, no round runs). Returns the last state and
+      * whether it is a fixpoint; the caller throws on an unconverged
+      * state where that is an error, inside [[run]]. The state may be a
+      * frame or a tuple, case class or collection of frames (and plain
+      * values). */
+    def iterate[S](init: S, maxRounds: Int, initChanged: Long = -1L)(
+        step: (S, Int) => (S, Long)): (S, Boolean) = {
+      var (s, changed, round) = (init, initChanged, 0)
+      while (changed != 0 && round < maxRounds) {
+        round += 1
+        val (next, c) = step(s, round)
+        release(reads(s) -- reads(next))
+        s = next; changed = c
+      }
+      (s, changed == 0)
+    }
+
+    /** [[iterate]] for a fixed round count: every round runs. */
+    def rounds[S](init: S, n: Int)(step: (S, Int) => S): S =
+      iterate(init, n)((s, round) => (step(s, round), -1L))._1
+
+    private[Ckpt] def reads(s: Any): Set[Int] = s match {
+      case d: Dataset[_] => rddsOf(d).map(_.id).toSet
+      case it: Iterable[_] => it.flatMap(reads).toSet
+      case p: Product => p.productIterator.flatMap(reads).toSet
+      case _ => Set.empty
+    }
+
+    private def release(ids: Set[Int]): Unit =
+      ids.foreach(owned.remove(_).foreach(_.unpersist(blocking = false)))
+
+    private[Ckpt] def releaseAllBut(keep: Set[Int]): Unit =
+      release(owned.keySet.toSet -- keep)
+  }
 }

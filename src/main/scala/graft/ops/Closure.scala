@@ -20,7 +20,8 @@ import org.apache.spark.sql.functions._
   */
 object Closure {
 
-  /** Eagerly materialize `df` AND re-root it with fresh attribute ids.
+  /** Checkpoint `df` (through `loop`, observing its row count) AND
+    * re-root it with fresh attribute ids.
     *
     * `localCheckpoint` alone keeps the child plan's exprIds, so two
     * loop-carried relations that both descend from the same checkpointed
@@ -28,11 +29,11 @@ object Closure {
     * `Union.rewriteConstraints` ("key not found: src#N") when
     * `LogicalRDD.fromDataset` rewrites constraints over duplicate ids.
     * `createDataFrame(df.rdd, df.schema)` cuts the Catalyst lineage with
-    * FRESH ids; the follow-up `localCheckpoint(true)` on that plain
-    * LogicalRDD (never a Union) materializes eagerly and truncates the
-    * RDD lineage so round N does not replay rounds 1..N-1. */
-  private def pin(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(df.rdd, df.schema).localCheckpoint(true)
+    * FRESH ids; the checkpoint of that plain LogicalRDD (never a Union)
+    * materializes eagerly and truncates the RDD lineage so round N does
+    * not replay rounds 1..N-1. */
+  private def pin(loop: Ckpt.Loop, df: DataFrame): (DataFrame, Long) =
+    loop.checkpoint(df.sparkSession.createDataFrame(df.rdd, df.schema))
 
   /** All pairs (src, dst) with a directed path src →⁺ dst. Input must
     * have columns `src` and `dst`; null endpoints are dropped (an
@@ -40,24 +41,18 @@ object Closure {
     * the fixpoint is not reached in `maxRounds` squarings — 2^32 hops is
     * beyond any real graph, so exhaustion means a data problem, not a
     * tuning problem. */
-  def transitive(edges: DataFrame, maxRounds: Int = 32): DataFrame = {
-    var r = edges.select(col("src"), col("dst"))
+  def transitive(edges: DataFrame, maxRounds: Int = 32): DataFrame = Ckpt.run { loop =>
+    val r0 = loop.checkpoint(edges.select(col("src"), col("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct().localCheckpoint(true)
-    var n = r.count()
-    var round = 0
-    while (round < maxRounds) {
+      .distinct())
+    val ((r, _), converged) = loop.iterate(r0, maxRounds) { case ((r, n), _) =>
       val stepped = r.as("a").join(r.as("b"), col("a.dst") === col("b.src"))
         .select(col("a.src").as("src"), col("b.dst").as("dst"))
-      val next = r.union(stepped).distinct().localCheckpoint(true)
-      val n2 = next.count()
-      // next's eager checkpoint consumed r — release the superseded
-      // round's blocks (graft.ops.Ckpt ladder; the fixpoint result stays)
-      Ckpt.release(r)
-      if (n2 == n) return next // fixpoint: no new pairs
-      r = next; n = n2; round += 1
+      val (next, n2) = loop.checkpoint(r.union(stepped).distinct())
+      ((next, n2), n2 - n) // fixpoint: no new pairs
     }
-    sys.error(s"transitive closure did not converge in $maxRounds rounds")
+    if (!converged) sys.error(s"transitive closure did not converge in $maxRounds rounds")
+    r
   }
 
   /** Pairs (src, dst) with a path src →⁺ dst restricted to `src ∈ seeds`
@@ -73,41 +68,32 @@ object Closure {
     *
     * `seeds` needs a `src` column; `edges` needs `src`/`dst` (null
     * endpoints dropped, as in [[transitive]]). */
-  def fromSeeds(edges: DataFrame, seeds: DataFrame, maxRounds: Int = 10000): DataFrame = {
-    val e = pin(edges.select(col("src"), col("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct())
-    // round 0: one hop out of the seed set
-    var frontier = pin(seeds.select(col("src")).distinct().join(e, Seq("src")))
-    // the reached set is the union of the per-round frontiers — DISJOINT
-    // by construction (each frontier is anti-joined against all earlier
-    // ones), so no distinct is needed and, critically, only each round's
-    // NEW pairs are ever materialized: re-checkpointing the accumulated
-    // set every round would cost O(|reached| x depth) total I/O, this
-    // costs O(|closure|). The union of checkpointed leaves stays a flat
-    // plan — no recursive lineage to truncate.
-    var fronts = List(frontier)
-    def reached = fronts.reduce(_.union(_))
-    var drained = frontier.isEmpty
-    var round = 0
-    while (round < maxRounds && !drained) {
-      val stepped = frontier.as("f").join(e.as("e"), col("f.dst") === col("e.src"))
-        .select(col("f.src").as("src"), col("e.dst").as("dst")).distinct()
-      // only genuinely new pairs advance — termination on cyclic graphs
-      frontier = pin(stepped.join(reached, Seq("src", "dst"), "left_anti"))
-      drained = frontier.isEmpty
-      if (!drained) fronts ::= frontier
-      round += 1
+  def fromSeeds(edges: DataFrame, seeds: DataFrame, maxRounds: Int = 10000): DataFrame =
+    Ckpt.run { loop =>
+      val e = pin(loop, edges.select(col("src"), col("dst"))
+        .where(col("src").isNotNull && col("dst").isNotNull)
+        .distinct())._1
+      // round 0: one hop out of the seed set
+      val (first, n0) = pin(loop, seeds.select(col("src")).distinct().join(e, Seq("src")))
+      // the reached set is the union of the per-round frontiers — DISJOINT
+      // by construction (each frontier is anti-joined against all earlier
+      // ones), so no distinct is needed and, critically, only each round's
+      // NEW pairs are ever materialized: re-checkpointing the accumulated
+      // set every round would cost O(|reached| x depth) total I/O, this
+      // costs O(|closure|). The union of checkpointed leaves stays a flat
+      // plan — no recursive lineage to truncate.
+      val ((_, fronts), drained) = loop.iterate((first, List(first)), maxRounds, n0) {
+        case ((frontier, fronts), _) =>
+          val stepped = frontier.as("f").join(e.as("e"), col("f.dst") === col("e.src"))
+            .select(col("f.src").as("src"), col("e.dst").as("dst")).distinct()
+          // only genuinely new pairs advance — termination on cyclic graphs
+          val (next, n) = pin(loop,
+            stepped.join(fronts.reduce(_.union(_)), Seq("src", "dst"), "left_anti"))
+          ((next, if (n == 0) fronts else next :: fronts), n)
+      }
+      // converged iff the frontier drained — an empty frontier after
+      // maxRounds is still a fixpoint, not an error
+      if (!drained) sys.error(s"seeded closure did not converge in $maxRounds rounds")
+      fronts.reduce(_.union(_))
     }
-    // converged iff the frontier drained — round == maxRounds with an
-    // empty frontier is still a fixpoint, not an error
-    if (!drained)
-      sys.error(s"seeded closure did not converge in $maxRounds rounds")
-    // the result is the union of the per-round frontier checkpoints; the
-    // pinned edge table and the drained (empty, never-appended) final
-    // frontier are not part of it (Ckpt ladder)
-    Ckpt.release(e)
-    if (!fronts.headOption.contains(frontier)) Ckpt.release(frontier)
-    reached
-  }
 }

@@ -452,16 +452,15 @@ object Dedup {
     * convergence is O(log n) rounds even on a path graph — neighbor
     * propagation alone needs O(component diameter). Per round: two
     * keyed shuffle-joins + one aggregation over (node, label) pairs
-    * only — no row data rides the iteration. The driver loop is control
-    * flow only (one bounded emptiness probe per round); labels are
-    * `localCheckpoint`ed so round N's plan doesn't replay rounds
-    * 1..N−1's lineage. Exhausting `maxRounds` before the fixpoint
-    * throws rather than returning a partial (wrong) labeling. */
+    * only — no row data rides the iteration. Labels are checkpointed
+    * per round ([[Ckpt]]), and the checkpoint's own job counts the
+    * labels that dropped, which is the convergence test. Exhausting
+    * `maxRounds` before the fixpoint throws rather than returning a
+    * partial (wrong) labeling. */
   def connectedComponents(pairs: DataFrame, idA: Column, idB: Column,
-      ids: DataFrame, id: Column, maxRounds: Int = 25): DataFrame = {
-    val edges = pairs.select(idA.as("src"), idB.as("dst"))
-      .union(pairs.select(idB.as("src"), idA.as("dst")))
-      .localCheckpoint()
+      ids: DataFrame, id: Column, maxRounds: Int = 25): DataFrame = Ckpt.run { loop =>
+    val edges = loop.checkpoint(pairs.select(idA.as("src"), idB.as("dst"))
+      .union(pairs.select(idB.as("src"), idA.as("dst"))))._1
     // The iteration runs over the EDGE ENDPOINT set only, not the full
     // `ids` table (round-17 optimization, guide §2.3 — shuffle fewer
     // bytes): a node outside `pairs` is a singleton whose label can
@@ -475,11 +474,9 @@ object Dedup {
     // Labels of endpoints only ever point at endpoint ids (min over
     // self ∪ neighbors), so the pointer-jumping self-join stays closed
     // over the endpoint set.
-    var labels = edges.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label")).localCheckpoint()
-    var round = 0
-    var converged = false
-    while (!converged && round < maxRounds) {
+    val selfLabels = loop.checkpoint(edges.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("label")))._1
+    val (labels, converged) = loop.iterate(selfLabels, maxRounds) { (labels, _) =>
       val nbrMin = edges
         .join(labels.withColumnRenamed("node", "dst"), "dst")
         .groupBy(col("src").as("node"))
@@ -492,26 +489,18 @@ object Dedup {
       // path graph converges in O(log n) rounds where neighbor
       // propagation alone needs O(diameter) (a long duplicate chain —
       // page-per-page near-dups of a book — would blow the round cap)
-      val next = propagated
+      val (next, lowered) = loop.checkpoint(propagated
         .join(propagated.select(col("node").as("l_node"), col("label").as("l_label")),
           propagated("label") === col("l_node"), "left")
         .select(col("node"), col("old_label"),
-          least(col("label"), coalesce(col("l_label"), col("label"))).as("label"))
-        .localCheckpoint()
-      converged = next.filter(col("label") < col("old_label")).isEmpty
-      // next's eager checkpoint consumed the superseded label table —
-      // release it (Ckpt ladder; the final round's checkpoint IS the
-      // returned labeling and stays persisted)
-      Ckpt.release(labels)
-      labels = next.select(col("node"), col("label"))
-      round += 1
+          least(col("label"), coalesce(col("l_label"), col("label"))).as("label")),
+        count(when(col("label") < col("old_label"), lit(1))))
+      (next.select(col("node"), col("label")), lowered)
     }
     // a partial labeling silently merges/splits clusters downstream —
     // refuse instead
     require(converged,
       s"connectedComponents did not converge within $maxRounds rounds")
-    // the returned labeling no longer references the edge checkpoint
-    Ckpt.release(edges)
     // singletons (ids outside the pair graph) label themselves; the
     // endpoint labeling is tiny next to `ids`, so this join broadcasts
     ids.select(id.as("node"))
@@ -1018,7 +1007,7 @@ object Dedup {
     * Output: (doc_id, start_tok, end_tok, ntok, capped), positions
     * 0-based over whitespace tokens of the normalized text. */
   def longestDuplicatedSpans(df: DataFrame, id: Column, text: Column,
-      minLen: Int = 8, maxLen: Int = 64): DataFrame = {
+      minLen: Int = 8, maxLen: Int = 64): DataFrame = Ckpt.run { loop =>
     import org.apache.spark.sql.expressions.Window
     require(minLen >= 2, s"minLen must be >= 2: $minLen")
     require(maxLen >= minLen, s"maxLen ($maxLen) must be >= minLen ($minLen)")
@@ -1030,13 +1019,8 @@ object Dedup {
     // than their own parquet round-trip (measured at sf0.1 — 11.6 s vs
     // 0.84 s for the identical aggregate), while checkpointed UnsafeRow
     // scans are cheap; checkpointing also truncates the ladder lineage.
-    // Handles collected for release at the end (the kCore discipline).
-    val ckpts = scala.collection.mutable.ListBuffer.empty[org.apache.spark.rdd.RDD[_]]
-    def ck(d: DataFrame): DataFrame = {
-      val c = d.localCheckpoint() // eager: materializes now
-      checkpointRdd(c).foreach(ckpts += _)
-      c
-    }
+    // Ckpt.run releases them all once the result is checkpointed.
+    def ck(d: DataFrame): DataFrame = loop.checkpoint(d)._1
     val base = ensureParallelism(
       df.select(id.as("doc_id"), normText(text).as("norm")))
     val toks = ck(base.select(col("doc_id"),
@@ -1057,22 +1041,19 @@ object Dedup {
       tbl.join(cl, keys)
         .select(col("doc_id"), col("pos"), col("n"), col("cls"))
     }
-    // doubling ladder: levels j0..bigJ of (doc_id, pos, n, cls)
-    var levels = List.empty[(Int, DataFrame)] // descending by level
-    var r = ck(classed(toks, Seq("gram")))
-    var j = j0
-    levels ::= (j, r)
-    var laddering = r.count() > 0
-    while (laddering && j < bigJ) {
+    // doubling ladder: levels j0..bigJ of (doc_id, pos, n, cls),
+    // descending by level; an empty level ends it
+    val (r0, n0) = loop.checkpoint(classed(toks, Seq("gram")))
+    val (levels, _) = loop.iterate(List((j0, r0)), bigJ - j0, n0) { (levels, _) =>
+      val (j, r) = levels.head
       val right = r.select(col("doc_id").as("bd"), col("pos").as("bp"),
         col("cls").as("c2"))
       val pairs = r.join(right,
           col("doc_id") === col("bd") && col("bp") === col("pos") + lit(pw(j)))
         .select(col("doc_id"), col("pos"), col("n"), col("cls").as("c1"),
           col("c2"))
-      val nxt = ck(classed(pairs, Seq("c1", "c2")))
-      if (nxt.count() == 0) laddering = false
-      else { j += 1; r = nxt; levels ::= (j, r) }
+      val (nxt, n) = loop.checkpoint(classed(pairs, Seq("c1", "c2")))
+      (if (n == 0) levels else (j + 1, nxt) :: levels, n)
     }
     val pow2 = (c: Column) => levels.map(_._1).foldLeft(lit(0L)) {
       (acc, lv) => when(c === lv, lit(pw(lv))).otherwise(acc) }
@@ -1126,7 +1107,8 @@ object Dedup {
         greatest(pow2(col("t")), coalesce(col("__lr"), lit(0L))).as("L"))
       .filter(col("L") >= minLen.toLong)
     val wd = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val out = settled
+    // eager: the result is materialized before the ladder is released
+    ck(settled
       .withColumn("__pv", lag(struct(col("pos"), col("L")), 1).over(wd))
       .filter(col("__pv").isNull ||
         col("__pv.pos") =!= col("pos") - 1 ||
@@ -1135,18 +1117,8 @@ object Dedup {
             col("L") === lit(maxLen.toLong))))
       .select(col("doc_id"), col("pos").as("start_tok"),
         (col("pos") + col("L")).as("end_tok"), col("L").as("ntok"),
-        (col("L") === lit(maxLen.toLong)).as("capped"))
-      .localCheckpoint() // eager: materialize before releasing the ladder
-    ckpts.foreach(_.unpersist(blocking = false))
-    out
+        (col("L") === lit(maxLen.toLong)).as("capped")))
   }
-
-  /** Handle on a localCheckpoint'ed DataFrame's persisted RDD (Dataset
-    * .unpersist is a no-op for checkpoint storage) — the kCore release
-    * discipline, shared by the iterative ops in this file. */
-  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd }
 
   /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
     * web-scale through semantic deduplication"): semantic dedup at the

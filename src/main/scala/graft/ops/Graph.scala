@@ -64,25 +64,15 @@ object Graph {
         (when(onSeed, lit((1.0 - damping) / seeds.size)).otherwise(lit(0.0)),
           when(onSeed, lit(1.0 / seeds.size)).otherwise(lit(0.0)))
       }
-    var ranks = nodes.select(col("node"), init.as("rank"))
-    for (i <- 1 to iterations) {
-      val contribs = ew.join(ranks.withColumnRenamed("node", "src"), "src")
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("rank") / col("outdeg")).as("contrib"))
-      val prev = ranks
-      ranks = nodes.join(contribs, Seq("node"), "left")
-        .select(col("node"),
-          (base + lit(damping) * coalesce(col("contrib"), lit(0.0))).as("rank"))
-        .localCheckpoint()
-      // eager checkpoint above has consumed prev's blocks — release the
-      // superseded round; the FINAL checkpoint stays persisted, it IS the
-      // returned data (Ckpt ladder). Round 1 is SKIPPED, not a no-op:
-      // prev is then the pre-loop lazy state rooted in the CALLER's
-      // plan, and on a checkpoint-rooted `edges` input (e.g. output of
-      // Closure.transitive) rddOf would find the caller-owned
-      // checkpoint and release a frame the caller still reads
-      // (round-16 ADVICE).
-      if (i > 1) Ckpt.release(prev)
+    val ranks = Ckpt.run { loop =>
+      loop.rounds(nodes.select(col("node"), init.as("rank")), iterations) { (ranks, _) =>
+        val contribs = ew.join(ranks.withColumnRenamed("node", "src"), "src")
+          .groupBy(col("dst").as("node"))
+          .agg(sum(col("rank") / col("outdeg")).as("contrib"))
+        loop.checkpoint(nodes.join(contribs, Seq("node"), "left")
+          .select(col("node"),
+            (base + lit(damping) * coalesce(col("contrib"), lit(0.0))).as("rank")))._1
+      }
     }
     nodes.unpersist(); ew.unpersist()
     ranks
@@ -101,8 +91,8 @@ object Graph {
     * squares as DECIMAL(38,10), and sqrt is IEEE-exact — so a SQL twin
     * restates every iteration and the result is partition-layout-
     * independent. Per iteration: two keyed joins + two aggregations on
-    * the edge partitioning; localCheckpoint keeps the plan
-    * constant-size (the k-core discipline).
+    * the edge partitioning; a checkpoint per round ([[Ckpt]]) keeps
+    * the plan constant-size.
     *
     * Output: (node, hub8, auth8) for every node (0.0 where a side
     * never receives mass). */
@@ -122,47 +112,36 @@ object Graph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val n = nodes.count()
     val h0 = math.floor(1.0 / math.sqrt(n.toDouble) * 1e8 + 0.5) / 1e8
-    def normalized8(rawIn: DataFrame): DataFrame = {
-      // Materialize the propagation ONCE (node-sized) — the norm agg
-      // and the normalized projection both read the checkpoint, so the
-      // two joins behind `raw` never run twice; the projection itself
-      // stays lazy (cheap over the checkpoint).
-      val raw = rawIn.localCheckpoint()
-      val nrm = raw.agg(sqrt(sum((floor(col("raw") * col("raw") * 1e10 + 0.5)
-        / 1e10).cast("decimal(38,10)")).cast("double")).as("nrm"))
-      raw.crossJoin(broadcast(nrm))
-        .select(col("node"),
-          (floor(col("raw") / col("nrm") * 1e8 + 0.5) / 1e8).as("s"))
+    val out = Ckpt.run { loop =>
+      def normalized8(rawIn: DataFrame): DataFrame = {
+        // Materialize the propagation ONCE (node-sized) — the norm agg
+        // and the normalized projection both read the checkpoint, so the
+        // two joins behind `raw` never run twice; the projection itself
+        // stays lazy (cheap over the checkpoint).
+        val raw = loop.checkpoint(rawIn)._1
+        val nrm = raw.agg(sqrt(sum((floor(col("raw") * col("raw") * 1e10 + 0.5)
+          / 1e10).cast("decimal(38,10)")).cast("double")).as("nrm"))
+        raw.crossJoin(broadcast(nrm))
+          .select(col("node"),
+            (floor(col("raw") / col("nrm") * 1e8 + 0.5) / 1e8).as("s"))
+      }
+      val h = nodes.select(col("node"), lit(h0).as("s"))
+      val (hub, auth) = loop.rounds((h, h), iterations) { case ((hub, _), _) =>
+        val auth = normalized8(
+          eBySrc.join(hub.withColumnRenamed("node", "src"), "src")
+            .groupBy(col("dst").as("node"))
+            .agg(sum(col("s").cast("decimal(19,8)")).cast("double").as("raw")))
+        (normalized8(
+          eByDst.join(auth.withColumnRenamed("node", "dst"), "dst")
+            .groupBy(col("src").as("node"))
+            .agg(sum(col("s").cast("decimal(19,8)")).cast("double").as("raw"))), auth)
+      }
+      nodes
+        .join(hub.withColumnRenamed("s", "hub8"), Seq("node"), "left")
+        .join(auth.withColumnRenamed("s", "auth8"), Seq("node"), "left")
+        .select(col("node"), coalesce(col("hub8"), lit(0.0)).as("hub8"),
+          coalesce(col("auth8"), lit(0.0)).as("auth8"))
     }
-    var hub = nodes.select(col("node"), lit(h0).as("s"))
-    var auth = hub
-    for (i <- 1 to iterations) {
-      // Ckpt ladder: auth(i)'s eager checkpoint (inside normalized8) has
-      // consumed auth(i-1); hub(i)'s consumes hub(i-1). The FINAL hub and
-      // auth checkpoints stay persisted — `out` reads them. Round 1's
-      // releases are SKIPPED, not trusted to be no-ops: hub/auth are then
-      // the lazy init state rooted in the caller's plan, and on a
-      // checkpoint-rooted `edges` input rddOf would find the CALLER's
-      // checkpoint — releasing it mid-round breaks eByDst's first
-      // materialization, which happens after the pa release fires
-      // (round-16 ADVICE).
-      val (ph, pa) = (hub, auth)
-      auth = normalized8(
-        eBySrc.join(hub.withColumnRenamed("node", "src"), "src")
-          .groupBy(col("dst").as("node"))
-          .agg(sum(col("s").cast("decimal(19,8)")).cast("double").as("raw")))
-      if (i > 1) Ckpt.release(pa)
-      hub = normalized8(
-        eByDst.join(auth.withColumnRenamed("node", "dst"), "dst")
-          .groupBy(col("src").as("node"))
-          .agg(sum(col("s").cast("decimal(19,8)")).cast("double").as("raw")))
-      if (i > 1) Ckpt.release(ph)
-    }
-    val out = nodes
-      .join(hub.withColumnRenamed("s", "hub8"), Seq("node"), "left")
-      .join(auth.withColumnRenamed("s", "auth8"), Seq("node"), "left")
-      .select(col("node"), coalesce(col("hub8"), lit(0.0)).as("hub8"),
-        coalesce(col("auth8"), lit(0.0)).as("auth8"))
     eBySrc.unpersist(); eByDst.unpersist(); nodes.unpersist()
     out
   }
@@ -282,10 +261,10 @@ object Graph {
     * hop-(i−1) frontier (not the whole visited set) against the edge
     * list, then an anti-join drops already-visited nodes, so per-round
     * work is proportional to the frontier, not the graph. The visited
-    * set is localCheckpoint'ed per round (constant-size plan, no
-    * lineage blow-up — the [[pageRank]] idiom). Terminates early when a
-    * frontier empties. Output: (node, hops), hops ∈ [0, maxHops],
-    * seeds at 0. */
+    * set is checkpointed per round ([[Ckpt]]: constant-size plan, no
+    * lineage blow-up). Terminates early when a frontier empties, which
+    * the frontier's checkpoint observes. Output: (node, hops),
+    * hops ∈ [0, maxHops], seeds at 0. */
   def kHopDistance(edges: DataFrame, src: Column, dst: Column,
       seeds: Seq[Long], maxHops: Int): DataFrame = {
     require(seeds.nonEmpty, "empty seed set")
@@ -294,30 +273,22 @@ object Graph {
     import spark.implicits._
     val e = edges.select(src.cast("long").as("src"), dst.cast("long").as("dst"))
       .distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    var visited = seeds.distinct.toDF("node")
-      .select(col("node"), lit(0).as("hops")).localCheckpoint()
-    var frontier = visited.select(col("node"))
-    var hop = 0
-    while (hop < maxHops && !frontier.isEmpty) {
-      hop += 1
-      val (pf, pv) = (frontier, visited)
-      frontier = frontier.join(e, col("node") === col("src"))
-        .select(col("dst").as("node")).distinct()
-        .join(visited, Seq("node"), "left_anti")
-        .localCheckpoint()
-      visited = visited
-        .union(frontier.select(col("node"), lit(hop).as("hops")))
-        .localCheckpoint()
-      // both eager checkpoints are materialized — the superseded round's
-      // frontier and visited blocks are dead (Ckpt ladder)
-      Ckpt.release(pf); Ckpt.release(pv)
+    val reached = Ckpt.run { loop =>
+      val seeded = loop.checkpoint(seeds.distinct.toDF("node")
+        .select(col("node"), lit(0).as("hops")))._1
+      // the seed set is non-empty, so round 1 always has a frontier
+      val ((_, visited), _) = loop.iterate((seeded.select(col("node")), seeded), maxHops) {
+        case ((frontier, visited), hop) =>
+          val (next, n) = loop.checkpoint(frontier.join(e, col("node") === col("src"))
+            .select(col("dst").as("node")).distinct()
+            .join(visited, Seq("node"), "left_anti"))
+          ((next, loop.checkpoint(visited
+            .union(next.select(col("node"), lit(hop).as("hops"))))._1), n)
+      }
+      visited
     }
     e.unpersist()
-    // the final ROUND's frontier checkpoint is not part of the result;
-    // hop == 0 means frontier is still the lazy projection over the
-    // initial visited checkpoint — releasing it would free the result
-    if (hop > 0) Ckpt.release(frontier)
-    visited
+    reached
   }
 
   /** Item–item cosine similarity from co-occurrence ("users who bought
@@ -386,9 +357,9 @@ object Graph {
     *
     * Scale shape: each round is one degree aggregation + two semi-joins
     * on the shrinking edge set — edges only ever shrink, so the worst
-    * round costs one shuffle of the CURRENT edge set; `localCheckpoint`
-    * per round truncates the iterative-plan lineage (the pageRank
-    * discipline) and the convergence test is an edge COUNT, a scalar.
+    * round costs one shuffle of the CURRENT edge set; a checkpoint per
+    * round ([[Ckpt]]) truncates the iterative-plan lineage and observes
+    * the edge COUNT, the convergence test.
     * Rounds are data-bounded (each removes ≥1 node or terminates);
     * `maxRounds` is a runaway backstop, hit only by adversarial chains
     * (a path graph peels one end per round) — raise it, don't loop
@@ -400,41 +371,22 @@ object Graph {
   def kCore(edges: DataFrame, src: Column, dst: Column, k: Int,
       maxRounds: Int = 200): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    var e = undirected(edges, src, dst)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var m = e.count()
-    var round = 0
-    var converged = m == 0L
-    // Handle on the superseded round's checkpoint RDD: Dataset.unpersist
-    // is a no-op for localCheckpoint storage (it isn't CacheManager-
-    // tracked), so without this a long-running driver calling kCore
-    // repeatedly accretes one dead RDD per peel round.
-    var prevCkpt: Option[org.apache.spark.rdd.RDD[_]] = None
-    while (!converged && round < maxRounds) {
-      val strong = degreesOf(e).filter(col("deg") >= k).select(col("node"))
-      val next = e
-        .join(strong.withColumnRenamed("node", "u"), "u")
-        .join(strong.withColumnRenamed("node", "v"), "v")
-        .select(col("u"), col("v"))
-        .localCheckpoint()
-      val m2 = next.count() // materializes next; e is now safe to release
-      e.unpersist(blocking = false)
-      prevCkpt.foreach(_.unpersist(blocking = false))
-      prevCkpt = next.queryExecution.analyzed.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd }
-      e = next
-      converged = m2 == m
-      m = m2
-      round += 1
+    Ckpt.run { loop =>
+      val (e0, m0) = loop.checkpoint(undirected(edges, src, dst))
+      // an empty edge set is already the fixpoint
+      val ((core, _), converged) = loop.iterate((e0, m0), maxRounds, m0) {
+        case ((e, m), _) =>
+          val strong = degreesOf(e).filter(col("deg") >= k).select(col("node"))
+          val (next, m2) = loop.checkpoint(e
+            .join(strong.withColumnRenamed("node", "u"), "u")
+            .join(strong.withColumnRenamed("node", "v"), "v")
+            .select(col("u"), col("v")))
+          ((next, m2), m - m2) // edges only shrink: 0 = no node peeled
+      }
+      require(converged, s"kCore did not converge in $maxRounds rounds " +
+        "(pathological chain graph? raise maxRounds)")
+      degreesOf(core).withColumnRenamed("deg", "core_deg")
     }
-    require(converged, s"kCore did not converge in $maxRounds rounds " +
-      "(pathological chain graph? raise maxRounds)")
-    // Empty input converges before round 1: release the otherwise-leaked
-    // initial cache (the empty result recomputes trivially). The FINAL
-    // round's checkpoint must stay persisted — its lineage is truncated,
-    // so it IS the returned data.
-    if (round == 0) e.unpersist(blocking = false)
-    degreesOf(e).withColumnRenamed("deg", "core_deg")
   }
 
   /** Adamic-Adar link-prediction scores over a bipartite co-occurrence
@@ -619,8 +571,8 @@ object Graph {
     * Scale shape: per round, ONE join of the symmetric edge list
     * against the node-sized label table on the neighbor key, one
     * (node, label) count aggregation, one argmax aggregation — all on
-    * the edge/node partitioning, nothing quadratic; localCheckpoint per
-    * round keeps the plan constant-size (the k-core discipline). Fixed
+    * the edge/node partitioning, nothing quadratic; a checkpoint per
+    * round ([[Ckpt]]) keeps the plan constant-size. Fixed
     * `rounds` (not convergence) because synchronous LPA can 2-cycle on
     * bipartite-ish regions; a bounded round count is the documented
     * Pregel-style practice and keeps cost predictable at 100 TB.
@@ -635,23 +587,19 @@ object Graph {
     val sym = e.select(col("u").as("x"), col("v").as("y"))
       .union(e.select(col("v").as("x"), col("u").as("y")))
       .repartition(col("y")).persist(StorageLevel.MEMORY_AND_DISK)
-    var lab = sym.select(col("x").as("n")).distinct()
-      .select(col("n"), col("n").as("lab")).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val cnt = sym.join(lab.withColumnRenamed("n", "y"), "y")
-        .groupBy(col("x"), col("lab")).agg(count(lit(1)).as("c"))
-      // argmax by (count desc, label asc) as a single min-of-struct —
-      // one aggregation, no window sort
-      val prev = lab
-      lab = cnt.groupBy(col("x").as("n"))
-        .agg(min(struct((-col("c")).as("nc"), col("lab").as("l"))).as("b"))
-        .select(col("n"), col("b.l").as("lab"))
-        .localCheckpoint()
-      // superseded round released once the eager checkpoint above has
-      // consumed it; the final round's checkpoint IS the result (Ckpt)
-      Ckpt.release(prev)
+    val out = Ckpt.run { loop =>
+      val selfLabels = loop.checkpoint(sym.select(col("x").as("n")).distinct()
+        .select(col("n"), col("n").as("lab")))._1
+      loop.rounds(selfLabels, rounds) { (lab, _) =>
+        val cnt = sym.join(lab.withColumnRenamed("n", "y"), "y")
+          .groupBy(col("x"), col("lab")).agg(count(lit(1)).as("c"))
+        // argmax by (count desc, label asc) as a single min-of-struct —
+        // one aggregation, no window sort
+        loop.checkpoint(cnt.groupBy(col("x").as("n"))
+          .agg(min(struct((-col("c")).as("nc"), col("lab").as("l"))).as("b"))
+          .select(col("n"), col("b.l").as("lab")))._1
+      }.select(col("n").as("node"), col("lab").as("community"))
     }
-    val out = lab.select(col("n").as("node"), col("lab").as("community"))
     sym.unpersist()
     out
   }
@@ -692,14 +640,12 @@ object Graph {
     * returning a partial labeling. Gate- and spec-proven
     * label-identical to the propagation implementation. */
   def connectedComponentsStar(pairs: DataFrame, idA: Column, idB: Column,
-      ids: DataFrame, id: Column, maxRounds: Int = 50): DataFrame = {
-    var e = pairs
+      ids: DataFrame, id: Column, maxRounds: Int = 50): DataFrame = Ckpt.run { loop =>
+    val e0 = loop.checkpoint(pairs
       .select(greatest(idA, idB).as("u"), least(idA, idB).as("v"))
       .where(col("u") =!= col("v"))
-      .distinct().localCheckpoint()
-    var converged = false
-    var round = 0
-    while (!converged && round < maxRounds) {
+      .distinct())._1
+    val (e, converged) = loop.iterate(e0, maxRounds) { (e, _) =>
       // large-star over the symmetric view: m(x) = min(N(x) ∪ {x});
       // every neighbor y > x re-hangs onto m(x)
       val sym = e.select(col("u").as("x"), col("v").as("y"))
@@ -713,18 +659,12 @@ object Graph {
       // neighborhood N = {v : (u,v) ∈ E}, m = min(N) (< u); every
       // v ∈ N \ {m} and u itself re-hang onto m
       val mins2 = ls.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val ss = ls.join(mins2, "u")
+      val ss = loop.checkpoint(ls.join(mins2, "u")
         .where(col("v") =!= col("m"))
         .select(col("v").as("u"), col("m").as("v"))
         .union(mins2.select(col("u"), col("m").as("v")))
-        .where(col("u") =!= col("v")).distinct()
-        .localCheckpoint()
-      converged = ss.exceptAll(e).isEmpty && e.exceptAll(ss).isEmpty
-      // the convergence check was prev's last reader (Ckpt ladder; the
-      // final round's checkpoint survives — the labeling reads it)
-      Ckpt.release(e)
-      e = ss
-      round += 1
+        .where(col("u") =!= col("v")).distinct())._1
+      (ss, if (ss.exceptAll(e).isEmpty && e.exceptAll(ss).isEmpty) 0L else 1L)
     }
     require(converged,
       s"connectedComponentsStar did not converge within $maxRounds rounds")

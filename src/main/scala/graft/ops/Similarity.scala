@@ -470,7 +470,7 @@ object Similarity {
     /** Release the build-time caches (`codes` plus whatever the builder
       * pinned — the normalized corpus). Repeated builds in a long-lived
       * session otherwise accrete cached DataFrames, the leak class the
-      * codebase handles explicitly elsewhere (kCore's prevCkpt ladder,
+      * codebase handles explicitly elsewhere (the iterative ops' [[Ckpt]],
       * annRecallGateOn's corpus.unpersist()). Loaded indexes
       * ([[loadPq]]) hold no caches; close() is then a no-op. */
     def close(): Unit = {

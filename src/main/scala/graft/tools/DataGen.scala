@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * clustered shape real corpora have.
   *
   * Usage: runMain graft.tools.DataGen [outDir] [scale] [tables]
-  *   outDir default /root/repo/localdata/sf1, scale default 1.0
+  *   outDir default localdata/sf1 of the working directory, scale default 1.0
   *   (scale multiplies row counts; 1.0 = sf1); tables is an optional
   *   comma-separated subset (e.g. "documents,embeddings" for the
   *   sf2–sf5 corpus-pipeline scale smoke — generating 30M-row lineitem
@@ -49,7 +49,7 @@ object DataGen {
     element_at(typedLit(choices), (h(tag, id, choices.size) + 1).cast("int"))
 
   def main(args: Array[String]): Unit = {
-    val outDir = args.headOption.getOrElse("/root/repo/localdata/sf1")
+    val outDir = args.headOption.getOrElse(new java.io.File("localdata/sf1").getAbsolutePath)
     val scale = args.drop(1).headOption.map(_.toDouble).getOrElse(1.0)
     val only: Option[Set[String]] =
       args.drop(2).headOption.map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)

@@ -4177,37 +4177,145 @@ class OpsSpec extends AnyFunSuite {
     assert(lpaQ == 0.5 && trivialQ < 0.0, s"lpa Q=$lpaQ trivial Q=$trivialQ")
   }
 
+  /** Ids of the RDDs the SparkContext holds persisted. */
+  private def persistedIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
   test("iterative ops release superseded localCheckpoint blocks (Ckpt ladder)") {
     // Dataset.unpersist is a no-op for checkpoint storage, so an
     // iterative op that checkpoints per round without releasing the
     // superseded round leaks one dead RDD per round per invocation —
     // measured as monotone slowdown across back-to-back invocations
-    // (round-16 optimization). Each op here must leave at most its
-    // RESULT's checkpoints persisted, not one per round.
+    // (round-16 optimization). Each op here must leave persisted only
+    // the checkpoints its RESULT reads.
+    import graft.ops.{Bpe, Closure, Graph}
     val e = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (11L, 12L))
       .toDF("a", "b")
+    val tri = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L)).toDF("a", "b")
     val ids = (1L to 12L).toDF("id")
-    def persistedDelta(f: => org.apache.spark.sql.DataFrame): Int = {
-      val before = spark.sparkContext.getPersistentRDDs.keySet
+    val xy = e.select(col("a").as("x"), col("b").as("y"))
+    val sd = e.select(col("a").as("src"), col("b").as("dst"))
+    val docs = Seq((1L, "a b c d e f g h i j"), (2L, "x a b c d e f g h y"),
+      (3L, "the cat sat on the mat the cat sat")).toDF("doc_id", "text")
+    val words = Seq((1L, "low lower lowest newer newest wider widest news")).toDF("doc_id", "text")
+    def persistedDelta(f: => DataFrame): Int = {
+      val before = persistedIds
       val out = f
       out.write.mode("overwrite").format("noop").save()
-      graft.ops.Ckpt.release(out) // drop the result's own checkpoint too
-      val after = spark.sparkContext.getPersistentRDDs.keySet -- before
-      after.size
+      // drop the result's own checkpoints too
+      graft.ops.Ckpt.rddsOf(out).foreach(_.unpersist(blocking = false))
+      (persistedIds -- before).size
     }
-    val lpa = persistedDelta(
-      graft.ops.Graph.labelPropagation(e, col("a"), col("b"), rounds = 4))
-    assert(lpa <= 1, s"labelPropagation leaked $lpa checkpoints (4 rounds)")
-    val cc = persistedDelta(
-      graft.ops.Dedup.connectedComponents(e.select(col("a").as("x"), col("b").as("y")),
-        col("x"), col("y"), ids, col("id")))
-    assert(cc <= 1, s"connectedComponents leaked $cc checkpoints")
-    val pr = persistedDelta(
-      graft.ops.Graph.pageRank(e, col("a"), col("b"), iterations = 4))
-    assert(pr <= 1, s"pageRank leaked $pr checkpoints (4 iterations)")
-    val tc = persistedDelta(
-      graft.ops.Closure.transitive(e.select(col("a").as("src"), col("b").as("dst"))))
-    assert(tc <= 1, s"Closure.transitive leaked $tc checkpoints")
+    val leaked = Seq[(String, () => DataFrame)](
+      "pageRank" -> (() => Graph.pageRank(e, col("a"), col("b"), iterations = 4)),
+      "hits" -> (() => Graph.hits(e, col("a"), col("b"), iterations = 3)),
+      "kHopDistance" -> (() => Graph.kHopDistance(e, col("a"), col("b"), Seq(1L), 4)),
+      "kCore" -> (() => Graph.kCore(tri, col("a"), col("b"), k = 2)),
+      "labelPropagation" -> (() => Graph.labelPropagation(e, col("a"), col("b"), rounds = 4)),
+      "connectedComponentsStar" -> (() =>
+        Graph.connectedComponentsStar(xy, col("x"), col("y"), ids, col("id"))),
+      "transitive" -> (() => Closure.transitive(sd)),
+      "fromSeeds" -> (() => Closure.fromSeeds(sd, Seq(1L).toDF("src"))),
+      "connectedComponents" -> (() =>
+        Dedup.connectedComponents(xy, col("x"), col("y"), ids, col("id"))),
+      "longestDuplicatedSpans" -> (() =>
+        Dedup.longestDuplicatedSpans(docs, col("doc_id"), col("text"), minLen = 2, maxLen = 8)),
+      // the merge table is a local frame: every word-table checkpoint
+      // (numMerges + 1 of them) must go
+      "learnMerges" -> (() => Bpe.learnMerges(words, col("text"), numMerges = 6)),
+      "learnWordPieceMerges" -> (() => Bpe.learnWordPieceMerges(words, col("text"), numMerges = 6))
+    ).map { case (op, f) => op -> persistedDelta(f()) }.filter(_._2 != 0)
+    assert(leaked.isEmpty, s"persisted RDDs left behind: $leaked")
+  }
+
+  test("Ckpt: an op never releases the caller's checkpointed input") {
+    import graft.ops.{Closure, Graph}
+    val tc = Closure.transitive(Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst"))
+    val owned = graft.ops.Ckpt.rddsOf(tc).map(_.id).toSet
+    assert(owned.nonEmpty)
+    Graph.pageRank(tc, col("src"), col("dst"), iterations = 3).collect()
+    Graph.hits(tc, col("src"), col("dst"), iterations = 2).collect()
+    Graph.labelPropagation(tc, col("src"), col("dst"), rounds = 2).collect()
+    assert(owned.subsetOf(persistedIds), "a caller-owned checkpoint was released")
+    assert(tc.count() == 9)
+    graft.ops.Ckpt.rddsOf(tc).foreach(_.unpersist(blocking = false))
+  }
+
+  test("Ckpt.run: a step that throws in round 2 releases every checkpoint and rethrows it") {
+    import graft.ops.Ckpt
+    val before = persistedIds
+    val boom = new IllegalStateException("round 2 failed")
+    val thrown = intercept[IllegalStateException] {
+      Ckpt.run { loop =>
+        val init = loop.checkpoint(spark.range(10).toDF("x"))._1
+        loop.rounds(init, 4) { (s, round) =>
+          val next = loop.checkpoint(s.select((col("x") + 1).as("x")))._1
+          if (round == 2) throw boom
+          next
+        }
+      }
+    }
+    assert(thrown eq boom, "the caller must see the step's own exception")
+    assert((persistedIds -- before).isEmpty, "a failed loop left checkpoints behind")
+  }
+
+  test("connectedComponents: an exhausted maxRounds throws and leaves no checkpoint") {
+    val pairs = (0L until 64L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val ids = (0L to 64L).toDF("doc_id")
+    val before = persistedIds
+    val e = intercept[IllegalArgumentException] {
+      Dedup.connectedComponents(pairs, col("id_a"), col("id_b"), ids, col("doc_id"),
+        maxRounds = 1)
+    }
+    assert(e.getMessage == "requirement failed: connectedComponents did not converge within 1 rounds")
+    assert((persistedIds -- before).isEmpty, "an unconverged loop left checkpoints behind")
+  }
+
+  test("connectedComponents: convergence costs no job outside the round checkpoints") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    /** (checkpoint actions, their jobs, jobs of any other action) while
+      * one call runs: the listener files each job under its SQL
+      * execution's call site until a marker job started after the call
+      * reaches it. */
+    def jobs(pathLength: Long): (Int, Int, Int) = {
+      val pairs = (0L until pathLength).map(i => (i, i + 1)).toDF("id_a", "id_b")
+      val ids = (0L to pathLength).toDF("doc_id")
+      val sc = spark.sparkContext
+      val site = new java.util.concurrent.ConcurrentHashMap[String, String]
+      val ckptExecs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]
+      val (inCkpt, other) =
+        (new java.util.concurrent.atomic.AtomicInteger, new java.util.concurrent.atomic.AtomicInteger)
+      val marker = new java.util.concurrent.CountDownLatch(1)
+      val l = new SparkListener {
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case s: SparkListenerSQLExecutionStart => site.put(s.executionId.toString, s.description)
+          case _ =>
+        }
+        override def onJobStart(j: SparkListenerJobStart): Unit = {
+          val p = j.properties
+          if (p.getProperty("spark.job.description") == "marker") marker.countDown()
+          else Option(p.getProperty("spark.sql.execution.id")) match {
+            case Some(x) if site.getOrDefault(x, "").startsWith("localCheckpoint at") =>
+              ckptExecs.add(x); inCkpt.incrementAndGet()
+            case _ => other.incrementAndGet()
+          }
+        }
+      }
+      sc.addSparkListener(l)
+      try {
+        Dedup.connectedComponents(pairs, col("id_a"), col("id_b"), ids, col("doc_id"))
+        sc.setJobDescription("marker")
+        try sc.parallelize(Seq(1)).count() finally sc.setJobDescription(null)
+        assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      } finally sc.removeSparkListener(l)
+      (ckptExecs.size, inCkpt.get, other.get)
+    }
+    val (ckShort, inShort, otherShort) = jobs(2)
+    val (ckLong, inLong, otherLong) = jobs(64)
+    assert(ckLong > ckShort, s"the long path should need more rounds: $ckShort vs $ckLong")
+    assert(otherLong == otherShort,
+      s"jobs outside the checkpoints grew with the rounds: $otherShort → $otherLong " +
+        s"(checkpoint actions $ckShort → $ckLong, their jobs $inShort → $inLong)")
   }
 
   test("ivfUpsert: exact argmin matches k-means' own assignments, covers all rows, layout-independent") {
