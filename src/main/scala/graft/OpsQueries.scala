@@ -4220,8 +4220,10 @@ object OpsQueries {
     // (a leaked bad batch doubles rows and breaks the hash)
     ("l09_write_audit_publish",
       (s, sf) => {
-        val root = java.nio.file.Files.createTempDirectory("graft_wap")
-          .toFile.getAbsolutePath
+        val root = s"${TpchLake.derivedDir(sf)}/wap"
+        // fresh every run — a published batch stays in the manifest
+        new org.apache.hadoop.fs.Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
+          .delete(new org.apache.hadoop.fs.Path(root), true)
         val d = docs(s, sf).select(col("doc_id"), col("n_chars"))
         val audit = (staged: org.apache.spark.sql.DataFrame) => {
           val bad = staged.filter(col("n_chars").isNull || col("n_chars") < 0)
@@ -7726,11 +7728,6 @@ object OpsQueries {
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |GROUP BY 1""".stripMargin))
 
-  /** Rows-only entries — empty since round 2: every op in this suite now
-    * carries a hard DuckDB oracle (exact twin, portable-hash twin, or a
-    * pinned measured-recall verdict row for the probabilistic ANN ops). */
-  val rowsOnlySuite: Seq[(String, (SparkSession, String) => DataFrame)] = Seq.empty
-
   /** Bench-mode overrides for the ANN entries: the s02/s03/s05 gates in
     * the oracle suite run the exact baseline AND the approximate operator
     * 20× each to measure recall — the right correctness check, but a
@@ -8173,7 +8170,7 @@ object OpsQueries {
     graft.fixtures.TpchLake.ntFixture(s, sf)
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    (oracleSuite.map { case (n, f, _) => n -> f } ++ rowsOnlySuite).toMap
+    oracleSuite.map { case (n, f, _) => n -> f }.toMap
 
   def oracleSql: Map[String, String] =
     oracleSuite.map { case (n, _, o) => n -> o }.toMap

@@ -4,6 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable
 
@@ -28,7 +29,9 @@ import scala.collection.mutable
   *  - One `finally` ([[run]]). On return it releases every checkpoint
   *    the loop made that the result does not read; on a throw (a failed
   *    step, or the operator's own non-convergence error) it releases all
-  *    of them and the original exception propagates.
+  *    of them and the original exception propagates. Either way it
+  *    unpersists every frame cached through [[Loop.persist]] (loop
+  *    invariants such as a pre-partitioned edge list).
   *
   * Release is needed at all because `Dataset.unpersist` is a no-op for
   * checkpoint storage (it is not CacheManager-tracked): a loop that
@@ -49,11 +52,20 @@ private[graft] object Ckpt {
     val loop = new Loop
     var kept = Set.empty[Int]
     try { val out = body(loop); kept = loop.reads(out); out }
-    finally loop.releaseAllBut(kept)
+    finally loop.close(kept)
   }
 
   final class Loop private[Ckpt] {
     private val owned = mutable.LinkedHashMap.empty[Int, RDD[_]]
+    private val cached = mutable.ArrayBuffer.empty[DataFrame]
+
+    /** `df` persisted (memory and disk) until [[run]] returns or throws.
+      * A result that reads it recomputes its plan afterwards, as an
+      * unpersisted frame does. */
+    def persist(df: DataFrame): DataFrame = {
+      cached += df.persist(StorageLevel.MEMORY_AND_DISK)
+      df
+    }
 
     /** Eagerly checkpoint `df`, observing the aggregate `changed` on the
       * plan the checkpoint runs. Returns the checkpointed frame and the
@@ -99,7 +111,9 @@ private[graft] object Ckpt {
     private def release(ids: Set[Int]): Unit =
       ids.foreach(owned.remove(_).foreach(_.unpersist(blocking = false)))
 
-    private[Ckpt] def releaseAllBut(keep: Set[Int]): Unit =
+    private[Ckpt] def close(keep: Set[Int]): Unit = {
       release(owned.keySet.toSet -- keep)
+      cached.foreach(_.unpersist())
+    }
   }
 }

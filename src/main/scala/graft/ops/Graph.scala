@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Link-graph operators. In a pretraining pipeline the web link graph is
   * a quality signal (authority-weighted sampling, seed-list expansion),
@@ -40,31 +39,29 @@ object Graph {
     require(iterations >= 1, "iterations must be >= 1")
     val e = edges.select(src.cast("long").as("src"), dst.cast("long").as("dst"))
       .distinct()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count()
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val ew = e.join(outdeg, "src").repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // teleport mass per node: uniform, or concentrated on the seed set
-    val (base, init) =
-      if (seeds.isEmpty)
-        (lit((1.0 - damping) / n), lit(1.0 / n))
-      else {
-        // a seed absent from the node set would silently drop its 1/|S|
-        // share of the teleport mass (isin never matches) — refuse loudly
-        val present = nodes.filter(col("node").isin(seeds: _*))
-          .select(col("node")).collect().map(_.getLong(0)).toSet
-        val absent = seeds.filterNot(present)
-        require(absent.isEmpty,
-          s"pageRank: seed(s) ${absent.mkString(",")} are not nodes of the " +
-            "edge-derived graph — their teleport mass would be dropped")
-        val onSeed = col("node").isin(seeds: _*)
-        (when(onSeed, lit((1.0 - damping) / seeds.size)).otherwise(lit(0.0)),
-          when(onSeed, lit(1.0 / seeds.size)).otherwise(lit(0.0)))
-      }
-    val ranks = Ckpt.run { loop =>
+    Ckpt.run { loop =>
+      val nodes = loop.persist(e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct())
+      val n = nodes.count()
+      val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
+      val ew = loop.persist(e.join(outdeg, "src").repartition(col("src")))
+      // teleport mass per node: uniform, or concentrated on the seed set
+      val (base, init) =
+        if (seeds.isEmpty)
+          (lit((1.0 - damping) / n), lit(1.0 / n))
+        else {
+          // a seed absent from the node set would silently drop its 1/|S|
+          // share of the teleport mass (isin never matches) — refuse loudly
+          val present = nodes.filter(col("node").isin(seeds: _*))
+            .select(col("node")).collect().map(_.getLong(0)).toSet
+          val absent = seeds.filterNot(present)
+          require(absent.isEmpty,
+            s"pageRank: seed(s) ${absent.mkString(",")} are not nodes of the " +
+              "edge-derived graph — their teleport mass would be dropped")
+          val onSeed = col("node").isin(seeds: _*)
+          (when(onSeed, lit((1.0 - damping) / seeds.size)).otherwise(lit(0.0)),
+            when(onSeed, lit(1.0 / seeds.size)).otherwise(lit(0.0)))
+        }
       loop.rounds(nodes.select(col("node"), init.as("rank")), iterations) { (ranks, _) =>
         val contribs = ew.join(ranks.withColumnRenamed("node", "src"), "src")
           .groupBy(col("dst").as("node"))
@@ -74,8 +71,6 @@ object Graph {
             (base + lit(damping) * coalesce(col("contrib"), lit(0.0))).as("rank")))._1
       }
     }
-    nodes.unpersist(); ew.unpersist()
-    ranks
   }
 
   /** HITS hub/authority scores (Kleinberg): iterate
@@ -105,14 +100,13 @@ object Graph {
     // (auth→hub): keep one copy clustered per key so each propagation
     // join shuffles only the node-score side, never the (much larger)
     // edge side
-    val eBySrc = e.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
-    val eByDst = e.repartition(col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = eBySrc.select(col("src").as("node"))
-      .union(eBySrc.select(col("dst").as("node"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count()
-    val h0 = math.floor(1.0 / math.sqrt(n.toDouble) * 1e8 + 0.5) / 1e8
-    val out = Ckpt.run { loop =>
+    Ckpt.run { loop =>
+      val eBySrc = loop.persist(e.repartition(col("src")))
+      val eByDst = loop.persist(e.repartition(col("dst")))
+      val nodes = loop.persist(eBySrc.select(col("src").as("node"))
+        .union(eBySrc.select(col("dst").as("node"))).distinct())
+      val n = nodes.count()
+      val h0 = math.floor(1.0 / math.sqrt(n.toDouble) * 1e8 + 0.5) / 1e8
       def normalized8(rawIn: DataFrame): DataFrame = {
         // Materialize the propagation ONCE (node-sized) — the norm agg
         // and the normalized projection both read the checkpoint, so the
@@ -142,8 +136,6 @@ object Graph {
         .select(col("node"), coalesce(col("hub8"), lit(0.0)).as("hub8"),
           coalesce(col("auth8"), lit(0.0)).as("auth8"))
     }
-    eBySrc.unpersist(); eByDst.unpersist(); nodes.unpersist()
-    out
   }
 
   /** Per-node triangle counts over an undirected graph (edges given in
@@ -271,9 +263,9 @@ object Graph {
     require(maxHops >= 1, s"maxHops must be >= 1: $maxHops")
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(src.cast("long").as("src"), dst.cast("long").as("dst"))
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    val reached = Ckpt.run { loop =>
+    Ckpt.run { loop =>
+      val e = loop.persist(edges.select(src.cast("long").as("src"), dst.cast("long").as("dst"))
+        .distinct())
       val seeded = loop.checkpoint(seeds.distinct.toDF("node")
         .select(col("node"), lit(0).as("hops")))._1
       // the seed set is non-empty, so round 1 always has a frontier
@@ -287,8 +279,6 @@ object Graph {
       }
       visited
     }
-    e.unpersist()
-    reached
   }
 
   /** Item–item cosine similarity from co-occurrence ("users who bought
@@ -584,10 +574,10 @@ object Graph {
     val e = edges
       .select(least(src, dst).as("u"), greatest(src, dst).as("v"))
       .where(col("u") =!= col("v")).distinct()
-    val sym = e.select(col("u").as("x"), col("v").as("y"))
-      .union(e.select(col("v").as("x"), col("u").as("y")))
-      .repartition(col("y")).persist(StorageLevel.MEMORY_AND_DISK)
-    val out = Ckpt.run { loop =>
+    Ckpt.run { loop =>
+      val sym = loop.persist(e.select(col("u").as("x"), col("v").as("y"))
+        .union(e.select(col("v").as("x"), col("u").as("y")))
+        .repartition(col("y")))
       val selfLabels = loop.checkpoint(sym.select(col("x").as("n")).distinct()
         .select(col("n"), col("n").as("lab")))._1
       loop.rounds(selfLabels, rounds) { (lab, _) =>
@@ -600,8 +590,6 @@ object Graph {
           .select(col("n"), col("b.l").as("lab")))._1
       }.select(col("n").as("node"), col("lab").as("community"))
     }
-    sym.unpersist()
-    out
   }
 
   def coOccurrencePairs(df: DataFrame, group: Column, item: Column,

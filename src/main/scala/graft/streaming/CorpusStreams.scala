@@ -35,10 +35,10 @@ object CorpusStreams {
   def runFilterBatch(spark: SparkSession, docsPath: String,
       weights: Seq[Double], bias: Double,
       prep: DataFrame => DataFrame = identity): DataFrame =
-    EventStreams.runToMemory(spark,
+    EventStreams.runToMemory(
       filterPlan(prep(EventStreams.streamParquet(spark, docsPath, "docs_stream")),
         weights, bias),
-      name = "corpus_filter", mode = "append")
+      "corpus_filter", docsPath, "append")
 
   final case class BucketRow(band: Int, bhash: Long, sid: Long)
   final case class CandPair(id_a: Long, id_b: Long)
@@ -102,11 +102,11 @@ object CorpusStreams {
     * with a two-file source. */
   def runNearDupBatch(spark: SparkSession, docsPath: String, n: Int,
       threshold: Double, maxBucket: Int = 1 << 20): DataFrame = {
-    val cands = EventStreams.runToMemory(spark,
+    val cands = EventStreams.runToMemory(
       nearDupCandidatesPlan(
         EventStreams.streamParquet(spark, docsPath, "docs_neardup"),
         n = n, maxBucket = maxBucket),
-      name = "stream_neardup", mode = "append").distinct()
+      "stream_neardup", docsPath, "append").distinct()
     Dedup.verifyCandidatePairs(cands,
       spark.read.parquet(docsPath), col("doc_id"), col("text"), n, threshold)
   }

@@ -1,13 +1,45 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.nio.file.{Files, LinkOption, Path, Paths}
+import java.util.UUID
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit, TimeoutException}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, StreamingQueryException,
+  StreamingQueryListener, StreamingQueryProgress, Trigger}
 
 /** Structured Streaming over the `events` table shape
   * (event_id, ts, user_id, event_type, value, props) — net-new capability
   * vs the reference (SURVEY §2.9: none there). Watermarked tumbling-window
-  * aggregation; state stays bounded by the watermark at any scale. */
+  * aggregation; state stays bounded by the watermark at any scale.
+  *
+  * Every streaming query of the family (here, [[JdbcUpsertSink]],
+  * [[CorpusStreams]]) runs through one runner, [[drain]]. Its contract:
+  *
+  *  - One start. One rule over (label, absolute input path) names the
+  *    query and places its scratch directory (checkpoint, file-sink
+  *    output) under `graft.stream.stageDir` ([[stageDir]]). The runner
+  *    stops a leftover query of that name, wipes the directory, starts
+  *    the query with `Trigger.AvailableNow` inside the stream-shuffle cap
+  *    ([[withStreamShuffle]]) and awaits termination. A gate therefore
+  *    leaves at most one scratch copy per (input, label), and every run
+  *    starts from a fresh checkpoint.
+  *  - Progress only when asked. With an `onProgress` callback the runner
+  *    registers one listener before the start, waits for the query's
+  *    terminated event and throws, naming the query, if it does not
+  *    arrive within the bound — never partial totals. The listener is
+  *    removed however the run ends. Without a callback the runner adds
+  *    no listener and no Spark job.
+  *  - Failure paths. When the query or a batch throws, the original
+  *    exception reaches the caller, in the cause chain of Spark's
+  *    `StreamingQueryException`. Afterwards no query of that name is
+  *    active, no listener is left registered, and
+  *    `spark.sql.shuffle.partitions` holds its prior value. Only a run
+  *    given `restarts` instead restarts on its own checkpoint, that many
+  *    times ([[crashRestart]]). */
 object EventStreams {
 
   /** Streaming plan: hourly (bucket, event_type) counts + sums with a
@@ -41,9 +73,9 @@ object EventStreams {
     * the batch exact twin: (bucket, n_exact, est_ok) where est_ok pins
     * the sketch inside 3·rsd of exact (HLL++ default rsd 0.05). */
   def runHourlyDistinctBatch(spark: SparkSession, parquetPath: String): DataFrame = {
-    val st = runToMemory(spark,
+    val st = runToMemory(
       hourlyDistinctUsers(streamEvents(spark, parquetPath)),
-      s"graft_hdu_${math.abs(parquetPath.hashCode)}", "complete")
+      "hdu", parquetPath, "complete")
     val ex = readEvents(spark, parquetPath)
       .groupBy(window(col("ts"), "1 hour").as("w"))
       .agg(countDistinct(col("user_id")).as("n_exact"))
@@ -76,9 +108,9 @@ object EventStreams {
     * complete mode). */
   def runKmvDistinctBatch(spark: SparkSession, parquetPath: String,
       k: Int = 64, salt: String = "kst"): DataFrame =
-    runToMemory(spark,
+    runToMemory(
       kmvDistinctPerType(streamEvents(spark, parquetPath), k, salt),
-      s"graft_kmv_${math.abs(parquetPath.hashCode)}", "complete")
+      "kmv", parquetPath, "complete")
 
   /** STREAMING native session_window: event-time sessions (30-minute
     * merge gap) per user — the built-in API form of sessionization (vs
@@ -101,9 +133,9 @@ object EventStreams {
     * watermark has not closed still emit — the choice that makes the
     * result equal the batch ts08 twin exactly). */
   def runSessionWindowBatch(spark: SparkSession, parquetPath: String): DataFrame =
-    runToMemory(spark,
+    runToMemory(
       sessionWindows(streamEvents(spark, parquetPath)),
-      s"graft_ssw_${math.abs(parquetPath.hashCode)}", "complete")
+      "ssw", parquetPath, "complete")
 
   final case class HourlyAnom(etype: String, bucket: Long, n_events: Long,
       z: Option[Double])
@@ -163,8 +195,8 @@ object EventStreams {
     * one file, one batch, output equal to the batch operator. */
   def runStreamingAnomaliesBatch(spark: SparkSession, parquetPath: String,
       window: Int = 24): DataFrame =
-    runToMemory(spark, streamingAnomalies(streamEvents(spark, parquetPath), window),
-      s"graft_anom_${math.abs(parquetPath.hashCode)}", "append")
+    runToMemory(streamingAnomalies(streamEvents(spark, parquetPath), window),
+      "anom", parquetPath, "append")
 
   /** Normalize an event-time column to session-tz TimestampType (µs
     * precision) regardless of the physical shape the parquet writer
@@ -198,47 +230,42 @@ object EventStreams {
     normalizeTs(spark.read.parquet(parquetPath))
   }
 
-  /** File-source stream over a single parquet file (the source monitors a
-    * directory; expose the file through a derived symlink dir) with the
-    * [[normalizeTs]] event-time normalization applied. */
-  private def streamEvents(spark: SparkSession, parquetPath: String): DataFrame = {
+  /** File-source stream over the events file with the [[normalizeTs]]
+    * event-time normalization applied. */
+  private[streaming] def streamEvents(spark: SparkSession, parquetPath: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     normalizeTs(streamParquet(spark, parquetPath, "events_stream"))
   }
 
-  /** Public readStream over the events table (ts normalized) — for
-    * callers composing their own streaming plans/sinks. */
-  def readEventsStream(spark: SparkSession, parquetPath: String): DataFrame =
-    streamEvents(spark, parquetPath)
-
   /** File-source stream over one parquet file: the source monitors a
-    * directory, so the file is exposed through a per-path staged symlink
-    * dir (configurable base via `graft.stream.stageDir`, defaulting to
-    * the JVM temp dir — library code must not write into a source
-    * checkout). Works for ANY table, not just events. */
+    * directory, so the file is exposed through a symlink in its
+    * [[stageDir]]. Works for ANY table, not just events. */
   def streamParquet(spark: SparkSession, parquetPath: String,
       label: String): DataFrame = {
     val schema = spark.read.parquet(parquetPath).schema
-    val baseDir = spark.conf.getOption("graft.stream.stageDir")
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft_stream")
-    // keyed by the ABSOLUTE path (not the parent dir's basename — two
-    // lakes both named "sf1" under different roots would share a staging
-    // dir and the first-created symlink would win for both)
-    val abs = new java.io.File(parquetPath).getAbsolutePath
-    val key = f"${abs.hashCode & 0x7fffffff}%08x"
-    val dir = java.nio.file.Paths.get(s"$baseDir/$key/$label")
-    java.nio.file.Files.createDirectories(dir)
+    val dir = Files.createDirectories(stageDir(spark, parquetPath, label))
     val link = dir.resolve("part-0.parquet")
-    import java.nio.file.{Files, LinkOption, Paths}
     // a dangling link (target regenerated/removed) reads as not-exists
     // under follow semantics but still blocks createSymbolicLink —
     // remove it rather than throw FileAlreadyExists
     if (Files.exists(link, LinkOption.NOFOLLOW_LINKS) && !Files.exists(link))
       Files.delete(link)
     if (!Files.exists(link, LinkOption.NOFOLLOW_LINKS))
-      Files.createSymbolicLink(link, Paths.get(abs))
+      Files.createSymbolicLink(link, Paths.get(parquetPath).toAbsolutePath)
     spark.readStream.schema(schema).parquet(dir.toString)
   }
+
+  /** `<graft.stream.stageDir>/<key>/<label>`, the key hashing the input's
+    * ABSOLUTE path (not the parent dir's basename — two lakes both named
+    * "sf1" under different roots would share a directory and the
+    * first-created symlink would win for both). The root defaults to the
+    * JVM temp dir: library code must not write into a source checkout. */
+  private def stageDir(spark: SparkSession, path: String, label: String): Path =
+    Paths.get(spark.conf.getOption("graft.stream.stageDir")
+      .getOrElse(sys.props("java.io.tmpdir") + "/graft_stream"), pathKey(path), label)
+
+  private def pathKey(path: String): String =
+    f"${Paths.get(path).toAbsolutePath.toString.hashCode & 0x7fffffff}%08x"
 
   /** Shuffle partitions a streaming query runs with, at most. */
   private val StreamPartitions = 8
@@ -263,7 +290,7 @@ object EventStreams {
     * the cap is set on the session-global conf, so a concurrent query
     * on the same session would race on it and could pin the wrong
     * state-partition count into its new checkpoint. */
-  private[streaming] def withStreamShuffle[A](spark: SparkSession)(f: => A): A = {
+  private def withStreamShuffle[A](spark: SparkSession)(f: => A): A = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     val eff = math.min(prev.toInt, StreamPartitions)
@@ -274,18 +301,65 @@ object EventStreams {
     }
   }
 
-  /** Run a streaming plan to completion over the events file and return
-    * the collected result table (memory sink). */
-  private[streaming] def runToMemory(spark: SparkSession, plan: DataFrame, name: String,
-      mode: String): DataFrame = {
-    spark.streams.active.filter(_.name == name).foreach(_.stop())
-    withStreamShuffle(spark) {
-      val q = plan.writeStream.format("memory").queryName(name).outputMode(mode)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    spark.table(name)
+  /** A drained query: its name (the memory sink's table) and its scratch
+    * directory. */
+  private[graft] final case class Drained(name: String, dir: String)
+
+  /** The runner every streaming query of the family goes through (its
+    * contract is this object's header). `sink` sets the writer's format
+    * and options, given the scratch directory (the checkpoint is its
+    * `ckpt`); `restarts` is how many times a failed run restarts on that
+    * checkpoint; `drainTimeoutMs` bounds the wait for the terminated
+    * event of a run with `onProgress`. */
+  private[graft] def drain(plan: DataFrame, label: String, path: String, mode: String,
+      sink: (DataStreamWriter[Row], String) => DataStreamWriter[Row] =
+        (w, _) => w.format("memory"),
+      onProgress: StreamingQueryProgress => Unit = null,
+      restarts: Int = 0, drainTimeoutMs: Long = 30000L): Drained = {
+    val spark = plan.sparkSession
+    val run = Drained(s"graft_${label}_${pathKey(path)}", stageDir(spark, path, label).toString)
+    spark.streams.active.filter(_.name == run.name).foreach(_.stop())
+    FileUtils.deleteDirectory(new java.io.File(run.dir))
+    val ended = new LinkedBlockingQueue[UUID]
+    val listener = Option(onProgress).map(f => new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      // match on the (unique, pre-start) query NAME, not the id — the id
+      // is only known after start() returns, and the async bus can
+      // deliver the first progress event before that
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        if (e.progress.name == run.name) f(e.progress)
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        ended.put(e.runId)
+    })
+    listener.foreach(spark.streams.addListener)
+    try withStreamShuffle(spark) {
+      val writer = sink(plan.writeStream.queryName(run.name).outputMode(mode)
+        .option("checkpointLocation", s"${run.dir}/ckpt"), run.dir)
+        .trigger(Trigger.AvailableNow())
+      def attempt(left: Int): StreamingQuery = {
+        val q = writer.start()
+        try { q.awaitTermination(); q }
+        catch { case _: StreamingQueryException if left > 0 => attempt(left - 1) }
+        finally if (q.isActive) q.stop()
+      }
+      val q = attempt(restarts)
+      // the listener bus is async and every progress event precedes the
+      // terminated one: once that arrives, the callback has seen them all
+      if (listener.isDefined) {
+        val deadline = System.nanoTime + drainTimeoutMs * 1000000L
+        while (Option(ended.poll(deadline - System.nanoTime, TimeUnit.NANOSECONDS))
+            .getOrElse(throw new TimeoutException(s"streaming query ${run.name}: no " +
+              s"terminated event within $drainTimeoutMs ms, its progress totals would be partial"))
+            != q.runId) ()
+      }
+    } finally listener.foreach(spark.streams.removeListener)
+    run
   }
+
+  /** [[drain]] into the memory sink; returns the sink's table. */
+  private[streaming] def runToMemory(plan: DataFrame, label: String, path: String,
+      mode: String): DataFrame =
+    plan.sparkSession.table(drain(plan, label, path, mode).name)
 
   /** Run a streaming plan to a PARQUET FILE SINK — the production egress
     * shape: append-mode files plus the `_spark_metadata` commit log that
@@ -295,145 +369,82 @@ object EventStreams {
     * fresh, deterministic run. Returns the read-back result. */
   def runToParquetSink(spark: SparkSession, plan: DataFrame,
       outDir: String, checkpointDir: String): DataFrame = {
-    def rm(p: String): Unit = {
-      def walk(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(walk)
-        f.delete()
-      }
-      val f = new java.io.File(p)
-      if (f.exists()) walk(f)
-    }
-    rm(outDir); rm(checkpointDir)
-    withStreamShuffle(spark) {
-      val q = plan.writeStream.format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", checkpointDir)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    Seq(outDir, checkpointDir).foreach(d => FileUtils.deleteDirectory(new java.io.File(d)))
+    drain(plan, "parquet_sink", outDir, "append", (w, _) =>
+      w.format("parquet").option("path", outDir).option("checkpointLocation", checkpointDir))
     spark.read.parquet(outDir)
   }
 
-  /** Mid-batch crash + restart, exactly-once: the harshest delivery
-    * test in the streaming family. The source is staged as four files
-    * read one per micro-batch; the sink is the idempotent-foreachBatch
-    * recipe (each batch overwrites its own `batch=<id>` directory). On
-    * the first run, batch 0's function writes a PARTIAL, non-atomic
-    * slice of its rows to the sink and then throws — a crash strictly
-    * inside a batch, after sink bytes hit disk, before the offset
-    * commit. The restart on the same checkpoint replays batch 0 from
-    * the write-ahead offset log (identical file set), and the per-batch
-    * overwrite supersedes the partial debris; remaining batches drain.
-    * The read-back aggregate must equal the plain batch aggregate over
-    * the source — no loss (everything arrives despite the crash) and
-    * no duplicates (neither the replayed batch nor the partial write
-    * double-counts).
+  /** Mid-batch crash + restart, the delivery recipe of st17 and st19. The
+    * events file is staged as four files read one per micro-batch; each
+    * batch stores `perBatch(batch)` in its own `out/batch=<id>` directory
+    * (overwrite: the idempotent-foreachBatch sink). On the first run,
+    * batch 0 stores `perBatch` of a PARTIAL, non-atomic slice of its rows
+    * and then throws — a crash strictly inside a batch, after sink bytes
+    * hit disk, before the offset commit. [[drain]] restarts once on the
+    * same checkpoint, which replays batch 0 from the write-ahead offset
+    * log (identical file set); its overwrite supersedes the partial
+    * debris, and the remaining batches drain. Returns every stored row.
     *
     * Delivery contract this pins (COVERAGE "streaming delivery"):
     * at-least-once replay from the WAL + an idempotent sink = exactly
-    * once — the same contract st10 proves for JDBC upsert under full
-    * re-run, here proven under an injected MID-BATCH failure with
-    * partial sink output. Returns (user_id, n, sumv). */
-  def runCrashRestartExactlyOnce(spark: SparkSession,
-      parquetPath: String): DataFrame = {
-    import org.apache.spark.sql.functions.{pmod, count, sum, lit}
-    val root = java.nio.file.Files.createTempDirectory("graft_xo").toFile
-    val in = s"$root/in"; val ck = s"$root/ck"; val out = s"$root/out"
-    spark.read.parquet(parquetPath)
-      .select(col("ts"), col("user_id"), col("value"))
-      .repartition(4).write.mode("overwrite").parquet(in)
-    val schema = spark.read.parquet(in).schema
-    val injected = new java.util.concurrent.atomic.AtomicBoolean(false)
-    def start(inject: Boolean) = spark.readStream.schema(schema)
+    * once — the contract st10 proves for JDBC upsert under full re-run,
+    * here under an injected MID-BATCH failure with partial sink output. */
+  private def crashRestart(spark: SparkSession, parquetPath: String, label: String)(
+      perBatch: DataFrame => DataFrame): DataFrame = {
+    val in = stageDir(spark, parquetPath, s"${label}_in").toString
+    spark.read.parquet(parquetPath).repartition(4).write.mode("overwrite").parquet(in)
+    val src = spark.readStream.schema(spark.read.parquet(in).schema)
       .option("maxFilesPerTrigger", "1").parquet(in)
-      .writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        val dir = s"$out/batch=$bid"
-        if (inject && bid == 0L && injected.compareAndSet(false, true)) {
-          df.filter(pmod(col("user_id"), lit(2)) === 0)
-            .write.mode("overwrite").parquet(dir) // partial, then die
+    val injected = new AtomicBoolean(false)
+    val stored = drain(src, label, parquetPath, "append", (w, dir) =>
+      w.foreachBatch { (df: Dataset[Row], bid: Long) =>
+        val batch = s"$dir/out/batch=$bid"
+        if (bid == 0L && injected.compareAndSet(false, true)) {
+          perBatch(df.filter(pmod(col("event_id"), lit(2)) === 0))
+            .write.mode("overwrite").parquet(batch) // partial, then die
           throw new RuntimeException("injected mid-batch crash")
         }
-        df.write.mode("overwrite").parquet(dir)
-        ()
-      }
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow()).start()
-    withStreamShuffle(spark) {
-      val q1 = start(inject = true)
-      try q1.awaitTermination()
-      catch { case _: org.apache.spark.sql.streaming.StreamingQueryException => () }
-      require(injected.get(), "crash injection must have fired")
-      val q2 = start(inject = false)
-      q2.awaitTermination()
-    }
-    spark.read.parquet(out).drop("batch")
+        perBatch(df).write.mode("overwrite").parquet(batch)
+      }, restarts = 1).dir + "/out"
+    require(injected.get(), "crash injection must have fired")
+    spark.read.parquet(stored).drop("batch")
+  }
+
+  /** [[crashRestart]] over a per-user aggregate: the read-back
+    * (user_id, n, sumv) must equal the plain batch aggregate over the
+    * source — no loss (everything arrives despite the crash) and no
+    * duplicates (neither the replayed batch nor the partial write
+    * double-counts). */
+  def runCrashRestartExactlyOnce(spark: SparkSession,
+      parquetPath: String): DataFrame =
+    crashRestart(spark, parquetPath, "xo")(_.select(col("user_id"), col("value")))
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(
-          org.apache.spark.sql.types.DataTypes.createDecimalType(18, 6)))
-          .cast("double").as("sumv"))
-  }
+        sum(col("value").cast("decimal(18,6)")).cast("double").as("sumv"))
 
   /** STREAMING quantile sketch under an injected mid-batch crash — the
     * bottom-k coordinated sample ([[graft.ops.Sketches]]) composed with
-    * the [[runCrashRestartExactlyOnce]] delivery recipe: each
-    * micro-batch folds to its own O(groups·k) partial sketch state
-    * written to an idempotent `batch=<id>` directory; the final sketch
-    * is the rollup (union-merge) of the stored partials. Because
-    * bottom-k state is a pure function of the row SET and closed under
-    * union, the rolled-up sketch is BIT-IDENTICAL to a from-scratch
-    * build over all rows — regardless of batch boundaries, replay, or
-    * the crash: batch 0 writes a PARTIAL (half-batch) sketch, dies
-    * before the offset commit, and the restart's full-batch overwrite
-    * supersedes the debris (at-least-once replay + idempotent per-batch
-    * state = exactly-once sketch maintenance). This is the streaming
-    * lake pattern: per-batch sketch states persist once; any later
-    * scope answers from stored state without re-reading events.
-    * Returns the post-crash (scope, n, k, m, q_p50, q_p90) the
-    * exact-state oracle restates as a single direct sketch. */
+    * the [[crashRestart]] delivery recipe: each micro-batch folds to its
+    * own O(groups·k) partial sketch state; the final sketch is the rollup
+    * (union-merge) of the stored partials. Because bottom-k state is a
+    * pure function of the row SET and closed under union, the rolled-up
+    * sketch is BIT-IDENTICAL to a from-scratch build over all rows —
+    * regardless of batch boundaries, replay, or the crash's partial
+    * (half-batch) sketch, which the restart's full-batch overwrite
+    * supersedes. This is the streaming lake pattern: per-batch sketch
+    * states persist once; any later scope answers from stored state
+    * without re-reading events. Returns the post-crash (scope, n, k, m,
+    * q_p50, q_p90) the exact-state oracle restates as a single direct
+    * sketch. */
   def runStreamQuantileCrash(spark: SparkSession, parquetPath: String,
       k: Int, salt: String): DataFrame = {
-    import org.apache.spark.sql.functions.pmod
-    val root = java.nio.file.Files.createTempDirectory("graft_sqs").toFile
-    val in = s"$root/in"; val ck = s"$root/ck"; val out = s"$root/out"
-    spark.read.parquet(parquetPath)
-      .select(col("event_id"), col("event_type"), col("value"))
-      .repartition(4).write.mode("overwrite").parquet(in)
-    val schema = spark.read.parquet(in).schema
-    val injected = new java.util.concurrent.atomic.AtomicBoolean(false)
-    def sketchOf(df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row]) =
-      graft.ops.Sketches.quantileSketchPerGroup(df.toDF(),
-        col("event_type"), col("value"), col("event_id"), k, salt)
-    def start(inject: Boolean) = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-      .writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        val dir = s"$out/batch=$bid"
-        if (inject && bid == 0L && injected.compareAndSet(false, true)) {
-          sketchOf(df.filter(pmod(col("event_id"), lit(2)) === 0))
-            .write.mode("overwrite").parquet(dir) // partial state, then die
-          throw new RuntimeException("injected mid-batch crash")
-        }
-        sketchOf(df).write.mode("overwrite").parquet(dir)
-        ()
-      }
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow()).start()
-    withStreamShuffle(spark) {
-      val q1 = start(inject = true)
-      try q1.awaitTermination()
-      catch { case _: org.apache.spark.sql.streaming.StreamingQueryException => () }
-      require(injected.get(), "crash injection must have fired")
-      val q2 = start(inject = false)
-      q2.awaitTermination()
-    }
-    graft.ops.Sketches.quantileSketchQuery(
-      graft.ops.Sketches.quantileSketchRollup(
-        spark.read.parquet(out)
-          .select(col("scope"), col("n"), col("k"), col("qs")),
-        col("scope"), k),
+    import graft.ops.Sketches
+    val stored = crashRestart(spark, parquetPath, "sqs")(
+      Sketches.quantileSketchPerGroup(_, col("event_type"), col("value"), col("event_id"), k, salt))
+    Sketches.quantileSketchQuery(
+      Sketches.quantileSketchRollup(
+        stored.select(col("scope"), col("n"), col("k"), col("qs")), col("scope"), k),
       Seq(("p50", 1, 2), ("p90", 9, 10)))
   }
 
@@ -442,25 +453,23 @@ object EventStreams {
     * full production ingest-to-egress path in one gate). */
   def runDedupToParquetSink(spark: SparkSession, parquetPath: String,
       delay: String, keys: Seq[String]): DataFrame = {
-    val base = spark.conf.getOption("graft.stream.stageDir")
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft_stream")
-    val key = f"${new java.io.File(parquetPath).getAbsolutePath.hashCode & 0x7fffffff}%08x"
-    runToParquetSink(spark,
-      streamingDedup(streamEvents(spark, parquetPath), "ts", delay, keys),
-      s"$base/$key/dedup_sink_out", s"$base/$key/dedup_sink_ckpt")
+    val out = drain(streamingDedup(streamEvents(spark, parquetPath), "ts", delay, keys),
+      "dedup_sink", parquetPath, "append",
+      (w, dir) => w.format("parquet").option("path", s"$dir/out")).dir + "/out"
+    spark.read.parquet(out)
   }
 
   /** [[streamingDedup]] run as a real streaming query over the events
     * parquet file; returns the surviving rows. */
   def runStreamingDedupBatch(spark: SparkSession, parquetPath: String,
       delay: String, keys: Seq[String]): DataFrame =
-    runToMemory(spark,
+    runToMemory(
       streamingDedup(streamEvents(spark, parquetPath), "ts", delay, keys),
-      s"graft_dedup_${math.abs(parquetPath.hashCode)}", "append")
+      "dedup", parquetPath, "append")
 
   def runHourlyStatsBatch(spark: SparkSession, parquetPath: String): DataFrame =
-    runToMemory(spark, hourlyStats(streamEvents(spark, parquetPath)),
-      s"graft_hourly_${math.abs(parquetPath.hashCode)}", "complete")
+    runToMemory(hourlyStats(streamEvents(spark, parquetPath)),
+      "hourly", parquetPath, "complete")
 
   /** [[sessionize]] (the flatMapGroupsWithState custom-state surface) run
     * as a real streaming query over the events parquet file. A
@@ -471,9 +480,9 @@ object EventStreams {
     * against the st02 oracle. */
   def runSessionizeBatch(spark: SparkSession, parquetPath: String,
       gapMinutes: Int): DataFrame =
-    runToMemory(spark,
+    runToMemory(
       sessionize(streamEvents(spark, parquetPath), gapMinutes),
-      s"graft_sess_${math.abs(parquetPath.hashCode)}", "append")
+      "sess", parquetPath, "append")
 
   /** Stream-static enrichment (the standard streaming ingest shape): the
     * event stream joins a static dimension table, then aggregates per
@@ -497,10 +506,10 @@ object EventStreams {
   def runEnrichedCountsBatch(spark: SparkSession, parquetPath: String,
       sfDir: String): DataFrame = {
     val cust = spark.read.parquet(s"$sfDir/customer.parquet")
-    runToMemory(spark,
+    runToMemory(
       enrichedCounts(streamEvents(spark, parquetPath), cust,
         col("user_id") + 1, col("c_custkey"), col("c_mktsegment")),
-      s"graft_enrich_${math.abs(parquetPath.hashCode)}", "complete")
+      "enrich", parquetPath, "complete")
   }
 
   /** Watermarked stream-stream interval join (the attribution shape):
@@ -561,10 +570,10 @@ object EventStreams {
   def runAttributionOuterBatch(spark: SparkSession, parquetPath: String,
       windowMinutes: Int): DataFrame = {
     val ev = streamEvents(spark, parquetPath)
-    runToMemory(spark,
+    runToMemory(
       attributionJoinOuter(ev.filter(col("event_type") === "view"),
         ev.filter(col("event_type") === "purchase"), windowMinutes),
-      s"graft_attro_${math.abs(parquetPath.hashCode)}", "append")
+      "attro", parquetPath, "append")
   }
 
   /** [[attributionJoin]] run as a real stream-stream self-join over the
@@ -574,10 +583,10 @@ object EventStreams {
   def runAttributionBatch(spark: SparkSession, parquetPath: String,
       windowMinutes: Int): DataFrame = {
     val ev = streamEvents(spark, parquetPath)
-    runToMemory(spark,
+    runToMemory(
       attributionJoin(ev.filter(col("event_type") === "view"),
         ev.filter(col("event_type") === "purchase"), windowMinutes),
-      s"graft_attr_${math.abs(parquetPath.hashCode)}", "append")
+      "attr", parquetPath, "append")
   }
 
   /** Streaming exact dedup: drops rows whose key was already seen, with
@@ -665,58 +674,29 @@ object EventStreams {
     * its own health without a second job. Returns the run-total metric
     * row summed across micro-batches.
     *
-    * Metrics are accumulated by a [[StreamingQueryListener]] as each
-    * micro-batch's progress event fires, NOT read from
-    * `q.recentProgress` after termination — that is a bounded ring
-    * buffer (`spark.sql.streaming.numRecentProgressUpdates`, default
-    * 100), so a run with more micro-batches would silently drop the
-    * earliest batches from a "run-total". The listener sees every
-    * event; the post-termination sleep below drains the async listener
-    * bus before the totals are read. */
+    * Metrics are summed from every progress event ([[drain]]'s
+    * `onProgress`), NOT read from `q.recentProgress` after termination —
+    * that is a bounded ring buffer
+    * (`spark.sql.streaming.numRecentProgressUpdates`, default 100), so a
+    * run with more micro-batches would silently drop the earliest
+    * batches from a "run-total". */
   def runObservedQuality(spark: SparkSession, parquetPath: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.StreamingQueryListener
-    val name = s"graft_obs_${math.abs(parquetPath.hashCode)}"
-    spark.streams.active.filter(_.name == name).foreach(_.stop())
     val plan = streamParquet(spark, parquetPath, "obsq")
       .observe("dq",
         count(lit(1)).as("n_rows"),
         count(col("user_id")).as("n_user"),
         sum(when(col("value") > 75.0, 1L).otherwise(0L)).as("n_high"))
       .select(lit(1).as("one"))
-    val nr = new java.util.concurrent.atomic.AtomicLong(0L)
-    val nu = new java.util.concurrent.atomic.AtomicLong(0L)
-    val nh = new java.util.concurrent.atomic.AtomicLong(0L)
-    val done = new java.util.concurrent.CountDownLatch(1)
-    @volatile var qid: java.util.UUID = null
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(
-          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      // match on the (unique, pre-start) query NAME, not the id — the id
-      // is only known after start() returns, and the async bus can
-      // deliver the first progress event before that assignment runs
-      override def onQueryProgress(
-          e: StreamingQueryListener.QueryProgressEvent): Unit =
-        if (e.progress.name == name)
-          Option(e.progress.observedMetrics.get("dq")).foreach { r =>
-            nr.addAndGet(r.getAs[Long]("n_rows"))
-            nu.addAndGet(r.getAs[Long]("n_user"))
-            nh.addAndGet(r.getAs[Long]("n_high"))
-          }
-      override def onQueryTerminated(
-          e: StreamingQueryListener.QueryTerminatedEvent): Unit =
-        if (e.id == qid) done.countDown()
-    }
-    spark.streams.addListener(listener)
-    try withStreamShuffle(spark) {
-      val q = plan.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      qid = q.id
-      q.awaitTermination()
-      // the listener bus is async; wait for the terminated event so every
-      // progress event (they precede it in bus order) has been consumed
-      done.await(30, java.util.concurrent.TimeUnit.SECONDS)
-    } finally spark.streams.removeListener(listener)
+    val nr = new AtomicLong(0L)
+    val nu = new AtomicLong(0L)
+    val nh = new AtomicLong(0L)
+    drain(plan, "obs", parquetPath, "append", onProgress = p =>
+      Option(p.observedMetrics.get("dq")).foreach { r =>
+        nr.addAndGet(r.getAs[Long]("n_rows"))
+        nu.addAndGet(r.getAs[Long]("n_user"))
+        nh.addAndGet(r.getAs[Long]("n_high"))
+      })
     Seq((nr.get(), nu.get(), nh.get())).toDF("n_rows", "n_user", "n_high")
   }
 
@@ -727,9 +707,8 @@ object EventStreams {
     * report how many input rows the watermark dropped — the metric that
     * tells a 100 TB/day ingest whether its allowed-lateness budget is
     * silently discarding data, read from each batch's state-operator
-    * progress via a [[StreamingQueryListener]] (the same
-    * every-micro-batch guarantee as [[runObservedQuality]], not the
-    * bounded recentProgress buffer).
+    * progress (the same every-micro-batch guarantee as
+    * [[runObservedQuality]]).
     *
     * Semantics under test (both empirically pinned by the st16 gate):
     * the watermark gating batch N is the one COMMITTED after batch N−1
@@ -744,40 +723,16 @@ object EventStreams {
   def runLateDropAudit(spark: SparkSession, stagingDir: String,
       delay: String, windowLen: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.StreamingQueryListener
-    val name = s"graft_latedrop_${math.abs(stagingDir.hashCode)}"
-    spark.streams.active.filter(_.name == name).foreach(_.stop())
-    val schema = spark.read.parquet(stagingDir).schema
-    val plan = spark.readStream.schema(schema)
+    val plan = spark.readStream.schema(spark.read.parquet(stagingDir).schema)
       .option("maxFilesPerTrigger", 1).parquet(stagingDir)
       .withWatermark("ts", delay)
       .groupBy(window(col("ts"), windowLen)).count()
-    val nIn = new java.util.concurrent.atomic.AtomicLong(0L)
-    val nDrop = new java.util.concurrent.atomic.AtomicLong(0L)
-    val done = new java.util.concurrent.CountDownLatch(1)
-    @volatile var qid: java.util.UUID = null
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(
-          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: StreamingQueryListener.QueryProgressEvent): Unit =
-        if (e.progress.name == name) {
-          nIn.addAndGet(e.progress.numInputRows)
-          e.progress.stateOperators.foreach(op =>
-            nDrop.addAndGet(op.numRowsDroppedByWatermark))
-        }
-      override def onQueryTerminated(
-          e: StreamingQueryListener.QueryTerminatedEvent): Unit =
-        if (e.id == qid) done.countDown()
-    }
-    spark.streams.addListener(listener)
-    try withStreamShuffle(spark) {
-      val q = plan.writeStream.format("memory").queryName(name)
-        .outputMode("update").trigger(Trigger.AvailableNow()).start()
-      qid = q.id
-      q.awaitTermination()
-      done.await(30, java.util.concurrent.TimeUnit.SECONDS)
-    } finally spark.streams.removeListener(listener)
+    val nIn = new AtomicLong(0L)
+    val nDrop = new AtomicLong(0L)
+    drain(plan, "latedrop", stagingDir, "update", onProgress = p => {
+      nIn.addAndGet(p.numInputRows)
+      p.stateOperators.foreach(op => nDrop.addAndGet(op.numRowsDroppedByWatermark))
+    })
     Seq((nIn.get(), nDrop.get())).toDF("n_input", "n_late_groups_dropped")
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import scala.util.Using
@@ -109,24 +108,16 @@ object JdbcUpsertSink {
     * TWICE). Returns the table read back through the JDBC source. */
   def runEventCountsToJdbc(spark: SparkSession, parquetPath: String,
       url: String, table: String): DataFrame = {
-    val plan = EventStreams.readEventsStream(spark, parquetPath)
+    val plan = EventStreams.streamEvents(spark, parquetPath)
       .withWatermark("ts", "1 hour")
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,6)")).as("sumv"))
     ensureTable(url, table, plan.schema)
-    spark.streams.active.filter(_.name == "jdbc_upsert").foreach(_.stop())
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_jdbc_ckpt").toString
-    EventStreams.withStreamShuffle(spark) {
-      val q = plan.writeStream.outputMode("update")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          upsertBatch(batch, url, table, Seq("user_id"))
-        }
-        .option("checkpointLocation", ckpt)
-        .queryName("jdbc_upsert")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    EventStreams.drain(plan, "jdbc_upsert", parquetPath, "update", (w, _) =>
+      w.foreachBatch { (batch: DataFrame, _: Long) =>
+        upsertBatch(batch, url, table, Seq("user_id"))
+      })
     spark.read.format("jdbc").option("url", url).option("dbtable", table)
       .option("driver", "org.apache.derby.jdbc.EmbeddedDriver").load()
   }

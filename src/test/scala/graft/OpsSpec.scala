@@ -4258,6 +4258,22 @@ class OpsSpec extends AnyFunSuite {
     assert((persistedIds -- before).isEmpty, "a failed loop left checkpoints behind")
   }
 
+  test("pageRank: a seed that is not a node throws and leaves no cached frame") {
+    // the node set is cached and counted before the seed check runs
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    // private[sql] in Scala, a public method in bytecode
+    def cached = cache.getClass.getMethod("numCachedEntries").invoke(cache)
+    val before = cached
+    val e = intercept[IllegalArgumentException] {
+      graft.ops.Graph.pageRank(Seq((1L, 2L), (2L, 3L)).toDF("src", "dst"),
+        col("src"), col("dst"), iterations = 2, seeds = Seq(99L))
+    }
+    assert(e.getMessage == "requirement failed: pageRank: seed(s) 99 are not nodes of " +
+      "the edge-derived graph — their teleport mass would be dropped")
+    assert(cached == before, "a failed pageRank left frames cached")
+  }
+
   test("connectedComponents: an exhausted maxRounds throws and leaves no checkpoint") {
     val pairs = (0L until 64L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val ids = (0L to 64L).toDF("doc_id")

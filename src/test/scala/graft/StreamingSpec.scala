@@ -139,6 +139,71 @@ class StreamingSpec extends AnyFunSuite {
       "post-crash sink must equal the batch aggregate exactly")
   }
 
+  test("runner: back-to-back crash-restart runs leave no more scratch than one run") {
+    import java.nio.file.{Files, Path}
+    import spark.implicits._
+    val events = Files.createTempDirectory("graft_events_spec").resolve("events.parquet").toString
+    (1L to 40L).map(i => (i, ts((i % 20).toInt), i % 7, 1.5 * i))
+      .toDF("event_id", "ts", "user_id", "value").write.parquet(events)
+    val stage = Files.createTempDirectory("graft_stage_spec")
+    def dirs(p: Path): Long = {
+      val s = Files.walk(p)
+      try s.filter(Files.isDirectory(_)).count() finally s.close()
+    }
+    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
+    def scratch = dirs(stage) + tmp.listFiles().count(_.getName.startsWith("graft_"))
+    spark.conf.set("graft.stream.stageDir", stage.toString)
+    try {
+      EventStreams.runCrashRestartExactlyOnce(spark, events).collect()
+      val once = scratch
+      EventStreams.runCrashRestartExactlyOnce(spark, events).collect()
+      assert(scratch == once, "the second run left scratch directories of its own")
+    } finally spark.conf.unset("graft.stream.stageDir")
+  }
+
+  /** A one-file parquet input for the runner's failure-path specs. */
+  private def tinyInput(): (org.apache.spark.sql.DataFrame, String) = {
+    import spark.implicits._
+    val in = java.nio.file.Files.createTempDirectory("graft_runner_spec").resolve("in").toString
+    Seq((ts(1), 1L), (ts(2), 2L)).toDF("ts", "v").write.parquet(in)
+    (spark.readStream.schema(spark.read.parquet(in).schema).parquet(in), in)
+  }
+
+  test("runner: a throwing batch propagates; no query, listener or shuffle cap is left behind") {
+    import org.apache.spark.sql.{Dataset, Row}
+    val (src, in) = tinyInput()
+    val key = "spark.sql.shuffle.partitions"
+    val listeners = spark.streams.listListeners().length
+    val boom = new IllegalStateException("batch failed")
+    spark.conf.set(key, "16") // above the stream cap, so the runner lowers it
+    try {
+      val e = intercept[Exception] {
+        EventStreams.drain(src, "fail_spec", in, "append",
+          (w, _) => w.foreachBatch { (_: Dataset[Row], _: Long) => throw boom },
+          onProgress = _ => ())
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).contains(boom),
+        s"the batch's exception must reach the caller, got $e")
+      assert(spark.streams.active.isEmpty)
+      assert(spark.streams.listListeners().length == listeners)
+      assert(spark.conf.get(key) == "16")
+    } finally spark.conf.set(key, "2")
+  }
+
+  test("runner: a progress run whose terminated event is late throws instead of partial totals") {
+    val (src, in) = tinyInput()
+    val listeners = spark.streams.listListeners().length
+    // a slow progress callback holds the terminated event behind it on
+    // the listener bus, past the 100 ms bound
+    val e = intercept[java.util.concurrent.TimeoutException] {
+      EventStreams.drain(src, "late_spec", in, "append",
+        onProgress = _ => Thread.sleep(3000), drainTimeoutMs = 100)
+    }
+    assert(e.getMessage.contains("graft_late_spec_"), e.getMessage)
+    assert(spark.streams.active.isEmpty)
+    assert(spark.streams.listListeners().length == listeners)
+  }
+
   test("flatMapGroupsWithState sessionize under AvailableNow equals the batch window plan") {
     // the st05 gate's in-repo twin: one micro-batch over the single-file
     // source means every user's history reaches one group call, so the
