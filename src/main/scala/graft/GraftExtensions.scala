@@ -1,61 +1,28 @@
 package graft
 
-import graft.functions.{CosineSimilarity, DeflateSize, MinHashLanes, PlaneSignatures, PolyHash, PqAdc, PqEncode, PrefixByHash, WordShingles}
+import graft.functions.Native
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Spark-native integration point: inject every graft Catalyst
-  * expression into a session at build time, so pure-SQL users get the
-  * functions without touching the Scala API —
+  * expression ([[graft.functions.Native.table]]) into a session at
+  * build time, so pure-SQL users get the functions without touching the
+  * Scala API —
   *
   * {{{
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   *   SELECT graft_cosine(a.embedding, b.embedding) FROM ...
   * }}}
   *
-  * The `graft.ops` entry points do not require this: they register the
-  * same functions imperatively per session
-  * ([[graft.functions.VectorFunctions.register]]). The extension exists
-  * for sessions graft code does not create — SQL-only notebooks, JDBC
+  * The `graft.ops` entry points do not require this: their Columns
+  * carry the expressions themselves. The extension exists for SQL text
+  * in sessions graft code does not create — SQL-only notebooks, JDBC
   * gateways, `spark.sql` scripts. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("graft_cosine"),
-      info("graft_cosine", "_FUNC_(array<double>, array<double>) - cosine similarity"),
-      (es: Seq[Expression]) => CosineSimilarity(es.head, es(1))))
-    ext.injectFunction((FunctionIdentifier("graft_plane_sigs"),
-      info("graft_plane_sigs",
-        "_FUNC_(vec, planes, rowsPerBand, dim) - banded hyperplane LSH signatures"),
-      (es: Seq[Expression]) => PlaneSignatures(es.head, es(1), es(2), es(3))))
-    ext.injectFunction((FunctionIdentifier("graft_polyhash"),
-      info("graft_polyhash", "_FUNC_(str, base, mod) - portable polynomial hash"),
-      (es: Seq[Expression]) => PolyHash(es.head, es(1), es(2))))
-    ext.injectFunction((FunctionIdentifier("graft_minhash_lanes"),
-      info("graft_minhash_lanes", "_FUNC_(array<string>, k) - MinHash signature lanes"),
-      (es: Seq[Expression]) => MinHashLanes(es.head, es(1))))
-    ext.injectFunction((FunctionIdentifier("graft_word_shingles"),
-      info("graft_word_shingles", "_FUNC_(text, n) - distinct word n-gram shingles"),
-      (es: Seq[Expression]) => WordShingles(es.head, es(1))))
-    ext.injectFunction((FunctionIdentifier("graft_prefix_by_hash"),
-      info("graft_prefix_by_hash",
-        "_FUNC_(array<string>, prefLen) - ppjoin prefix under (xxhash64, value) order"),
-      (es: Seq[Expression]) => PrefixByHash(es.head, es(1))))
-    ext.injectFunction((FunctionIdentifier("graft_pq_encode"),
-      info("graft_pq_encode",
-        "_FUNC_(vec, codebooksFlat, dsub, k) - product-quantization codes"),
-      (es: Seq[Expression]) => PqEncode(es.head, es(1), es(2), es(3))))
-    ext.injectFunction((FunctionIdentifier("graft_pq_adc"),
-      info("graft_pq_adc",
-        "_FUNC_(codes, lutFlat, k) - asymmetric-distance score over PQ codes"),
-      (es: Seq[Expression]) => PqAdc(es.head, es(1), es(2))))
-    ext.injectFunction((FunctionIdentifier("graft_deflate_size"),
-      info("graft_deflate_size",
-        "_FUNC_(text) - raw-deflate byte count (compressibility quality signal)"),
-      (es: Seq[Expression]) => DeflateSize(es.head)))
+  override def apply(ext: SparkSessionExtensions): Unit = Native.table.foreach { f =>
+    ext.injectFunction((FunctionIdentifier(f.name),
+      new ExpressionInfo(classOf[GraftExtensions].getName, null, f.name, f.usage, ""), f.build))
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.fixtures.TpchLake
+import graft.functions.Native
 import graft.ops.{Dedup, EventAnalytics, Multimodal, Pipeline, Retrieval, Similarity, TemporalJoin, TextOps}
 import graft.sources.NtSource
 import graft.streaming.EventStreams
@@ -2719,7 +2720,6 @@ object OpsQueries {
     // restates the quadrant walk bit-for-bit as a chained CTE per level.
     ("l10_hilbert_order",
       (s, sf) => {
-        graft.functions.VectorFunctions.register(s)
         s.read.parquet(s"$sf/orders.parquet")
           .select(col("o_orderkey"),
             graft.ops.Layout.hilbertValue(col("o_custkey"),
@@ -6525,7 +6525,6 @@ object OpsQueries {
     // two 6-dp-floored double expressions
     ("t44_chao1_richness",
       (s, sf) => {
-        graft.functions.VectorFunctions.register(s)
         TextOps.chao1Richness(docs(s, sf),
           when(length(trim(col("text"))) === 0, array().cast("array<string>"))
             .otherwise(graft.functions.HashFunctions.wordGrams(
@@ -6581,7 +6580,6 @@ object OpsQueries {
     // cannot sort raw array<string> columns (r13 verdict item 1).
     ("t47_keyword_tags",
       (s, sf) => {
-        graft.functions.VectorFunctions.register(s)
         docs(s, sf).select(col("doc_id"),
           concat_ws(" ", TextOps.keywordTags(col("text"),
             Seq("big", "column", "join", "key", "sort", "zzzmissing"))).as("tags"))
@@ -6970,8 +6968,7 @@ object OpsQueries {
     // boundary can flip a rejection cross-engine
     ("a29_bh_fdr",
       (s, sf) => {
-        graft.functions.VectorFunctions.register(s)
-        val h = call_function("graft_md5_prefix52",
+        val h = Native("graft_md5_prefix52",
           concat(lit("bh:"), col("o_orderkey")))
         val hyp = s.read.parquet(s"$sf/orders.parquet")
           .filter(col("o_orderkey") % 7 === 0)

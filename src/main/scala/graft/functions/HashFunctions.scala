@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -714,121 +714,53 @@ case class WordShingles(left: Expression, right: Expression)
 
 object HashFunctions {
 
-  /** Idempotent per-session registration — invoked by
-    * [[VectorFunctions.register]], which every graft.ops entry point
-    * already calls (the one documented registration contract). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_polyhash", exprs => PolyHash(exprs.head, exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_slot_counts", exprs => SlotCounts(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hashed_margin",
-      exprs => HashedMargin(exprs.head, exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_lanes", exprs => MinHashLanes(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_word_shingles", exprs => WordShingles(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_word_grams", exprs => WordGrams(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_prefix_by_hash", exprs => PrefixByHash(exprs.head, exprs(1)), "built-in")
-    // full-width double-hashing Bloom probe (scan-side membership filter
-    // against a plan-literal bitset — see BloomSet for why spark-sketch's
-    // 32-bit-floored filter is not used here)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_contains",
-      exprs => BloomSetContains(exprs.head, exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_deflate_size", exprs => DeflateSize(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nfc", exprs => NfcNormalize(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jaro_winkler",
-      exprs => JaroWinklerSim(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash_portable",
-      exprs => SimHashPortable(exprs.head), "built-in")
-  }
-
   /** Jaro-Winkler similarity column (record-linkage scorer; DuckDB
     * `jaro_winkler_similarity` parity — see [[StringSimilarityWorker]]). */
-  def jaroWinkler(a: Column, b: Column): Column = {
-    scala.util.Try(register(SparkSession.active))
-    call_function("graft_jaro_winkler", a, b)
-  }
+  def jaroWinkler(a: Column, b: Column): Column =
+    Native("graft_jaro_winkler", a, b)
 
-  /** Unicode NFC normalization column (native, ASCII fast path); caller
-    * must hold a session with [[VectorFunctions.register]] invoked. */
-  def nfcNormalize(text: Column): Column = {
-    scala.util.Try(register(SparkSession.active))
-    call_function("graft_nfc", text)
-  }
+  /** Unicode NFC normalization column (native, ASCII fast path). */
+  def nfcNormalize(text: Column): Column =
+    Native("graft_nfc", text)
 
   /** ppjoin hash-order prefix column (per-row native selection, no
-    * shuffle); caller must hold a session with
-    * [[VectorFunctions.register]] invoked. */
-  def prefixByHash(shingles: Column, prefLen: Column): Column = {
-    scala.util.Try(register(SparkSession.active))
-    call_function("graft_prefix_by_hash", shingles, prefLen)
-  }
+    * shuffle). */
+  def prefixByHash(shingles: Column, prefLen: Column): Column =
+    Native("graft_prefix_by_hash", shingles, prefLen)
 
-  /** Distinct word-n-gram shingle column (single native pass); caller
-    * must hold a session with [[VectorFunctions.register]] invoked. */
-  def wordShingles(text: Column, n: Int): Column = {
-    scala.util.Try(register(SparkSession.active))
-    call_function("graft_word_shingles", text, lit(n))
-  }
+  /** Distinct word-n-gram shingle column (single native pass). */
+  def wordShingles(text: Column, n: Int): Column =
+    Native("graft_word_shingles", text, lit(n))
 
   /** ALL word n-gram windows (duplicates kept, position order; < n
     * tokens → empty). The counting-shape sibling of [[wordShingles]]. */
-  def wordGrams(text: Column, n: Int): Column = {
-    scala.util.Try(register(SparkSession.active))
-    call_function("graft_word_grams", text, lit(n))
-  }
+  def wordGrams(text: Column, n: Int): Column =
+    Native("graft_word_grams", text, lit(n))
 
-  /** MinHash signature column (all lanes in one codegen pass); caller
-    * must hold a session with [[VectorFunctions.register]] invoked. */
-  def minHashLanes(shingles: Column, numHashes: Int): Column = {
-    scala.util.Try(register(SparkSession.active))
-    call_function("graft_minhash_lanes", shingles, lit(numHashes))
-  }
+  /** MinHash signature column (all lanes in one codegen pass). */
+  def minHashLanes(shingles: Column, numHashes: Int): Column =
+    Native("graft_minhash_lanes", shingles, lit(numHashes))
 
-  /** Polynomial hash column. Callers must hold a session with
-    * [[VectorFunctions.register]] invoked (all graft.ops entry points
-    * do); the active-session registration here is best-effort convenience
-    * only — Column construction must not throw when no session is active,
-    * and in multi-session drivers the analyzing session's own register
-    * call is authoritative. */
-  def polyHash(s: Column, base: Long, mod: Long): Column = {
-    scala.util.Try(register(SparkSession.active))
-    call_function("graft_polyhash", s, lit(base), lit(mod))
-  }
+  /** Polynomial hash column. */
+  def polyHash(s: Column, base: Long, mod: Long): Column =
+    Native("graft_polyhash", s, lit(base), lit(mod))
 
   /** Deflated byte count column (compressibility quality signal). */
-  def deflateSize(s: Column): Column = {
-    scala.util.Try(register(SparkSession.active))
-    call_function("graft_deflate_size", s)
-  }
+  def deflateSize(s: Column): Column =
+    Native("graft_deflate_size", s)
 
   /** Hashed bag-of-words slot-count column (one native pass per row). */
-  def slotCounts(tokens: Column, dim: Int): Column = {
-    scala.util.Try(register(SparkSession.active))
-    call_function("graft_slot_counts", tokens, lit(dim))
-  }
+  def slotCounts(tokens: Column, dim: Int): Column =
+    Native("graft_slot_counts", tokens, lit(dim))
 
   /** Hashed linear margin column (one native pass per row; weights and
     * bias ride as plan literals). */
-  def hashedMargin(tokens: Column, weights: Seq[Double], bias: Double): Column = {
-    scala.util.Try(register(SparkSession.active))
-    call_function("graft_hashed_margin", tokens,
+  def hashedMargin(tokens: Column, weights: Seq[Double], bias: Double): Column =
+    Native("graft_hashed_margin", tokens,
       org.apache.spark.sql.functions.typedLit(weights), lit(bias))
-  }
 
   /** Portable 64-bit SimHash signature column over a token array (one
     * native pass per row — see [[SimHashPortable]]). */
-  def simHashPortable(tokens: Column): Column = {
-    scala.util.Try(register(SparkSession.active))
-    call_function("graft_simhash_portable", tokens)
-  }
+  def simHashPortable(tokens: Column): Column =
+    Native("graft_simhash_portable", tokens)
 }

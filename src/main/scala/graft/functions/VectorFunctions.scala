@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
 
 /** Native Catalyst expression for cosine similarity over two equal-length
@@ -302,52 +301,18 @@ case class TopClusters(first: Expression, second: Expression,
 
 object VectorFunctions {
 
-  /** Idempotent per-session registration of ALL native graft functions
-    * (vector + hash) — the single registration contract every graft.ops
-    * entry point invokes. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine", exprs => CosineSimilarity(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_plane_sigs",
-      exprs => PlaneSignatures(exprs.head, exprs(1), exprs(2), exprs(3)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_top_clusters",
-      exprs => TopClusters(exprs.head, exprs(1), exprs(2), exprs(3)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pq_encode",
-      exprs => PqEncode(exprs.head, exprs(1), exprs(2), exprs(3)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pq_adc", exprs => PqAdc(exprs.head, exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sq8_encode", exprs => Sq8Encode(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sq8_dot", exprs => Sq8Dot(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hilbert",
-      exprs => HilbertIndex(exprs.head, exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_keyword_tags",
-      exprs => KeywordTags(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_md5_prefix52", exprs => Md5Prefix52(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_poisson_mults",
-      exprs => PoissonMults(exprs.head, exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_wordpiece",
-      exprs => WordPieceEncode(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bpe_encode",
-      exprs => BpeEncode(exprs.head, exprs(1)), "built-in")
-    HashFunctions.register(spark)
+  /** Idempotent registration of every native graft function
+    * ([[Native.table]]) into `spark`'s function registry, for SQL text
+    * (`SELECT graft_cosine(...)`). The Scala helpers need none: their
+    * Columns carry the expressions themselves. */
+  def register(spark: SparkSession): Unit = Native.table.foreach { f =>
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(f.name, f.build, "built-in")
   }
 
-  /** Cosine similarity column; caller must have invoked [[register]] for
-    * the session (all graft.ops entry points do). Float arrays are cast
-    * here (a no-copy reinterpret inside codegen). */
+  /** Cosine similarity column. Float arrays are cast here (a no-copy
+    * reinterpret inside codegen). */
   def cosine(a: Column, b: Column): Column =
-    call_function("graft_cosine", a.cast("array<double>"), b.cast("array<double>"))
+    Native("graft_cosine", a.cast("array<double>"), b.cast("array<double>"))
 
   /** Banded hyperplane signatures column: array of `planes.length /
     * rowsPerBand` packed sign-bit signatures (band-major plane order).
@@ -356,7 +321,7 @@ object VectorFunctions {
     * reading plane slices at wrong offsets. */
   def planeSignatures(vec: Column, planes: Seq[Seq[Double]], rowsPerBand: Int): Column = {
     import org.apache.spark.sql.functions.{lit, typedLit}
-    call_function("graft_plane_sigs", vec.cast("array<double>"),
+    Native("graft_plane_sigs", vec.cast("array<double>"),
       typedLit(planes.flatten), lit(rowsPerBand), lit(planes.head.length))
   }
 
@@ -367,7 +332,7 @@ object VectorFunctions {
   def topClusters(vec: Column, centroids: Seq[Seq[Double]], nProbe: Int): Column = {
     import org.apache.spark.sql.functions.{lit, typedLit}
     require(centroids.nonEmpty && centroids.head.nonEmpty, "topClusters needs a non-empty centroid matrix")
-    call_function("graft_top_clusters", vec.cast("array<double>"),
+    Native("graft_top_clusters", vec.cast("array<double>"),
       typedLit(centroids.flatten), lit(centroids.head.length), lit(nProbe))
   }
 
@@ -376,7 +341,7 @@ object VectorFunctions {
     * centroid `dsub` doubles (a plan literal). */
   def pqEncode(vec: Column, codebooksFlat: Seq[Double], dsub: Int, k: Int): Column = {
     import org.apache.spark.sql.functions.{lit, typedLit}
-    call_function("graft_pq_encode", vec.cast("array<double>"),
+    Native("graft_pq_encode", vec.cast("array<double>"),
       typedLit(codebooksFlat), lit(dsub), lit(k))
   }
 
@@ -384,20 +349,20 @@ object VectorFunctions {
     * per row against the query-specific `lutFlat` (m×k, plan literal). */
   def pqAdc(codes: Column, lutFlat: Seq[Double], k: Int): Column = {
     import org.apache.spark.sql.functions.{lit, typedLit}
-    call_function("graft_pq_adc", codes, typedLit(lutFlat), lit(k))
+    Native("graft_pq_adc", codes, typedLit(lutFlat), lit(k))
   }
 
   /** Int8 scalar-quantized codes column (L2-normalize then round each
     * component to a signed byte at scale 127): one byte per dimension,
     * BinaryType — the bandwidth lever for brute-force scans. */
   def sq8Encode(vec: Column): Column =
-    call_function("graft_sq8_encode", vec.cast("array<double>"))
+    Native("graft_sq8_encode", vec.cast("array<double>"))
 
   /** Asymmetric int8 score column: full-precision `query` (plan literal)
     * against [[sq8Encode]] byte codes — approximates cosine of the
     * original vectors. */
   def sq8Dot(codes: Column, query: Seq[Double]): Column = {
     import org.apache.spark.sql.functions.typedLit
-    call_function("graft_sq8_dot", codes, typedLit(query))
+    Native("graft_sq8_dot", codes, typedLit(query))
   }
 }

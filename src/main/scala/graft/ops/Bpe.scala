@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.Native
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -151,11 +152,10 @@ object Bpe {
     val ms = mergeTable.select(col("rank"), col("lhs"), col("rhs"))
       .orderBy(col("rank")).collect()
       .map(r => (r.getString(1), r.getString(2)))
-    graft.functions.VectorFunctions.register(df.sparkSession)
     val flat: Seq[String] = ms.toSeq.flatMap { case (l, r) => Seq(l, r) }
     df.withColumn("bpe_tokens",
       flatten(transform(TextOps.tokens(text),
-        w => call_function("graft_bpe_encode", w, typedLit(flat)))))
+        w => Native("graft_bpe_encode", w, typedLit(flat)))))
   }
 
   /** WordPiece INFERENCE against a fixed vocabulary (`##`-prefixed
@@ -169,9 +169,8 @@ object Bpe {
     * word boundaries discarded). */
   def wordPieceEncode(df: DataFrame, text: Column, vocab: Seq[String]): DataFrame = {
     require(vocab.nonEmpty, "wordPieceEncode needs a non-empty vocab")
-    graft.functions.VectorFunctions.register(df.sparkSession)
     df.withColumn("wp_tokens",
       flatten(transform(TextOps.tokens(text),
-        w => call_function("graft_wordpiece", w, typedLit(vocab)))))
+        w => Native("graft_wordpiece", w, typedLit(vocab)))))
   }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.functions.VectorFunctions
+import graft.functions.{Native, VectorFunctions}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -28,11 +28,6 @@ object Dedup {
     * `df.rdd.getNumPartitions` — the latter forces physical planning of
     * the upstream plan before the caller's cache point. */
   private[graft] def ensureParallelism(df: DataFrame): DataFrame = {
-    // register against the df's OWN session, not SparkSession.active —
-    // the two differ whenever a caller builds plans for a session that
-    // never became thread-active (exposed by DeterminismSpec's
-    // newSession runs), and every shingle/gram op funnels through here
-    graft.functions.VectorFunctions.register(df.sparkSession)
     val conf = df.sparkSession.sessionState.conf
     val target = conf.numShufflePartitions
     val bytes = df.queryExecution.analyzed.stats.sizeInBytes
@@ -75,10 +70,6 @@ object Dedup {
 
   /** doc -> (id, shingles array). */
   private def shingled(df: DataFrame, id: Column, text: Column, n: Int): DataFrame = {
-    // registration must precede the select — Dataset analysis is EAGER,
-    // so the graft_word_shingles lookup happens inside df.select, not
-    // at execution (DeterminismSpec's never-active session caught this)
-    graft.functions.VectorFunctions.register(df.sparkSession)
     ensureParallelism(df.select(id.as("sid"), wordShingles(text, n).as("shingles")))
   }
 
@@ -364,7 +355,6 @@ object Dedup {
     require(evals.nonEmpty, "semanticDecontam needs a non-empty eval set")
     val matrix = evals.map(_._2.toSeq).toSeq
     val spark = corpus.sparkSession
-    graft.functions.VectorFunctions.register(spark)
     import spark.implicits._
     // position order == eval-id order, so TopClusters' (cos desc, id asc)
     // tie-break is an (cos desc, eval_id asc) tie-break
@@ -554,7 +544,6 @@ object Dedup {
       eval: DataFrame, evalText: Column, n: Int, fpp: Double = 1e-9): DataFrame = {
     require(fpp > 0 && fpp < 0.1, s"fpp must be in (0, 0.1), got $fpp")
     val spark = train.sparkSession
-    graft.functions.VectorFunctions.register(spark)
     import spark.implicits._
     val hashes = eval
       .select(explode(wordShingles(evalText, n)).as("sh"))
@@ -566,7 +555,7 @@ object Dedup {
     val bits = graft.functions.BloomSet.build(hashes, m, k)
     train
       .select(trainId.as("doc_id"), explode(wordShingles(trainText, n)).as("sh"))
-      .filter(call_function("graft_bloom_contains",
+      .filter(Native("graft_bloom_contains",
         lit(bits), xxhash64(col("sh")), lit(k)))
       .select(col("doc_id")).distinct()
   }
@@ -610,7 +599,6 @@ object Dedup {
       fpp: Double = 1e-9): DataFrame = {
     require(fpp > 0 && fpp < 0.1, s"fpp must be in (0, 0.1), got $fpp")
     val spark = train.sparkSession
-    graft.functions.VectorFunctions.register(spark)
     import spark.implicits._
     val hashes = eval
       .select(explode(wordShingles(evalText, n)).as("sh"))
@@ -624,7 +612,7 @@ object Dedup {
       .select(trainId.as("doc_id"), wordShingles(trainText, n).as("shs"))
       .select(col("doc_id"), size(col("shs")).cast("long").as("n_shingles"),
         aggregate(col("shs"), lit(0L), (acc, sh) =>
-          acc + when(call_function("graft_bloom_contains",
+          acc + when(Native("graft_bloom_contains",
             lit(bits), xxhash64(sh), lit(k)), 1L).otherwise(0L)).as("n_hits"))
       .filter(col("n_hits") > 0)
       .withColumn("frac", col("n_hits").cast("double") / col("n_shingles"))
@@ -1142,7 +1130,6 @@ object Dedup {
     * exists to drop. */
   def semDedup(df: DataFrame, id: Column, vec: Column, nClusters: Int,
       threshold: Double, seed: Long = 42L): DataFrame = {
-    VectorFunctions.register(df.sparkSession)
     val ivf = Similarity.buildIvf(df, id, vec, nClusters, seed)
     val a = ivf.assigned.select(col("cluster"), col("vec_id").as("id_a"), col("v").as("va"))
     val b = ivf.assigned.select(col("cluster"), col("vec_id").as("id_b"), col("v").as("vb"))
@@ -1187,7 +1174,6 @@ object Dedup {
   def embeddingNearDups(df: DataFrame, id: Column, vec: Column,
       threshold: Double, exact: Boolean = false,
       bands: Int = 0, rowsPerBand: Int = 0, seed: Long = 42L): DataFrame = {
-    VectorFunctions.register(df.sparkSession)
     // pre-cast once and widen partitions: the pair join multiplies every
     // per-row cost by n, and a single-partition left side serializes the
     // per-bucket loops

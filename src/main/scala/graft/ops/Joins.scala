@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.Native
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -69,7 +70,6 @@ object Joins {
       fpp: Double = 1e-6): DataFrame = {
     require(fpp > 0 && fpp < 0.1, s"fpp must be in (0, 0.1), got $fpp")
     val spark = probe.sparkSession
-    graft.functions.VectorFunctions.register(spark)
     import spark.implicits._
     val hashes = build.select(xxhash64(col(key)).as("h")).distinct()
       .as[Long].collect()
@@ -77,7 +77,7 @@ object Joins {
     val m = graft.functions.BloomSet.optimalNumBits(n, fpp)
     val k = graft.functions.BloomSet.optimalNumProbes(n, m)
     val bits = graft.functions.BloomSet.build(hashes, m, k)
-    probe.filter(call_function("graft_bloom_contains",
+    probe.filter(Native("graft_bloom_contains",
         lit(bits), xxhash64(col(key)), lit(k)))
       .join(build, Seq(key))
   }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.Native
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -75,12 +76,11 @@ object Layout {
     * index range covers a compact blob of (x, y) space with no
     * quadrant-seam jumps; at 100 TB that is strictly fewer parquet
     * files whose footer stats intersect a 2-D range predicate. Codegen'd
-    * O(bits) loop ([[graft.functions.HilbertIndex]]); caller must have
-    * registered graft functions for the session (every graft.ops entry
-    * point does). Keys wider than `bits` are masked, as in [[zValueN]]. */
+    * O(bits) loop ([[graft.functions.HilbertIndex]]). Keys wider than
+    * `bits` are masked, as in [[zValueN]]. */
   def hilbertValue(x: Column, y: Column, bits: Int = 16): Column = {
     require(bits >= 1 && bits <= 31, s"bits out of [1,31]: $bits")
-    call_function("graft_hilbert", x.cast("long"), y.cast("long"), lit(bits))
+    Native("graft_hilbert", x.cast("long"), y.cast("long"), lit(bits))
   }
 
   /** Cluster `df` on the Hilbert curve of (x, y): one range-partition +
@@ -89,7 +89,6 @@ object Layout {
     * per output file. */
   def hilbertOrder(df: DataFrame, x: Column, y: Column, numPartitions: Int,
       bits: Int = 16): DataFrame = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
     df.withColumn("__h", hilbertValue(x, y, bits))
       .repartitionByRange(numPartitions, col("__h"))
       .sortWithinPartitions(col("__h"))

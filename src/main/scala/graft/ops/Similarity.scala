@@ -19,9 +19,7 @@ object Similarity {
 
   /** Bit-signature of `vec` against the hyperplanes: bit p = sign of
     * dot(vec, plane_p). One codegen'd loop over the vector (the
-    * [[graft.functions.PlaneSignatures]] expression with a single band);
-    * callers must hold a session with [[VectorFunctions.register]]
-    * invoked (all graft.ops entry points do). */
+    * [[graft.functions.PlaneSignatures]] expression with a single band). */
   def hyperplaneSignature(vec: Column, planes: Seq[Seq[Double]]): Column =
     VectorFunctions.planeSignatures(vec, planes, planes.length).getItem(0)
 
@@ -34,7 +32,6 @@ object Similarity {
     * parallel, k rows to the driver. Ties broken by id for determinism. */
   def bruteForceTopK(df: DataFrame, id: Column, vec: Column,
       query: Seq[Double], k: Int): DataFrame = {
-    VectorFunctions.register(df.sparkSession)
     df.select(id.as("vec_id"),
         VectorFunctions.cosine(vec, typedLit(query)).as("cosine"))
       .orderBy(col("cosine").desc, col("vec_id"))
@@ -58,8 +55,6 @@ object Similarity {
       queries: Seq[(Long, Seq[Double])], k: Int): Map[Long, Set[Long]] = {
     import org.apache.spark.sql.expressions.Window
     require(queries.nonEmpty, "bruteForceTopKBatch needs at least one query")
-    val spark = df.sparkSession
-    VectorFunctions.register(spark)
     val qlit = typedLit(queries.map { case (qid, qv) => (qid, qv) })
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("cosine").desc, col("vec_id"))
@@ -94,7 +89,6 @@ object Similarity {
     require(mDims >= 1 && mDims < query.length,
       s"mDims must be in [1, dim): $mDims vs dim ${query.length}")
     require(rerank >= k, s"rerank $rerank must be >= k $k")
-    VectorFunctions.register(df.sparkSession)
     val cands = df.select(id.as("vec_id"), vec.cast("array<double>").as("__v"))
       .withColumn("__pc", VectorFunctions.cosine(
         slice(col("__v"), 1, mDims), typedLit(query.take(mDims))))
@@ -178,7 +172,6 @@ object Similarity {
 
     /** Exact cosine top-k restricted to the nProbe nearest clusters. */
     def topK(query: Seq[Double], k: Int, nProbe: Int): DataFrame = {
-      VectorFunctions.register(assigned.sparkSession)
       def cos(a: Seq[Double], b: Seq[Double]): Double = {
         val dot = a.zip(b).map { case (x, y) => x * y }.sum
         val na = math.sqrt(a.map(x => x * x).sum); val nb = math.sqrt(b.map(x => x * x).sum)
@@ -396,8 +389,6 @@ object Similarity {
       nListsOpt: Option[Int] = None, nProbeOpt: Option[Int] = None,
       seed: Long = 42L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val spark = queries.sparkSession
-    VectorFunctions.register(spark)
     val (autoLists, autoProbe) =
       if (nListsOpt.isEmpty || nProbeOpt.isEmpty) autoIvfParams(corpus.count())
       else (0, 0)
@@ -498,7 +489,6 @@ object Similarity {
     /** Approximate top-k: ADC scan over the compact codes, exact cosine
       * re-rank of the top `rerank` candidates. */
     def topK(query: Seq[Double], k: Int, rerank: Int): DataFrame = {
-      VectorFunctions.register(codes.sparkSession)
       val cand = codes
         .select(col("vec_id"), VectorFunctions.pqAdc(col("codes"), lut(query), kCode).as("adc"))
         .orderBy(col("adc").desc, col("vec_id"))
@@ -519,7 +509,6 @@ object Similarity {
       seed: Long = 42L, sampleFraction: Double = 1.0): PqIndex = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-    VectorFunctions.register(df.sparkSession)
     val base = df.select(id.cast("long").as("vec_id"), vec.cast("array<double>").as("v"))
     val nrm = sqrt(aggregate(col("v"), lit(0.0), (a, x) => a + x * x))
     val normed = base.withColumn("vn",
@@ -577,7 +566,6 @@ object Similarity {
       pq.close()
     }
     def topK(query: Seq[Double], k: Int, nProbe: Int, rerank: Int): DataFrame = {
-      VectorFunctions.register(codesWithCluster.sparkSession)
       def cos(a: Seq[Double], b: Seq[Double]): Double = {
         val dot = a.zip(b).map { case (x, y) => x * y }.sum
         val na = math.sqrt(a.map(x => x * x).sum)
@@ -655,7 +643,6 @@ object Similarity {
     * TakeOrdered scan + broadcast re-rank join, zero shuffles. */
   def sq8TopK(df: DataFrame, id: Column, vec: Column, query: Seq[Double],
       k: Int, rerank: Int): DataFrame = {
-    VectorFunctions.register(df.sparkSession)
     val qn = normalizeQuery(query)
     val base = df.select(id.cast("long").as("vec_id"), vec.cast("array<double>").as("v"))
     val cand = base
@@ -683,7 +670,6 @@ object Similarity {
     * subsequent query's candidate scan reads a fraction of the bytes. */
   final case class Sq8Index(codes: DataFrame, vectors: DataFrame) {
     def topK(query: Seq[Double], k: Int, rerank: Int): DataFrame = {
-      VectorFunctions.register(codes.sparkSession)
       val cand = codes
         .select(col("vec_id"), VectorFunctions.sq8Dot(col("codes"),
           normalizeQuery(query)).as("sq8"))
@@ -709,7 +695,6 @@ object Similarity {
       * the encode-once regime: exact answers, 4–8× fewer scan bytes, and
       * the expensive full-precision pass confined to an ε-band. */
     def topKExact(query: Seq[Double], k: Int): DataFrame = {
-      VectorFunctions.register(codes.sparkSession)
       val qn = normalizeQuery(query)
       val eps = qn.map(math.abs).sum / 254.0
       val scored = codes.select(col("vec_id"),
@@ -729,7 +714,6 @@ object Similarity {
 
   /** Encode the corpus once into an in-memory-cached [[Sq8Index]]. */
   def buildSq8(df: DataFrame, id: Column, vec: Column): Sq8Index = {
-    VectorFunctions.register(df.sparkSession)
     val base = df.select(id.cast("long").as("vec_id"), vec.cast("array<double>").as("v"))
     Sq8Index(
       base.select(col("vec_id"), VectorFunctions.sq8Encode(col("v")).as("codes")).cache(),
@@ -754,7 +738,6 @@ object Similarity {
     * cost for recall. */
   def annTopK(df: DataFrame, id: Column, vec: Column, query: Seq[Double],
       k: Int, numPlanes: Int = 12, probeHamming: Int = 2, seed: Long = 42L): DataFrame = {
-    VectorFunctions.register(df.sparkSession)
     val planes = randomPlanes(numPlanes, query.size, seed)
     val qSig = planes.zipWithIndex.map { case (plane, p) =>
       val dot = plane.zip(query).map { case (w, x) => w * x }.sum
@@ -835,7 +818,6 @@ object Similarity {
   }
 
   def embeddingOutliers(df: DataFrame, id: Column, vec: Column, k: Int): DataFrame = {
-    VectorFunctions.register(df.sparkSession)
     val base = df.select(id.as("vec_id"), vec.cast("array<double>").as("v"))
     val lenCounts = base.groupBy(size(col("v")).as("d")).count().collect()
     val dim = lenCounts.maxBy(r => (r.getLong(1), -r.getInt(0))).getInt(0)

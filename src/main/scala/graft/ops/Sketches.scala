@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.Native
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -57,12 +58,9 @@ object Sketches {
     * `md5(salt:value)` as a 52-bit integer — bit-identical in any
     * engine with md5 (see [[graft.functions.KmvSketch.M]] for why not
     * the polyHash fold here). */
-  def kmvHash(value: Column, salt: String): Column = {
-    scala.util.Try(graft.functions.VectorFunctions.register(
-      org.apache.spark.sql.SparkSession.active))
-    call_function("graft_md5_prefix52",
+  def kmvHash(value: Column, salt: String): Column =
+    Native("graft_md5_prefix52",
       concat(lit(salt + ":"), value.cast("string")))
-  }
 
   /** Per-group KMV distinct estimate: one aggregation pass with O(k)
     * state per group (only ≤k longs per partition cross the wire — no
@@ -109,10 +107,6 @@ object Sketches {
   def kmvSketchPerGroup(df: DataFrame, group: Column, value: Column,
       k: Int, salt: String): DataFrame = {
     require(k >= 2 && k <= 1024, s"kmv needs k in [2, 1024] ((k-1)*M must fit a long): $k")
-    // register against the INPUT's session, not SparkSession.active —
-    // Dataset analysis is eager and the caller's session may not be the
-    // thread-active one (the determinism-sweep alt-session lesson)
-    graft.functions.VectorFunctions.register(df.sparkSession)
     df.select(group.cast("string").as("scope"),
         kmvHash(value, salt).as("__h"))
       .groupBy(col("scope"))
@@ -155,8 +149,6 @@ object Sketches {
   def kmvOverlap(a: DataFrame, aVal: Column, b: DataFrame, bVal: Column,
       k: Int, salt: String): DataFrame = {
     require(k >= 2 && k <= 1024, s"kmv needs k in [2, 1024] ((k-1)*M must fit a long): $k")
-    graft.functions.VectorFunctions.register(a.sparkSession)
-    graft.functions.VectorFunctions.register(b.sparkSession)
     val M = graft.functions.KmvSketch.M
     val ska = a.select(kmvHash(aVal, salt).as("__h"))
       .agg(graft.functions.KmvSketch.bottomK(k)(col("__h")).as("ka"))
@@ -216,9 +208,6 @@ object Sketches {
   def quantileSketchPerGroup(df: DataFrame, group: Column, value: Column,
       key: Column, k: Int, salt: String): DataFrame = {
     require(k >= 2 && k <= 65536, s"quantile sketch needs k in [2, 65536]: $k")
-    // per-df-session registration (not SparkSession.active) — see
-    // kmvSketchPerGroup
-    graft.functions.VectorFunctions.register(df.sparkSession)
     df.select(group.cast("string").as("scope"),
         kmvHash(key, salt).as("__h"), value.cast("double").as("__v"))
       .where(col("__h").isNotNull && col("__v").isNotNull)

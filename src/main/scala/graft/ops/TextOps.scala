@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.Native
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -24,7 +25,6 @@ object TextOps {
     * Bench's `.count()` had been pruning the quadratic branch, so only
     * full materialization showed it). */
   private[ops] def bigramPairs(d: DataFrame, idc: Column, t: Column): DataFrame = {
-    graft.functions.VectorFunctions.register(d.sparkSession)
     val grams = when(length(trim(t)) === 0, array().cast("array<string>"))
       .otherwise(graft.functions.HashFunctions.wordGrams(lower(trim(t)), 2))
     d.select(idc.as("doc_id"), explode(grams).as("g"))
@@ -80,11 +80,9 @@ object TextOps {
   /** Sorted distinct dictionary keywords contained in `text`
     * (case-insensitive substring, blocklist semantics) — ONE
     * Aho-Corasick pass per row regardless of dictionary size
-    * ([[graft.functions.KeywordTags]]), vs k contains-scans. Caller
-    * must have registered graft functions (every ops entry point
-    * does). */
+    * ([[graft.functions.KeywordTags]]), vs k contains-scans. */
   def keywordTags(text: Column, keywords: Seq[String]): Column =
-    call_function("graft_keyword_tags", text,
+    Native("graft_keyword_tags", text,
       typedLit(keywords.map(_.toLowerCase).sorted))
 
   /** Distinctive terms of a subcorpus vs the rest: log-odds ratio with
@@ -213,7 +211,6 @@ object TextOps {
     require(buckets >= 3, s"buckets must be >= 3 to fit a line: $buckets")
     import org.apache.spark.sql.expressions.Window
     val spark = df.sparkSession
-    graft.functions.VectorFunctions.register(spark)
     val r6 = (c: Column) => floor(c * 1000000 + 0.5) / 1000000
     val dec6 = (c: Column) => c.cast(
       org.apache.spark.sql.types.DataTypes.createDecimalType(28, 6))
@@ -405,7 +402,6 @@ object TextOps {
   def ngramCounts(df: DataFrame, text: Column, n: Int,
       minCount: Long = 1L): DataFrame = {
     require(n >= 1, s"n must be >= 1: $n")
-    graft.functions.VectorFunctions.register(df.sparkSession)
     // native WordGrams expression, not a transform() HOF — the HOF
     // evaluates its lambda interpreted per window and was the dominant
     // cost of this scan (same finding as the WordShingles migration);
@@ -513,7 +509,6 @@ object TextOps {
     *    inside one task.
     * Fractions are 4-dp half-up rounded (cross-engine stable). */
   def repetitionMetrics(df: DataFrame, id: Column, text: Column): DataFrame = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
     val base = df.select(id.as("doc_id"), tokens(text).as("toks"), text.as("__t"))
     // bigram strings via the native WordGrams scan, NOT a transform()
     // HOF — HOF lambdas evaluate interpreted per element (~50 µs each;

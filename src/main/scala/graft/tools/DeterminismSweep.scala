@@ -23,12 +23,10 @@ object DeterminismSweep {
     val alt = base.newSession()
     alt.conf.set("spark.sql.shuffle.partitions", "13")
 
-    // active too: the graft functions register into the active session
     def fp(s: SparkSession, gate: String): Either[String, Seq[String]] =
-      try {
-        SparkSession.setActiveSession(s)
-        Right(SparkEntry.queries(gate)(s, sfDir).collect().map(_.toString).sorted.toSeq)
-      } catch { case e: Throwable => Left(s"${e.getClass.getSimpleName}: ${e.getMessage}") }
+      try Right(SparkEntry.queries(gate)(s, sfDir).collect()
+        .map(_.toString).sorted.toSeq)
+      catch { case e: Throwable => Left(s"${e.getClass.getSimpleName}: ${e.getMessage}") }
 
     val names = args.lift(1) match {
       case Some(list) =>

@@ -1049,6 +1049,10 @@ class OpsSpec extends AnyFunSuite {
         .withExtensions(new GraftExtensions().apply(_))
         .getOrCreate()
       assert(s2 ne prev)
+      val names = graft.functions.Native.table.map(_.name)
+      assert(names.size == 25 && names.distinct.size == 25, names)
+      val missing = names.filterNot(s2.catalog.functionExists)
+      assert(missing.isEmpty, s"not injected: ${missing.mkString(", ")}")
       assert(s2.sql("SELECT graft_cosine(array(1d,0d), array(1d,0d))")
         .head().getDouble(0) == 1.0)
       assert(s2.sql("SELECT graft_polyhash('ab', 31l, 1000000007l)").head().getLong(0)
@@ -1069,6 +1073,75 @@ class OpsSpec extends AnyFunSuite {
       SparkSession.setActiveSession(prev)
       SparkSession.setDefaultSession(prev)
     }
+  }
+
+  test("Native table: each entry's Column analyzes like call_function on a registered session") {
+    import graft.functions.Native
+    VectorFunctions.register(spark)
+    val df = Seq((Seq(1.0, 0.0), "a b c", Seq("a", "b", "c"), Seq(0), Array[Byte](127, 0), 5L, 9L))
+      .toDF("v", "s", "toks", "codes", "bin", "x", "y")
+    val (v, s, toks) = (col("v"), col("s"), col("toks"))
+    val args: Map[String, Seq[Column]] = Map(
+      "graft_cosine" -> Seq(v, v),
+      "graft_plane_sigs" -> Seq(v, typedLit(Seq(1.0, -1.0)), lit(1), lit(2)),
+      "graft_top_clusters" -> Seq(v, typedLit(Seq(1.0, 0.0, 0.0, 1.0)), lit(2), lit(1)),
+      "graft_pq_encode" -> Seq(v, typedLit(Seq(0.0, 0.0, 1.0, 1.0)), lit(2), lit(2)),
+      "graft_pq_adc" -> Seq(col("codes"), typedLit(Seq(10.0, 20.0)), lit(2)),
+      "graft_sq8_encode" -> Seq(v),
+      "graft_sq8_dot" -> Seq(col("bin"), typedLit(Seq(1.0, 0.0))),
+      "graft_hilbert" -> Seq(col("x"), col("y"), lit(4)),
+      "graft_keyword_tags" -> Seq(s, typedLit(Seq("a", "c"))),
+      "graft_md5_prefix52" -> Seq(s),
+      "graft_poisson_mults" -> Seq(s, lit(3), lit("salt")),
+      "graft_wordpiece" -> Seq(s, typedLit(Seq("a", "##b"))),
+      "graft_bpe_encode" -> Seq(s, typedLit(Seq("a", " "))),
+      "graft_polyhash" -> Seq(s, lit(31L), lit(1000000007L)),
+      "graft_slot_counts" -> Seq(toks, lit(8)),
+      "graft_hashed_margin" -> Seq(toks, typedLit(Seq(0.5, -0.5)), lit(0.1)),
+      "graft_minhash_lanes" -> Seq(toks, lit(4)),
+      "graft_word_shingles" -> Seq(s, lit(2)),
+      "graft_word_grams" -> Seq(s, lit(2)),
+      "graft_prefix_by_hash" -> Seq(toks, lit(2)),
+      "graft_bloom_contains" -> Seq(lit(Array.fill[Byte](8)(-1)), xxhash64(s), lit(2)),
+      "graft_deflate_size" -> Seq(s),
+      "graft_nfc" -> Seq(s),
+      "graft_jaro_winkler" -> Seq(s, lit("a b d")),
+      "graft_simhash_portable" -> Seq(toks))
+    assert(args.keySet == Native.table.map(_.name).toSet)
+    for (f <- Native.table) {
+      val native = df.select(Native(f.name, args(f.name): _*))
+      val named = df.select(call_function(f.name, args(f.name): _*))
+      def expr(d: DataFrame) = {
+        val a = d.queryExecution.analyzed.asInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Project]
+          .projectList.head.asInstanceOf[org.apache.spark.sql.catalyst.expressions.Alias]
+        (a.name, a.child)
+      }
+      assert(expr(native) == expr(named), f.name)
+      assert(native.collect().toSeq == named.collect().toSeq, f.name)
+    }
+  }
+
+  test("native-function Columns resolve on a session that is not the active one, unregistered") {
+    SparkSession.setActiveSession(spark)
+    val other = spark.newSession()
+    val names = Seq("graft_polyhash", "graft_hashed_margin", "graft_simhash_portable",
+      "graft_md5_prefix52")
+    def rows(s: SparkSession) = s.createDataFrame(Seq((1L, "a b c"), (2L, "b c d"), (3L, "")))
+      .toDF("id", "text")
+      .select(col("id"), split(col("text"), " ").as("toks"), col("text"))
+      .select(col("id"),
+        graft.functions.HashFunctions.polyHash(col("text"), 257L, 2147483647L).as("ph"),
+        graft.functions.HashFunctions.hashedMargin(col("toks"), Seq(0.25, -0.5, 1.0), 0.1).as("m"),
+        graft.functions.HashFunctions.simHashPortable(col("toks")).as("sh"),
+        graft.ops.Sketches.kmvHash(col("id"), "x").as("kh"))
+      .collect().sortBy(_.getLong(0)).toSeq
+    assert(SparkSession.active eq spark)
+    assert(names.forall(n => !other.catalog.functionExists(n)))
+    val got = rows(other)
+    assert(got == rows(spark))
+    assert(got.size == 3)
+    // building and running the Columns registered nothing there
+    assert(names.forall(n => !other.catalog.functionExists(n)))
   }
 
   test("connectedComponents: chains close transitively, singletons self-label") {
