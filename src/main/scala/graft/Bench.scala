@@ -9,7 +9,8 @@ import scala.jdk.CollectionConverters._
 
 /** Headline bench. Prints TWO JSON lines and writes ONE file:
   *  1. a full-detail line (per-query min+spread maps for sf0.1 and the
-  *     sf1 subset, ~7 KB) goes FIRST on stdout and verbatim to
+  *     sf1 subset, plus per sf0.1 gate the classes its reps compiled and
+  *     the compile ms) goes FIRST on stdout and verbatim to
   *     `target/bench_detail.json`;
   *  2. the LAST stdout line is a small (≤~1 KB) headline:
   *     {"metric":"total","value":N,"unit":"sec","spread_total":…,
@@ -315,8 +316,10 @@ object Bench {
       rawAlphas: Map[String, Double], rawPoints: Map[String, Seq[(Double, Double)]],
       rows: Map[String, Seq[(Double, Long)]])
 
-  /** Everything one run produced; the input of [[report]]. */
+  /** Everything one run produced; the input of [[report]]. `codegen` is
+    * per gate of `main` the codegen work summed over its timed reps. */
   final case class Run(sfDir: String, reps: Int, main: Timings,
+      codegen: Seq[(String, GraftSession.Codegen)],
       sf1: Option[(String, Timings)], smoke: Option[Smoke],
       failures: Seq[(String, String)], verdict: Option[Verdict],
       budgetSec: Double, wallSec: Double, budgetSkipped: Seq[String])
@@ -430,7 +433,8 @@ object Bench {
 
   /** The detail line and the headline line of `run`. */
   def report(run: Run): (String, String) = {
-    val Run(sfDir, reps, main, sf1, smoke, failures, verdict, budgetSec, wallSec, budgetSkipped) = run
+    val Run(sfDir, reps, main, codegen, sf1, smoke, failures, verdict, budgetSec, wallSec,
+      budgetSkipped) = run
     def mins(kvs: Timings) = decs(kvs.map { case (n, (t, _)) => n -> t })
     def spreads(kvs: Timings) = decs(kvs.map { case (n, (_, s)) => n -> s })
     def total(kvs: Timings) = kvs.map(_._2._1).sum
@@ -461,6 +465,8 @@ object Bench {
     val detail = obj(Seq(
       "metric" -> text("detail"), "value" -> dec(total(main)), "unit" -> text("sec"),
       "queries" -> mins(main), "spread" -> spreads(main),
+      "compiles" -> obj(codegen.map { case (n, c) => n -> LongNode.valueOf(c.compiles) }),
+      "compile_ms" -> decs(codegen.map { case (n, c) => n -> c.ms }),
       "reps" -> IntNode.valueOf(reps), "sf" -> text(sfDir)) ++
       sf1.toSeq.flatMap { case (d, res) => Seq(
         "sf1_dir" -> text(d), "sf1_total" -> dec(total(res)),
@@ -521,6 +527,8 @@ object Bench {
     * are excluded from every total and listed on both lines. */
   private final class Measure(spark: SparkSession, t0: Long, budgetSec: Double) {
     val failures = mutable.LinkedHashMap.empty[String, String]
+    /** Per (dir, gate): codegen work summed over every timed invocation. */
+    val codegen = mutable.Map.empty[(String, String), GraftSession.Codegen]
     val budgetSkipped = mutable.LinkedHashSet.empty[String]
     private val warmed = mutable.Set.empty[String]
 
@@ -535,13 +543,16 @@ object Bench {
       over
     }
 
-    def time(name: String, q: Query, dir: String): Option[Double] =
+    def time(name: String, q: Query, dir: String): Option[Double] = {
+      val before = GraftSession.codegen()
       try Some(Bench.time(spark, q, dir))
       catch { case e: Throwable =>
         failures.getOrElseUpdate(name,
           s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("").take(200)}")
         None
-      }
+      } finally codegen((dir, name)) =
+        codegen.getOrElse((dir, name), GraftSession.Codegen.Zero) + (GraftSession.codegen() - before)
+    }
 
     /** Once per dir, before its first timed rep: stream every byte under
       * it through the OS page cache. Three rounds of tripwire flags
@@ -741,8 +752,9 @@ object Bench {
     catch { case e: Throwable => System.err.println(s"${Baseline.FileName} write failed: $e") }
 
     val smoke = m.smoke(queries)
-    val (detail, headline) = report(Run(sfDir, reps, main, sf1, smoke, m.failures.toSeq, verdict,
-      budgetSec, m.elapsedSec, m.budgetSkipped.toSeq))
+    val codegen = main.map { case (n, _) => n -> m.codegen((sfDir, n)) }
+    val (detail, headline) = report(Run(sfDir, reps, main, codegen, sf1, smoke, m.failures.toSeq,
+      verdict, budgetSec, m.elapsedSec, m.budgetSkipped.toSeq))
     // complete per-query detail goes to a FILE (and to stdout first, where
     // head-truncation is harmless) — never to the final line
     try {

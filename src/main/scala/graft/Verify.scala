@@ -47,6 +47,7 @@ object Verify {
     // had no row for it. Collect failures into _errors.json so the compare
     // script (and the judge) can distinguish "errored" from "missing".
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val (t0, cg0) = (System.nanoTime(), GraftSession.codegen())
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
@@ -66,6 +67,7 @@ object Verify {
         errors(name) = s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("")}".take(500)
       }
     }
+    val (passSec, cg) = ((System.nanoTime() - t0) / 1e9, GraftSession.codegen() - cg0)
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
@@ -77,5 +79,8 @@ object Verify {
     // queries that DID produce output (a nonzero exit could discard them)
     if (errors.nonEmpty)
       System.err.println(s"[verify] ${errors.size} queries THREW: ${errors.keys.mkString(", ")}")
+    // the pass's cost and its codegen share; with a cache that evicts
+    // nothing, the count is the distinct classes the gates compile
+    println(f"[verify] pass $passSec%.1f s, ${cg.compiles} classes compiled in ${cg.ms}%.0f ms")
   }
 }

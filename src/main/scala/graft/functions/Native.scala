@@ -18,6 +18,11 @@ object Native {
 
   final case class Fn(name: String, usage: String, build: Seq[Expression] => Expression)
 
+  /** [[WordPieceEncode]] takes its `prettyName` from this entry. */
+  val wordPiece: Fn = Fn("graft_wordpiece",
+    "_FUNC_(word, vocab) - greedy longest-match WordPiece pieces",
+    es => WordPieceEncode(es.head, es(1)))
+
   val table: Seq[Fn] = Seq(
     Fn("graft_cosine", "_FUNC_(array<double>, array<double>) - cosine similarity",
       es => CosineSimilarity(es.head, es(1))),
@@ -47,8 +52,7 @@ object Native {
     Fn("graft_poisson_mults",
       "_FUNC_(id, reps, salt) - Poisson(1) bootstrap multiplicity per replicate",
       es => PoissonMults(es.head, es(1), es(2))),
-    Fn("graft_wordpiece", "_FUNC_(word, vocab) - greedy longest-match WordPiece pieces",
-      es => WordPieceEncode(es.head, es(1))),
+    wordPiece,
     Fn("graft_bpe_encode", "_FUNC_(word, mergesFlat) - BPE symbols after the ranked merges",
       es => BpeEncode(es.head, es(1))),
     Fn("graft_polyhash", "_FUNC_(str, base, mod) - portable polynomial hash",

@@ -36,18 +36,18 @@ case class WordPieceEncode(first: Expression, second: Expression)
   override def left: Expression = first
   override def right: Expression = second
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_wordpiece_encode"
+  override def prettyName: String = Native.wordPiece.name
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (first.dataType != StringType)
       TypeCheckResult.TypeCheckFailure(
-        s"graft_wordpiece_encode expects a string word column, got ${first.dataType}")
+        s"$prettyName expects a string word column, got ${first.dataType}")
     else if (!second.dataType.isInstanceOf[ArrayType] ||
         second.dataType.asInstanceOf[ArrayType].elementType != StringType)
       TypeCheckResult.TypeCheckFailure(
-        s"graft_wordpiece_encode expects array<string> vocab, got ${second.dataType}")
+        s"$prettyName expects array<string> vocab, got ${second.dataType}")
     else if (!second.foldable)
-      TypeCheckResult.TypeCheckFailure("graft_wordpiece_encode vocab must be a literal")
+      TypeCheckResult.TypeCheckFailure(s"$prettyName vocab must be a literal")
     else TypeCheckResult.TypeCheckSuccess
 
   @transient private lazy val vocab: java.util.HashSet[String] = {

@@ -199,11 +199,6 @@ object Dedup {
     array((0 until numHashes).map(s =>
       array_min(transform(shingles, sh => xxhash64(lit(s), sh)))): _*)
 
-  def minHashSignatures(df: DataFrame, id: Column, text: Column, n: Int,
-      numHashes: Int): DataFrame =
-    shingled(df, id, text, n)
-      .select(col("sid"), minHashSignature(col("shingles"), numHashes).as("sig"))
-
   /** (sid, band, bhash) rows — the LSH bucket table. This is ALSO the
     * persistable index artifact of the incremental path: write it once
     * per corpus snapshot and arrival batches join against it. */

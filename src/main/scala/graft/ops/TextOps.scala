@@ -35,13 +35,6 @@ object TextOps {
 
   def tokenCount(text: Column): Column = size(tokens(text))
 
-  /** BPE-ish subword count: whitespace tokens plus an extra unit per
-    * 4 characters of long tokens (cheap deterministic proxy for a real
-    * tokenizer's subword splits). */
-  def subwordCount(text: Column): Column =
-    aggregate(tokens(text), lit(0),
-      (acc, t) => acc + greatest(ceil(length(t) / 4.0).cast("int"), lit(1)))
-
   /** Per-document sentence segmentation statistics: sentence count and
     * mean tokens per sentence — the readability / fragment-detection
     * signal quality filters threshold on (a "document" of 40 one-word
@@ -324,9 +317,6 @@ object TextOps {
 
   def punctCount(text: Column): Column =
     length(text) - length(regexp_replace(text, "[.,!?;:]", ""))
-
-  def digitCount(text: Column): Column =
-    length(text) - length(regexp_replace(text, "[0-9]", ""))
 
   /** Composite quality score in [0,1]:
     * 0.4·stopword-ratio + 0.3·min(ntok/100, 1) + 0.3·(1 − punct-ratio),

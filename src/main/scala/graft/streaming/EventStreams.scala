@@ -361,20 +361,6 @@ object EventStreams {
       mode: String): DataFrame =
     plan.sparkSession.table(drain(plan, label, path, mode).name)
 
-  /** Run a streaming plan to a PARQUET FILE SINK — the production egress
-    * shape: append-mode files plus the `_spark_metadata` commit log that
-    * makes the write exactly-once (a re-run against the same checkpoint
-    * reprocesses nothing; readers see only committed files). Both the
-    * output and checkpoint dirs are wiped first so each invocation is a
-    * fresh, deterministic run. Returns the read-back result. */
-  def runToParquetSink(spark: SparkSession, plan: DataFrame,
-      outDir: String, checkpointDir: String): DataFrame = {
-    Seq(outDir, checkpointDir).foreach(d => FileUtils.deleteDirectory(new java.io.File(d)))
-    drain(plan, "parquet_sink", outDir, "append", (w, _) =>
-      w.format("parquet").option("path", outDir).option("checkpointLocation", checkpointDir))
-    spark.read.parquet(outDir)
-  }
-
   /** Mid-batch crash + restart, the delivery recipe of st17 and st19. The
     * events file is staged as four files read one per micro-batch; each
     * batch stores `perBatch(batch)` in its own `out/batch=<id>` directory

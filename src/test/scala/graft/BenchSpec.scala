@@ -72,7 +72,8 @@ class BenchSpec extends AnyFunSuite {
 }
 
 object BenchSpec {
-  /** A run with every optional block: an sf1 sweep, a scale smoke with
+  /** A run with every optional block: per-gate codegen work (one gate
+    * at a sub-millisecond compile time), an sf1 sweep, a scale smoke with
     * capped gates, re-repped (raw) alphas and per-row output counts, more
     * than 15 failures (one message with a quote and a newline), more than
     * 5 regressions, dissolved tripwire hits, and budget skips. */
@@ -113,7 +114,9 @@ object BenchSpec {
       Regression("ts23_asof_nearest_sliced", 10.0, 25.0, "sf1"))
     val adj = Seq(Adjudicated("c01_dedup_clusters", 5.0, 12.0, 5.5),
       Adjudicated("q05_join3", 0.04, 0.1, 0.041))
-    Run("lake/sf0.1", 3, main, Some("localdata/sf1" -> sf1), Some(smoke), failures,
+    val codegen = main.map(_._1).zipWithIndex.map { case (n, i) =>
+      n -> GraftSession.Codegen(i * 7L, i * 12345678L + 500L) }
+    Run("lake/sf0.1", 3, main, codegen, Some("localdata/sf1" -> sf1), Some(smoke), failures,
       Some(Verdict(regs, adj)), 2700.0, 2712.3456,
       Seq("smoke:d07_embed_neardup_lsh@5.0", "smoke_adj:d25_longest_dup_spans@5.0", "adj:q05_join3"))
   }

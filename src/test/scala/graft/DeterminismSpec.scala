@@ -21,12 +21,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (a16), gram joins (d21), and an int128 distribution distance (pr05). */
 class DeterminismSpec extends AnyFunSuite {
 
-  private lazy val base = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val base = GraftSession.builder("local[4]", 4).getOrCreate()
 
   private val sf = "/root/testdata/sf0.001"
 

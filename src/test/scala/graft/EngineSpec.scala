@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end engine smoke on the sf0.001 tables (the full DuckDB-hash
@@ -8,12 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * replicates it locally). */
 class EngineSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession.builder("local[4]", 4).getOrCreate()
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.{EventAnalytics, Pipeline}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -13,12 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * driven directly so every CI run replays the identical cases. */
 class OpsPropertySpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession.builder("local[4]", 4).getOrCreate()
   import spark.implicits._
 
   private val params = Gen.Parameters.default

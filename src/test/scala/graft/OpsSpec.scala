@@ -9,12 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class OpsSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession.builder("local[4]", 4).getOrCreate()
   import spark.implicits._
 
   private val sf = "/root/testdata/sf0.001"
@@ -1045,7 +1040,7 @@ class OpsSpec extends AnyFunSuite {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val s2 = SparkSession.builder().master("local[2]")
+      val s2 = GraftSession.builder("local[2]", 2)
         .withExtensions(new GraftExtensions().apply(_))
         .getOrCreate()
       assert(s2 ne prev)
@@ -1119,6 +1114,15 @@ class OpsSpec extends AnyFunSuite {
       assert(expr(native) == expr(named), f.name)
       assert(native.collect().toSeq == named.collect().toSeq, f.name)
     }
+  }
+
+  test("Native table: each entry's expression is named by its table name") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    // four placeholder arguments cover every builder's arity
+    val misnamed = graft.functions.Native.table
+      .map(f => f.name -> f.build(Seq.fill(4)(Literal(0))).prettyName)
+      .filter { case (name, pretty) => name != pretty }
+    assert(misnamed.isEmpty, misnamed)
   }
 
   test("native-function Columns resolve on a session that is not the active one, unregistered") {

@@ -2,7 +2,6 @@ package graft
 
 import graft.fixtures.TpchLake
 import graft.sparql.SparqlParser
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,12 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ancestor set is the bit-shift chain k/2, k/4, …, 1). */
 class PathSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession.builder("local[4]", 4).getOrCreate()
 
   private val sf = "/root/testdata/sf0.001"
   private val P = "PREFIX g: <http://graft.io/schema/>\n"

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions.{col, least, greatest, lit}
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,15 +10,26 @@ import org.scalatest.funsuite.AnyFunSuite
   * fails here even while results stay correct. */
 class PlanQualitySpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession.builder("local[4]", 4).getOrCreate()
 
   private val sf = "/root/testdata/sf0.001"
+
+  /** Runs `body` with `confs` set on the shared session, restoring each
+    * key's previous value (or unsetting it) afterwards. */
+  private def withConfs[T](confs: (String, String)*)(body: => T): T = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The sort-merge expectations below hold under Spark's default join
+    * preference; graft's session lets the planner pick a shuffled-hash
+    * join instead. */
+  private val PreferSmj = "spark.sql.join.preferSortMergeJoin" -> "true"
 
   private def plan(name: String): String = {
     val df = SparkEntry.queries(name)(spark, sf)
@@ -332,60 +342,64 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("bucketed tables join with zero shuffle exchanges") {
-    import org.apache.spark.sql.functions.col
-    val li = spark.read.parquet(s"$sf/lineitem.parquet")
-      .select("l_orderkey", "l_quantity")
-    val o = spark.read.parquet(s"$sf/orders.parquet")
-      .select("o_orderkey", "o_totalprice")
-    // a prior JVM's orphaned warehouse dir (location without catalog
-    // entry) blocks CREATE — clear both forms
-    for (t <- Seq("li_bkt", "o_bkt")) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val dir = new java.io.File(s"spark-warehouse/$t")
-      if (dir.exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+    withConfs(PreferSmj) {
+      import org.apache.spark.sql.functions.col
+      val li = spark.read.parquet(s"$sf/lineitem.parquet")
+        .select("l_orderkey", "l_quantity")
+      val o = spark.read.parquet(s"$sf/orders.parquet")
+        .select("o_orderkey", "o_totalprice")
+      // a prior JVM's orphaned warehouse dir (location without catalog
+      // entry) blocks CREATE — clear both forms
+      for (t <- Seq("li_bkt", "o_bkt")) {
+        spark.sql(s"DROP TABLE IF EXISTS $t")
+        val dir = new java.io.File(s"spark-warehouse/$t")
+        if (dir.exists()) {
+          def rm(f: java.io.File): Unit = {
+            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+          }
+          rm(dir)
         }
-        rm(dir)
       }
+      graft.engine.Sinks.bucketedTable(li, "li_bkt", "l_orderkey", 8)
+      graft.engine.Sinks.bucketedTable(o, "o_bkt", "o_orderkey", 8)
+      // merge hint: at test scale the optimizer would broadcast the tiny
+      // side; at 100 TB (two fact tables) SortMergeJoin is the real plan —
+      // the property under guard is that it consumes the bucket layout
+      // with NO shuffle exchange on either side
+      val joined = graft.engine.Sinks.table(spark, "li_bkt").hint("merge")
+        .join(graft.engine.Sinks.table(spark, "o_bkt"),
+          col("l_orderkey") === col("o_orderkey"))
+      val p = joined.queryExecution.executedPlan.toString
+      assert(!p.contains("Exchange"),
+        s"bucket-aligned join still shuffles:\n$p")
+      assert(p.contains("SortMergeJoin"), p)
+      assert(p.contains("Bucketed: true"), s"scan ignored the bucket layout:\n$p")
+      assert(joined.count() ==
+        li.join(o, col("l_orderkey") === col("o_orderkey")).count())
     }
-    graft.engine.Sinks.bucketedTable(li, "li_bkt", "l_orderkey", 8)
-    graft.engine.Sinks.bucketedTable(o, "o_bkt", "o_orderkey", 8)
-    // merge hint: at test scale the optimizer would broadcast the tiny
-    // side; at 100 TB (two fact tables) SortMergeJoin is the real plan —
-    // the property under guard is that it consumes the bucket layout
-    // with NO shuffle exchange on either side
-    val joined = graft.engine.Sinks.table(spark, "li_bkt").hint("merge")
-      .join(graft.engine.Sinks.table(spark, "o_bkt"),
-        col("l_orderkey") === col("o_orderkey"))
-    val p = joined.queryExecution.executedPlan.toString
-    assert(!p.contains("Exchange"),
-      s"bucket-aligned join still shuffles:\n$p")
-    assert(p.contains("SortMergeJoin"), p)
-    assert(p.contains("Bucketed: true"), s"scan ignored the bucket layout:\n$p")
-    assert(joined.count() ==
-      li.join(o, col("l_orderkey") === col("o_orderkey")).count())
   }
 
   test("l11: Layout bucketed join — zero Exchange, bucketed scans, one file per bucket") {
-    val root = java.nio.file.Files.createTempDirectory("graft_bucketed").toString
-    val o = spark.read.parquet(s"$sf/orders.parquet")
-    val c = spark.read.parquet(s"$sf/customer.parquet")
-    graft.ops.Layout.writeBucketed(spark, o, s"$root/o", "pq_bkt_orders", 8, "o_custkey")
-    graft.ops.Layout.writeBucketed(spark, c, s"$root/c", "pq_bkt_customer", 8, "c_custkey")
-    val j = graft.ops.Layout.bucketedJoin(spark,
-      "pq_bkt_orders", "pq_bkt_customer", "o_custkey", "c_custkey")
-    val p = j.queryExecution.executedPlan.toString
-    assert(!p.contains("Exchange"), s"bucketed join still shuffles:\n$p")
-    assert(p.contains("SortMergeJoin"), p)
-    assert(p.contains("Bucketed: true"), s"scan ignored the bucket layout:\n$p")
-    // repartition-by-bucket-hash before the write → at most one file per
-    // bucket (empty buckets write none) — the layout that lets a future
-    // sorted-scan skip the per-partition Sort too
-    val files = new java.io.File(s"$root/o").listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-    assert(files.length <= 8 && files.nonEmpty, s"${files.length} files")
-    assert(j.count() == o.join(c, col("o_custkey") === col("c_custkey")).count())
+    withConfs(PreferSmj) {
+      val root = java.nio.file.Files.createTempDirectory("graft_bucketed").toString
+      val o = spark.read.parquet(s"$sf/orders.parquet")
+      val c = spark.read.parquet(s"$sf/customer.parquet")
+      graft.ops.Layout.writeBucketed(spark, o, s"$root/o", "pq_bkt_orders", 8, "o_custkey")
+      graft.ops.Layout.writeBucketed(spark, c, s"$root/c", "pq_bkt_customer", 8, "c_custkey")
+      val j = graft.ops.Layout.bucketedJoin(spark,
+        "pq_bkt_orders", "pq_bkt_customer", "o_custkey", "c_custkey")
+      val p = j.queryExecution.executedPlan.toString
+      assert(!p.contains("Exchange"), s"bucketed join still shuffles:\n$p")
+      assert(p.contains("SortMergeJoin"), p)
+      assert(p.contains("Bucketed: true"), s"scan ignored the bucket layout:\n$p")
+      // repartition-by-bucket-hash before the write → at most one file per
+      // bucket (empty buckets write none) — the layout that lets a future
+      // sorted-scan skip the per-partition Sort too
+      val files = new java.io.File(s"$root/o").listFiles()
+        .filter(_.getName.endsWith(".parquet"))
+      assert(files.length <= 8 && files.nonEmpty, s"${files.length} files")
+      assert(j.count() == o.join(c, col("o_custkey") === col("c_custkey")).count())
+    }
   }
 
   test("sg25: the closure lowering executes as a native UnionLoop, not a fallback") {
@@ -430,9 +444,7 @@ class PlanQualitySpec extends AnyFunSuite {
     // at test scale the optimizer would broadcast the tiny side; force
     // the SMJ the same join gets at 100 TB so the guarded property is
     // the bucket layout being consumed, not the broadcast shortcut
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConfs(PreferSmj, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val df = graft.engine.GraftEngine.executeParsed(spark, q, m, c)
       val p = df.queryExecution.executedPlan.toString
       assert(!p.contains("Exchange"),
@@ -443,7 +455,7 @@ class PlanQualitySpec extends AnyFunSuite {
       val plain = graft.engine.GraftEngine.executeParsed(spark, q, m, c0)
       assert(df.collect().map(_.mkString("|")).sorted.toSeq ==
         plain.collect().map(_.mkString("|")).sorted.toSeq)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    }
   }
 
   test("s05/s08: IVF kNN join routes via codegen'd top-clusters — no routing window or join") {

@@ -19,11 +19,7 @@ import java.util.concurrent.atomic.AtomicInteger
   * and a changed listing is seen by the next load. */
 class SourceRegistrySpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private def builder = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
+  private def builder = GraftSession.builder("local[4]", 4)
 
   private var current: SparkSession = _
   private def spark: SparkSession = {

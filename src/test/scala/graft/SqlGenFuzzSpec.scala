@@ -25,12 +25,7 @@ import scala.util.{Failure, Success, Try}
 class SqlGenFuzzSpec extends AnyFunSuite {
 
   private lazy val spark = {
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.builder("local[4]", 4).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -3,7 +3,6 @@ package graft
 import graft.engine.SqlGenExecutor
 import graft.fixtures.TpchLake
 import graft.sparql.SparqlParser
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The SQL-generation engine (reference Presto-path counterpart) must
@@ -13,12 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * generated string through DuckDB.) */
 class SqlGenSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession.builder("local[4]", 4).getOrCreate()
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.EventStreams
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,12 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * watermark is dropped — bounded state at any scale. */
 class StreamingSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession.builder("local[2]", 2).getOrCreate()
 
   private def ts(hour: Int, min: Int = 0) =
     java.sql.Timestamp.valueOf(f"2024-01-01 $hour%02d:$min%02d:00")

@@ -2,17 +2,12 @@ package graft
 
 import graft.engine.{Sinks, Transforms}
 import graft.model.TransformFn
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class TransformsSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession.builder("local[4]", 4).getOrCreate()
   import spark.implicits._
 
   private def one[T: org.apache.spark.sql.Encoder](fn: TransformFn, in: T): Any =
