@@ -50,8 +50,17 @@ object GraftSession {
       .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.sql.session.timeZone", "UTC")
       // events-style tables store TIMESTAMP(NANOS); affects only nanos cols
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config(NanosAsLong, "true")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** The events readers need TIMESTAMP(NANOS) columns as INT64 nanos,
+    * which [[builder]] sets; they assert it rather than set it, so they
+    * never change the conf of a session they were handed. */
+  def requireNanosAsLong(spark: SparkSession): Unit =
+    require(spark.conf.get(NanosAsLong, "false") == "true",
+      s"$NanosAsLong must be true: build the session with GraftSession.builder")
 
   def local(cores: Int = cpus()): SparkSession = {
     val s = builder(s"local[$cores]", math.max(cores, 8)).getOrCreate()

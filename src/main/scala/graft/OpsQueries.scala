@@ -1,5 +1,6 @@
 package graft
 
+import graft.engine.SourceRegistry
 import graft.fixtures.TpchLake
 import graft.functions.Native
 import graft.ops.{Dedup, EventAnalytics, Multimodal, Pipeline, Retrieval, Similarity, TemporalJoin, TextOps}
@@ -16,9 +17,9 @@ import org.apache.spark.sql.functions._
   */
 object OpsQueries {
 
-  private def docs(s: SparkSession, sf: String) = s.read.parquet(s"$sf/documents.parquet")
-
-  private def events(s: SparkSession, sf: String) = s.read.parquet(s"$sf/events.parquet")
+  /** Table `name` of the lake at `sf`, read through [[SourceRegistry.parquet]]. */
+  private def table(s: SparkSession, sf: String, name: String): DataFrame =
+    SourceRegistry.parquet(s, s"$sf/$name.parquet")
 
   /** Unrolled power iteration for the s19 PCA oracle: every Spark-side
     * step (8-dp-floored products, exact DECIMAL sums, 10-dp-floored
@@ -245,12 +246,10 @@ object OpsQueries {
          |LEFT JOIN inc USING (community)""".stripMargin
   }
 
-  private def emb(s: SparkSession, sf: String) = s.read.parquet(s"$sf/embeddings.parquet")
-
   /** The query-vector for ANN queries: embedding of vec_id 0 (read once,
     * tiny). Deterministic and oracle-reproducible via a scalar subquery. */
   private def queryVec(s: SparkSession, sf: String): Seq[Double] =
-    emb(s, sf).filter(col("vec_id") === 0)
+    table(s, sf, "embeddings").filter(col("vec_id") === 0)
       .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
 
   /** Deterministic clustered embedding fixture: a 40-center mixture with
@@ -312,7 +311,7 @@ object OpsQueries {
     * vectors + 20×10 result ids. */
   private def annRecallGate(s: SparkSession, sf: String, floorPct: Int)(
       ann: (DataFrame, Seq[Double]) => DataFrame): DataFrame =
-    annRecallGateOn(s, emb(s, sf), floorPct)(ann)
+    annRecallGateOn(s, table(s, sf, "embeddings"), floorPct)(ann)
 
   /** Same protocol over an arbitrary embedding table (vec_id < 20 are the
     * queries, the rest the corpus).
@@ -378,17 +377,17 @@ object OpsQueries {
 
     // ---- dedup ----------------------------------------------------------
     ("d01_dedup_exact",
-      (s, sf) => Dedup.exact(docs(s, sf), Dedup.normText(col("text")), col("doc_id")),
+      (s, sf) => Dedup.exact(table(s, sf, "documents"), Dedup.normText(col("text")), col("doc_id")),
       "SELECT MIN(doc_id) AS keep_id FROM documents GROUP BY lower(trim(text))"),
 
     ("d06_dedup_rows",
-      (s, sf) => Dedup.exactRows(docs(s, sf), Dedup.normText(col("text")), col("doc_id"))
+      (s, sf) => Dedup.exactRows(table(s, sf, "documents"), Dedup.normText(col("text")), col("doc_id"))
         .select(col("doc_id"), col("lang"), col("n_chars")),
       "SELECT doc_id, lang, n_chars FROM documents " +
         "QUALIFY ROW_NUMBER() OVER (PARTITION BY lower(trim(text)) ORDER BY doc_id) = 1"),
 
     ("d02_ngram_jaccard",
-      (s, sf) => Dedup.ngramJaccardPairs(docs(s, sf), col("doc_id"), col("text"),
+      (s, sf) => Dedup.ngramJaccardPairs(table(s, sf, "documents"), col("doc_id"), col("text"),
         n = 3, threshold = 0.8),
       """WITH sh AS (
         |  SELECT doc_id, list_distinct([ toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
@@ -404,7 +403,7 @@ object OpsQueries {
     // semantics to d02 — the prefix-filter theorem holds for any global
     // total order — so it shares d02's exact all-pairs oracle
     ("d08_ngram_jaccard_rarity",
-      (s, sf) => Dedup.ngramJaccardPairs(docs(s, sf), col("doc_id"), col("text"),
+      (s, sf) => Dedup.ngramJaccardPairs(table(s, sf, "documents"), col("doc_id"), col("text"),
         n = 3, threshold = 0.8, rarityPrefix = Some(true)),
       """WITH sh AS (
         |  SELECT doc_id, list_distinct([ toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
@@ -423,7 +422,7 @@ object OpsQueries {
     // counts must equal DuckDB's exact list_intersect derivation
     ("d16_shared_spans",
       (s, sf) => Dedup.sharedSpanPairs(
-        docs(s, sf).select(col("doc_id"), concat(col("text"),
+        table(s, sf, "documents").select(col("doc_id"), concat(col("text"),
           when(col("doc_id") % 7 === 0,
             lit("\nthe quick brown fox jumps over the lazy dog again"))
             .otherwise(lit(""))).as("text")),
@@ -447,7 +446,7 @@ object OpsQueries {
     // 10-token boilerplate so cross-doc spans provably exist
     ("d21_duplicated_spans",
       (s, sf) => Dedup.duplicatedSpans(
-        docs(s, sf).select(col("doc_id"), concat(col("text"),
+        table(s, sf, "documents").select(col("doc_id"), concat(col("text"),
           when(col("doc_id") % 7 === 0,
             lit("\nthe quick brown fox jumps over the lazy dog again"))
             .otherwise(lit(""))).as("text")),
@@ -478,7 +477,7 @@ object OpsQueries {
     // construction so coverage is a plain sum; 0 (not NULL) when clean
     ("d22_dup_token_fraction",
       (s, sf) => Dedup.duplicatedTokenFraction(
-        docs(s, sf).select(col("doc_id"), concat(col("text"),
+        table(s, sf, "documents").select(col("doc_id"), concat(col("text"),
           when(col("doc_id") % 7 === 0,
             lit("\nthe quick brown fox jumps over the lazy dog again"))
             .otherwise(lit(""))).as("text")),
@@ -515,8 +514,8 @@ object OpsQueries {
     // collapses to distinct gram keys before the join
     ("d23_contamination_spans",
       (s, sf) => Dedup.contaminationSpans(
-        docs(s, sf), col("doc_id"), col("text"),
-        docs(s, sf).filter(col("doc_id") % 11 === 0)
+        table(s, sf, "documents"), col("doc_id"), col("text"),
+        table(s, sf, "documents").filter(col("doc_id") % 11 === 0)
           .select(substring(col("text"), 1, 120).as("t")),
         col("t"), k = 8),
       """WITH ptoks AS (SELECT string_split_regex(lower(trim(substr(text, 1, 120))),
@@ -548,10 +547,10 @@ object OpsQueries {
     // leaked quote; docs cut to nothing drop, untouched docs pass as-is
     ("d24_cut_spans",
       (s, sf) => {
-        val train = docs(s, sf)
+        val train = table(s, sf, "documents")
         val spans = Dedup.contaminationSpans(
           train, col("doc_id"), col("text"),
-          docs(s, sf).filter(col("doc_id") % 11 === 0)
+          table(s, sf, "documents").filter(col("doc_id") % 11 === 0)
             .select(substring(col("text"), 1, 120).as("t")),
           col("t"), k = 8)
         Dedup.cutSpans(train, col("doc_id"), col("text"), spans)
@@ -598,7 +597,7 @@ object OpsQueries {
     // planted boilerplate as d21 so cross-doc spans provably exist
     ("d25_longest_dup_spans",
       (s, sf) => Dedup.longestDuplicatedSpans(
-        docs(s, sf).select(col("doc_id"), concat(col("text"),
+        table(s, sf, "documents").select(col("doc_id"), concat(col("text"),
           when(col("doc_id") % 7 === 0,
             lit("\nthe quick brown fox jumps over the lazy dog again"))
             .otherwise(lit(""))).as("text")),
@@ -635,7 +634,7 @@ object OpsQueries {
     // 147 / exact 167 at k=64 on sf0.01 — inside the 1/√62 RSE.
     ("d26_kmv_overlap",
       (s, sf) => {
-        val d = docs(s, sf)
+        val d = table(s, sf, "documents")
         graft.ops.Sketches.kmvOverlap(d, col("text"),
           d.filter(col("doc_id") % 3 === 0), col("text"),
           k = 64, salt = "kmvo")
@@ -663,7 +662,7 @@ object OpsQueries {
     // LSH candidates + exact verification ⇒ same rows as the exact oracle
     // (recall at j≥0.8 with 16×4 bands is 1-(1-j⁴)¹⁶ > 1-10⁻⁸)
     ("d03_minhash_lsh",
-      (s, sf) => Dedup.minHashNearDups(docs(s, sf), col("doc_id"), col("text"),
+      (s, sf) => Dedup.minHashNearDups(table(s, sf, "documents"), col("doc_id"), col("text"),
         n = 3, threshold = 0.8).select(col("id_a"), col("id_b")),
       """WITH sh AS (
         |  SELECT doc_id, list_distinct([ toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
@@ -675,7 +674,7 @@ object OpsQueries {
         |    / (len(a.ws)+len(b.ws)-len(list_intersect(a.ws,b.ws))) >= 0.8""".stripMargin),
 
     ("d05_embed_neardup",
-      (s, sf) => Dedup.embeddingNearDups(emb(s, sf), col("vec_id"), col("embedding"),
+      (s, sf) => Dedup.embeddingNearDups(table(s, sf, "embeddings"), col("vec_id"), col("embedding"),
         threshold = 0.45, exact = true)
         .select(col("id_a"), col("id_b"), round(col("cosine"), 3).as("cos3")),
       "SELECT a.vec_id AS id_a, b.vec_id AS id_b, " +
@@ -699,7 +698,7 @@ object OpsQueries {
     // the OpsSpec contrast test ("explicit 32x4 equals exact mode").
     ("d07_embed_neardup_lsh",
       (s, sf) => {
-        val base = emb(s, sf).select(col("vec_id"),
+        val base = table(s, sf, "embeddings").select(col("vec_id"),
           col("embedding").cast("array<double>").as("embedding"))
         val planted = base.filter(col("vec_id") % 5 === 0)
           .select((col("vec_id") + 10000000L).as("vec_id"),
@@ -730,7 +729,7 @@ object OpsQueries {
       // native per-row portable signatures (bit-identical to the
       // explode + aggregate reference formulation in OpsSpec, with no
       // explode shuffle)
-      (s, sf) => Dedup.simHashNearDups(docs(s, sf), col("doc_id"), col("text"),
+      (s, sf) => Dedup.simHashNearDups(table(s, sf, "documents"), col("doc_id"), col("text"),
         maxHamming = 3),
       """WITH tok AS (
         |  SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
@@ -757,7 +756,7 @@ object OpsQueries {
     // train side never shuffles
     ("d09_decontaminate",
       (s, sf) => {
-        val d = docs(s, sf)
+        val d = table(s, sf, "documents")
         Dedup.contaminated(
           d.filter(col("doc_id") % 50 =!= 0), col("doc_id"), col("text"),
           d.filter(col("doc_id") % 50 === 0), col("text"), n = 4)
@@ -779,7 +778,7 @@ object OpsQueries {
     // a pure function of the data; expected FPs here ≈ 2.5e-4)
     ("d10_decontaminate_bloom",
       (s, sf) => {
-        val d = docs(s, sf)
+        val d = table(s, sf, "documents")
         Dedup.contaminatedBloom(
           d.filter(col("doc_id") % 50 =!= 0), col("doc_id"), col("text"),
           d.filter(col("doc_id") % 50 === 0), col("text"), n = 4)
@@ -798,7 +797,7 @@ object OpsQueries {
     // shuffle (map-side combined) + the same broadcast eval set as d09.
     ("d11_contamination_report",
       (s, sf) => {
-        val d = docs(s, sf)
+        val d = table(s, sf, "documents")
         Dedup.contaminationReport(
           d.filter(col("doc_id") % 50 =!= 0), col("doc_id"), col("text"),
           d.filter(col("doc_id") % 50 === 0), col("text"), n = 4)
@@ -823,7 +822,7 @@ object OpsQueries {
     // this fixture (expected FPs ≈ 2.5e-4; the hash compare proves it)
     ("d12_contamination_report_bloom",
       (s, sf) => {
-        val d = docs(s, sf)
+        val d = table(s, sf, "documents")
         Dedup.contaminationReportBloom(
           d.filter(col("doc_id") % 50 =!= 0), col("doc_id"), col("text"),
           d.filter(col("doc_id") % 50 === 0), col("text"), n = 4)
@@ -847,7 +846,7 @@ object OpsQueries {
     // the two distinct sets.
     ("d13_corpus_overlap",
       (s, sf) => {
-        val d = docs(s, sf)
+        val d = table(s, sf, "documents")
         Dedup.corpusOverlap(
           d.filter(col("doc_id") % 50 =!= 0), col("text"),
           d.filter(col("doc_id") % 50 === 0), col("text"), n = 4)
@@ -869,7 +868,7 @@ object OpsQueries {
     // ---- similarity search ---------------------------------------------
     ("s01_cosine_topk",
       (s, sf) => Similarity.bruteForceTopK(
-        emb(s, sf).filter(col("vec_id") =!= 0), col("vec_id"), col("embedding"),
+        table(s, sf, "embeddings").filter(col("vec_id") =!= 0), col("vec_id"), col("embedding"),
         queryVec(s, sf), k = 10)
         .select(col("vec_id"), round(col("cosine"), 3).as("cos3")),
       """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
@@ -883,7 +882,7 @@ object OpsQueries {
     // both sides (embedding::DOUBLE[]) so ranks agree bit-for-bit
     ("s04_knn_join",
       (s, sf) => {
-        val e = emb(s, sf)
+        val e = table(s, sf, "embeddings")
         Similarity.knnJoinBroadcast(e, e, col("vec_id"), col("embedding"),
           col("vec_id"), col("embedding"), k = 3)
           .select(col("q_id"), col("c_id"),
@@ -937,7 +936,7 @@ object OpsQueries {
     ("s05_knn_join_ivf",
       (s, sf) => {
         import s.implicits._
-        val e = emb(s, sf)
+        val e = table(s, sf, "embeddings")
         def pairs(df: DataFrame) =
           df.select(col("q_id"), col("c_id")).as[(Long, Long)].collect().toSet
         val exact = pairs(Similarity.knnJoinBroadcast(e, e, col("vec_id"),
@@ -1018,7 +1017,7 @@ object OpsQueries {
 
     ("s09_pq_topk",
       (s, sf) => {
-        val e = emb(s, sf).filter(col("vec_id") =!= 0)
+        val e = table(s, sf, "embeddings").filter(col("vec_id") =!= 0)
         val idx = Similarity.buildPq(e, col("vec_id"), col("embedding"),
           m = 16, kCode = 16)
         val rerank = math.max(150, (e.count() / 3).toInt)
@@ -1037,7 +1036,7 @@ object OpsQueries {
     // calibrated rerank knob at any corpus size
     ("s10_sq8_topk",
       (s, sf) => {
-        val e = emb(s, sf).filter(col("vec_id") =!= 0)
+        val e = table(s, sf, "embeddings").filter(col("vec_id") =!= 0)
         Similarity.buildSq8(e, col("vec_id"), col("embedding"))
           .topKExact(queryVec(s, sf), k = 10)
           .select(col("vec_id"), round(col("cosine"), 3).as("cos3"))
@@ -1055,7 +1054,7 @@ object OpsQueries {
     // predicate reaches the parquet scan (plan-guarded)
     ("s12_filtered_ann",
       (s, sf) => Similarity.filteredTopK(
-        emb(s, sf).filter(col("vec_id") =!= 0), col("vec_id"), col("embedding"),
+        table(s, sf, "embeddings").filter(col("vec_id") =!= 0), col("vec_id"), col("embedding"),
         col("label") === 2, queryVec(s, sf), k = 10)
         .select(col("vec_id"), round(col("cosine"), 3).as("cos3")),
       """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
@@ -1069,7 +1068,7 @@ object OpsQueries {
     // top-k scans with id tie-breaks, restated stage-for-stage by DuckDB
     ("s16_matryoshka_topk",
       (s, sf) => Similarity.matryoshkaTopK(
-        emb(s, sf).filter(col("vec_id") =!= 0), col("vec_id"), col("embedding"),
+        table(s, sf, "embeddings").filter(col("vec_id") =!= 0), col("vec_id"), col("embedding"),
         queryVec(s, sf), mDims = 8, rerank = 60, k = 10)
         .select(col("vec_id"), round(col("cosine"), 3).as("cos3")),
       """WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0),
@@ -1089,7 +1088,7 @@ object OpsQueries {
     // the identical 6-dp-floored scores and tie-breaks
     ("s17_mmr_rerank",
       (s, sf) => Similarity.mmrTopK(
-        emb(s, sf).filter(col("vec_id") =!= 0), col("vec_id"), col("embedding"),
+        table(s, sf, "embeddings").filter(col("vec_id") =!= 0), col("vec_id"), col("embedding"),
         queryVec(s, sf), k = 5, nCand = 20, lambda = 0.5),
       mmrOracleSql(k = 5, nCand = 20)),
 
@@ -1102,7 +1101,7 @@ object OpsQueries {
     // with a position cross-join and ranks identically
     ("s11_embed_outliers",
       (s, sf) => Similarity.embeddingOutliers(
-        emb(s, sf), col("vec_id"), col("embedding"), k = 20),
+        table(s, sf, "embeddings"), col("vec_id"), col("embedding"), k = 20),
       """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         |d AS (SELECT max(len(v)) AS nd FROM e),
         |g AS (SELECT unnest(range(1, (SELECT nd FROM d) + 1)) AS i),
@@ -1123,7 +1122,7 @@ object OpsQueries {
     // that must land on the same labeling
     ("c01_dedup_clusters",
       (s, sf) => {
-        val d = docs(s, sf)
+        val d = table(s, sf, "documents")
         Dedup.connectedComponents(
           Dedup.minHashNearDups(d, col("doc_id"), col("text"), n = 3, threshold = 0.8),
           col("id_a"), col("id_b"), d, col("doc_id"))
@@ -1152,7 +1151,7 @@ object OpsQueries {
     // sound because near-duplicates share the label by construction
     ("c03_label_propagation",
       (s, sf) => {
-        val d = docs(s, sf)
+        val d = table(s, sf, "documents")
         val clusters = Dedup.connectedComponents(
           Dedup.minHashNearDups(d, col("doc_id"), col("text"), n = 3, threshold = 0.8),
           col("id_a"), col("id_b"), d, col("doc_id"))
@@ -1190,7 +1189,7 @@ object OpsQueries {
     // emitted with its verdict so the drop set is auditable
     ("c04_keep_best",
       (s, sf) => {
-        val d = docs(s, sf)
+        val d = table(s, sf, "documents")
         val clusters = Dedup.connectedComponents(
           Dedup.minHashNearDups(d, col("doc_id"), col("text"), n = 3,
             threshold = 0.8),
@@ -1234,7 +1233,7 @@ object OpsQueries {
     // p01 portable polyhash — and re-derives the exact draws
     ("p10_negative_samples",
       (s, sf) => {
-        val d = docs(s, sf)
+        val d = table(s, sf, "documents")
         val clusters = Dedup.connectedComponents(
           Dedup.minHashNearDups(d, col("doc_id"), col("text"), n = 3, threshold = 0.8),
           col("id_a"), col("id_b"), d, col("doc_id"))
@@ -1281,7 +1280,7 @@ object OpsQueries {
     // the oracle re-derives the identical first-occurrence relation.
     ("d15_dedup_paragraphs",
       (s, sf) => Dedup.dedupParagraphs(
-        docs(s, sf).select(col("doc_id"), concat_ws("\n",
+        table(s, sf, "documents").select(col("doc_id"), concat_ws("\n",
           substring(col("text"), 1, 40), lit("COMMON FOOTER LINE ALPHA"),
           substring(col("text"), 41, 40), lit("COMMON FOOTER LINE ALPHA"))
           .as("text")),
@@ -1314,7 +1313,7 @@ object OpsQueries {
     // per-component representative each breaks the equality.
     ("d14_semdedup",
       (s, sf) => {
-        val e = emb(s, sf).select(col("vec_id"),
+        val e = table(s, sf, "embeddings").select(col("vec_id"),
           col("embedding").cast("array<double>").as("embedding"))
         val perturbed = e.select((col("vec_id") + 100000L).as("vec_id"),
           transform(col("embedding"), (x, i0) =>
@@ -1329,7 +1328,7 @@ object OpsQueries {
 
     // end-to-end fuzzy corpus dedup: one surviving row per cluster
     ("c02_fuzzy_dedup",
-      (s, sf) => Dedup.fuzzyDedupCorpus(docs(s, sf), col("doc_id"), col("text"),
+      (s, sf) => Dedup.fuzzyDedupCorpus(table(s, sf, "documents"), col("doc_id"), col("text"),
         n = 3, threshold = 0.8).select(col("doc_id"), col("lang")),
       """WITH RECURSIVE sh AS (
         |  SELECT doc_id, list_distinct([ toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
@@ -1354,7 +1353,7 @@ object OpsQueries {
     // — no RNG, no partition dependence — so DuckDB re-derives the exact
     // surviving row set from the same fold
     ("p01_stratified_sample",
-      (s, sf) => graft.ops.Pipeline.stratifiedSample(docs(s, sf), col("doc_id"),
+      (s, sf) => graft.ops.Pipeline.stratifiedSample(table(s, sf, "documents"), col("doc_id"),
         col("lang"), Map("en" -> 0.5, "de" -> 0.25), defaultRate = 0.1, salt = "mix1")
         .select(col("doc_id"), col("lang")),
       "SELECT doc_id, lang FROM (SELECT doc_id, lang, " +
@@ -1369,7 +1368,7 @@ object OpsQueries {
     // availability (rate clamps to 1), src0/src3 sample down, every
     // unbudgeted source drops entirely.
     ("p03_token_mixture",
-      (s, sf) => graft.ops.Pipeline.mixByTokenBudget(docs(s, sf), col("doc_id"),
+      (s, sf) => graft.ops.Pipeline.mixByTokenBudget(table(s, sf, "documents"), col("doc_id"),
         col("source"), TextOps.tokenCount(col("text")),
         Map("src0" -> 600L, "src1" -> 100000L, "src3" -> 300L), salt = "mix2")
         .select(col("doc_id"), col("source")),
@@ -1388,7 +1387,7 @@ object OpsQueries {
 
     // two-level prefix sum ≡ the oracle's single global window
     ("p02_pack_shards",
-      (s, sf) => graft.ops.Pipeline.packByTokenBudget(docs(s, sf), col("doc_id"),
+      (s, sf) => graft.ops.Pipeline.packByTokenBudget(table(s, sf, "documents"), col("doc_id"),
         TextOps.tokenCount(col("text")), budget = 2000, bucketWidth = 64),
       "SELECT doc_id, ntok, CAST(floor((SUM(ntok) OVER (ORDER BY doc_id " +
         "ROWS UNBOUNDED PRECEDING) - ntok) / 2000) AS BIGINT) AS shard " +
@@ -1397,7 +1396,7 @@ object OpsQueries {
 
     // ---- text analysis --------------------------------------------------
     ("t01_token_count",
-      (s, sf) => docs(s, sf).select(col("doc_id"),
+      (s, sf) => table(s, sf, "documents").select(col("doc_id"),
         TextOps.tokenCount(col("text")).as("ntok"),
         TextOps.stopwordCount(col("text")).as("nstop")),
       "SELECT doc_id, CASE WHEN trim(text)='' THEN 0 ELSE len(string_split_regex(lower(trim(text)),'\\s+')) END AS ntok, " +
@@ -1405,7 +1404,7 @@ object OpsQueries {
         "x -> x IN ('the','a','of','and','to','in','is'))) END AS nstop FROM documents"),
 
     ("t02_quality_score",
-      (s, sf) => docs(s, sf).select(col("doc_id"),
+      (s, sf) => table(s, sf, "documents").select(col("doc_id"),
         TextOps.qualityScore(col("text")).as("quality")),
       """SELECT doc_id, floor((
         |  0.4 * (CASE WHEN ntok=0 THEN 0 ELSE nstop::DOUBLE/ntok END)
@@ -1419,7 +1418,7 @@ object OpsQueries {
         |FROM documents)""".stripMargin),
 
     ("t03_lang_id",
-      (s, sf) => docs(s, sf).select(col("doc_id"),
+      (s, sf) => table(s, sf, "documents").select(col("doc_id"),
         TextOps.langId(col("text")).as("pred_lang")),
       """SELECT doc_id, CASE
         |  WHEN en = best AND best > 0 THEN 'en'
@@ -1440,7 +1439,7 @@ object OpsQueries {
     // run before TRUSTING either signal for mixture design. Composes the
     // t03 heuristic; one (lang, pred) aggregate
     ("t30_lang_confusion",
-      (s, sf) => docs(s, sf)
+      (s, sf) => table(s, sf, "documents")
         .select(col("lang"), TextOps.langId(col("text")).as("pred_lang"))
         .groupBy(col("lang"), col("pred_lang"))
         .agg(count(lit(1)).as("n")),
@@ -1460,7 +1459,7 @@ object OpsQueries {
         |GROUP BY 1, 2""".stripMargin),
 
     ("t06_doc_freq",
-      (s, sf) => TextOps.documentFrequency(docs(s, sf), col("text")),
+      (s, sf) => TextOps.documentFrequency(table(s, sf, "documents"), col("text")),
       "SELECT term, COUNT(*) AS df FROM (SELECT DISTINCT doc_id, unnest(" +
         "list_distinct(string_split_regex(lower(trim(text)), '\\s+'))) AS term " +
         "FROM documents WHERE trim(text) <> '') GROUP BY term"),
@@ -1469,7 +1468,7 @@ object OpsQueries {
     // aggregation is map-side combined and the top-k plans as
     // TakeOrderedAndProject (per-partition heaps, no global sort)
     ("t11_top_terms",
-      (s, sf) => TextOps.documentFrequency(docs(s, sf), col("text"))
+      (s, sf) => TextOps.documentFrequency(table(s, sf, "documents"), col("text"))
         .orderBy(col("df").desc, col("term"))
         .limit(20),
       "SELECT term, df FROM (SELECT term, COUNT(*) AS df FROM (" +
@@ -1478,7 +1477,7 @@ object OpsQueries {
         "GROUP BY term) ORDER BY df DESC, term LIMIT 20"),
 
     ("t04_fingerprint",
-      (s, sf) => docs(s, sf).select(col("doc_id"),
+      (s, sf) => table(s, sf, "documents").select(col("doc_id"),
         TextOps.fingerprintMd5(col("text")).as("fp")),
       "SELECT doc_id, md5(lower(trim(text))) AS fp FROM documents"),
 
@@ -1486,7 +1485,7 @@ object OpsQueries {
     // recomputes it with list_reduce over the same char codes (Spark's
     // split('','') and DuckDB's string_split agree: no trailing empties)
     ("t05_rolling_hash",
-      (s, sf) => docs(s, sf).select(col("doc_id"),
+      (s, sf) => table(s, sf, "documents").select(col("doc_id"),
         TextOps.rollingHash(col("text")).as("rh")),
       "SELECT doc_id, list_reduce(list_prepend(7::BIGINT, list_transform(" +
         "string_split(lower(trim(text)), ''), c -> ord(c)::BIGINT)), " +
@@ -1496,7 +1495,7 @@ object OpsQueries {
     // (the driver corpus is synthetic and clean — planting in the query
     // itself exercises every pattern on every row, in both engines)
     ("t07_pii_scrub",
-      (s, sf) => docs(s, sf).select(col("doc_id"),
+      (s, sf) => table(s, sf, "documents").select(col("doc_id"),
         TextOps.scrubPii(concat(col("text"),
           lit(" contact user"), col("doc_id").cast("string"),
           lit("@mail.example.com via https://ex.example/p?id="),
@@ -1509,7 +1508,7 @@ object OpsQueries {
         "'[0-9]{9,}', '<NUM>', 'g') AS scrubbed FROM documents"),
 
     ("t08_repetition",
-      (s, sf) => TextOps.repetitionMetrics(docs(s, sf), col("doc_id"), col("text")),
+      (s, sf) => TextOps.repetitionMetrics(table(s, sf, "documents"), col("doc_id"), col("text")),
       """WITH t AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks
         |          FROM documents),
         |d AS (SELECT doc_id,
@@ -1533,7 +1532,7 @@ object OpsQueries {
     // rounded metrics, so pass/fail is bit-stable cross-engine.
     ("t12_gopher_quality",
       (s, sf) => TextOps.gopherQuality(
-        docs(s, sf).select(col("doc_id"), concat(col("text"),
+        table(s, sf, "documents").select(col("doc_id"), concat(col("text"),
           when(col("doc_id") % 3 === 0,
             lit("\n• planted bullet\nplain tail..."))
             .when(col("doc_id") % 3 === 1,
@@ -1579,7 +1578,7 @@ object OpsQueries {
       (s, sf) => {
         import graft.functions.HashFunctions.deflateSize
         val ratio = TextOps.compressionRatio(col("text"))
-        docs(s, sf).filter(length(col("text")) > 0).select(
+        table(s, sf, "documents").filter(length(col("text")) > 0).select(
           col("doc_id"), octet_length(col("text")).as("n_bytes"),
           (ratio > 0.0 && ratio <= 1.1).as("bounded"),
           (deflateSize(concat(col("text"), col("text"))) <
@@ -1597,7 +1596,7 @@ object OpsQueries {
     // independently in DuckDB
     ("t14_c4_line_clean",
       (s, sf) => TextOps.c4LineClean(
-        docs(s, sf).select(col("doc_id"), concat(col("text"),
+        table(s, sf, "documents").select(col("doc_id"), concat(col("text"),
           when(col("doc_id") % 4 === 0,
             lit("\nKeep this planted prose line today.\nshort no."))
             .when(col("doc_id") % 4 === 1,
@@ -1632,7 +1631,7 @@ object OpsQueries {
     ("t15_quality_classifier",
       (s, sf) => {
         val weights = Seq.tabulate(64)(j => (((j * 37 + 11) % 21) - 10) / 10.0)
-        docs(s, sf).select(col("doc_id"),
+        table(s, sf, "documents").select(col("doc_id"),
           (floor(TextOps.hashedLinearMargin(col("text"), weights, bias = -0.5)
             * 10000 + 0.5) / 10000).as("margin"))
           .withColumn("label", col("margin") > 0)
@@ -1653,7 +1652,7 @@ object OpsQueries {
     // quality-weighted importance resampling: keep-probability = the t02
     // quality score; the oracle recomputes score, bucket, and threshold
     ("p04_weighted_sample",
-      (s, sf) => graft.ops.Pipeline.weightedSample(docs(s, sf), col("doc_id"),
+      (s, sf) => graft.ops.Pipeline.weightedSample(table(s, sf, "documents"), col("doc_id"),
         TextOps.qualityScore(col("text")), salt = "qw1")
         .select(col("doc_id"), col("lang")),
       """WITH q AS (SELECT doc_id, lang,
@@ -1677,7 +1676,7 @@ object OpsQueries {
     // expands the grouping sets and the partial aggregation is still
     // map-side combined; DuckDB states the same result via ROLLUP
     ("a02_rollup_tokens",
-      (s, sf) => docs(s, sf)
+      (s, sf) => table(s, sf, "documents")
         .select(col("source"), col("lang"), TextOps.tokenCount(col("text")).as("ntok"))
         .rollup(col("source"), col("lang"))
         .agg(sum(col("ntok")).as("tok_total"), count(lit(1)).as("n_docs"))
@@ -1700,7 +1699,7 @@ object OpsQueries {
     // single-partition global window — spec-asserted identical
     ("w03_quality_deciles",
       (s, sf) => graft.ops.Pipeline.ntileByScore(
-          docs(s, sf).select(col("doc_id"),
+          table(s, sf, "documents").select(col("doc_id"),
             TextOps.qualityScore(col("text")).as("q")),
           col("doc_id"), col("q"), k = 10)
         .groupBy(col("tile").as("decile"))
@@ -1729,7 +1728,7 @@ object OpsQueries {
     // (true ≤ est ≤ true + eps·N) — deterministic for the fixed seed,
     // same pinned-measured-error shape as t09/t10
     ("t20_cms_heavy_hitters",
-      (s, sf) => TextOps.cmsHeavyHitters(docs(s, sf), col("text"), k = 20),
+      (s, sf) => TextOps.cmsHeavyHitters(table(s, sf, "documents"), col("text"), k = 20),
       """SELECT term, n_true, true AS within_bound FROM (
         |  SELECT term, count(*) AS n_true FROM (
         |    SELECT unnest(string_split_regex(lower(trim(text)),'\s+')) AS term
@@ -1743,7 +1742,7 @@ object OpsQueries {
     // the FULL-corpus exact-Jaccard oracle, i.e. d03's oracle verbatim
     ("e06_incremental_dedup",
       (s, sf) => {
-        val d = docs(s, sf)
+        val d = table(s, sf, "documents")
         val base = d.filter(pmod(col("doc_id"), lit(5)) =!= 0)
         val arrivals = d.filter(pmod(col("doc_id"), lit(5)) === 0)
         Dedup.minHashNearDups(base, col("doc_id"), col("text"),
@@ -1768,7 +1767,7 @@ object OpsQueries {
     // one and the composed é lands in the 5-char tail); DuckDB's
     // nfc_normalize is the oracle
     ("t21_nfc_normalize",
-      (s, sf) => docs(s, sf)
+      (s, sf) => table(s, sf, "documents")
         .select(col("doc_id"), graft.functions.HashFunctions.nfcNormalize(
           concat(col("text"), lit(" cafe\u0301"))).as("norm"))
         .select(col("doc_id"), length(col("norm")).as("n_chars_nfc"),
@@ -1782,7 +1781,7 @@ object OpsQueries {
     // profiling step before mixture design; Spark `percentile` and
     // DuckDB `quantile_cont` share the p·(n−1) interpolation rule
     ("a05_group_quantiles",
-      (s, sf) => docs(s, sf)
+      (s, sf) => table(s, sf, "documents")
         .select(col("source"), TextOps.tokenCount(col("text")).cast("double").as("ntok"))
         .groupBy(col("source"))
         .agg(expr("percentile(ntok, array(0.5D, 0.9D))").as("qs"))
@@ -1804,7 +1803,7 @@ object OpsQueries {
     // host — the canonical-URL dedup prelude; DuckDB restates the
     // extraction with regexes
     ("d17_url_canonical",
-      (s, sf) => docs(s, sf)
+      (s, sf) => table(s, sf, "documents")
         .select(concat(lit("https://"), upper(col("source")), lit(".Example.COM/d/"),
           col("doc_id"), lit("?utm_source="), col("lang")).as("url"))
         .select(concat(lower(parse_url(col("url"), lit("HOST"))),
@@ -1823,7 +1822,7 @@ object OpsQueries {
     // documents table (10% removed, 10% added, 10% text-modified)
     ("e04_snapshot_diff",
       (s, sf) => {
-        val d = docs(s, sf)
+        val d = table(s, sf, "documents")
         val snapA = d.filter(pmod(col("doc_id"), lit(10)) =!= 0)
           .select(col("doc_id"), col("text"))
         val snapB = d.filter(pmod(col("doc_id"), lit(10)) =!= 1)
@@ -1853,7 +1852,7 @@ object OpsQueries {
     // caveat documented there)
     ("e05_incremental_scores",
       (s, sf) => {
-        val d = docs(s, sf)
+        val d = table(s, sf, "documents")
         val snapA = d.filter(pmod(col("doc_id"), lit(10)) =!= 0)
           .select(col("doc_id"), col("text"))
         val snapB = d.filter(pmod(col("doc_id"), lit(10)) =!= 1)
@@ -1911,7 +1910,7 @@ object OpsQueries {
     // gate's coalesce('ALL') sidesteps. Identical bitmask semantics in
     // both engines
     ("a04_cube_tokens",
-      (s, sf) => docs(s, sf)
+      (s, sf) => table(s, sf, "documents")
         .select(col("source"), col("lang"), TextOps.tokenCount(col("text")).as("ntok"))
         .cube(col("source"), col("lang"))
         .agg(grouping_id(col("source"), col("lang")).as("gid"),
@@ -1934,7 +1933,7 @@ object OpsQueries {
     // per-set re-aggregation union); grouping_id disambiguates set
     // membership exactly as in a04
     ("a10_grouping_sets",
-      (s, sf) => docs(s, sf)
+      (s, sf) => table(s, sf, "documents")
         .select(col("source"), col("lang"), TextOps.tokenCount(col("text")).as("ntok"))
         .groupingSets(Seq(Seq(col("source")), Seq(col("lang")), Seq()),
           col("source"), col("lang"))
@@ -1962,7 +1961,7 @@ object OpsQueries {
     // tree of single divisions in both engines (never n*n, so no
     // overflow at corpus scale), 6-dp floored
     ("a12_cohen_kappa",
-      (s, sf) => graft.ops.Checks.interRaterKappa(docs(s, sf),
+      (s, sf) => graft.ops.Checks.interRaterKappa(table(s, sf, "documents"),
         length(col("text")) >= 200, TextOps.tokenCount(col("text")) >= 40),
       """WITH r AS (SELECT len(text) >= 200 AS ra,
         |    (CASE WHEN trim(text)='' THEN 0
@@ -1992,7 +1991,7 @@ object OpsQueries {
     // then DECIMAL-summed (t18's recipe — term order cannot move the
     // total, and log2 agrees across libms at 4 dp)
     ("a13_field_entropy",
-      (s, sf) => graft.ops.Profile.fieldEntropy(docs(s, sf),
+      (s, sf) => graft.ops.Profile.fieldEntropy(table(s, sf, "documents"),
         Seq("lang" -> col("lang"), "source" -> col("source"))),
       """WITH s AS (SELECT field, v FROM (
         |    SELECT lang::VARCHAR AS v, 'lang' AS field FROM documents
@@ -2015,7 +2014,7 @@ object OpsQueries {
     // position (ties interchangeable by value) — deterministic and
     // portable where percentile_approx is neither
     ("a14_length_quantiles",
-      (s, sf) => graft.ops.Profile.groupQuantiles(docs(s, sf),
+      (s, sf) => graft.ops.Profile.groupQuantiles(table(s, sf, "documents"),
         col("source"), length(col("text")), Seq(50, 90, 99)),
       """WITH r AS (SELECT source AS grp, len(text)::BIGINT AS v,
         |    row_number() OVER (PARTITION BY source ORDER BY len(text)) AS rn,
@@ -2028,7 +2027,7 @@ object OpsQueries {
 
     ("a11_chi2_independence",
       (s, sf) => graft.ops.Profile.chi2Independence(
-        docs(s, sf), col("lang"), col("source")),
+        table(s, sf, "documents"), col("lang"), col("source")),
       """WITH c AS (SELECT lang AS a, source AS b, count(*) AS obs
         |  FROM documents GROUP BY 1, 2),
         |t AS (SELECT sum(obs)::BIGINT AS n, count(DISTINCT a) AS na,
@@ -2053,7 +2052,7 @@ object OpsQueries {
     // the plan is ONE shuffle (no distinct-values discovery job) and the
     // output schema is static; DuckDB states it as conditional aggregation
     ("a03_pivot_tokens",
-      (s, sf) => docs(s, sf)
+      (s, sf) => table(s, sf, "documents")
         .select(col("source"), col("lang"), TextOps.tokenCount(col("text")).as("ntok"))
         .groupBy(col("source"))
         .pivot("lang", Seq("de", "en", "es", "fr", "zh"))
@@ -2078,7 +2077,7 @@ object OpsQueries {
     // explicitly so the result equals the plain long-form aggregation,
     // which is exactly what the oracle states
     ("a06_unpivot_tokens",
-      (s, sf) => docs(s, sf)
+      (s, sf) => table(s, sf, "documents")
         .select(col("source"), col("lang"), TextOps.tokenCount(col("text")).as("ntok"))
         .groupBy(col("source"))
         .pivot("lang", Seq("de", "en", "es", "fr", "zh"))
@@ -2133,7 +2132,7 @@ object OpsQueries {
     // canonical labels
     ("g11_cc_star",
       (s, sf) => {
-        val pe = events(s, sf).select((col("user_id") % 1000).as("a"),
+        val pe = table(s, sf, "events").select((col("user_id") % 1000).as("a"),
           ((col("user_id") * 7 + 3) % 1000).as("b")).distinct()
         val nodes = pe.select(col("a").as("n"))
           .union(pe.select(col("b").as("n"))).distinct()
@@ -2155,10 +2154,10 @@ object OpsQueries {
 
     ("j01_salted_join",
       (s, sf) => {
-        val li = s.read.parquet(s"$sf/lineitem.parquet")
+        val li = table(s, sf, "lineitem")
           .select(col("l_orderkey").as("okey"), col("l_linenumber"),
             col("l_extendedprice"), col("l_discount"))
-        val ord = s.read.parquet(s"$sf/orders.parquet")
+        val ord = table(s, sf, "orders")
           .select(col("o_orderkey").as("okey"), col("o_orderpriority"))
         graft.ops.Joins.saltedEquiJoin(li, ord, "okey",
             xxhash64(col("okey"), col("l_linenumber")), salts = 8)
@@ -2182,10 +2181,10 @@ object OpsQueries {
     // PlanQualitySpec.
     ("j04_bloom_prejoin",
       (s, sf) => {
-        val orders = s.read.parquet(s"$sf/orders.parquet")
+        val orders = table(s, sf, "orders")
           .select(col("o_orderkey"), col("o_custkey").as("c_custkey"),
             col("o_totalprice"))
-        val cust = s.read.parquet(s"$sf/customer.parquet")
+        val cust = table(s, sf, "customer")
           .filter(col("c_mktsegment") === "BUILDING" && col("c_acctbal") > 9000.0)
           .select(col("c_custkey"), col("c_name"))
         graft.ops.Joins.bloomPrunedJoin(orders, cust, "c_custkey")
@@ -2255,7 +2254,7 @@ object OpsQueries {
     // engine-placement-dependent) over decimal-exact monetary sums
     ("f04_rfm",
       (s, sf) => graft.ops.EventAnalytics.rfm(
-        s.read.parquet(s"$sf/orders.parquet"),
+        table(s, sf, "orders"),
         col("o_custkey"), col("o_orderdate"), col("o_totalprice"),
         asOf = "2001-09-01"),
       """WITH per AS (SELECT o_custkey AS cust,
@@ -2294,9 +2293,9 @@ object OpsQueries {
     // unrolled CTE steps
     ("g01_pagerank",
       (s, sf) => {
-        val ps = s.read.parquet(s"$sf/lineitem.parquet")
+        val ps = table(s, sf, "lineitem")
           .select(col("l_partkey").as("src"), (col("l_suppkey") + 1000000L).as("dst"))
-        val sn = s.read.parquet(s"$sf/supplier.parquet")
+        val sn = table(s, sf, "supplier")
           .select((col("s_suppkey") + 1000000L).as("src"), (col("s_nationkey") + 2000000L).as("dst"))
         graft.ops.Graph.pageRank(ps.unionByName(sn), col("src"), col("dst"),
             iterations = 3)
@@ -2335,9 +2334,9 @@ object OpsQueries {
     // both half-steps of each iteration (hitsSql)
     ("g12_hits",
       (s, sf) => {
-        val ps = s.read.parquet(s"$sf/lineitem.parquet")
+        val ps = table(s, sf, "lineitem")
           .select(col("l_partkey").as("src"), (col("l_suppkey") + 1000000L).as("dst"))
-        val sn = s.read.parquet(s"$sf/supplier.parquet")
+        val sn = table(s, sf, "supplier")
           .select((col("s_suppkey") + 1000000L).as("src"), (col("s_nationkey") + 2000000L).as("dst"))
         graft.ops.Graph.hits(ps.unionByName(sn), col("src"), col("dst"),
           iterations = 2)
@@ -2353,7 +2352,7 @@ object OpsQueries {
     // a property verdict (t09/t13 style) plus the hard row count
     ("t17_classifier_train",
       (s, sf) => {
-        val base = docs(s, sf).select(col("doc_id"),
+        val base = table(s, sf, "documents").select(col("doc_id"),
           concat(col("text"), when(col("doc_id") % 2 === 0,
             lit(" excellent wonderful refined insightful"))
             .otherwise(lit(" spam junk clickbait scam"))).as("text"),
@@ -2381,7 +2380,7 @@ object OpsQueries {
     ("e03_curation_pipeline",
       (s, sf) => {
         val w = Seq.tabulate(64)(j => (((j * 37 + 11) % 21) - 10) / 10.0)
-        val base = docs(s, sf).select(col("doc_id"), col("source"), concat(col("text"),
+        val base = table(s, sf, "documents").select(col("doc_id"), col("source"), concat(col("text"),
           when(col("doc_id") % 4 === 0,
             lit("\nGood planted line stays here.\nGood planted line stays here.\nshort no."))
             .when(col("doc_id") % 4 === 1,
@@ -2440,7 +2439,7 @@ object OpsQueries {
     // unique line) per doc; first occurrence survives, order preserved
     ("t19_dedup_lines_in_doc",
       (s, sf) => TextOps.dedupLinesInDoc(
-        docs(s, sf).select(col("doc_id"), concat(
+        table(s, sf, "documents").select(col("doc_id"), concat(
           lit("repeat me\n"), col("text"), lit("\nrepeat me\nunique tail "),
           col("doc_id"), lit("\nrepeat me")).as("text")),
         col("doc_id"), col("text")),
@@ -2459,7 +2458,7 @@ object OpsQueries {
     // salted-hash selection order, id tiebreak — DuckDB re-derives the
     // exact surviving rows with the same window
     ("p05_cap_per_group",
-      (s, sf) => graft.ops.Pipeline.capPerGroup(docs(s, sf), col("doc_id"),
+      (s, sf) => graft.ops.Pipeline.capPerGroup(table(s, sf, "documents"), col("doc_id"),
         col("source"), k = 10, salt = "cap1")
         .select(col("doc_id"), col("source")),
       """SELECT doc_id, source FROM (
@@ -2476,7 +2475,7 @@ object OpsQueries {
     // order-independent and cross-engine exact; the oracle re-fits the
     // same add-α LM and re-derives every doc's mean log prob
     ("t18_bigram_logprob",
-      (s, sf) => TextOps.bigramLogProb(docs(s, sf), col("doc_id"), col("text")),
+      (s, sf) => TextOps.bigramLogProb(table(s, sf, "documents"), col("doc_id"), col("text")),
       """WITH toks AS (SELECT doc_id, string_split_regex(lower(trim(text)),'\s+') AS tk
         |  FROM documents WHERE trim(text) <> ''),
         |bg AS (SELECT doc_id,
@@ -2505,7 +2504,7 @@ object OpsQueries {
     // vs ln100 can differ in the last bit across libm implementations);
     // the oracle re-derives tf, df and the rounded score in DuckDB
     ("t16_tfidf_topk",
-      (s, sf) => TextOps.tfIdfTopTerms(docs(s, sf), col("doc_id"), col("text"), k = 3),
+      (s, sf) => TextOps.tfIdfTopTerms(table(s, sf, "documents"), col("doc_id"), col("text"), k = 3),
       """WITH tf AS (
         |  SELECT doc_id, term, count(*) AS tf FROM (
         |    SELECT doc_id, unnest(string_split_regex(lower(trim(text)),'\s+')) AS term
@@ -2527,12 +2526,12 @@ object OpsQueries {
     // land on EXACTLY the inequality-join pairs DuckDB computes
     ("ts04_interval_overlap",
       (s, sf) => {
-        val ow = s.read.parquet(s"$sf/orders.parquet")
+        val ow = table(s, sf, "orders")
           .filter(col("o_orderkey") % 19 === 0)
           .select(col("o_orderkey"), col("o_orderdate"),
             expr("timestampadd(DAY, CAST(o_orderkey % 20 + 1 AS INT), o_orderdate)")
               .as("o_end"))
-        val sw = s.read.parquet(s"$sf/lineitem.parquet")
+        val sw = table(s, sf, "lineitem")
           .filter(col("l_quantity") >= 48)
           .select(col("l_orderkey"), col("l_linenumber"), col("l_shipdate"),
             expr("timestampadd(DAY, CAST(l_linenumber * 3 AS INT), l_shipdate)")
@@ -2559,12 +2558,12 @@ object OpsQueries {
     // cnt > 0 restores the oracle's inner-join shape
     ("ts27_overlap_count",
       (s, sf) => {
-        val ow = s.read.parquet(s"$sf/orders.parquet")
+        val ow = table(s, sf, "orders")
           .filter(col("o_orderkey") % 19 === 0)
           .select(col("o_orderkey"), col("o_orderdate"),
             expr("timestampadd(DAY, CAST(o_orderkey % 20 + 1 AS INT), o_orderdate)")
               .as("o_end"))
-        val sw = s.read.parquet(s"$sf/lineitem.parquet")
+        val sw = table(s, sf, "lineitem")
           .filter(col("l_quantity") >= 48)
           .select(col("l_shipdate"),
             expr("timestampadd(DAY, CAST(l_linenumber * 3 AS INT), l_shipdate)")
@@ -2588,7 +2587,7 @@ object OpsQueries {
     // engines independently) plus a measured-error verdict on the sketch
     // — HLL++/GK are deterministic, so the verdict is reproducible
     ("t09_approx_distinct",
-      (s, sf) => TextOps.distinctTermStats(docs(s, sf), col("text"), rsd = 0.02)
+      (s, sf) => TextOps.distinctTermStats(table(s, sf, "documents"), col("text"), rsd = 0.02)
         .select(col("n_terms"),
           (abs(col("n_terms_approx") - col("n_terms")) / col("n_terms") <= 0.05)
             .as("within_5pct")),
@@ -2597,7 +2596,7 @@ object OpsQueries {
         "FROM documents WHERE trim(text) <> '')"),
 
     ("t10_length_quantiles",
-      (s, sf) => TextOps.lengthQuantiles(docs(s, sf), col("text"),
+      (s, sf) => TextOps.lengthQuantiles(table(s, sf, "documents"), col("text"),
         qs = Seq(0.5, 0.9, 0.99))
         .select(
           (floor(element_at(col("exact"), 1) * 10000 + 0.5) / 10000).as("p50"),
@@ -2618,7 +2617,7 @@ object OpsQueries {
 
     // ---- multimodal plumbing (stub decode, real mapPartitions contract) -
     ("mm01_media_meta",
-      (s, sf) => Multimodal.decodeMeta(Multimodal.mediaFromDocuments(docs(s, sf)))
+      (s, sf) => Multimodal.decodeMeta(Multimodal.mediaFromDocuments(table(s, sf, "documents")))
         .toDF().select(col("media_id"), col("kind"), col("n_bytes"),
           col("width"), col("height"), col("n_frames")),
       """SELECT doc_id AS media_id,
@@ -2633,7 +2632,7 @@ object OpsQueries {
     // n_frames is the stub decoder's deterministic byte-length function
     ("mm02_frame_sample",
       (s, sf) => Multimodal.sampleFrames(
-        Multimodal.decodeMeta(Multimodal.mediaFromDocuments(docs(s, sf))), stride = 2),
+        Multimodal.decodeMeta(Multimodal.mediaFromDocuments(table(s, sf, "documents"))), stride = 2),
       "SELECT media_id, frame_idx FROM (SELECT doc_id AS media_id, " +
         "unnest(range(0, 1 + octet_length(encode(text)) % 16)) AS frame_idx " +
         "FROM documents) WHERE frame_idx % 2 = 0"),
@@ -2644,7 +2643,7 @@ object OpsQueries {
     // from doc_id alone, so a mis-read header (or a stub masquerading as a
     // decoder) cannot pass
     ("mm03_imageio_decode",
-      (s, sf) => Multimodal.decodeMeta(Multimodal.imagesFromDocuments(docs(s, sf)))
+      (s, sf) => Multimodal.decodeMeta(Multimodal.imagesFromDocuments(table(s, sf, "documents")))
         .toDF().select(col("media_id"), col("width"), col("height"),
           col("channels"), col("n_frames")),
       """SELECT doc_id AS media_id,
@@ -2660,7 +2659,7 @@ object OpsQueries {
     // proves the output bytes are a valid PNG of the target size)
     ("mm04_image_resize",
       (s, sf) => Multimodal.decodeMeta(Multimodal.resizeImages(
-        Multimodal.imagesFromDocuments(docs(s, sf)), w = 8, h = 8))
+        Multimodal.imagesFromDocuments(table(s, sf, "documents")), w = 8, h = 8))
         .toDF().select(col("media_id"), col("width"), col("height"),
           col("channels"), (col("n_bytes") > 0).as("has_bytes")),
       """SELECT doc_id AS media_id, CAST(8 AS INTEGER) AS width,
@@ -2675,7 +2674,7 @@ object OpsQueries {
     // differ in ~32 bits, so a ≤3-bit false pair would fail the gate
     ("mm05_image_phash_dups",
       (s, sf) => Multimodal.imageNearDups(Multimodal.aHash64(
-        Multimodal.noiseImagesGrouped(docs(s, sf), groups = 50)), maxHamming = 3),
+        Multimodal.noiseImagesGrouped(table(s, sf, "documents"), groups = 50)), maxHamming = 3),
       """SELECT a.doc_id AS id_a, b.doc_id AS id_b
         |FROM documents a JOIN documents b
         |  ON a.doc_id < b.doc_id AND a.doc_id % 50 = b.doc_id % 50""".stripMargin),
@@ -2684,7 +2683,7 @@ object OpsQueries {
     // the oracle recomputes the exact bit interleave with integer
     // arithmetic, so a shifted bit or swapped dimension cannot pass
     ("l01_zorder_values",
-      (s, sf) => s.read.parquet(s"$sf/orders.parquet")
+      (s, sf) => table(s, sf, "orders")
         .select(col("o_orderkey"),
           graft.ops.Layout.zValue(col("o_custkey"), col("o_orderkey") % 1024,
             bits = 16).as("z")),
@@ -2699,7 +2698,7 @@ object OpsQueries {
     // interleaved so sorted z-ranges confine all three dims at once;
     // oracle restates the interleave bit-for-bit (l01's recipe, k=3)
     ("l08_zorder_multi",
-      (s, sf) => s.read.parquet(s"$sf/orders.parquet")
+      (s, sf) => table(s, sf, "orders")
         .select(col("o_orderkey"),
           graft.ops.Layout.zValueN(Seq(col("o_custkey"),
             col("o_orderkey") % 1024,
@@ -2720,7 +2719,7 @@ object OpsQueries {
     // restates the quadrant walk bit-for-bit as a chained CTE per level.
     ("l10_hilbert_order",
       (s, sf) => {
-        s.read.parquet(s"$sf/orders.parquet")
+        table(s, sf, "orders")
           .select(col("o_orderkey"),
             graft.ops.Layout.hilbertValue(col("o_custkey"),
               col("o_orderkey") % 1024, bits = 10).as("h"))
@@ -2743,13 +2742,13 @@ object OpsQueries {
         val in = s"$derived/compact_in"
         val out = s"$derived/compact_out"
         if (!new java.io.File(s"$in/_SUCCESS").exists())
-          docs(s, sf).repartition(40).write.mode("overwrite").parquet(in)
+          table(s, sf, "documents").repartition(40).write.mode("overwrite").parquet(in)
         val inBytes = new java.io.File(in).listFiles()
           .filter(_.getName.endsWith(".parquet")).map(_.length).sum
         val st = graft.ops.Layout.compact(s, in, out,
           targetFileBytes = math.max(1L << 16, inBytes / 5))
         val nFiles = countDistinct(col("_metadata.file_path"))
-        s.read.parquet(out).agg(
+        SourceRegistry.parquet(s, out).agg(
           count(lit(1)).as("n_docs"),
           sum(col("doc_id")).as("id_sum"),
           sum(length(col("text")).cast("long")).as("len_sum"),
@@ -2773,7 +2772,7 @@ object OpsQueries {
         // fresh fixture every run — vacuum mutates the directory
         fs.delete(new org.apache.hadoop.fs.Path(dir), true)
         graft.ops.Layout.writeWithManifest(s,
-          docs(s, sf).repartition(4), dir, "doc_id")
+          table(s, sf, "documents").repartition(4), dir, "doc_id")
         val liveFile = new java.io.File(dir).listFiles()
           .filter(_.getName.endsWith(".parquet")).minBy(_.getName)
         for (i <- 1 to 2)
@@ -2782,7 +2781,7 @@ object OpsQueries {
             fs, new org.apache.hadoop.fs.Path(s"$dir/orphan_$i.parquet"),
             false, hconf)
         val st = graft.ops.Layout.vacuum(s, dir)
-        s.read.parquet(dir).agg(
+        SourceRegistry.parquet(s, dir).agg(
           count(lit(1)).as("n_docs"), sum(col("doc_id")).as("id_sum"),
           lit(st.filesBefore).as("files_before"),
           lit(st.filesLive).as("files_live"),
@@ -2804,8 +2803,8 @@ object OpsQueries {
       (s, sf) => {
         val dir = s"${TpchLake.derivedDir(sf)}/lake_by_lang"
         if (!new java.io.File(s"$dir/_SUCCESS").exists())
-          graft.ops.Layout.writePartitioned(docs(s, sf), dir, Seq("lang"))
-        s.read.parquet(dir).filter(col("lang") === "en")
+          graft.ops.Layout.writePartitioned(table(s, sf, "documents"), dir, Seq("lang"))
+        SourceRegistry.parquet(s, dir).filter(col("lang") === "en")
           .groupBy(col("lang"))
           .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("id_sum"),
             sum(length(col("text")).cast("long")).as("len_sum"))
@@ -2828,7 +2827,7 @@ object OpsQueries {
             .select(col("event_id"),
               struct(col("user_id"), col("event_type"), col("value")).as("meta"))
             .write.mode("overwrite").parquet(dir)
-        s.read.parquet(dir)
+        SourceRegistry.parquet(s, dir)
           .groupBy(col("meta.user_id").as("user_id"))
           .agg(count(lit(1)).as("n"), sum(col("event_id")).as("id_sum"))
       },
@@ -2844,7 +2843,7 @@ object OpsQueries {
       (s, sf) => {
         val dir = s"${TpchLake.derivedDir(sf)}/text_lines"
         if (!new java.io.File(s"$dir/_SUCCESS").exists())
-          docs(s, sf).select(concat(col("doc_id").cast("string"), lit("\t"),
+          table(s, sf, "documents").select(concat(col("doc_id").cast("string"), lit("\t"),
               col("text")).as("value"))
             .coalesce(1).write.mode("overwrite").text(dir)
         s.read.text(dir)
@@ -2868,7 +2867,7 @@ object OpsQueries {
         val dir = new java.io.File(s"${TpchLake.derivedDir(sf)}/bin_media")
         if (!new java.io.File(dir, "_DONE").exists()) {
           dir.mkdirs()
-          docs(s, sf).filter(col("doc_id") < 20)
+          table(s, sf, "documents").filter(col("doc_id") < 20)
             .select(col("doc_id"), col("text")).collect().foreach { r =>
               java.nio.file.Files.write(dir.toPath.resolve(f"doc_${r.getLong(0)}%05d.bin"),
                 r.getString(1).getBytes("UTF-8"))
@@ -2881,7 +2880,7 @@ object OpsQueries {
             regexp_extract(col("path"), "doc_(\\d+)\\.bin$", 1).cast("long").as("doc_id"),
             col("length").as("n_bytes"),
             decode(col("content"), "UTF-8").as("decoded"))
-        bin.join(docs(s, sf).select(col("doc_id"), col("text")), "doc_id")
+        bin.join(table(s, sf, "documents").select(col("doc_id"), col("text")), "doc_id")
           .select(col("doc_id"), col("n_bytes"),
             (col("decoded") === col("text")).as("text_match"))
       },
@@ -2898,7 +2897,7 @@ object OpsQueries {
       (s, sf) => {
         val dir = s"${TpchLake.derivedDir(sf)}/cdc_ledger"
         if (!new java.io.File(s"$dir/batch=2/_SUCCESS").exists()) {
-          val d = docs(s, sf).select(col("doc_id"), col("text"))
+          val d = table(s, sf, "documents").select(col("doc_id"), col("text"))
           d.write.mode("overwrite").parquet(s"$dir/base")
           d.filter(col("doc_id") % 7 === 0)
             .select(col("doc_id"), concat(col("text"), lit(" u1")).as("text"),
@@ -2948,7 +2947,7 @@ object OpsQueries {
         val dir = s"${TpchLake.derivedDir(sf)}/stats_lake"
         if (!new java.io.File(s"${dir}_manifest/_SUCCESS").exists())
           graft.ops.Layout.writeWithManifest(s,
-            docs(s, sf).repartitionByRange(8, col("doc_id")), dir, "doc_id")
+            table(s, sf, "documents").repartitionByRange(8, col("doc_id")), dir, "doc_id")
         val (df, ps) = graft.ops.Layout.scanPruned(s, dir, "doc_id", 100L, 149L)
         df.agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("id_sum"),
           sum(length(col("text")).cast("long")).as("len_sum"),
@@ -2970,10 +2969,10 @@ object OpsQueries {
       (s, sf) => {
         val dir = s"${TpchLake.derivedDir(sf)}/evolving_lake"
         if (!new java.io.File(s"$dir/batch=2/_SUCCESS").exists()) {
-          docs(s, sf).filter(col("doc_id") % 2 === 0)
+          table(s, sf, "documents").filter(col("doc_id") % 2 === 0)
             .select(col("doc_id"), col("text"))
             .write.mode("overwrite").parquet(s"$dir/batch=1")
-          docs(s, sf).filter(col("doc_id") % 2 === 1)
+          table(s, sf, "documents").filter(col("doc_id") % 2 === 1)
             .select(col("doc_id"), col("text"), col("lang"))
             .write.mode("overwrite").parquet(s"$dir/batch=2")
         }
@@ -2995,7 +2994,7 @@ object OpsQueries {
         import org.apache.spark.sql.expressions.Window
         val w = Window.partitionBy(col("o_custkey"))
           .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        s.read.parquet(s"$sf/orders.parquet")
+        table(s, sf, "orders")
           .select(col("o_custkey").as("custkey"), col("o_orderkey").as("okey"),
             col("o_totalprice").as("price"), row_number().over(w).as("rn"))
           .filter(col("rn") <= 2)
@@ -3009,7 +3008,7 @@ object OpsQueries {
     // O(k) state per group instead of a full per-group window sort)
     ("w02_topn_aggregator",
       (s, sf) => {
-        val o = s.read.parquet(s"$sf/orders.parquet")
+        val o = table(s, sf, "orders")
         o.groupBy(col("o_custkey").as("custkey"))
           .agg(graft.functions.TopKAggregator.topK(2)(
             col("o_totalprice"), col("o_orderkey")).as("top"))
@@ -3024,7 +3023,7 @@ object OpsQueries {
 
     // ---- decimal-exact revenue aggregation (order-independent sums) -----
     ("a01_revenue_decimal",
-      (s, sf) => s.read.parquet(s"$sf/lineitem.parquet")
+      (s, sf) => table(s, sf, "lineitem")
         .groupBy(col("l_returnflag").as("rf"))
         .agg(sum(col("l_extendedprice").cast("decimal(18,2)") *
           (lit(1).cast("decimal(18,2)") - col("l_discount").cast("decimal(18,2)")))
@@ -3318,9 +3317,9 @@ object OpsQueries {
     // attributes (ts05) and its plan is spec-pinned in OpsSpec.
     ("ts02_range_count",
       (s, sf) => {
-        val pts = s.read.parquet(s"$sf/lineitem.parquet")
+        val pts = table(s, sf, "lineitem")
           .filter(col("l_quantity") === 50).select(col("l_shipdate"))
-        val ivals = s.read.parquet(s"$sf/orders.parquet")
+        val ivals = table(s, sf, "orders")
           .select(col("o_orderkey"), col("o_orderdate"),
             expr("timestampadd(DAY, CAST(o_orderkey % 20 + 1 AS INT), o_orderdate)")
               .as("o_end"))
@@ -3344,10 +3343,10 @@ object OpsQueries {
     // DuckDB's inequality join emitting the same per-pair rows.
     ("ts24_interval_pairs",
       (s, sf) => {
-        val pts = s.read.parquet(s"$sf/lineitem.parquet")
+        val pts = table(s, sf, "lineitem")
           .filter(col("l_quantity") === 50)
           .select(col("l_orderkey"), col("l_linenumber"), col("l_shipdate"))
-        val ivals = s.read.parquet(s"$sf/orders.parquet")
+        val ivals = table(s, sf, "orders")
           .select(col("o_orderkey"), col("o_orderdate"),
             expr("timestampadd(DAY, CAST(o_orderkey % 20 + 1 AS INT), o_orderdate)")
               .as("o_end"))
@@ -3370,10 +3369,10 @@ object OpsQueries {
     // double only at publication
     ("ts25_range_sum",
       (s, sf) => {
-        val pts = s.read.parquet(s"$sf/lineitem.parquet")
+        val pts = table(s, sf, "lineitem")
           .filter(col("l_quantity") >= 45)
           .select(col("l_shipdate"), col("l_quantity"))
-        val ivals = s.read.parquet(s"$sf/orders.parquet")
+        val ivals = table(s, sf, "orders")
           .select(col("o_orderkey"), col("o_orderdate"),
             expr("timestampadd(DAY, CAST(o_orderkey % 20 + 1 AS INT), o_orderdate)")
               .as("o_end"))
@@ -3398,11 +3397,11 @@ object OpsQueries {
     // intervals count exactly; output keeps the zero rows (left-style)
     ("ts26_range_edge",
       (s, sf) => {
-        val pts = s.read.parquet(s"$sf/lineitem.parquet")
+        val pts = table(s, sf, "lineitem")
           .filter(col("l_quantity") === 50).select(col("l_shipdate"))
         val endBase = date_add(col("o_orderdate"),
           (col("o_orderkey") % 20 + 1).cast("int"))
-        val ivals = s.read.parquet(s"$sf/orders.parquet")
+        val ivals = table(s, sf, "orders")
           .select(col("o_orderkey"),
             when(col("o_orderkey") % 11 === 0, lit(null).cast("date"))
               .when(col("o_orderkey") % 5 === 0, endBase)
@@ -3458,7 +3457,7 @@ object OpsQueries {
     // re-derives the entire pipeline output, shard assignments included)
     ("e01_corpus_pipeline",
       (s, sf) => {
-        val filtered = docs(s, sf).filter(
+        val filtered = table(s, sf, "documents").filter(
           TextOps.langId(col("text")) === "en" &&
             TextOps.qualityScore(col("text")) >= 0.35)
         val surv = Dedup.fuzzyDedupCorpus(filtered, col("doc_id"), col("text"),
@@ -3533,7 +3532,7 @@ object OpsQueries {
     // row leaking through any stage shifts every downstream shard id)
     ("e02_training_mix_pipeline",
       (s, sf) => {
-        val d0 = docs(s, sf)
+        val d0 = table(s, sf, "documents")
         val passed = TextOps.gopherQuality(d0, col("doc_id"), col("text"))
           .filter(col("gopher_pass")).select("doc_id")
         val deduped = Dedup.dedupParagraphs(d0.join(passed, "doc_id"),
@@ -3597,7 +3596,7 @@ object OpsQueries {
     // the full score relation is). Per-term contributions are 4-dp
     // decimals summed order-independently, like t18.
     ("b01_bm25_scores",
-      (s, sf) => Retrieval.bm25Scores(docs(s, sf), col("doc_id"), col("text"),
+      (s, sf) => Retrieval.bm25Scores(table(s, sf, "documents"), col("doc_id"), col("text"),
         Seq("spark", "vector", "stream")),
       """WITH toks AS (SELECT doc_id,
         |    CASE WHEN trim(text)='' THEN []::VARCHAR[]
@@ -3626,8 +3625,8 @@ object OpsQueries {
     // derivation + the s01 cosine scan) and the fusion arithmetic
     ("b04_hybrid_rrf",
       (s, sf) => Retrieval.hybridTopK(
-        docs(s, sf), col("doc_id"), col("text"),
-        emb(s, sf), col("vec_id"), col("embedding"),
+        table(s, sf, "documents"), col("doc_id"), col("text"),
+        table(s, sf, "embeddings"), col("vec_id"), col("embedding"),
         Seq("spark", "vector", "stream"), queryVec(s, sf), k = 20),
       """WITH toks AS (SELECT doc_id,
         |    CASE WHEN trim(text)='' THEN []::VARCHAR[]
@@ -3669,7 +3668,7 @@ object OpsQueries {
     // what the oracle can restate
     ("b02_inverted_postings",
       (s, sf) => Retrieval.probePostings(
-        Retrieval.invertedIndex(docs(s, sf), col("doc_id"), col("text")),
+        Retrieval.invertedIndex(table(s, sf, "documents"), col("doc_id"), col("text")),
         Seq("vector", "stream")),
       """SELECT t AS term, doc_id, count(*) AS tf
         |FROM (SELECT doc_id, unnest(string_split_regex(lower(trim(text)),'\s+')) AS t
@@ -3684,7 +3683,7 @@ object OpsQueries {
         import s.implicits._
         val queries = Seq((1, "spark"), (1, "vector"), (2, "stream"),
           (2, "table"), (3, "slow"), (3, "fast")).toDF("qid", "term")
-        Retrieval.bm25BatchTopK(docs(s, sf), col("doc_id"), col("text"),
+        Retrieval.bm25BatchTopK(table(s, sf, "documents"), col("doc_id"), col("text"),
           queries, k = 15)
       },
       """WITH qt(qid, term) AS (VALUES (1,'spark'),(1,'vector'),(2,'stream'),
@@ -3720,7 +3719,7 @@ object OpsQueries {
     // wedge work), which times the fixture's density, not the operator
     ("g02_triangle_counts",
       (s, sf) => {
-        val li = s.read.parquet(s"$sf/lineitem.parquet")
+        val li = table(s, sf, "lineitem")
           .filter(col("l_partkey") % 3 === 0)
           .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         val pairs = li.select(col("ok"), col("pk").as("p1"))
@@ -3747,7 +3746,7 @@ object OpsQueries {
     // recipe), integers feeding every ln so both engines see identical
     // arguments; unseen query terms drop per the LM convention
     ("b06_query_likelihood",
-      (s, sf) => Retrieval.queryLikelihoodScores(docs(s, sf), col("doc_id"),
+      (s, sf) => Retrieval.queryLikelihoodScores(table(s, sf, "documents"), col("doc_id"),
         col("text"), Seq("spark", "vector", "stream"), mu = 2000.0),
       """WITH toks AS (SELECT doc_id,
         |    CASE WHEN trim(text)='' THEN []::VARCHAR[]
@@ -3782,7 +3781,7 @@ object OpsQueries {
     // verbatim by the oracle
     ("b08_proximity",
       (s, sf) => graft.ops.Retrieval.proximitySearch(
-        docs(s, sf), col("doc_id"), col("text"), "big", "join", window = 5),
+        table(s, sf, "documents"), col("doc_id"), col("text"), "big", "join", window = 5),
       """WITH tok AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks
         |  FROM documents WHERE trim(text) <> ''),
         |pos AS (SELECT doc_id, unnest(toks) AS w,
@@ -3795,7 +3794,7 @@ object OpsQueries {
         |FROM j GROUP BY doc_id""".stripMargin),
 
     ("b07_ndcg",
-      (s, sf) => Retrieval.ndcgAtK(docs(s, sf), col("doc_id") % 5,
+      (s, sf) => Retrieval.ndcgAtK(table(s, sf, "documents"), col("doc_id") % 5,
         col("doc_id"), col("n_chars").cast("double"),
         col("doc_id") % 4, k = 10),
       """WITH b AS (SELECT doc_id % 5 AS q, doc_id AS d, n_chars::DOUBLE AS s,
@@ -3821,7 +3820,7 @@ object OpsQueries {
         |FROM g GROUP BY q""".stripMargin),
 
     ("b05_prf_expansion",
-      (s, sf) => Retrieval.prfTopK(docs(s, sf), col("doc_id"), col("text"),
+      (s, sf) => Retrieval.prfTopK(table(s, sf, "documents"), col("doc_id"), col("text"),
         Seq("spark", "vector", "stream"), r = 3, m = 3, k = 10),
       """WITH toks AS (SELECT doc_id,
         |    CASE WHEN trim(text)='' THEN []::VARCHAR[]
@@ -3896,7 +3895,7 @@ object OpsQueries {
     // ---- per-group winsorization ----------------------------------------
     ("w04_winsorize",
       (s, sf) => Pipeline.winsorize(
-        docs(s, sf).select(col("doc_id"), col("source"),
+        table(s, sf, "documents").select(col("doc_id"), col("source"),
           TextOps.tokenCount(col("text")).cast("double").as("ntok")),
         col("source"), col("ntok"), lo = 0.05, hi = 0.95),
       """WITH t AS (SELECT doc_id, source,
@@ -3912,7 +3911,7 @@ object OpsQueries {
     // ---- global dense dictionary (surrogate keys / vocabulary) ----------
     ("p06_dict_encode",
       (s, sf) => {
-        val p = s.read.parquet(s"$sf/part.parquet")
+        val p = table(s, sf, "part")
         val dict = Pipeline.dictionary(p, col("p_name"))
         Pipeline.dictEncode(p, col("p_name"), dict, as = "name_id")
           .select(col("p_partkey"), col("p_name"), col("name_id"))
@@ -3924,7 +3923,7 @@ object OpsQueries {
 
     // ---- deterministic train/val/test split -----------------------------
     ("p07_hash_split",
-      (s, sf) => Pipeline.hashSplit(docs(s, sf).select(col("doc_id")),
+      (s, sf) => Pipeline.hashSplit(table(s, sf, "documents").select(col("doc_id")),
         col("doc_id"), salt = "split1",
         Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05)),
       """SELECT doc_id, CASE WHEN bk < 9000 THEN 'train'
@@ -3999,7 +3998,7 @@ object OpsQueries {
     // fixed expression over exact inputs — order-independent, restatable
     ("w05_zscore",
       (s, sf) => Pipeline.zscoreByGroup(
-        docs(s, sf).select(col("doc_id"), col("source"),
+        table(s, sf, "documents").select(col("doc_id"), col("source"),
           TextOps.tokenCount(col("text")).cast("long").as("ntok")),
         col("source"), col("ntok")),
       """WITH t AS (SELECT doc_id, source,
@@ -4132,7 +4131,7 @@ object OpsQueries {
     // the portable hash on the canonical label.
     ("p09_split_leakage_safe",
       (s, sf) => {
-        val d = docs(s, sf)
+        val d = table(s, sf, "documents")
         val clusters = Dedup.connectedComponents(
           Dedup.minHashNearDups(d, col("doc_id"), col("text"), n = 3, threshold = 0.8),
           col("id_a"), col("id_b"), d, col("doc_id"))
@@ -4170,7 +4169,7 @@ object OpsQueries {
     // cannot pass (the mm03 image-decode pattern, for audio)
     ("mm06_audio_frames",
       (s, sf) => Multimodal.audioFrames(
-        Multimodal.audioFromDocuments(docs(s, sf)), frameLen = 16),
+        Multimodal.audioFromDocuments(table(s, sf, "documents")), frameLen = 16),
       """SELECT doc_id AS media_id, (i // 16)::INTEGER AS frame_idx,
         |  count(*) AS n_samples,
         |  SUM(abs(((doc_id*31 + i*7919) % 65536) - 32768))::BIGINT AS sum_abs
@@ -4184,7 +4183,7 @@ object OpsQueries {
     // restates every sample, frame sum, and LAG diff from the formula
     ("mm07_audio_onsets",
       (s, sf) => Multimodal.audioOnsets(Multimodal.audioFrames(
-        Multimodal.audioFromDocuments(docs(s, sf)), frameLen = 16),
+        Multimodal.audioFromDocuments(table(s, sf, "documents")), frameLen = 16),
         threshold = 40000L),
       """WITH fr AS (SELECT doc_id AS media_id, (i // 16)::INTEGER AS frame_idx,
         |    SUM(abs(((doc_id*31 + i*7919) % 65536) - 32768))::BIGINT AS sa
@@ -4201,7 +4200,7 @@ object OpsQueries {
     // anti join on the key set + union, nothing else touches base bytes
     ("e07_merge_upsert",
       (s, sf) => {
-        val d = docs(s, sf).select(col("doc_id"), col("text"))
+        val d = table(s, sf, "documents").select(col("doc_id"), col("text"))
         val updates = d.filter(col("doc_id") % 7 === 0)
           .select(col("doc_id"), concat(col("text"), lit(" u2")).as("text"),
             (col("doc_id") % 3 === 0).as("del"))
@@ -4224,7 +4223,7 @@ object OpsQueries {
         // fresh every run — a published batch stays in the manifest
         new org.apache.hadoop.fs.Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
           .delete(new org.apache.hadoop.fs.Path(root), true)
-        val d = docs(s, sf).select(col("doc_id"), col("n_chars"))
+        val d = table(s, sf, "documents").select(col("doc_id"), col("n_chars"))
         val audit = (staged: org.apache.spark.sql.DataFrame) => {
           val bad = staged.filter(col("n_chars").isNull || col("n_chars") < 0)
             .count()
@@ -4255,7 +4254,7 @@ object OpsQueries {
     // state, so maintained ≡ rebuilt is what passing means.
     ("e12_kmv_maintain",
       (s, sf) => {
-        val d = docs(s, sf)
+        val d = table(s, sf, "documents")
         val k = 32
         val additions = d.filter(col("source").isin("src1", "src2"))
           .select(col("source"), concat(col("text"), lit(" v2")).as("text"))
@@ -4290,7 +4289,7 @@ object OpsQueries {
 
     ("e11_cdc_apply",
       (s, sf) => {
-        val d = docs(s, sf).select(col("doc_id"), col("text"))
+        val d = table(s, sf, "documents").select(col("doc_id"), col("text"))
         val u1 = d.filter(col("doc_id") % 5 === 0)
           .select(col("doc_id"), concat(col("text"), lit(" v1")).as("text"),
             lit(1L).as("seq"), lit("U").as("op"))
@@ -4339,7 +4338,7 @@ object OpsQueries {
     // a surviving posting from a deleted doc breaks the row set
     ("e09_erasure_propagation",
       (s, sf) => {
-        val d = docs(s, sf).select(col("doc_id"), col("text"))
+        val d = table(s, sf, "documents").select(col("doc_id"), col("text"))
         val dels = d.filter(col("doc_id") % 13 === 0)
           .select(col("doc_id"), col("text"), lit(true).as("del"))
         val erased = graft.ops.LakeOps.mergeUpsert(d, dels, "doc_id", Some("del"))
@@ -4358,7 +4357,7 @@ object OpsQueries {
     // unknown keys insert. History rows pass through without joining.
     ("e08_scd2_merge",
       (s, sf) => {
-        val c = s.read.parquet(s"$sf/customer.parquet")
+        val c = table(s, sf, "customer")
         val current = c.select(col("c_custkey").as("k"),
           col("c_nationkey").as("nat"),
           to_date(lit("2020-01-01")).as("valid_from"),
@@ -4410,7 +4409,7 @@ object OpsQueries {
     // post-merge corpus (the d03 recall-1 recipe at 16×4, j ≥ 0.8)
     ("e10_lsh_index_maintain",
       (s, sf) => {
-        val d = docs(s, sf)
+        val d = table(s, sf, "documents")
         val baseIdx = Dedup.lshBucketRows(d, col("doc_id"), col("text"), n = 3)
         val ups = d.filter(pmod(col("doc_id"), lit(5)) === 0)
           .select(col("doc_id"),
@@ -4447,7 +4446,7 @@ object OpsQueries {
     // (every 9th doc gets "é漢字" appended — the fixture corpus is pure
     // ASCII, so unplanted ratios would not discriminate)
     ("t24_charset_profile",
-      (s, sf) => docs(s, sf)
+      (s, sf) => table(s, sf, "documents")
         .select(col("doc_id"), concat(col("text"),
           when(col("doc_id") % 9 === 0, lit(" é漢字")).otherwise(lit(""))).as("t"))
         .select(col("doc_id"),
@@ -4471,7 +4470,7 @@ object OpsQueries {
     ("a09_observe_metrics",
       (s, sf) => {
         val obs = org.apache.spark.sql.Observation(s"q_${System.nanoTime()}")
-        val pipeline = docs(s, sf)
+        val pipeline = table(s, sf, "documents")
           .observe(obs, count(lit(1)).as("n_docs"),
             sum(TextOps.tokenCount(col("text")).cast("long")).as("n_tokens"),
             count(when(trim(col("text")) === "", lit(1))).as("n_empty"))
@@ -4498,7 +4497,7 @@ object OpsQueries {
     // identical exact inputs
     ("a08_corr_moments",
       (s, sf) => {
-        val li = s.read.parquet(s"$sf/lineitem.parquet")
+        val li = table(s, sf, "lineitem")
           .select(col("l_returnflag").as("flag"),
             floor(col("l_quantity") + 0.5).cast("long").as("x"),
             floor(col("l_extendedprice") * 100 + 0.5).cast("long").as("y"))
@@ -4545,7 +4544,7 @@ object OpsQueries {
     // NO slice×vocab cross join; per-term sums are 10-dp decimals
     // (order-independent), restated op-for-op by the oracle
     ("t26_tvd_drift",
-      (s, sf) => TextOps.distributionDrift(docs(s, sf), col("source"), col("text")),
+      (s, sf) => TextOps.distributionDrift(table(s, sf, "documents"), col("source"), col("text")),
       """WITH pairs AS (SELECT source AS slice,
         |    unnest(string_split_regex(lower(trim(text)),'\s+')) AS term
         |  FROM documents WHERE trim(text) <> ''),
@@ -4570,7 +4569,7 @@ object OpsQueries {
     // lexical diversity per source (dataset-card stats): type-token
     // ratio + hapax fraction, exact integer counts, two 6-dp divisions
     ("t39_lexical_diversity",
-      (s, sf) => TextOps.lexicalDiversity(docs(s, sf), col("source"), col("text")),
+      (s, sf) => TextOps.lexicalDiversity(table(s, sf, "documents"), col("source"), col("text")),
       """WITH tf AS (SELECT source AS slice, t AS term, count(*)::BIGINT AS c
         |  FROM (SELECT source,
         |          unnest(string_split_regex(lower(trim(text)),'\s+')) AS t
@@ -4588,7 +4587,7 @@ object OpsQueries {
     // sum runs over present terms plus the (1 - sum q)/2 remainder;
     // per-term contributions 10-dp floored + DECIMAL-summed
     ("t38_jsd_drift",
-      (s, sf) => TextOps.jsDivergenceDrift(docs(s, sf), col("source"), col("text")),
+      (s, sf) => TextOps.jsDivergenceDrift(table(s, sf, "documents"), col("source"), col("text")),
       """WITH pairs AS (SELECT source AS slice,
         |    unnest(string_split_regex(lower(trim(text)),'\s+')) AS term
         |  FROM documents WHERE trim(text) <> ''),
@@ -4618,7 +4617,7 @@ object OpsQueries {
     // dim-keyed aggregate; mean/var are stats of the 6-dp-quantized
     // values (DECIMAL-summed, order-free), min/max raw float32-exact
     ("s18_embed_dim_stats",
-      (s, sf) => graft.ops.Similarity.embeddingDimStats(emb(s, sf), col("embedding")),
+      (s, sf) => graft.ops.Similarity.embeddingDimStats(table(s, sf, "embeddings"), col("embedding")),
       """WITH x AS (SELECT unnest(embedding)::DOUBLE AS v,
         |    (generate_subscripts(embedding, 1) - 1)::INT AS dim
         |  FROM embeddings),
@@ -4642,7 +4641,7 @@ object OpsQueries {
     // intermediate reproducible decimal arithmetic (see pcaPowerSql)
     ("s19_pca_top_component",
       (s, sf) => graft.ops.Similarity.principalComponent(
-        emb(s, sf), col("vec_id"), col("embedding"), iterations = 8),
+        table(s, sf, "embeddings"), col("vec_id"), col("embedding"), iterations = 8),
       pcaPowerSql(iterations = 8)),
 
     // Benford first-digit profile: digit from the DECIMAL's string
@@ -4650,7 +4649,7 @@ object OpsQueries {
     // powers of ten), expected share = log10(1+1/d), both 6-dp floored
     ("a15_benford",
       (s, sf) => graft.ops.Profile.benfordProfile(
-        s.read.parquet(s"$sf/orders.parquet"), col("o_totalprice")),
+        table(s, sf, "orders"), col("o_totalprice")),
       """WITH d AS (SELECT regexp_extract(abs(o_totalprice)::VARCHAR,
         |      '([1-9])', 1) AS dg FROM orders),
         |c AS (SELECT dg::INT AS digit, count(*)::BIGINT AS n
@@ -4674,7 +4673,7 @@ object OpsQueries {
     // oracle restates the whole thing
     ("f12_attribution",
       (s, sf) => graft.ops.EventAnalytics.multiTouchAttribution(
-        events(s, sf), col("user_id"), col("ts"), col("event_id"),
+        table(s, sf, "events"), col("user_id"), col("ts"), col("event_id"),
         col("event_type"), convType = "purchase",
         touchTypes = Seq("click", "view")),
       """WITH base AS (SELECT user_id AS u, ts AS t, event_id AS e,
@@ -4705,7 +4704,7 @@ object OpsQueries {
 
     ("f11_srm_check",
       (s, sf) => graft.ops.EventAnalytics.srmCheck(
-        events(s, sf).groupBy(col("user_id")).agg(count(lit(1)).as("__n")),
+        table(s, sf, "events").groupBy(col("user_id")).agg(count(lit(1)).as("__n")),
         col("user_id") % 10 < 4),
       """WITH u AS (SELECT user_id FROM events GROUP BY 1),
         |g AS (SELECT sum(CASE WHEN user_id % 10 < 4 THEN 1 ELSE 0 END)::BIGINT AS n_treat,
@@ -4732,7 +4731,7 @@ object OpsQueries {
     // exact DECIMAL moments (a08), theta/effects one IEEE chain each
     ("f10_cuped",
       (s, sf) => {
-        val units = events(s, sf).groupBy(col("user_id")).agg(
+        val units = table(s, sf, "events").groupBy(col("user_id")).agg(
           sum(when(col("event_id") % 2 === 0,
             floor(col("value") * 100 + 0.5).cast("long")).otherwise(0L)).as("x"),
           sum(when(col("event_id") % 2 === 1,
@@ -4782,7 +4781,7 @@ object OpsQueries {
     // aggregates (S = sum nij^2, sum cj^2) — one identical IEEE
     // expression each, 6-dp floored
     ("a22_fleiss_kappa",
-      (s, sf) => graft.ops.Checks.fleissKappa(events(s, sf),
+      (s, sf) => graft.ops.Checks.fleissKappa(table(s, sf, "events"),
         col("user_id") % 100, col("event_type"), col("event_id"), n = 3),
       """WITH r AS (SELECT user_id % 100 AS it, event_type AS cat,
         |    ROW_NUMBER() OVER (PARTITION BY user_id % 100 ORDER BY event_id) AS rn
@@ -4816,7 +4815,7 @@ object OpsQueries {
     // IEEE chain in both engines — exact to the 6-dp floor
     ("a19_pass_at_k",
       (s, sf) => graft.ops.Profile.passAtK(
-        events(s, sf), col("user_id") % 50, col("event_id") % 19 === 0, k = 5),
+        table(s, sf, "events"), col("user_id") % 50, col("event_id") % 19 === 0, k = 5),
       passAtKOracleSql(5)),
 
     // Poisson bootstrap CI for the mean order value — the bootstrap
@@ -4828,7 +4827,7 @@ object OpsQueries {
     // the oracle bit-for-bit.
     ("a23_poisson_bootstrap",
       (s, sf) => graft.ops.Profile.poissonBootstrapCi(
-        s.read.parquet(s"$sf/orders.parquet"),
+        table(s, sf, "orders"),
         col("o_totalprice"), col("o_orderkey"), b = 200, salt = "pb1"),
       """WITH base AS (SELECT CAST(o_totalprice AS DECIMAL(18,2)) AS v,
         |    o_orderkey::VARCHAR AS id FROM orders),
@@ -4865,7 +4864,7 @@ object OpsQueries {
     // the experiment-readout form
     ("a24_poisson_bootstrap_ab",
       (s, sf) => graft.ops.Profile.poissonBootstrapAbCi(
-        s.read.parquet(s"$sf/orders.parquet"), col("o_totalprice"),
+        table(s, sf, "orders"), col("o_totalprice"),
         col("o_orderkey"), col("o_orderkey") % 2 === 0, b = 200,
         salt = "pab1"),
       """WITH base AS (SELECT CAST(o_totalprice AS DECIMAL(18,2)) AS v,
@@ -4912,7 +4911,7 @@ object OpsQueries {
     // table (a16's rank discipline — no row-sized sort)
     ("a21_conformal_threshold",
       (s, sf) => graft.ops.Profile.conformalThreshold(
-        docs(s, sf), col("lang"), col("n_chars"), alpha = 0.1),
+        table(s, sf, "documents"), col("lang"), col("n_chars"), alpha = 0.1),
       """WITH b AS (SELECT lang AS grp, n_chars::DOUBLE AS s FROM documents),
         |g AS (SELECT grp, s, count(*)::BIGINT AS c FROM b GROUP BY 1, 2),
         |r AS (SELECT grp, s, c,
@@ -4931,14 +4930,14 @@ object OpsQueries {
     // spread. 6 quantized MM rounds; the oracle unrolls every round
     // with the identical floor8/decimal-sum arithmetic
     ("a20_bradley_terry",
-      (s, sf) => graft.ops.Profile.bradleyTerry(events(s, sf),
+      (s, sf) => graft.ops.Profile.bradleyTerry(table(s, sf, "events"),
         col("user_id") % 5, (col("user_id") * 3 + 1) % 5,
         col("event_id") % 10 <
           lit(6) + (col("user_id") % 5) - ((col("user_id") * 3 + 1) % 5)),
       bradleyTerryOracleSql(6)),
 
     ("a16_auc",
-      (s, sf) => graft.ops.Profile.aucScore(docs(s, sf),
+      (s, sf) => graft.ops.Profile.aucScore(table(s, sf, "documents"),
         col("n_chars").cast("double"), col("doc_id") % 3 === 0),
       """WITH b AS (SELECT n_chars::DOUBLE AS s, (doc_id % 3 = 0) AS y
         |  FROM documents),
@@ -4998,7 +4997,7 @@ object OpsQueries {
     // distinct-value windows; only the final products/sqrt/division are
     // float, identical IEEE chain both engines
     ("a18_spearman",
-      (s, sf) => graft.ops.Profile.spearmanCorr(docs(s, sf),
+      (s, sf) => graft.ops.Profile.spearmanCorr(table(s, sf, "documents"),
         col("n_chars"), col("n_chars") % 997),
       """WITH b AS (SELECT n_chars::DOUBLE AS x, (n_chars % 997)::DOUBLE AS y
         |  FROM documents),
@@ -5026,7 +5025,7 @@ object OpsQueries {
     // calibration bins (reliability diagram): mean of 6-dp-quantized
     // scores vs exact positive rate per equal-width bin; 1.0 folds top
     ("a17_calibration",
-      (s, sf) => graft.ops.Profile.calibrationBins(docs(s, sf),
+      (s, sf) => graft.ops.Profile.calibrationBins(table(s, sf, "documents"),
         (col("n_chars") % 997).cast("double") / 997.0,
         col("doc_id") % 3 === 0, bins = 10),
       """WITH b AS (SELECT (n_chars % 997)::DOUBLE / 997.0 AS s,
@@ -5213,7 +5212,7 @@ object OpsQueries {
     // DECIMAL(18,2) so min/max stringify identically on both engines
     ("a07_profile",
       (s, sf) => graft.ops.Profile.profile(
-        s.read.parquet(s"$sf/orders.parquet"),
+        table(s, sf, "orders"),
         Seq(
           "o_custkey" -> col("o_custkey"),
           "o_orderpriority" -> col("o_orderpriority"),
@@ -5244,7 +5243,7 @@ object OpsQueries {
     // cannot pass
     ("t29_typo_pairs",
       (s, sf) => Dedup.typoPairs(
-        docs(s, sf).select(concat(col("text"), when(col("doc_id") % 6 === 0,
+        table(s, sf, "documents").select(concat(col("text"), when(col("doc_id") % 6 === 0,
             lit(" joiin haash roww")).otherwise(lit(""))).as("t"))
           .select(explode(TextOps.tokens(col("t"))).as("term")),
         col("term")),
@@ -5266,7 +5265,7 @@ object OpsQueries {
     // with a boundary-preserving double-space string replace whose
     // left-to-right non-overlapping semantics equal BPE's greedy fold
     ("t25_bpe_merges",
-      (s, sf) => graft.ops.Bpe.learnMerges(docs(s, sf), col("text"), numMerges = 6),
+      (s, sf) => graft.ops.Bpe.learnMerges(table(s, sf, "documents"), col("text"), numMerges = 6),
       bpeOracleSql(6)),
 
     // WordPiece variant: the SAME greedy loop ranked by the likelihood
@@ -5274,7 +5273,7 @@ object OpsQueries {
     // bit-identical cross-engine. Completes the tokenizer-training
     // trio (BPE t25/t27, unigram-LM t40–t42, WordPiece here)
     ("t48_wordpiece_merges",
-      (s, sf) => graft.ops.Bpe.learnWordPieceMerges(docs(s, sf), col("text"),
+      (s, sf) => graft.ops.Bpe.learnWordPieceMerges(table(s, sf, "documents"), col("text"),
         numMerges = 6),
       wordPieceOracleSql(6)),
 
@@ -5287,8 +5286,8 @@ object OpsQueries {
     // breaks thousands of per-doc counts
     ("t27_bpe_encode",
       (s, sf) => {
-        val table = graft.ops.Bpe.learnMerges(docs(s, sf), col("text"), numMerges = 6)
-        graft.ops.Bpe.encode(docs(s, sf), col("text"), table)
+        val merges = graft.ops.Bpe.learnMerges(table(s, sf, "documents"), col("text"), numMerges = 6)
+        graft.ops.Bpe.encode(table(s, sf, "documents"), col("text"), merges)
           .select(col("doc_id"), size(col("bpe_tokens")).cast("long").as("n_bpe"))
       },
       bpeEncodeOracleSql(6)),
@@ -5300,7 +5299,7 @@ object OpsQueries {
     // fixture vocabulary is singular-only, so unplanted nothing would
     // consolidate); both engines apply the identical anchored-regex chain
     ("t28_stem_groups",
-      (s, sf) => docs(s, sf)
+      (s, sf) => table(s, sf, "documents")
         .select(concat(col("text"), when(col("doc_id") % 4 === 0,
           lit(" joins rows filtering filtered tables scans")).otherwise(lit("")))
           .as("t"))
@@ -5334,7 +5333,7 @@ object OpsQueries {
     // corpus-wide bigram INSTANCE counts with minimum support — the KenLM
     // first-pass table; instances, not per-doc-distinct shingles
     ("t23_ngram_counts",
-      (s, sf) => TextOps.ngramCounts(docs(s, sf), col("text"), n = 2,
+      (s, sf) => TextOps.ngramCounts(table(s, sf, "documents"), col("text"), n = 2,
         minCount = 25),
       """SELECT g AS ngram, count(*) AS cnt FROM (
         |  SELECT unnest([ toks[i] || ' ' || toks[i+1]
@@ -5349,7 +5348,7 @@ object OpsQueries {
     // its Jaccard is ~0.03 — the relation the jaccard gates miss
     ("d20_containment",
       (s, sf) => {
-        val base = docs(s, sf).select(col("doc_id"), col("text"))
+        val base = table(s, sf, "documents").select(col("doc_id"), col("text"))
         val excerpts = base.filter(col("doc_id") % 13 === 0)
           .select((col("doc_id") + 100000L).as("doc_id"),
             concat_ws(" ", slice(TextOps.tokens(col("text")), 1, 12)).as("text"))
@@ -5380,7 +5379,7 @@ object OpsQueries {
     // re-derives the argmax + threshold from the full cross product
     ("d19_semantic_decontam",
       (s, sf) => {
-        val all = emb(s, sf)
+        val all = table(s, sf, "embeddings")
         Dedup.semanticDecontam(
             all.filter(col("vec_id") % 11 =!= 0), col("vec_id"), col("embedding"),
             all.filter(col("vec_id") % 11 === 0), col("vec_id"), col("embedding"),
@@ -5404,7 +5403,7 @@ object OpsQueries {
     // into 256-token examples, docs SPLITTING across window boundaries;
     // each row is one fragment with its in-doc span and in-example offset
     ("p08_pack_sequences",
-      (s, sf) => Pipeline.packFixedWindows(docs(s, sf), col("doc_id"),
+      (s, sf) => Pipeline.packFixedWindows(table(s, sf, "documents"), col("doc_id"),
         TextOps.tokenCount(col("text")), contextLen = 256, bucketWidth = 64),
       """WITH t AS (SELECT doc_id, ntok,
         |    CAST(SUM(ntok) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) - ntok
@@ -5429,9 +5428,9 @@ object OpsQueries {
     // in IEEE order) and rounds 8-dp BEFORE the top-20, like g01.
     ("g03_ppr_seeds",
       (s, sf) => {
-        val ps = s.read.parquet(s"$sf/lineitem.parquet")
+        val ps = table(s, sf, "lineitem")
           .select(col("l_partkey").as("src"), (col("l_suppkey") + 1000000L).as("dst"))
-        val sn = s.read.parquet(s"$sf/supplier.parquet")
+        val sn = table(s, sf, "supplier")
           .select((col("s_suppkey") + 1000000L).as("src"), (col("s_nationkey") + 2000000L).as("dst"))
         graft.ops.Graph.pageRank(ps.unionByName(sn), col("src"), col("dst"),
             iterations = 3, seeds = Seq(1L, 2L, 3L))
@@ -5480,7 +5479,7 @@ object OpsQueries {
     // self-join + HAVING
     ("g04_copurchase_pairs",
       (s, sf) => graft.ops.Graph.coOccurrencePairs(
-        s.read.parquet(s"$sf/lineitem.parquet"),
+        table(s, sf, "lineitem"),
         col("l_orderkey"), col("l_partkey"), minShared = 2),
       """WITH e AS (SELECT DISTINCT l_orderkey AS g, l_partkey AS i FROM lineitem)
         |SELECT a.i AS i_a, b.i AS i_b, count(*) AS n_shared
@@ -5492,9 +5491,9 @@ object OpsQueries {
     // histogram is count-of-counts so the result is max-degree-bounded
     ("g05_degree_histogram",
       (s, sf) => {
-        val ps = s.read.parquet(s"$sf/lineitem.parquet")
+        val ps = table(s, sf, "lineitem")
           .select(col("l_partkey").as("src"), (col("l_suppkey") + 1000000L).as("dst"))
-        val sn = s.read.parquet(s"$sf/supplier.parquet")
+        val sn = table(s, sf, "supplier")
           .select((col("s_suppkey") + 1000000L).as("src"), (col("s_nationkey") + 2000000L).as("dst"))
         graft.ops.Graph.degreeHistogram(ps.unionByName(sn), col("src"), col("dst"))
       },
@@ -5513,11 +5512,11 @@ object OpsQueries {
     // k unrolled visited-excluding CTE steps
     ("g06_khop_distance",
       (s, sf) => {
-        val ps = s.read.parquet(s"$sf/lineitem.parquet")
+        val ps = table(s, sf, "lineitem")
           .select(col("l_partkey").as("src"), (col("l_suppkey") + 1000000L).as("dst"))
-        val sn = s.read.parquet(s"$sf/supplier.parquet")
+        val sn = table(s, sf, "supplier")
           .select((col("s_suppkey") + 1000000L).as("src"), (col("s_nationkey") + 2000000L).as("dst"))
-        val nr = s.read.parquet(s"$sf/nation.parquet")
+        val nr = table(s, sf, "nation")
           .select((col("n_nationkey") + 2000000L).as("src"), (col("n_regionkey") + 3000000L).as("dst"))
         graft.ops.Graph.kHopDistance(ps.unionByName(sn).unionByName(nr),
           col("src"), col("dst"), seeds = Seq(1L, 2L, 3L), maxHops = 3)
@@ -5543,7 +5542,7 @@ object OpsQueries {
     // the "also bought" score that doesn't just surface bestsellers
     ("g07_item_cosine",
       (s, sf) => graft.ops.Graph.itemCosine(
-        s.read.parquet(s"$sf/lineitem.parquet"),
+        table(s, sf, "lineitem"),
         col("l_orderkey"), col("l_partkey"), minShared = 2),
       """WITH e AS (SELECT DISTINCT l_orderkey AS g, l_partkey AS i FROM lineitem),
         |f AS (SELECT i, count(*) AS nf FROM e GROUP BY 1),
@@ -5559,7 +5558,7 @@ object OpsQueries {
     // rounded 6dp then decimal-summed per pair (order-independent)
     ("g08_adamic_adar",
       (s, sf) => graft.ops.Graph.adamicAdar(
-        s.read.parquet(s"$sf/lineitem.parquet"),
+        table(s, sf, "lineitem"),
         col("l_orderkey"), col("l_partkey"), minShared = 2),
       """WITH e AS (SELECT DISTINCT l_orderkey AS g, l_partkey AS i FROM lineitem),
         |gw AS (SELECT g, floor(1.0 / ln(sz) * 1000000 + 0.5) / 1000000 AS w6
@@ -5576,7 +5575,7 @@ object OpsQueries {
     // vs hub-ness per node; 2·tri/(deg·(deg−1)), deg<2 → 0
     ("g09_clustering_coeff",
       (s, sf) => {
-        val li = s.read.parquet(s"$sf/lineitem.parquet")
+        val li = table(s, sf, "lineitem")
           .filter(col("l_partkey") % 3 === 0)
           .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         val pairs = li.select(col("ok"), col("pk").as("p1"))
@@ -5609,7 +5608,7 @@ object OpsQueries {
     // here; the oracle unrolls 8 idempotent peels (see kcorePeelSql)
     ("g10_kcore",
       (s, sf) => {
-        val e = s.read.parquet(s"$sf/lineitem.parquet")
+        val e = table(s, sf, "lineitem")
           .filter(col("l_orderkey") % 17 === 0)
           .select(col("l_partkey").as("src"),
             (col("l_suppkey") + 1000000L).as("dst"))
@@ -5625,7 +5624,7 @@ object OpsQueries {
     // threshold so keep/drop never rides a ulp)
     ("er01_jw_linkage",
       (s, sf) => graft.ops.Linkage.jwPairs(
-        s.read.parquet(s"$sf/part.parquet"), col("p_name"),
+        table(s, sf, "part"), col("p_name"),
         n => substring(n, 1, 2), threshold = 0.85),
       """WITH n AS (SELECT DISTINCT p_name AS name FROM part WHERE p_name IS NOT NULL),
         |b AS (SELECT name, left(name, 2) AS blk FROM n)
@@ -5643,7 +5642,7 @@ object OpsQueries {
     // match posteriors w9 ≈ 1 for name-agreeing patterns, ≈ 0 otherwise.
     ("er02_fellegi_sunter",
       (s, sf) => {
-        val cust = s.read.parquet(s"$sf/customer.parquet")
+        val cust = table(s, sf, "customer")
         val b = cust.select(col("c_custkey").as("bkey"),
           concat(col("c_name"), when(col("c_custkey") % 10 === 0, lit("X"))
             .otherwise(lit(""))).as("bname"),
@@ -5684,7 +5683,7 @@ object OpsQueries {
     // the oracle (c01's recursive min-label closure + one rank window)
     ("er03_golden_record",
       (s, sf) => {
-        val cust = s.read.parquet(s"$sf/customer.parquet")
+        val cust = table(s, sf, "customer")
         val a = cust.select(col("c_custkey").as("id"),
           col("c_name").as("name"), col("c_acctbal").as("bal"))
         val b = cust.select((col("c_custkey") + 1000000L).as("id"),
@@ -5748,7 +5747,7 @@ object OpsQueries {
     // counts and assert the claims)
     ("t22_hll_rollup",
       (s, sf) => {
-        val li = s.read.parquet(s"$sf/lineitem.parquet")
+        val li = table(s, sf, "lineitem")
         val bound = 3 * graft.ops.Sketches.hllRse(12)
         graft.ops.Sketches.hllRollup(li, col("l_returnflag"), col("l_orderkey"))
           .select(col("scope"), col("n_exact"),
@@ -5768,7 +5767,7 @@ object OpsQueries {
     // float centroid averaged in shuffle order is not reproducible
     ("s13_label_centroids",
       (s, sf) => graft.ops.Similarity.labelCentroids(
-        emb(s, sf), col("label"), col("embedding")),
+        table(s, sf, "embeddings"), col("label"), col("embedding")),
       """WITH x AS (SELECT label, unnest(embedding) AS v,
         |    generate_subscripts(embedding, 1) - 1 AS pos FROM embeddings)
         |SELECT label, pos,
@@ -5869,7 +5868,7 @@ object OpsQueries {
     // (pow's last ulp is not portable across libm implementations)
     ("p11_weighted_reservoir",
       (s, sf) => graft.ops.Pipeline.weightedReservoirPerGroup(
-        docs(s, sf), col("doc_id"), col("source"),
+        table(s, sf, "documents"), col("doc_id"), col("source"),
         TextOps.tokenCount(col("text")), k = 5, salt = "res1"),
       """WITH t AS (SELECT doc_id, source,
         |    CASE WHEN trim(text) = '' THEN 0
@@ -5891,7 +5890,7 @@ object OpsQueries {
     // zero shuffles, never crosses doc boundaries
     ("p12_chunk_overlap",
       (s, sf) => graft.ops.Pipeline.chunkWithOverlap(
-        docs(s, sf), col("doc_id"), TextOps.tokenCount(col("text")),
+        table(s, sf, "documents"), col("doc_id"), TextOps.tokenCount(col("text")),
         window = 64, stride = 48),
       """WITH t AS (SELECT doc_id,
         |    CASE WHEN trim(text) = '' THEN 0
@@ -5910,7 +5909,7 @@ object OpsQueries {
     // p^alpha values sum as DECIMAL so the normalizer is order-independent
     ("p13_temperature_mix",
       (s, sf) => graft.ops.Pipeline.temperatureMixture(
-        docs(s, sf), col("source"), alpha = 0.5),
+        table(s, sf, "documents"), col("source"), alpha = 0.5),
       """WITH c AS (SELECT source AS "group", count(*) AS n_docs
         |    FROM documents GROUP BY 1),
         |t AS (SELECT sum(n_docs)::BIGINT AS n FROM c),
@@ -5929,7 +5928,7 @@ object OpsQueries {
     // ranks — any prefix holds each source ∝ its weight
     ("p15_weighted_interleave",
       (s, sf) => graft.ops.Pipeline.interleaveByWeight(
-        docs(s, sf), col("doc_id"), col("source"),
+        table(s, sf, "documents"), col("doc_id"), col("source"),
         Map("src0" -> 3, "src1" -> 2), salt = "il1"),
       """WITH w AS (SELECT doc_id, source,
         |    CASE source WHEN 'src0' THEN 3 WHEN 'src1' THEN 2 ELSE 1 END AS wt,
@@ -5954,7 +5953,7 @@ object OpsQueries {
     // visible. Counts exact; floor(budget*weight) and the 6-dp epoch
     // ratio are the identical IEEE expression both engines
     ("p16_epoch_plan",
-      (s, sf) => graft.ops.Pipeline.epochPlan(docs(s, sf), col("source"),
+      (s, sf) => graft.ops.Pipeline.epochPlan(table(s, sf, "documents"), col("source"),
         TextOps.tokenCount(col("text")),
         Map("src0" -> 0.3, "src1" -> 0.2, "src7" -> 0.1),
         totalBudget = 50000L, maxEpochs = 4.0),
@@ -5979,7 +5978,7 @@ object OpsQueries {
 
     ("p14_neyman_alloc",
       (s, sf) => graft.ops.Pipeline.neymanAllocation(
-        docs(s, sf), col("source"), TextOps.tokenCount(col("text")),
+        table(s, sf, "documents"), col("source"), TextOps.tokenCount(col("text")),
         budget = 1000L),
       """WITH t AS (SELECT source AS stratum,
         |    CASE WHEN trim(text) = '' THEN 0
@@ -6213,7 +6212,7 @@ object OpsQueries {
     // the labels²-bounded confusion aggregate
     ("s14_nearest_centroid",
       (s, sf) => graft.ops.Similarity.nearestCentroidConfusion(
-        emb(s, sf), col("label"), col("embedding")),
+        table(s, sf, "embeddings"), col("label"), col("embedding")),
       """WITH x AS (SELECT label, unnest(embedding) AS v,
         |    generate_subscripts(embedding, 1) - 1 AS pos FROM embeddings),
         |cent AS (SELECT label, pos,
@@ -6237,7 +6236,7 @@ object OpsQueries {
     // k-anonymity risk report: QI cells re-identifiable by linkage
     ("pr01_k_anonymity",
       (s, sf) => graft.ops.Privacy.kAnonymityReport(
-        s.read.parquet(s"$sf/customer.parquet"),
+        table(s, sf, "customer"),
         Seq(col("c_nationkey"), col("c_mktsegment")), k = 10),
       """SELECT c_nationkey, c_mktsegment, count(*) AS n_rows
         |FROM customer GROUP BY 1, 2 HAVING count(*) < 10""".stripMargin),
@@ -6246,7 +6245,7 @@ object OpsQueries {
     // every sub-k QI cell (one window-count filter, one shuffle)
     ("pr02_suppress_to_k",
       (s, sf) => graft.ops.Privacy.suppressSmallGroups(
-          s.read.parquet(s"$sf/customer.parquet"),
+          table(s, sf, "customer"),
           Seq(col("c_nationkey"), col("c_mktsegment")), k = 10)
         .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment")),
       """SELECT c_custkey, c_nationkey, c_mktsegment FROM customer
@@ -6257,7 +6256,7 @@ object OpsQueries {
     // sign (49 leaking cells at sf0.01)
     ("pr03_l_diversity",
       (s, sf) => graft.ops.Privacy.lDiversityReport(
-        s.read.parquet(s"$sf/customer.parquet"),
+        table(s, sf, "customer"),
         Seq(col("c_nationkey"), col("c_mktsegment")),
         col("c_acctbal") < 0, l = 2),
       """SELECT c_nationkey, c_mktsegment, count(*) AS n_rows,
@@ -6271,7 +6270,7 @@ object OpsQueries {
     // (cnt DESC, term ASC) rank order makes the cutoff a pure corpus
     // function; windowed BIGINT sums cast (DuckDB window SUM → HUGEINT)
     ("t31_vocab_coverage",
-      (s, sf) => TextOps.vocabCoverage(docs(s, sf), col("text"), coverage = 0.95),
+      (s, sf) => TextOps.vocabCoverage(table(s, sf, "documents"), col("text"), coverage = 0.95),
       """WITH w0 AS (SELECT unnest(string_split_regex(lower(trim(text)),'\s+')) AS term
         |            FROM documents WHERE trim(text) <> ''),
         |c AS (SELECT term, count(*) AS cnt FROM w0 GROUP BY 1),
@@ -6294,7 +6293,7 @@ object OpsQueries {
     // identical RE2-compatible regex chain on the same shell
     ("t32_html_strip",
       (s, sf) => TextOps.stripHtml(
-        docs(s, sf).select(col("doc_id"), concat(
+        table(s, sf, "documents").select(col("doc_id"), concat(
           lit("<html><head><style>p{color:#333}</style><!-- nav --></head>" +
             "<body><div id=\"d"), col("doc_id"), lit("\" class='x'><p>"),
           col("text"),
@@ -6374,7 +6373,7 @@ object OpsQueries {
     // split on [.!?]+ runs, empty-trim segments are not sentences, avg
     // tokens per sentence from exact integer totals
     ("t33_sentence_stats",
-      (s, sf) => TextOps.sentenceStats(docs(s, sf), col("doc_id"), col("text")),
+      (s, sf) => TextOps.sentenceStats(table(s, sf, "documents"), col("doc_id"), col("text")),
       """WITH s AS (SELECT doc_id,
         |    [x FOR x IN list_transform(
         |      string_split_regex(text, '[.!?]+'), y -> trim(y)) IF x <> ''] AS segs
@@ -6392,7 +6391,7 @@ object OpsQueries {
     // Flesch-style reading ease from exact word/sentence/vowel-group
     // counts; the t33 sentence rule + the classic syllable proxy
     ("t35_readability",
-      (s, sf) => TextOps.readability(docs(s, sf), col("doc_id"), col("text")),
+      (s, sf) => TextOps.readability(table(s, sf, "documents"), col("doc_id"), col("text")),
       """WITH s AS (SELECT doc_id,
         |    CASE WHEN trim(text) = '' THEN 0
         |         ELSE len(string_split_regex(lower(trim(text)), '\s+'))
@@ -6423,7 +6422,7 @@ object OpsQueries {
     // tokens/doc from one scan — the multilingual budget skew check;
     // exact integer sums, two 4-dp-floored double divisions
     ("t37_fertility",
-      (s, sf) => TextOps.fertilityProfile(docs(s, sf), col("lang"), col("text")),
+      (s, sf) => TextOps.fertilityProfile(table(s, sf, "documents"), col("lang"), col("text")),
       """WITH t AS (SELECT lang,
         |    CASE WHEN trim(text)='' THEN 0
         |         ELSE len(string_split_regex(lower(trim(text)),'\s+')) END AS ntok,
@@ -6448,7 +6447,7 @@ object OpsQueries {
     // stages of argmax-join CTEs) plus an unrolled backpointer walk,
     // with the same quantization, tie-breaks, and prune schedule
     ("t40_unigram_learn",
-      (s, sf) => graft.ops.UnigramLm.learn(docs(s, sf), col("text")),
+      (s, sf) => graft.ops.UnigramLm.learn(table(s, sf, "documents"), col("text")),
       unigramOracleSql()),
 
     // ...and the tokenizer APPLIED corpus-wide: re-learn, then encode
@@ -6459,8 +6458,8 @@ object OpsQueries {
     // tie-breaking breaks hundreds of per-doc counts
     ("t41_unigram_encode",
       (s, sf) => {
-        val vocab = graft.ops.UnigramLm.learn(docs(s, sf), col("text"))
-        graft.ops.UnigramLm.encodeCounts(docs(s, sf), "doc_id", col("text"), vocab)
+        val vocab = graft.ops.UnigramLm.learn(table(s, sf, "documents"), col("text"))
+        graft.ops.UnigramLm.encodeCounts(table(s, sf, "documents"), "doc_id", col("text"), vocab)
       },
       unigramEncodeOracleSql()),
 
@@ -6473,8 +6472,8 @@ object OpsQueries {
     // high bpc = out-of-model noise: the two tails curation cuts
     ("t42_unigram_bpc",
       (s, sf) => {
-        val vocab = graft.ops.UnigramLm.learn(docs(s, sf), col("text"))
-        graft.ops.UnigramLm.docBitsPerChar(docs(s, sf), "doc_id", col("text"), vocab)
+        val vocab = graft.ops.UnigramLm.learn(table(s, sf, "documents"), col("text"))
+        graft.ops.UnigramLm.docBitsPerChar(table(s, sf, "documents"), "doc_id", col("text"), vocab)
       },
       unigramBpcOracleSql()),
 
@@ -6485,7 +6484,7 @@ object OpsQueries {
     // index, lns, and OLS are the identical IEEE/decimal chains in
     // both engines (t36 recipe)
     ("t43_heaps_law",
-      (s, sf) => TextOps.heapsLaw(docs(s, sf), col("doc_id"), col("text")),
+      (s, sf) => TextOps.heapsLaw(table(s, sf, "documents"), col("doc_id"), col("text")),
       """WITH mm AS (SELECT min(doc_id)::BIGINT AS mn, max(doc_id)::BIGINT AS mx
         |  FROM documents),
         |base AS (SELECT CAST(floor((doc_id - mm.mn)::DOUBLE * 64
@@ -6525,7 +6524,7 @@ object OpsQueries {
     // two 6-dp-floored double expressions
     ("t44_chao1_richness",
       (s, sf) => {
-        TextOps.chao1Richness(docs(s, sf),
+        TextOps.chao1Richness(table(s, sf, "documents"),
           when(length(trim(col("text"))) === 0, array().cast("array<string>"))
             .otherwise(graft.functions.HashFunctions.wordGrams(
               lower(trim(col("text"))), 2)))
@@ -6558,7 +6557,7 @@ object OpsQueries {
     // true distinct count at k=256 (RSE 1/√254 ≈ 6%).
     ("t45_kmv_distinct",
       (s, sf) => graft.ops.Sketches.kmvDistinctPerGroup(
-        s.read.parquet(s"$sf/lineitem.parquet"),
+        table(s, sf, "lineitem"),
         col("l_returnflag"), col("l_partkey"), k = 256, salt = "kmv1"),
       """WITH d AS (SELECT DISTINCT l_returnflag AS scope,
         |    ('0x' || substr(md5('kmv1:' || l_partkey::VARCHAR), 1, 13))::BIGINT AS h
@@ -6580,7 +6579,7 @@ object OpsQueries {
     // cannot sort raw array<string> columns (r13 verdict item 1).
     ("t47_keyword_tags",
       (s, sf) => {
-        docs(s, sf).select(col("doc_id"),
+        table(s, sf, "documents").select(col("doc_id"),
           concat_ws(" ", TextOps.keywordTags(col("text"),
             Seq("big", "column", "join", "key", "sort", "zzzmissing"))).as("tags"))
       },
@@ -6594,7 +6593,7 @@ object OpsQueries {
     // raw tf-idf at both tails. One vocab-sized count agg + 1-row
     // totals broadcast; lns 6-dp floored (t36 contract), z 4-dp
     ("t46_log_odds_terms",
-      (s, sf) => TextOps.logOddsTerms(docs(s, sf), col("text"),
+      (s, sf) => TextOps.logOddsTerms(table(s, sf, "documents"), col("text"),
         col("lang") === "en", alpha = 0.01, minCount = 5, topN = 20),
       """WITH u AS (SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS w,
         |    (lang = 'en') AS g
@@ -6617,7 +6616,7 @@ object OpsQueries {
         |ORDER BY z4 DESC, word ASC LIMIT 20""".stripMargin),
 
     ("t36_zipf_slope",
-      (s, sf) => TextOps.zipfSlope(docs(s, sf), col("text"), topN = 100),
+      (s, sf) => TextOps.zipfSlope(table(s, sf, "documents"), col("text"), topN = 100),
       """WITH u AS (SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS w
         |    FROM documents WHERE trim(text) <> ''),
         |c AS (SELECT w, count(*) AS c FROM u GROUP BY w),
@@ -6640,7 +6639,7 @@ object OpsQueries {
     // PMI collocation mining (phrase detection): adjacent-pair PMI from
     // exact unigram/bigram counts, min-count floor, 4-dp double
     ("t34_collocations",
-      (s, sf) => TextOps.collocations(docs(s, sf), col("text"), minCount = 3),
+      (s, sf) => TextOps.collocations(table(s, sf, "documents"), col("text"), minCount = 3),
       """WITH tk AS (SELECT string_split_regex(lower(trim(text)), '\s+') AS tk
         |    FROM documents WHERE trim(text) <> ''),
         |uni AS (SELECT unnest(tk) AS w FROM tk),
@@ -6677,7 +6676,7 @@ object OpsQueries {
     // report as a UNION ALL of constant-shaped rows
     ("dq01_constraint_report",
       (s, sf) => graft.ops.Checks.report(
-        s.read.parquet(s"$sf/orders.parquet"), Seq(
+        table(s, sf, "orders"), Seq(
           graft.ops.Checks.NotNull("o_custkey"),
           graft.ops.Checks.Unique("o_orderkey"),
           graft.ops.Checks.InRange("o_totalprice", 0.0, 300000.0),
@@ -6718,7 +6717,7 @@ object OpsQueries {
     // nothing
     ("dq02_violating_rows",
       (s, sf) => graft.ops.Checks.violations(
-        s.read.parquet(s"$sf/orders.parquet"), col("o_orderkey"), Seq(
+        table(s, sf, "orders"), col("o_orderkey"), Seq(
           graft.ops.Checks.InRange("o_totalprice", 0.0, 300000.0),
           graft.ops.Checks.InSet("o_orderstatus", Seq("O", "F")))),
       """SELECT o_orderkey AS row_id, 'in_range' AS "check",
@@ -6736,8 +6735,8 @@ object OpsQueries {
     // punched in customer makes real orphans at sf0.01
     ("dq04_fk_orphans",
       (s, sf) => graft.ops.Checks.referentialOrphans(
-        s.read.parquet(s"$sf/orders.parquet"), col("o_custkey"),
-        s.read.parquet(s"$sf/customer.parquet")
+        table(s, sf, "orders"), col("o_custkey"),
+        table(s, sf, "customer")
           .filter(col("c_custkey") % 3 =!= 0), col("c_custkey"))
         .select(col("o_orderkey"), col("o_custkey")),
       """SELECT o_orderkey, o_custkey FROM orders
@@ -6749,7 +6748,7 @@ object OpsQueries {
         val derived = TpchLake.derivedDir(sf)
         val v1 = s"$derived/drift_v1"
         val v2 = s"$derived/drift_v2"
-        val o = s.read.parquet(s"$sf/orders.parquet")
+        val o = table(s, sf, "orders")
         if (!new java.io.File(s"$v1/_SUCCESS").exists())
           o.select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
             .write.mode("overwrite").parquet(v1)
@@ -6771,7 +6770,7 @@ object OpsQueries {
     // oracle re-derives the identical draw)
     ("pr04_dp_counts",
       (s, sf) => graft.ops.Privacy.dpNoisyCounts(
-        docs(s, sf), col("source"), epsilon = 1.0, salt = "dp1"),
+        table(s, sf, "documents"), col("source"), epsilon = 1.0, salt = "dp1"),
       """WITH c AS (SELECT source AS "group", count(*) AS n_true
         |    FROM documents GROUP BY 1),
         |u AS (SELECT "group", n_true,
@@ -6792,7 +6791,7 @@ object OpsQueries {
     // the standard low-cardinality ordered-attribute setting
     ("pr05_t_closeness",
       (s, sf) => graft.ops.Privacy.tClosenessReport(
-        s.read.parquet(s"$sf/customer.parquet"), Seq(col("c_nationkey")),
+        table(s, sf, "customer"), Seq(col("c_nationkey")),
         floor(col("c_acctbal").cast("double") / 1000).cast("long"), t = 0.04),
       """WITH base AS (SELECT c_nationkey,
         |    floor(c_acctbal::DOUBLE / 1000)::BIGINT AS v FROM customer),
@@ -6914,7 +6913,7 @@ object OpsQueries {
     // Q-beats-trivial-partition property is spec-asserted (OpsSpec)
     ("g16_lpa_communities",
       (s, sf) => {
-        val li = s.read.parquet(s"$sf/lineitem.parquet")
+        val li = table(s, sf, "lineitem")
           .filter(col("l_orderkey") % 7 === 0)
         // pin the co-occurrence projection: LPA and the modularity
         // scorer each consume it, and the pair-generation join must
@@ -6936,7 +6935,7 @@ object OpsQueries {
 
     ("g15_assortativity",
       (s, sf) => graft.ops.Graph.degreeAssortativity(
-        s.read.parquet(s"$sf/lineitem.parquet")
+        table(s, sf, "lineitem")
           .filter(col("l_orderkey") % 11 === 0),
         col("l_partkey"), col("l_suppkey") + 1000000L),
       """WITH e AS (SELECT DISTINCT least(l_partkey, l_suppkey + 1000000) AS u,
@@ -6970,7 +6969,7 @@ object OpsQueries {
       (s, sf) => {
         val h = Native("graft_md5_prefix52",
           concat(lit("bh:"), col("o_orderkey")))
-        val hyp = s.read.parquet(s"$sf/orders.parquet")
+        val hyp = table(s, sf, "orders")
           .filter(col("o_orderkey") % 7 === 0)
           .select(col("o_orderkey").as("hid"),
             when(col("o_orderkey") % 91 === 0, shiftright(h, 20))
@@ -6998,7 +6997,7 @@ object OpsQueries {
     // Σ term8 is Q
     ("g14_modularity",
       (s, sf) => {
-        val e = s.read.parquet(s"$sf/lineitem.parquet")
+        val e = table(s, sf, "lineitem")
           .filter(col("l_orderkey") % 11 === 0)
           .select(col("l_partkey").as("a"),
             (col("l_suppkey") + 1000000L).as("b"))
@@ -7319,7 +7318,7 @@ object OpsQueries {
 
     ("e13_rollup_maintain",
       (s, sf) => {
-        val d = docs(s, sf).select(col("doc_id"), col("text"))
+        val d = table(s, sf, "documents").select(col("doc_id"), col("text"))
         val u1 = d.filter(col("doc_id") % 5 === 0)
           .select(col("doc_id"), concat(col("text"), lit(" v1")).as("text"),
             lit(1L).as("seq"), lit("U").as("op"))
@@ -7398,7 +7397,7 @@ object OpsQueries {
     // division, 8-dp floor
     ("g13_neighbor_jaccard",
       (s, sf) => graft.ops.Graph.neighborJaccard(
-        s.read.parquet(s"$sf/lineitem.parquet"),
+        table(s, sf, "lineitem"),
         col("l_orderkey"), col("l_partkey"), minShared = 2),
       """WITH e AS (SELECT DISTINCT l_orderkey AS g, l_partkey AS i FROM lineitem),
         |ok AS (SELECT g FROM (SELECT g, count(*) AS sz FROM e GROUP BY g)
@@ -7418,7 +7417,7 @@ object OpsQueries {
     // NDCG): reproducible ranks (score desc, doc asc), both metrics are
     // single divisions of small integers
     ("b09_mrr_recall",
-      (s, sf) => Retrieval.mrrRecallAtK(docs(s, sf), col("doc_id") % 5,
+      (s, sf) => Retrieval.mrrRecallAtK(table(s, sf, "documents"), col("doc_id") % 5,
         col("doc_id"), col("n_chars").cast("double"),
         col("doc_id") % 7 === 0, k = 10),
       """WITH b AS (SELECT doc_id % 5 AS q, doc_id AS d, n_chars::DOUBLE AS s,
@@ -7445,7 +7444,7 @@ object OpsQueries {
     // DECIMAL-summed per doc; corpus = reference so every bigram is
     // seen and the discounted term stays positive
     ("t49_kneser_ney",
-      (s, sf) => TextOps.kneserNeyLogProb(docs(s, sf), col("doc_id"), col("text")),
+      (s, sf) => TextOps.kneserNeyLogProb(table(s, sf, "documents"), col("doc_id"), col("text")),
       """WITH toks AS (SELECT doc_id, string_split_regex(lower(trim(text)),'\s+') AS tk
         |  FROM documents WHERE trim(text) <> ''),
         |bg AS (SELECT doc_id,
@@ -7476,7 +7475,7 @@ object OpsQueries {
     // UTF-16 and codepoint lengths agree
     ("t51_script_profile",
       (s, sf) => graft.ops.TextOps.scriptProfile(
-        docs(s, sf).select(col("doc_id"), concat(col("text"),
+        table(s, sf, "documents").select(col("doc_id"), concat(col("text"),
           when(col("doc_id") % 4 === 1, lit(" пример текст"))
             .when(col("doc_id") % 4 === 2, lit(" 漢字試験"))
             .when(col("doc_id") % 4 === 3, lit(" مرحبا بكم"))
@@ -7512,7 +7511,7 @@ object OpsQueries {
     // materialize
     ("er04_blocking_quality",
       (s, sf) => {
-        val cust = s.read.parquet(s"$sf/customer.parquet")
+        val cust = table(s, sf, "customer")
         val a = cust.select(col("c_custkey").as("ka"), col("c_name"))
         val b = cust.select(col("c_custkey").as("kb"),
           when(col("c_custkey") % 10 === 0, concat(lit("X"), col("c_name")))
@@ -7555,7 +7554,7 @@ object OpsQueries {
     // rank-distance range join
     ("er05_sorted_neighborhood",
       (s, sf) => graft.ops.Linkage.sortedNeighborhood(
-        s.read.parquet(s"$sf/customer.parquet"),
+        table(s, sf, "customer"),
         col("c_custkey"), col("c_name"), window = 5),
       """WITH r AS (SELECT c_custkey AS id,
         |    row_number() OVER (ORDER BY c_name, c_custkey) - 1 AS pos
@@ -7572,7 +7571,7 @@ object OpsQueries {
     ("t52_mg_heavy_hitters",
       (s, sf) => {
         val k = 128
-        val words = docs(s, sf).select(explode(TextOps.tokens(
+        val words = table(s, sf, "documents").select(explode(TextOps.tokens(
           concat(col("text"), lit(" zzheavyhitter zzheavyhitter")))).as("w"))
         val mg = graft.ops.Sketches.mgHeavyHitters(words, col("w"), k)
         val exact = words.groupBy(col("w").as("xitem"))
@@ -7620,7 +7619,7 @@ object OpsQueries {
     ("t53_quantile_sketch",
       (s, sf) => graft.ops.Sketches.quantileSketchQuery(
         graft.ops.Sketches.quantileSketchPerGroup(
-          s.read.parquet(s"$sf/lineitem.parquet"),
+          table(s, sf, "lineitem"),
           col("l_returnflag"), col("l_extendedprice"),
           col("l_orderkey") * 10 + col("l_linenumber"), k = 256, salt = "qs1"),
         Seq(("p50", 1, 2), ("p90", 9, 10))),
@@ -7653,7 +7652,7 @@ object OpsQueries {
     ("e14_quantile_rollup",
       (s, sf) => {
         val k = 128
-        val o = s.read.parquet(s"$sf/orders.parquet")
+        val o = table(s, sf, "orders")
         val perMonth = graft.ops.Sketches.quantileSketchPerGroup(
           o, date_format(col("o_orderdate"), "yyyy-MM"),
           col("o_totalprice"), col("o_orderkey"), k, "qsr")
@@ -7686,7 +7685,7 @@ object OpsQueries {
     // word with a recursive CTE + longest-prefix lateral probe
     ("t50_wordpiece_encode",
       (s, sf) => {
-        val enc = graft.ops.Bpe.wordPieceEncode(docs(s, sf), col("text"), WpVocab)
+        val enc = graft.ops.Bpe.wordPieceEncode(table(s, sf, "documents"), col("text"), WpVocab)
         enc.select(col("doc_id"),
           size(col("wp_tokens")).cast("long").as("n_pieces"),
           size(filter(col("wp_tokens"),
@@ -7707,10 +7706,10 @@ object OpsQueries {
         val tag = new java.io.File(sf).getName.replace('.', '_')
         val ot = s"bucketed_orders_$tag"; val ct = s"bucketed_customer_$tag"
         if (!s.catalog.tableExists(ot))
-          graft.ops.Layout.writeBucketed(s, s.read.parquet(s"$sf/orders.parquet"),
+          graft.ops.Layout.writeBucketed(s, table(s, sf, "orders"),
             s"$derived/bucketed_orders", ot, 8, "o_custkey")
         if (!s.catalog.tableExists(ct))
-          graft.ops.Layout.writeBucketed(s, s.read.parquet(s"$sf/customer.parquet"),
+          graft.ops.Layout.writeBucketed(s, table(s, sf, "customer"),
             s"$derived/bucketed_customer", ct, 8, "c_custkey")
         graft.ops.Layout.bucketedJoin(s, ot, ct, "o_custkey", "c_custkey")
           .groupBy(col("c_mktsegment").as("segment"))
@@ -7734,10 +7733,10 @@ object OpsQueries {
     * gating Verify. */
   val benchOverrides: Map[String, (SparkSession, String) => DataFrame] = Map(
     "s02_ann_lsh_topk" -> ((s, sf) =>
-      annLsh(emb(s, sf).filter(col("vec_id") =!= 0), queryVec(s, sf))),
+      annLsh(table(s, sf, "embeddings").filter(col("vec_id") =!= 0), queryVec(s, sf))),
     "s03_ann_ivf_topk" -> ((s, sf) =>
-      annIvfProbe(annIvfBuild(emb(s, sf).filter(col("vec_id") =!= 0)), queryVec(s, sf))),
-    "s05_knn_join_ivf" -> ((s, sf) => { val e = emb(s, sf); knnIvf(e, e) }),
+      annIvfProbe(annIvfBuild(table(s, sf, "embeddings").filter(col("vec_id") =!= 0)), queryVec(s, sf))),
+    "s05_knn_join_ivf" -> ((s, sf) => { val e = table(s, sf, "embeddings"); knnIvf(e, e) }),
     "s06_ann_lsh_clustered" -> ((s, _) =>
       annLsh(clusteredEmb(s).filter(col("vec_id") =!= 0), clusteredQueryVec(s))),
     "s07_ann_ivf_clustered" -> ((s, _) =>
@@ -7747,13 +7746,13 @@ object OpsQueries {
     // contrasts auto knobs with s05's fixed knobs on identical data); the
     // CONFIGURATION RULE — autoIvfParams — is the same one the s08 gate
     // verifies at ≥90% recall on the clustered fixture
-    "s08_knn_join_ivf_auto" -> ((s, sf) => { val e = emb(s, sf); knnIvfAuto(e, e) }),
+    "s08_knn_join_ivf_auto" -> ((s, sf) => { val e = table(s, sf, "embeddings"); knnIvfAuto(e, e) }),
     // same encode-once-query-many regime for PQ: the codebook fit (16
     // per-subspace KMeans runs) is the INDEX BUILD a user pays once per
     // corpus snapshot, not per query — persisted like s10's codes; the
     // timed unit is one ADC scan + exact re-rank. Gate-identical knobs.
     "s09_pq_topk" -> ((s, sf) => {
-      val e = emb(s, sf).filter(col("vec_id") =!= 0)
+      val e = table(s, sf, "embeddings").filter(col("vec_id") =!= 0)
       val dir = s"${TpchLake.derivedDir(sf)}/pq"
       if (!new java.io.File(s"$dir/codes/_SUCCESS").exists())
         Similarity.savePq(Similarity.buildPq(e, col("vec_id"), col("embedding"),
@@ -7767,7 +7766,7 @@ object OpsQueries {
     // query over the compact codes + exact re-rank — the direct contrast
     // with s01's full-width brute scan. Gate-identical rerank rule.
     "s10_sq8_topk" -> ((s, sf) => {
-      val e = emb(s, sf).filter(col("vec_id") =!= 0)
+      val e = table(s, sf, "embeddings").filter(col("vec_id") =!= 0)
       val dir = s"${TpchLake.derivedDir(sf)}/sq8"
       if (!new java.io.File(s"$dir/codes/_SUCCESS").exists())
         Similarity.saveSq8(Similarity.buildSq8(e, col("vec_id"), col("embedding")), dir)
@@ -7783,7 +7782,7 @@ object OpsQueries {
     // materialize the shrunk lists. The scale smoke fits e16's alpha on
     // this; the recall/row-identity gate stays in `queries`.
     "e16_ivf_delete" -> ((s, sf) => {
-      val e = emb(s, sf)
+      val e = table(s, sf, "embeddings")
       val dir = s"${TpchLake.derivedDir(sf)}/ivf_bench"
       if (!new java.io.File(s"$dir/assigned/_SUCCESS").exists()) {
         val (nLists, _) = Similarity.autoIvfParams(e.count())

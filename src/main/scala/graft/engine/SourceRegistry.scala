@@ -15,14 +15,21 @@ import scala.util.hashing.MurmurHash3
   * shape but need their DSv2 connector jars on the classpath at runtime
   * (not available in this offline build — they fail with a clear error).
   *
-  * `load` is the one place both engines load a source, and it resolves
-  * each file source once per session (Presto reads files through a Hive
-  * metastore for the same reason; Spark SQL separates the catalog-resolved
-  * relation from the per-query plan built on it). A fresh read costs a
-  * file listing, a schema-inference job (parquet footers, the whole of a
-  * JSON source, a CSV with `inferSchema`, the predicate pass of an
-  * N-Triples source) and a new relation; on a tiny lake that is half of a
-  * query's wall time. The rule:
+  * `load` is the one place every gate and operator reads a lake table:
+  * the engines' mapped sources, and through [[parquet]] every bare
+  * parquet path the operator gates, `ops/` and `streaming/` read,
+  * including a directory a gate has just written. Reads that stay plain
+  * `spark.read`: multi-path (`Layout.scanPruned`), `text`, `binaryFile`
+  * and `mergeSchema` reads, and fixture provisioning (`TpchLake`,
+  * `DataGen`), which runs once, outside every timed region.
+  *
+  * `load` resolves each file source once per session (Presto reads files
+  * through a Hive metastore for the same reason; Spark SQL separates the
+  * catalog-resolved relation from the per-query plan built on it). A
+  * fresh read costs a file listing, a schema-inference job (parquet
+  * footers, the whole of a JSON source, a CSV with `inferSchema`, the
+  * predicate pass of an N-Triples source) and a new relation; on a tiny
+  * lake that is half of a query's wall time. The rule:
   *  - memoised stores: those whose `source` is a file path — `parquet`
   *    (not with `bucketed_table`, which reads through the catalog),
   *    `csv`, `json`, `orc` and `rdf`. `jdbc` and the connector stores
@@ -137,6 +144,10 @@ object SourceRegistry {
       }
     }
   }
+
+  /** A bare parquet path, read through [[load]]. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    load(spark, SourceConfig(path, "parquet", path, Map.empty))
 
   private val FileStores = Set("parquet", "csv", "json", "orc", "rdf")
 

@@ -1,5 +1,6 @@
 package graft.fixtures
 
+import graft.GraftSession
 import graft.engine.GraftEngine
 import graft.mappings.{ConfigParser, RmlParser}
 import graft.model.{LakeConfig, MappingsDoc}
@@ -326,9 +327,7 @@ object TpchLake {
 
   /** Run a SPARQL query against the lake for `sfDir`. */
   def run(spark: SparkSession, sfDir: String, sparql: String): DataFrame = {
-    // the events table stores TIMESTAMP(NANOS); read as long everywhere
-    // (only affects nanos-typed columns)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    GraftSession.requireNanosAsLong(spark)
     provision(spark, sfDir, jdbc = sparql.contains("jdbc"))
     val (m, c) = lake(sfDir)
     GraftEngine.executeParsed(spark, SparqlParser.parse(sparql), m, c)

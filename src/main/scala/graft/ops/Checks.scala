@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.engine.SourceRegistry
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -154,9 +155,9 @@ object Checks {
   def schemaDrift(spark: org.apache.spark.sql.SparkSession,
       dirA: String, dirB: String): DataFrame = {
     import spark.implicits._
-    val a = spark.read.parquet(dirA).schema
+    val a = SourceRegistry.parquet(spark, dirA).schema
       .map(f => f.name -> f.dataType.simpleString).toMap
-    val b = spark.read.parquet(dirB).schema
+    val b = SourceRegistry.parquet(spark, dirB).schema
       .map(f => f.name -> f.dataType.simpleString).toMap
     val rows =
       (b.keySet -- a.keySet).toSeq.sorted

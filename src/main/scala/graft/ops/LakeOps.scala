@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.engine.SourceRegistry
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -95,7 +96,7 @@ object LakeOps {
     val existing = publishedList(fs, root)
     val stage = f"_staged_${existing.size}%05d"
     df.write.mode("overwrite").parquet(s"$dir/$stage")
-    val violations = audit(spark.read.parquet(s"$dir/$stage"))
+    val violations = audit(SourceRegistry.parquet(spark, s"$dir/$stage"))
     if (violations.nonEmpty) (false, violations)
     else {
       val tmp = new org.apache.hadoop.fs.Path(root, "_published.list.tmp")
@@ -117,7 +118,7 @@ object LakeOps {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val batches = publishedList(fs, root)
     require(batches.nonEmpty, s"no published batches under $dir")
-    batches.map(b => spark.read.parquet(s"$dir/$b")).reduce(_.unionByName(_))
+    batches.map(b => SourceRegistry.parquet(spark, s"$dir/$b")).reduce(_.unionByName(_))
   }
 
   private def publishedList(fs: org.apache.hadoop.fs.FileSystem,
@@ -149,8 +150,8 @@ object LakeOps {
   def snapshotAsOf(spark: org.apache.spark.sql.SparkSession, dir: String,
       k: Int, keyName: String, deletedCol: Option[String] = None): DataFrame = {
     require(k >= 0, "snapshot index must be >= 0")
-    (1 to k).foldLeft(spark.read.parquet(s"$dir/base")) { (snap, i) =>
-      mergeUpsert(snap, spark.read.parquet(s"$dir/batch=$i"), keyName, deletedCol)
+    (1 to k).foldLeft(SourceRegistry.parquet(spark, s"$dir/base")) { (snap, i) =>
+      mergeUpsert(snap, SourceRegistry.parquet(spark, s"$dir/batch=$i"), keyName, deletedCol)
     }
   }
 

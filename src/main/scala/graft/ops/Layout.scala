@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.engine.SourceRegistry
 import graft.functions.Native
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -157,9 +158,6 @@ object Layout {
     }
     val (nBefore, bBefore) = listStats(inputDir)
     require(nBefore > 0, s"compact: no parquet files under $inputDir")
-    val conf = spark.conf
-    val oldMax = conf.get("spark.sql.files.maxPartitionBytes")
-    val oldCost = conf.get("spark.sql.files.openCostInBytes")
     // Spark's actual split size is min(maxPartitionBytes,
     // max(openCostInBytes, totalBytes / minPartitionNum)), and
     // minPartitionNum defaults to the core count — so without pinning it
@@ -169,21 +167,20 @@ object Layout {
     // the output layout is a pure function of targetFileBytes, never of
     // cluster width — an OPTIMIZE whose file sizes depend on how many
     // cores ran it is wrong at any scale.
-    val minNumKey = "spark.sql.files.minPartitionNum"
-    val oldMinNum = conf.getOption(minNumKey)
+    val pinned = Seq("spark.sql.files.maxPartitionBytes" -> targetFileBytes.toString,
+      "spark.sql.files.openCostInBytes" -> "0", "spark.sql.files.minPartitionNum" -> "1")
+    // restore the explicitly set confs exactly: a default left behind
+    // as an explicit setting would still change `conf.getAll`
+    val conf = spark.conf
+    val explicit = conf.getAll
+    val before = pinned.map { case (k, _) => k -> explicit.get(k) }
     try {
-      conf.set("spark.sql.files.maxPartitionBytes", targetFileBytes.toString)
-      conf.set("spark.sql.files.openCostInBytes", "0")
-      conf.set(minNumKey, "1")
-      spark.read.parquet(inputDir).write
+      pinned.foreach { case (k, v) => conf.set(k, v) }
+      SourceRegistry.parquet(spark, inputDir).write
         .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(outputDir)
-    } finally {
-      conf.set("spark.sql.files.maxPartitionBytes", oldMax)
-      conf.set("spark.sql.files.openCostInBytes", oldCost)
-      oldMinNum match {
-        case Some(v) => conf.set(minNumKey, v)
-        case None    => conf.unset(minNumKey)
-      }
+    } finally before.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
     }
     val (nAfter, bAfter) = listStats(outputDir)
     CompactionStats(nBefore, bBefore, nAfter, bAfter)
@@ -204,7 +201,7 @@ object Layout {
   def writeWithManifest(spark: org.apache.spark.sql.SparkSession,
       df: DataFrame, dir: String, statCol: String): Unit = {
     df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir)
-    spark.read.parquet(dir)
+    SourceRegistry.parquet(spark, dir)
       .groupBy(col("_metadata.file_path").as("file_path"))
       .agg(min(col(statCol)).as("min_v"), max(col(statCol)).as("max_v"))
       .coalesce(1)
@@ -224,13 +221,13 @@ object Layout {
   def scanPruned(spark: org.apache.spark.sql.SparkSession, dir: String,
       statCol: String, lo: Long, hi: Long): (DataFrame, PruneStats) = {
     require(lo <= hi, s"empty stat range [$lo,$hi]")
-    val man = spark.read.parquet(dir + "_manifest")
+    val man = SourceRegistry.parquet(spark, dir + "_manifest")
     val keep = man.filter(col("max_v") >= lo && col("min_v") <= hi)
       .select(col("file_path")).collect().map(_.getString(0))
     val total = man.count()
     val pred = col(statCol) >= lo && col(statCol) <= hi
     val df =
-      if (keep.isEmpty) spark.read.parquet(dir).filter(pred).limit(0)
+      if (keep.isEmpty) SourceRegistry.parquet(spark, dir).filter(pred).limit(0)
       else spark.read.parquet(keep.toIndexedSeq: _*).filter(pred)
     (df, PruneStats(total, keep.length))
   }
@@ -258,7 +255,7 @@ object Layout {
     * same file never mark a live file orphan. */
   def vacuum(spark: org.apache.spark.sql.SparkSession, dir: String,
       minAgeMs: Long = 0L): VacuumStats = {
-    val live = spark.read.parquet(dir + "_manifest")
+    val live = SourceRegistry.parquet(spark, dir + "_manifest")
       .select(col("file_path")).collect()
       .map(r => new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath)
       .toSet

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.engine.SourceRegistry
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -289,12 +290,12 @@ object Similarity {
   /** Load an IVF index written by [[saveIvf]]. */
   def loadIvf(spark: org.apache.spark.sql.SparkSession, dir: String): IvfIndex = {
     import spark.implicits._
-    val cents = spark.read.parquet(s"$dir/centroids")
+    val cents = SourceRegistry.parquet(spark, s"$dir/centroids")
       .select(col("cluster"), col("values"))
       .as[(Int, Seq[Double])].collect()
       .sortBy(_._1).map(_._2.toArray)
     require(cents.nonEmpty, s"loadIvf: no centroids under $dir")
-    IvfIndex(spark.read.parquet(s"$dir/assigned"), cents)
+    IvfIndex(SourceRegistry.parquet(spark, s"$dir/assigned"), cents)
   }
 
   /** kNN join: for every query vector, its k nearest corpus vectors by
@@ -622,13 +623,14 @@ object Similarity {
   /** Load a PQ index written by [[savePq]]. */
   def loadPq(spark: org.apache.spark.sql.SparkSession, dir: String): PqIndex = {
     import spark.implicits._
-    val books = spark.read.parquet(s"$dir/codebooks")
+    val books = SourceRegistry.parquet(spark, s"$dir/codebooks")
       .select(col("subspace"), col("centroid"), col("values"))
       .as[(Int, Int, Seq[Double])].collect()
     val codebooks = books.groupBy(_._1).toSeq.sortBy(_._1).map { case (_, rows) =>
       rows.sortBy(_._2).map(_._3.toArray).toArray
     }.toArray
-    PqIndex(spark.read.parquet(s"$dir/codes"), spark.read.parquet(s"$dir/vectors"),
+    PqIndex(SourceRegistry.parquet(spark, s"$dir/codes"),
+      SourceRegistry.parquet(spark, s"$dir/vectors"),
       codebooks, codebooks.head.head.length, codebooks.head.length)
   }
 
@@ -729,7 +731,7 @@ object Similarity {
 
   def loadSq8(spark: org.apache.spark.sql.SparkSession, dir: String,
       vectors: DataFrame, id: Column, vec: Column): Sq8Index =
-    Sq8Index(spark.read.parquet(s"$dir/codes"),
+    Sq8Index(SourceRegistry.parquet(spark, s"$dir/codes"),
       vectors.select(id.cast("long").as("vec_id"), vec.cast("array<double>").as("v")))
 
   /** LSH-bucketed ANN: restrict the scan to buckets within `probeHamming`

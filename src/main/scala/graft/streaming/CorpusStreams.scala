@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.engine.SourceRegistry
 import graft.ops.{Dedup, TextOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -108,6 +109,6 @@ object CorpusStreams {
         n = n, maxBucket = maxBucket),
       "stream_neardup", docsPath, "append").distinct()
     Dedup.verifyCandidatePairs(cands,
-      spark.read.parquet(docsPath), col("doc_id"), col("text"), n, threshold)
+      SourceRegistry.parquet(spark, docsPath), col("doc_id"), col("text"), n, threshold)
   }
 }

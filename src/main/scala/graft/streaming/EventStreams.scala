@@ -5,6 +5,8 @@ import java.util.UUID
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit, TimeoutException}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 
+import graft.GraftSession
+import graft.engine.SourceRegistry
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -223,17 +225,17 @@ object EventStreams {
   }
 
   /** Read the events table with `ts` normalized ([[normalizeTs]]). The
-    * nanosAsLong conf only affects TIMESTAMP(NANOS) files; it is a no-op
-    * for the µs shapes. */
+    * nanosAsLong conf the session must carry only affects
+    * TIMESTAMP(NANOS) files; it is a no-op for the µs shapes. */
   def readEvents(spark: SparkSession, parquetPath: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(spark.read.parquet(parquetPath))
+    GraftSession.requireNanosAsLong(spark)
+    normalizeTs(SourceRegistry.parquet(spark, parquetPath))
   }
 
   /** File-source stream over the events file with the [[normalizeTs]]
     * event-time normalization applied. */
   private[streaming] def streamEvents(spark: SparkSession, parquetPath: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    GraftSession.requireNanosAsLong(spark)
     normalizeTs(streamParquet(spark, parquetPath, "events_stream"))
   }
 
@@ -242,7 +244,7 @@ object EventStreams {
     * [[stageDir]]. Works for ANY table, not just events. */
   def streamParquet(spark: SparkSession, parquetPath: String,
       label: String): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
+    val schema = SourceRegistry.parquet(spark, parquetPath).schema
     val dir = Files.createDirectories(stageDir(spark, parquetPath, label))
     val link = dir.resolve("part-0.parquet")
     // a dangling link (target regenerated/removed) reads as not-exists
@@ -379,8 +381,8 @@ object EventStreams {
   private def crashRestart(spark: SparkSession, parquetPath: String, label: String)(
       perBatch: DataFrame => DataFrame): DataFrame = {
     val in = stageDir(spark, parquetPath, s"${label}_in").toString
-    spark.read.parquet(parquetPath).repartition(4).write.mode("overwrite").parquet(in)
-    val src = spark.readStream.schema(spark.read.parquet(in).schema)
+    SourceRegistry.parquet(spark, parquetPath).repartition(4).write.mode("overwrite").parquet(in)
+    val src = spark.readStream.schema(SourceRegistry.parquet(spark, in).schema)
       .option("maxFilesPerTrigger", "1").parquet(in)
     val injected = new AtomicBoolean(false)
     val stored = drain(src, label, parquetPath, "append", (w, dir) =>
@@ -394,7 +396,7 @@ object EventStreams {
         perBatch(df).write.mode("overwrite").parquet(batch)
       }, restarts = 1).dir + "/out"
     require(injected.get(), "crash injection must have fired")
-    spark.read.parquet(stored).drop("batch")
+    SourceRegistry.parquet(spark, stored).drop("batch")
   }
 
   /** [[crashRestart]] over a per-user aggregate: the read-back
@@ -442,7 +444,7 @@ object EventStreams {
     val out = drain(streamingDedup(streamEvents(spark, parquetPath), "ts", delay, keys),
       "dedup_sink", parquetPath, "append",
       (w, dir) => w.format("parquet").option("path", s"$dir/out")).dir + "/out"
-    spark.read.parquet(out)
+    SourceRegistry.parquet(spark, out)
   }
 
   /** [[streamingDedup]] run as a real streaming query over the events
@@ -491,7 +493,7 @@ object EventStreams {
     * (user_id + 1 = c_custkey), counts + value sums per market segment. */
   def runEnrichedCountsBatch(spark: SparkSession, parquetPath: String,
       sfDir: String): DataFrame = {
-    val cust = spark.read.parquet(s"$sfDir/customer.parquet")
+    val cust = SourceRegistry.parquet(spark, s"$sfDir/customer.parquet")
     runToMemory(
       enrichedCounts(streamEvents(spark, parquetPath), cust,
         col("user_id") + 1, col("c_custkey"), col("c_mktsegment")),
@@ -709,7 +711,7 @@ object EventStreams {
   def runLateDropAudit(spark: SparkSession, stagingDir: String,
       delay: String, windowLen: String): DataFrame = {
     import spark.implicits._
-    val plan = spark.readStream.schema(spark.read.parquet(stagingDir).schema)
+    val plan = spark.readStream.schema(SourceRegistry.parquet(spark, stagingDir).schema)
       .option("maxFilesPerTrigger", 1).parquet(stagingDir)
       .withWatermark("ts", delay)
       .groupBy(window(col("ts"), windowLen)).count()

@@ -3168,6 +3168,7 @@ class OpsSpec extends AnyFunSuite {
     li.repartition(24).write.mode("overwrite").parquet(in)
     val oldMax = spark.conf.get("spark.sql.files.maxPartitionBytes")
     val oldCost = spark.conf.get("spark.sql.files.openCostInBytes")
+    val confs = spark.conf.getAll
     val inBytes = new java.io.File(in).listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.length).sum
     val st = Layout.compact(spark, in, out, math.max(1L << 16, inBytes / 4))
@@ -3181,6 +3182,8 @@ class OpsSpec extends AnyFunSuite {
     // session confs restored even though the write succeeded
     assert(spark.conf.get("spark.sql.files.maxPartitionBytes") == oldMax)
     assert(spark.conf.get("spark.sql.files.openCostInBytes") == oldCost)
+    // and no default is left behind as an explicit setting
+    assert(spark.conf.getAll == confs)
     // the other direction: one oversize file gets SPLIT toward the
     // target — possible only at row-group granularity, so write the
     // fixture with small row groups (as a genuinely big file would have

@@ -11,7 +11,8 @@ import scala.jdk.CollectionConverters._
   * [[GraftSession]], so the config Verify checks is the config Bench
   * times, users run and the specs see, and the retired tuning knobs stay
   * retired. Also pins that the builder's codegen cache size is the one
-  * in force in a JVM whose sessions all come from it. */
+  * in force in a JVM whose sessions all come from it, and that the main
+  * sources read lake tables only through [[engine.SourceRegistry]]. */
 class SessionConfigSpec extends AnyFunSuite {
 
   /** Every Scala source but this file, which names the patterns it scans for. */
@@ -42,6 +43,15 @@ class SessionConfigSpec extends AnyFunSuite {
       "SPARK_GRAFT_SMOKE_ALPHA", "SPARK_GRAFT_SMOKE_ADJ_REPS")
     val readers = for ((p, text) <- sources; k <- knobs if text.contains(k)) yield s"$p: $k"
     assert(readers.isEmpty)
+  }
+
+  test("lake tables are read only through SourceRegistry") {
+    val main = sources.filter(_._1.startsWith(Paths.get("src/main/scala")))
+    def spelled(s: String) =
+      main.collect { case (p, text) if text.contains(s) => p.getFileName.toString }
+    assert(spelled("read.parquet(s\"$sf/").filterNot(_ == "SourceRegistry.scala").isEmpty)
+    for (helper <- Seq("def docs(", "def events(", "def emb("))
+      assert(spelled(helper).isEmpty, helper)
   }
 
   test("a gate compiled before 100+ other classes recompiles nothing (the builder sized the cache)") {

@@ -192,6 +192,41 @@ class SourceRegistrySpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("parquet on an unchanged path returns the same DataFrame and starts no Spark job") {
+    val path = lake("ops_same", "parquet").source
+    assert(jobsDuring(spark.read.parquet(path)) > 0, "a plain read infers the schema in a job")
+    val first = SourceRegistry.parquet(spark, path)
+    var second: DataFrame = null
+    assert(jobsDuring { second = SourceRegistry.parquet(spark, path) } == 0)
+    assert(second eq first)
+  }
+
+  test("a parquet directory overwritten through Spark shows the new rows on the next parquet call") {
+    val path = lake("ops_overwrite", "parquet").source
+    assert(SourceRegistry.parquet(spark, path).count() == 3)
+    write(spark.range(10, 15).selectExpr("id AS k", "concat('w', id) AS v"), "parquet", path,
+      "overwrite")
+    val df = SourceRegistry.parquet(spark, path)
+    assert(df.select(col("k")).collect().map(_.getLong(0)).sorted.toSeq == (10L until 15L))
+    assert(df.filter(col("v").startsWith("v")).count() == 0)
+  }
+
+  test("l02 and l07 write then re-read their directory through the memo: two runs equal the oracle") {
+    val sf = "/root/testdata/sf0.001"
+    spark.read.parquet(s"$sf/documents.parquet").createOrReplaceTempView("documents")
+    try {
+      for ((gate, dir) <- Seq("l02_compact_small_files" -> "compact_out",
+          "l07_vacuum_orphans" -> "vacuum_tbl")) {
+        // the oracle SQL is DuckDB's, but these two run unchanged on Spark
+        val want = spark.sql(OpsQueries.oracleSql(gate)).collect().toSeq
+        for (run <- 1 to 2)
+          assert(SparkEntry.queries(gate)(spark, sf).collect().toSeq == want, s"$gate run $run")
+        assert(SourceRegistry.memoEntries.exists(e => (e._1 eq spark) && e._3.endsWith(s"/$dir")),
+          s"$gate read $dir around the memo")
+      }
+    } finally spark.catalog.dropTempView("documents")
+  }
+
   // last: it stops the shared SparkContext; the session that replaces it
   // is built with the same settings the other suites use
   test("entries of a stopped session are dropped on the next load") {
