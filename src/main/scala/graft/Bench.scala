@@ -28,15 +28,18 @@ import scala.jdk.CollectionConverters._
   * artifact: the wall-clock budget decides which optional blocks are
   * skipped, so it is spent sweeps → adjudication → baseline write → smoke.
   *
-  * Methodology (single-shot timings on a shared host swing ±2×, and the
-  * operators cache aggressively without unpersisting):
-  *  - the timing unit ([[time]]) is FULL materialization to a noop sink
-  *    (round 15; earlier rounds timed `.count()`, which Catalyst can prune
-  *    hard enough to elide a hot branch entirely — totals before/after
-  *    the switch are not comparable);
-  *  - the storage cache is cleared before EVERY timed invocation, so no
-  *    query's timing depends on what ran before it (MicroBench times
-  *    through the same function);
+  * Methodology (single-shot timings on a shared host swing ±2×):
+  *  - the timing unit ([[time]]) is one [[Gates.run]] of the gate call
+  *    plus FULL materialization to a noop sink (round 15; earlier rounds
+  *    timed `.count()`, which Catalyst can prune hard enough to elide a
+  *    hot branch entirely — totals before/after the switch are not
+  *    comparable);
+  *  - every invocation, timed or warm-up, goes through [[Gates.run]]:
+  *    after the clock stops it unpersists what the call persisted
+  *    (checkpoints included) and clears the CacheManager, so no query's
+  *    timing depends on what ran before it, and a call that leaves
+  *    threads, active queries or changed confs behind is FAILED
+  *    (MicroBench times through the same function);
   *  - ≥3 interleaved passes (full query sweep per pass, passes
   *    back-to-back), reporting per-query MIN as the steady-state estimate
   *    and max−min as the spread — a large spread marks the number as
@@ -329,19 +332,10 @@ object Bench {
     if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2
   }
 
-  /** The timing unit, shared with MicroBench: clear the storage cache
-    * (operators cache and never unpersist; without this, storage
-    * accumulates over the sweep and LRU churn taxes later queries), then
-    * FULL materialization through the noop sink, not `.count()`: Catalyst
-    * prunes a count() plan hard enough to elide entire branches — round 15
-    * found a 20 s/pass quadratic explode (t49/t18's bigram HOF) that every
-    * count-based timing had hidden. Throws what the gate throws. */
-  private[graft] def time(spark: SparkSession, q: Query, dir: String): Double = {
-    spark.catalog.clearCache()
-    val t0 = System.nanoTime()
-    q(spark, dir).write.mode("overwrite").format("noop").save()
-    (System.nanoTime() - t0) / 1e9
-  }
+  /** The timing unit, shared with MicroBench: the gate call plus its
+    * noop sink, run by [[Gates.run]]. */
+  private[graft] def time(spark: SparkSession, q: Query, dir: String): Gates.Outcome[Unit] =
+    Gates.run(spark, q(spark, dir))(Gates.noop)
 
   /** Provision `dir`'s derived fixtures and Derby table, outside any timed
     * region. A dir without the TPC-H tables has none to provision; a gate
@@ -544,14 +538,10 @@ object Bench {
     }
 
     def time(name: String, q: Query, dir: String): Option[Double] = {
-      val before = GraftSession.codegen()
-      try Some(Bench.time(spark, q, dir))
-      catch { case e: Throwable =>
-        failures.getOrElseUpdate(name,
-          s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("").take(200)}")
-        None
-      } finally codegen((dir, name)) =
-        codegen.getOrElse((dir, name), GraftSession.Codegen.Zero) + (GraftSession.codegen() - before)
+      val o = Bench.time(spark, q, dir)
+      codegen((dir, name)) = codegen.getOrElse((dir, name), GraftSession.Codegen.Zero) + o.codegen
+      o.failure.foreach(failures.getOrElseUpdate(name, _))
+      o.result.toOption.map(_ => o.seconds)
     }
 
     /** Once per dir, before its first timed rep: stream every byte under
@@ -655,7 +645,7 @@ object Bench {
               // that already blew the cap
               if (OutputBoundSmoke(q) && t <= SmokeCapSec &&
                   !overBudget(s"smoke_rows:$q@$sfx")) {
-                val n = try queries(q)(spark, d).count() catch { case _: Throwable => -1L }
+                val n = Gates.run(spark, queries(q)(spark, d))(_.count()).result.getOrElse(-1L)
                 if (n >= 0) rowsTaken(q) = rowsTaken.getOrElse(q, Vector.empty) :+ (sfx, n)
               }
               if (t > SmokeCapSec) { stop = true; capped :+= q }
@@ -728,12 +718,11 @@ object Bench {
     val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // session warmup (JIT, codegen, FileSystem init, ops codegen paths)
-    // on the smallest sf, outside the timings
-    try {
-      SparkEntry.entry(spark).count()
-      Seq("t01_token_count", "d01_dedup_exact", "s01_cosine_topk")
-        .foreach(q => SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").count())
-    } catch { case _: Throwable => () }
+    // on the smallest sf, outside the timings; a failed warm-up is not
+    // recorded, the timed reps record their own failures
+    Gates.run(spark, SparkEntry.entry(spark))(_.count())
+    Seq("t01_token_count", "d01_dedup_exact", "s01_cosine_topk")
+      .foreach(q => Gates.run(spark, SparkEntry.queries(q)(spark, "/root/testdata/sf0.001"))(_.count()))
 
     val m = new Measure(spark, t0, budgetSec)
     val queries = SparkEntry.benchQueries

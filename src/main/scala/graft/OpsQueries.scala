@@ -344,8 +344,13 @@ object OpsQueries {
       val annRes = new Array[Set[Long]](qs.length)
       annRes(0) = annIds(qs.head._2) // sequential: builds the gate's index
       if (qs.length > 1) {
+        val threads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(8, qs.length - 1), (r: Runnable) => new Thread(r, AnnProbeThread))
+          math.min(8, qs.length - 1), { (r: Runnable) =>
+            val t = new Thread(r, AnnProbeThread)
+            threads.add(t)
+            t
+          })
         try {
           val futs = (1 until qs.length).map { i =>
             pool.submit(new java.util.concurrent.Callable[Unit] {
@@ -357,9 +362,14 @@ object OpsQueries {
           // a failed probe: stop the others before surfacing its cause
           case e: java.util.concurrent.ExecutionException =>
             pool.shutdownNow()
-            pool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)
             throw Option(e.getCause).getOrElse(e)
-        } finally pool.shutdown()
+        } finally {
+          // every probe thread has exited when the gate returns or throws:
+          // a terminated pool's last worker can still be alive, so join
+          pool.shutdown()
+          pool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)
+          threads.forEach(_.join())
+        }
       }
       val recalls = qs.zipWithIndex.map { case ((qid, _), i) =>
         (annRes(i) & exact.getOrElse(qid, Set.empty)).size / 10.0

@@ -32,8 +32,7 @@ object Verify {
     // args: sfDir outDir [comma-separated query-name filter — local
     // debugging aid; the driver always runs the full set]
     val (sfDir, outDir) = (args(0), args(1))
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
+    val names = Gates.select(args.lift(2))
     // Default matches the DRIVER's local[32]: rounds 10-11 both shipped a
     // red that only reproduced at high core counts (split sizing depends
     // on defaultParallelism) because local verification ran at 4 CPUs.
@@ -44,15 +43,13 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // A gate that throws must surface as a RED row, not a silent absence:
     // round 6 shipped a crashing query and the correctness artifact simply
-    // had no row for it. Collect failures into _errors.json so the compare
-    // script (and the judge) can distinguish "errored" from "missing".
+    // had no row for it. Collect failures (a throw or a hygiene failure,
+    // see Gates) into _errors.json so the compare script can distinguish
+    // "errored" from "missing".
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val (t0, cg0) = (System.nanoTime(), GraftSession.codegen())
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try {
-        val df = fn(spark, sfDir)
+    names.foreach { name =>
+      val o = Gates.run(spark, SparkEntry.queries(name)(spark, sfDir)) { df =>
         // fail a non-portable schema fast, with the stringify recipe,
         // instead of letting it reach the oracle compare
         val bad = nonPortableColumns(df.schema)
@@ -62,9 +59,9 @@ object Verify {
             " — stringify with concat_ws(' ', col) (Spark) / array_to_string(..., ' ') (oracle)")
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       }
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        errors(name) = s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("")}".take(500)
+      o.failure.foreach { f =>
+        System.err.println(s"[verify] $name failed: $f")
+        errors(name) = f
       }
     }
     val (passSec, cg) = ((System.nanoTime() - t0) / 1e9, GraftSession.codegen() - cg0)
@@ -78,7 +75,7 @@ object Verify {
     // loud but exit-0: the driver must still run the DuckDB compare on the
     // queries that DID produce output (a nonzero exit could discard them)
     if (errors.nonEmpty)
-      System.err.println(s"[verify] ${errors.size} queries THREW: ${errors.keys.mkString(", ")}")
+      System.err.println(s"[verify] ${errors.size} gates FAILED: ${errors.keys.mkString(", ")}")
     // the pass's cost and its codegen share; with a cache that evicts
     // nothing, the count is the distinct classes the gates compile
     println(f"[verify] pass $passSec%.1f s, ${cg.compiles} classes compiled in ${cg.ms}%.0f ms")

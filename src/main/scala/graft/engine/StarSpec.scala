@@ -16,6 +16,10 @@ import graft.model._
   */
 object StarSpec {
 
+  /** A star, DESCRIBE subject or path predicate that no mapped source can
+    * answer: the query is well formed, the lake cannot serve it. */
+  final class NoRelevantSource(message: String) extends IllegalArgumentException(message)
+
   /** One projected column: resolved source attribute, FnO transform
     * chain (may be empty), output column name in the star's
     * `{star}__{var}` contract. */
@@ -90,7 +94,7 @@ object StarSpec {
     }.toMap
 
     val (preds, relevantSources) = relevant(q, star, mappings)
-    require(relevantSources.nonEmpty,
+    if (relevantSources.isEmpty) throw new NoRelevantSource(
       s"no relevant source for star ?$star (predicates: ${preds.mkString(", ")})")
 
     val sources = relevantSources.map { m =>
@@ -152,7 +156,7 @@ object StarSpec {
     require(q.stars.contains(v),
       s"DESCRIBE ?$v requires ?$v to be a star subject in the WHERE body")
     val (_, sources) = relevant(q, v, mappings)
-    require(sources.nonEmpty, s"no relevant source for DESCRIBE ?$v")
+    if (sources.isEmpty) throw new NoRelevantSource(s"no relevant source for DESCRIBE ?$v")
     sources.flatMap { m =>
       m.classIri.map(_ => Scan(m, idOf(m, "sid"), TriplePattern.RdfType, None)).toSeq ++
         expansion(Seq(m), _ => true, "sid", "o")
@@ -186,7 +190,7 @@ object StarSpec {
     cl.predicates.zipWithIndex.map { case (p, i) =>
       val sources = if (i == 0) starSources else mappings.relevantFor(Seq(p), None)
       val scans = expansion(sources, _ == p, "src", "dst")
-      require(scans.nonEmpty, s"no relevant source maps the path predicate <$p>")
+      if (scans.isEmpty) throw new NoRelevantSource(s"no relevant source maps the path predicate <$p>")
       scans
     }
   }

@@ -239,21 +239,28 @@ object EventStreams {
     normalizeTs(streamParquet(spark, parquetPath, "events_stream"))
   }
 
-  /** File-source stream over one parquet file: the source monitors a
-    * directory, so the file is exposed through a symlink in its
-    * [[stageDir]]. Works for ANY table, not just events. */
+  /** File-source stream over one parquet table, a single file or a
+    * directory of part files (as `graft.tools.DataGen` writes them). The
+    * source monitors a directory: a directory is streamed as it is, a
+    * single file through a symlink in its [[stageDir]]. Works for ANY
+    * table, not just events. */
   def streamParquet(spark: SparkSession, parquetPath: String,
       label: String): DataFrame = {
     val schema = SourceRegistry.parquet(spark, parquetPath).schema
-    val dir = Files.createDirectories(stageDir(spark, parquetPath, label))
-    val link = dir.resolve("part-0.parquet")
-    // a dangling link (target regenerated/removed) reads as not-exists
-    // under follow semantics but still blocks createSymbolicLink —
-    // remove it rather than throw FileAlreadyExists
-    if (Files.exists(link, LinkOption.NOFOLLOW_LINKS) && !Files.exists(link))
-      Files.delete(link)
-    if (!Files.exists(link, LinkOption.NOFOLLOW_LINKS))
-      Files.createSymbolicLink(link, Paths.get(parquetPath).toAbsolutePath)
+    val dir =
+      if (Files.isDirectory(Paths.get(parquetPath))) Paths.get(parquetPath)
+      else {
+        val dir = Files.createDirectories(stageDir(spark, parquetPath, label))
+        val link = dir.resolve("part-0.parquet")
+        // a dangling link (target regenerated/removed) reads as not-exists
+        // under follow semantics but still blocks createSymbolicLink —
+        // remove it rather than throw FileAlreadyExists
+        if (Files.exists(link, LinkOption.NOFOLLOW_LINKS) && !Files.exists(link))
+          Files.delete(link)
+        if (!Files.exists(link, LinkOption.NOFOLLOW_LINKS))
+          Files.createSymbolicLink(link, Paths.get(parquetPath).toAbsolutePath)
+        dir
+      }
     spark.readStream.schema(schema).parquet(dir.toString)
   }
 

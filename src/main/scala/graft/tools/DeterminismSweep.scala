@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry}
+import graft.{Gates, GraftSession, SparkEntry}
 import org.apache.spark.sql.SparkSession
 
 /** Full-suite partition-layout determinism sweep — DeterminismSpec's
@@ -18,24 +18,17 @@ import org.apache.spark.sql.SparkSession
 object DeterminismSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
+    val names = Gates.select(args.lift(1)).sorted
     val base = GraftSession.builder(s"local[${GraftSession.cpus()}]", 4).getOrCreate()
     base.sparkContext.setLogLevel("ERROR")
     val alt = base.newSession()
     alt.conf.set("spark.sql.shuffle.partitions", "13")
 
+    // both sessions share one CacheManager; the runner clears it after
+    // every call, so alt never reads a frame base cached
     def fp(s: SparkSession, gate: String): Either[String, Seq[String]] =
-      try Right(SparkEntry.queries(gate)(s, sfDir).collect()
-        .map(_.toString).sorted.toSeq)
-      catch { case e: Throwable => Left(s"${e.getClass.getSimpleName}: ${e.getMessage}") }
+      Gates.run(s, SparkEntry.queries(gate)(s, sfDir))(_.collect().map(_.toString).sorted.toSeq).result
 
-    val names = args.lift(1) match {
-      case Some(list) =>
-        val want = list.split(",").map(_.trim).filter(_.nonEmpty)
-        val missing = want.filterNot(SparkEntry.queries.contains)
-        require(missing.isEmpty, s"unknown gates: ${missing.mkString(",")}")
-        want.toSeq.sorted
-      case None => SparkEntry.queries.keys.toSeq.sorted
-    }
     var bad = 0
     var err = 0
     for (g <- names) {
@@ -48,9 +41,9 @@ object DeterminismSweep {
             .getOrElse(s"sizes ${a.size} vs ${b.size}")
           println(s"DIVERGED $g: $firstDiff")
         case (Left(e), _) =>
-          err += 1; println(s"ERROR    $g (base): ${e.take(200)}")
+          err += 1; println(s"ERROR    $g (base): $e")
         case (_, Left(e)) =>
-          err += 1; println(s"ERROR    $g (alt): ${e.take(200)}")
+          err += 1; println(s"ERROR    $g (alt): $e")
       }
     }
     println(s"${names.size - bad - err}/${names.size} gates layout-independent" +

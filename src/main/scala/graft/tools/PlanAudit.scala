@@ -1,6 +1,7 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry, Verify}
+import graft.{Gates, GraftSession, SparkEntry, Verify}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 
 /** Physical-plan anti-pattern sweep over EVERY registered gate — the
@@ -38,6 +39,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
+    val names = Gates.select(args.lift(1))
     val spark = GraftSession.builder(s"local[${GraftSession.cpus()}]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -46,39 +48,30 @@ object PlanAudit {
     def hasGenerate(p: SparkPlan): Boolean =
       nodes(p).exists(_.nodeName.contains("Generate"))
 
-    val names = args.lift(1) match {
-      case Some(list) => list.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      case None => SparkEntry.queries.keys.toSeq.sorted
+    /** The gate's findings, one line each. */
+    def audit(name: String, df: DataFrame): Seq[String] = {
+      val nonPortable = Verify.nonPortableColumns(df.schema)
+      val all = nodes(df.queryExecution.executedPlan)
+      val carts = all.count(_.nodeName.contains("CartesianProduct"))
+      val badBcast = all.exists(n => n.nodeName.contains("BroadcastExchange") && hasGenerate(n))
+      Option.when(nonPortable.nonEmpty)(s"non-portable output column(s) " +
+        nonPortable.mkString(", ") + " — stringify with concat_ws(' ', col)").toSeq ++
+        Option.when(carts > 0 && !cartesianWhitelist.contains(name))(
+          s"$carts CartesianProduct node(s)") ++
+        Option.when(badBcast)("BroadcastExchange over a Generate " +
+          "(explode) subtree — size-misestimate broadcast")
     }
+
     var flagged = 0
     var errored = 0
     names.foreach { name =>
-      try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        val nonPortable = Verify.nonPortableColumns(df.schema)
-        if (nonPortable.nonEmpty) {
-          flagged += 1
-          println(s"FLAG $name: non-portable output column(s) " +
-            nonPortable.mkString(", ") + " — stringify with concat_ws(' ', col)")
-        }
-        val plan = df.queryExecution.executedPlan
-        val all = nodes(plan)
-        val carts = all.count(_.nodeName.contains("CartesianProduct"))
-        if (carts > 0 && !cartesianWhitelist.contains(name)) {
-          flagged += 1
-          println(s"FLAG $name: $carts CartesianProduct node(s)")
-        }
-        val badBcast = all.filter(n =>
-          n.nodeName.contains("BroadcastExchange") && hasGenerate(n))
-        if (badBcast.nonEmpty) {
-          flagged += 1
-          println(s"FLAG $name: BroadcastExchange over a Generate " +
-            s"(explode) subtree — size-misestimate broadcast")
-        }
-      } catch { case e: Throwable =>
-        errored += 1
-        println(s"ERR  $name: ${e.getClass.getSimpleName}: " +
-          s"${Option(e.getMessage).getOrElse("").take(160)}")
+      Gates.run(spark, SparkEntry.queries(name)(spark, sfDir))(audit(name, _)).result match {
+        case Right(findings) =>
+          flagged += findings.size
+          findings.foreach(f => println(s"FLAG $name: $f"))
+        case Left(e) =>
+          errored += 1
+          println(s"ERR  $name: $e")
       }
     }
     println(s"${names.size - flagged - errored}/${names.size} gates clean " +

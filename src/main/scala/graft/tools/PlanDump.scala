@@ -1,13 +1,14 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry}
+import graft.{Gates, GraftSession, SparkEntry}
 
 /** The plan printer: for each named gate, its formatted physical plan —
   * the plan-audit loop: check PushedFilters reach the scans, small dims
-  * broadcast, and WholeStageCodegen spans stay wide — plus a
-  * collect()-based timing on top of Bench/MicroBench's noop-sink unit;
-  * the collect additionally pays row transfer to the driver, which makes
-  * driver-bound result shapes visible. (Historical note: before the
+  * broadcast, and WholeStageCodegen spans stay wide — plus the
+  * [[graft.Gates.run]] timing of gate call, plan print and collect(); the
+  * collect, where Bench/MicroBench use the noop sink, additionally pays
+  * row transfer to the driver, which makes driver-bound result shapes
+  * visible. (Historical note: before the
   * noop-sink migration, Bench timed `.count()`, which Catalyst can prune
   * hard enough to hide a hot branch entirely — this tool is how the
   * 20 s/pass quadratic bigram explode was first seen.)
@@ -15,15 +16,16 @@ import graft.{GraftSession, SparkEntry}
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(gates, sfDir) = args
+    val names = Gates.select(Some(gates))
     val spark = GraftSession.builder("local[8]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    for (gate <- gates.split(",").map(_.trim).filter(_.nonEmpty)) {
+    for (gate <- names) {
       println(s"===== $gate =====")
-      val df = SparkEntry.queries(gate)(spark, sfDir)
-      df.explain("formatted")
-      val t0 = System.nanoTime()
-      df.collect()
-      println(f"elapsed: ${(System.nanoTime() - t0) / 1e9}%.1f s")
+      val o = Gates.run(spark, SparkEntry.queries(gate)(spark, sfDir)) { df =>
+        df.explain("formatted")
+        df.collect()
+      }
+      println(o.failure.fold(f"elapsed: ${o.seconds}%.1f s (gate call, plan print, collect)")(f => s"FAILED $f"))
     }
     spark.stop()
   }

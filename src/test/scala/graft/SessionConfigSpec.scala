@@ -62,7 +62,7 @@ class SessionConfigSpec extends AnyFunSuite {
       body
       (GraftSession.codegen() - before).compiles
     }
-    def gate(): Long = compiles(Bench.time(spark, SparkEntry.queries("g01_pagerank"), sf))
+    def gate(): Long = compiles(assert(Bench.time(spark, SparkEntry.queries("g01_pagerank"), sf).failure.isEmpty))
     gate()
     assert(gate() == 0, "g01 alone must compile nothing after its first call")
     // one distinct class per query: the literal is inlined into the

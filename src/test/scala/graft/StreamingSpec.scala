@@ -198,6 +198,19 @@ class StreamingSpec extends AnyFunSuite {
     assert(spark.streams.listListeners().length == listeners)
   }
 
+  test("a parquet directory of part files streams every row (the DataGen table layout)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_parts").resolve("events.parquet").toString
+    try {
+      spark.read.parquet("/root/testdata/sf0.001/events.parquet").repartition(3).write.parquet(dir)
+      assert(new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet")) == 3)
+      val streamed = EventStreams.runStreamingDedupBatch(spark, dir, "1 hour", Seq("user_id"))
+        .select("user_id").collect().map(_.getLong(0)).toSet
+      val users = spark.read.parquet(dir).select("user_id").distinct().collect().map(_.getLong(0)).toSet
+      assert(users.nonEmpty)
+      assert(streamed == users)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir).getParentFile)
+  }
+
   test("flatMapGroupsWithState sessionize under AvailableNow equals the batch window plan") {
     // the st05 gate's in-repo twin: one micro-batch over the single-file
     // source means every user's history reaches one group call, so the
