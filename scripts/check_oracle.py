@@ -65,11 +65,14 @@ def typeclass(t):
 fails = 0
 for name in sorted(oracle):
     files = glob.glob(f"{outdir}/{name}/*.parquet")
+    if name in errors:
+        # a gate Verify records as failed fails here too, output or not:
+        # a hygiene failure is found after the gate's sink has written
+        what = "failed after writing its output" if files else "query THREW"
+        print(f"ERR  {name}: {what}: {errors[name]}")
+        fails += 1; continue
     if not files:
-        if name in errors:
-            print(f"ERR  {name}: query THREW: {errors[name]}")
-        else:
-            print(f"FAIL {name}: no spark output (not in _errors.json either)")
+        print(f"FAIL {name}: no spark output (not in _errors.json either)")
         fails += 1; continue
     try:
         got_rel = con.sql(f"SELECT * FROM '{outdir}/{name}/*.parquet'")
@@ -114,5 +117,5 @@ matched = len(oracle) - fails
 for name in sorted(set(errors) - set(oracle)):
     print(f"ERR  {name}: query THREW (no oracle row): {errors[name]}")
     fails += 1
-print(f"\n{matched}/{len(oracle)} queries match; {len(errors)} threw")
+print(f"\n{matched}/{len(oracle)} queries match; {len(errors)} failed in Verify")
 sys.exit(1 if fails else 0)

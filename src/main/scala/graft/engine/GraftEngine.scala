@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions._
   * semantic column pruning, filters below joins) → inner equi-join chain →
   * GROUP BY/aggregates → ORDER BY → projection (+DISTINCT) → LIMIT.
   *
-  * Every plan fact (sources per star, expansions, join edges, variable
-  * resolution, residual filters) comes from [[StarSpec]], shared with
+  * Every plan fact (sources per star, expansions, join edges and the
+  * join chain over them, variable resolution, residual filters) comes
+  * from [[StarSpec]], shared with
   * [[SqlGenExecutor]]; this object renders it as Columns.
   *
   * Everything stays a lazy logical plan; Catalyst applies predicate
@@ -23,7 +24,7 @@ import org.apache.spark.sql.functions._
   * no driver-side data movement.
   */
 object GraftEngine {
-  import StarSpec.{JoinEdge, Scan}
+  import StarSpec.Scan
 
   def execute(spark: SparkSession, queryText: String, mappingsText: String,
       configText: String, reorderJoins: Boolean = false): DataFrame =
@@ -40,11 +41,9 @@ object GraftEngine {
     // by name (a var unbound in one branch surfaces as null there)
     var df =
       if (q.unionBranches.nonEmpty)
-        q.unionBranches.map { case (ps, fs) =>
-          compileBody(spark,
-            q.copy(patterns = ps, filters = fs, unionBranches = Nil, optionalStars = Set.empty),
-            mappings, config, reorderJoins)
-        }.reduce(_.unionByName(_, allowMissingColumns = true))
+        StarSpec.unionBranches(q)
+          .map(compileBody(spark, _, mappings, config, reorderJoins))
+          .reduce(_.unionByName(_, allowMissingColumns = true))
       else if (q.patterns.isEmpty && q.subqueries.nonEmpty) null
       else compileBody(spark, q, mappings, config, reorderJoins)
 
@@ -158,13 +157,33 @@ object GraftEngine {
   }
 
   /** Compile the WHERE body (stars → join chain → bare-variable columns),
-    * without solution modifiers: the Column rendering of [[StarSpec.body]]. */
+    * without solution modifiers: the Column rendering of [[StarSpec.body]]
+    * and its [[StarSpec.joinPlan]]. */
   private def compileBody(spark: SparkSession, q: ParsedQuery,
       mappings: MappingsDoc, config: LakeConfig,
       reorderJoins: Boolean): DataFrame = {
 
     val plan = StarSpec.body(q)
     val starNames = q.stars.keys.toSeq.sorted
+
+    // optional weight-heuristic join ordering (reference
+    // Planner.scala:90-170: per-store weight from config + filter bonus;
+    // the reference computes but never applies it — Run.scala:236/240).
+    // AQE re-plans physically at runtime either way; this only hands the
+    // plan the heaviest edges first. Planned before any star is built, so
+    // a refused join graph fails here in both engines.
+    val steps = StarSpec.joinPlan(plan,
+      if (!reorderJoins) plan.edges
+      else {
+        val weight: Map[String, Int] = starNames.map { s =>
+          val storeW = StarSpec.relevant(q, s, mappings)._2.headOption
+            .flatMap(m => config.weights.get(m.storeType)).getOrElse(1)
+          val vars = q.stars(s).collect { case TriplePattern(_, _, ObjVar(v)) => v }.toSet
+          val filterBonus = if (q.filters.exists(f => vars(f.varName) || f.varName == s)) 1 else 0
+          s -> (storeW + filterBonus)
+        }.toMap
+        plan.edges.sortBy(e => -(weight(e.fromStar) + weight(e.toStar)))
+      })
 
     // --- per-star ParSets (reference SparkExecutor.query, stage 6 of §3.1)
     val baseDFs: Map[String, DataFrame] = starNames.map { s =>
@@ -250,27 +269,15 @@ object GraftEngine {
       m.updated(cl.subjVar, valued)
     }
 
-    // optional weight-heuristic join ordering (reference
-    // Planner.scala:90-170: per-store weight from config + filter bonus;
-    // the reference computes but never applies it — Run.scala:236/240).
-    // AQE re-plans physically at runtime either way; this only seeds the
-    // left-deep chain with the heaviest edge first.
-    val ordered =
-      if (!reorderJoins) plan.edges
-      else {
-        val weight: Map[String, Int] = starNames.map { s =>
-          val storeW = StarSpec.relevant(q, s, mappings)._2.headOption
-            .flatMap(m => config.weights.get(m.storeType)).getOrElse(1)
-          val vars = q.stars(s).collect { case TriplePattern(_, _, ObjVar(v)) => v }.toSet
-          val filterBonus = if (q.filters.exists(f => vars(f.varName) || f.varName == s)) 1 else 0
-          s -> (storeW + filterBonus)
-        }.toMap
-        plan.edges.sortBy(e => -(weight(e.fromStar) + weight(e.toStar)))
-      }
-
-    // --- rename to bare variable names; star prefixes disappear here
-    joinChain(starDFs, ordered, q.optionalStars, q.minusStars, q.existsStars)
-      .select(plan.resolution.map { case (v, c) => col(c).as(v) }: _*)
+    // --- the join chain, then bare variable names; star prefixes
+    // disappear here
+    steps.foldLeft(null: DataFrame) {
+      case (_, StarSpec.Seed(s)) => starDFs(s)
+      case (df, StarSpec.Attach(s, e, kind)) =>
+        df.join(starDFs(s), col(e.leftCol) === col(e.rightCol), kind.sparkType)
+      case (df, StarSpec.Cycle(e)) => df.filter(col(e.leftCol) === col(e.rightCol))
+      case (df, StarSpec.Cross(s)) => df.crossJoin(starDFs(s))
+    }.select(plan.resolution.map { case (v, c) => col(c).as(v) }: _*)
   }
 
   /** Scan DataFrames of a source expansion, one source load per mapping. */
@@ -395,80 +402,5 @@ object GraftEngine {
       case (other, d) => sys.error(s"unsupported aggregate '$other'${if (d) " DISTINCT" else ""}")
     }
     c.as(a.alias)
-  }
-
-  /** Left-deep join chain with the reference's pending-queue semantics
-    * (SparkExecutor.scala:247-359), extended with left-outer attachment of
-    * OPTIONAL stars: required-required edges join inner (processed first);
-    * attaching an optional star preserves the already-joined side; a
-    * MINUS/EXISTS star is a leaf ([[StarSpec.body]] checks it) attached
-    * anti/semi. A genuinely disconnected component becomes a cross join
-    * (the reference would never drain it). */
-  private[engine] def joinChain(starDFs: Map[String, DataFrame], edges: Seq[JoinEdge],
-      optionalStars: Set[String] = Set.empty,
-      minusStars: Set[String] = Set.empty,
-      existsStars: Set[String] = Set.empty): DataFrame = {
-    if (edges.isEmpty) {
-      require(starDFs.size == 1,
-        s"${starDFs.size} stars but no join conditions (cartesian query)")
-      return starDFs.head._2
-    }
-    def opt(s: String) = optionalStars.contains(s) || minusStars.contains(s) ||
-      existsStars.contains(s)
-    // inner edges first so every required star is joined before any
-    // left-outer/anti attachment can touch it
-    val (innerEdges, outerEdges) = edges.partition(e => !opt(e.fromStar) && !opt(e.toStar))
-    var joinedStars = Set.empty[String]
-    var df: DataFrame = null
-    var pending = (innerEdges ++ outerEdges).toList
-    while (pending.nonEmpty) {
-      val idx =
-        if (df == null) 0
-        else pending.indexWhere(e =>
-          joinedStars.contains(e.fromStar) || joinedStars.contains(e.toStar))
-      if (idx >= 0) {
-        val e = pending(idx)
-        pending = pending.patch(idx, Nil, 1)
-        val cond = col(e.leftCol) === col(e.rightCol)
-        def attach(newStar: String): Unit = {
-          if (minusStars.contains(newStar))
-            df = df.join(starDFs(newStar), cond, "left_anti")
-          else if (existsStars.contains(newStar))
-            df = df.join(starDFs(newStar), cond, "left_semi")
-          else if (opt(newStar))
-            df = df.join(starDFs(newStar), cond, "left_outer")
-          else if (opt(e.fromStar) || opt(e.toStar))
-            sys.error(s"required star ?$newStar is reachable only through an " +
-              "OPTIONAL edge — rewrite the query so it joins a required star")
-          else df = df.join(starDFs(newStar), cond, "inner")
-          joinedStars += newStar
-        }
-        if (df == null) {
-          // seed: start from a required endpoint so outer joins preserve it
-          val (seed, other) =
-            if (!opt(e.fromStar)) (e.fromStar, e.toStar) else (e.toStar, e.fromStar)
-          df = starDFs(seed)
-          joinedStars += seed
-          attach(other)
-        } else (joinedStars.contains(e.fromStar), joinedStars.contains(e.toStar)) match {
-          case (true, true) => df = df.filter(cond) // cycle edge: extra condition
-          case (true, false) => attach(e.toStar)
-          case (false, true) => attach(e.fromStar)
-          case (false, false) => () // unreachable: idx guarantees a touch
-        }
-      } else {
-        // disconnected component: join it internally, then cross join on
-        val e = pending.head
-        pending = pending.tail
-        val jt = if (opt(e.fromStar) || opt(e.toStar)) "left_outer" else "inner"
-        val sub = starDFs(e.fromStar)
-          .join(starDFs(e.toStar), col(e.leftCol) === col(e.rightCol), jt)
-        df = df.crossJoin(sub)
-        joinedStars ++= Set(e.fromStar, e.toStar)
-      }
-    }
-    // stars with no edges at all (disconnected singletons)
-    for ((s, sdf) <- starDFs if !joinedStars.contains(s)) df = df.crossJoin(sdf)
-    df
   }
 }

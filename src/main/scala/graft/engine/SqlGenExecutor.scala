@@ -31,9 +31,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * SQL-expressible subset: parquet and csv sources (single or unioned
   * per star, reader options from the lake config),
-  * comparison/LIKE/IN filters, VALUES, inner + OPTIONAL (left) join
-  * chains, MINUS and FILTER (NOT) EXISTS (correlated [NOT] EXISTS
-  * subqueries), UNION branches (positional NULL-padded UNION ALL),
+  * comparison/LIKE/IN filters, VALUES, the join chain
+  * [[StarSpec.joinPlan]] plans for both engines (its inner and OPTIONAL
+  * attachments as JOIN / LEFT JOIN, cycle edges as WHERE conditions,
+  * its MINUS and FILTER (NOT) EXISTS attachments as correlated [NOT]
+  * EXISTS subqueries), UNION branches (positional NULL-padded UNION ALL),
   * SPARQL 1.1 §12 subqueries (recursively lowered derived tables joined
   * USING the shared projected vars), negated property sets (UNION ALL
   * over the non-excluded mapped predicates), BIND arithmetic and the
@@ -49,11 +51,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * TRANSFORMs (FK/ID column rewrites with skp filters on the
   * transformed value). Not lowered (the Column engine remains the
   * full-coverage path, exactly as the reference keeps Spark beside
-  * Presto): jdbc/rdf/connector stores, streaming, disconnected join
-  * graphs (the Column engine cross-joins them), a MINUS/EXISTS star
-  * joined to another one, and the GROUP_CONCAT/SAMPLE aggregates.
+  * Presto): jdbc/rdf/connector stores, streaming, a plan with a Cross
+  * step (a disconnected join graph or a star with no join edge beside
+  * others: the Column engine cross-joins them), and the
+  * GROUP_CONCAT/SAMPLE aggregates.
   */
 object SqlGenExecutor {
+  import StarSpec.{Attach, Cross, Cycle, JoinKind, Seed}
 
   /** A base table the generated SQL reads: view name, source path, store
     * type (parquet or csv) and the lake config's reader options. */
@@ -254,8 +258,6 @@ object SqlGenExecutor {
     def resolvedSql(q0: ParsedQuery): (String, Seq[(String, String)]) = {
     val body = StarSpec.body(q0)
     val qb = body.query
-    val dropStars = qb.minusStars ++ qb.existsStars
-    val keptNames = qb.stars.keys.toSeq.sorted.filterNot(dropStars.contains)
 
     /** One star → aliased subquery: per-source SELECT+rename (+UNION ALL),
       * wrapped with this star's filters/VALUES on the renamed columns —
@@ -399,70 +401,40 @@ object SqlGenExecutor {
       sql
     }
 
-    // ---- join chain (textual image of GraftEngine.joinChain) ----------
-    // MINUS / FILTER (NOT) EXISTS stars (leaves, one edge each) leave the
-    // join chain and become correlated [NOT] EXISTS subqueries — the SQL
-    // image of the engine's anti/semi attachment; that edge's other
-    // endpoint must be a kept star.
-    val (dropEdges, keptEdges) = body.edges.partition(e =>
-      dropStars.contains(e.fromStar) || dropStars.contains(e.toStar))
-    for (m <- dropStars; e <- dropEdges if e.fromStar == m || e.toStar == m)
-      require(!(dropStars.contains(e.fromStar) && dropStars.contains(e.toStar)),
-        s"MINUS/EXISTS star ?$m may not join another MINUS/EXISTS star")
-    val existsConds = dropEdges.map { e =>
-      val m = if (dropStars.contains(e.fromStar)) e.fromStar else e.toStar
+    // ---- join chain: StarSpec.joinPlan's steps; anti/semi attachments
+    // leave the FROM as correlated [NOT] EXISTS conditions, in edge order
+    val steps = StarSpec.joinPlan(body, body.edges)
+    require(!steps.exists(_.isInstanceOf[Cross]),
+      "disconnected join graph is not SQL-lowered")
+    val existsConds = steps.collect {
+      case a @ Attach(_, _, JoinKind.LeftAnti | JoinKind.LeftSemi) => a
+    }.sortBy(a => body.edges.indexOf(a.edge)).map { case Attach(m, e, kind) =>
       // correlate on the join edge: the subquery side qualified by its
       // alias; the outer side's column name is unique (star-prefixed), so
       // it resolves against the enclosing FROM
       val corr =
         if (m == e.toStar) s"g_x_$m.${e.rightCol} = ${e.leftCol}"
         else s"g_x_$m.${e.leftCol} = ${e.rightCol}"
-      val kw = if (qb.minusStars.contains(m)) "NOT EXISTS" else "EXISTS"
+      val kw = if (kind == JoinKind.LeftAnti) "NOT EXISTS" else "EXISTS"
       s"$kw (SELECT 1 FROM ${starSql(m)} g_x_$m WHERE $corr)"
     }
-
-    def opt(s: String) = qb.optionalStars.contains(s)
-    val cycleConds = Seq.newBuilder[String]
-    val fromSql = new StringBuilder
-    if (keptNames.size == 1) {
-      fromSql ++= s"${starSql(keptNames.head)} g_${keptNames.head}"
-    } else {
-      require(keptEdges.nonEmpty,
-        s"${keptNames.size} stars but no join conditions (cartesian query)")
-      val seed = if (!opt(keptEdges.head.fromStar)) keptEdges.head.fromStar
-        else keptEdges.head.toStar
-      var joined = Set(seed)
-      fromSql ++= s"${starSql(seed)} g_$seed"
-      var pending = keptEdges.toList
-      def attach(newStar: String, e: StarSpec.JoinEdge): Unit = {
-        val jt = if (opt(newStar)) "LEFT JOIN" else "JOIN"
-        fromSql ++= s" $jt ${starSql(newStar)} g_$newStar ON ${e.leftCol} = ${e.rightCol}"
-        joined += newStar
-      }
-      while (pending.nonEmpty) {
-        val idx = pending.indexWhere(e =>
-          joined.contains(e.fromStar) || joined.contains(e.toStar))
-        require(idx >= 0, "disconnected join graph is not SQL-lowered")
-        val e = pending(idx)
-        pending = pending.patch(idx, Nil, 1)
-        (joined.contains(e.fromStar), joined.contains(e.toStar)) match {
-          case (true, true) => cycleConds += s"${e.leftCol} = ${e.rightCol}"
-          case (true, false) => attach(e.toStar, e)
-          case (false, true) => attach(e.fromStar, e)
-          case (false, false) => ()
-        }
-      }
-    }
+    val fromSql = steps.collect {
+      case Seed(s) => s"${starSql(s)} g_$s"
+      case Attach(s, e, kind @ (JoinKind.Inner | JoinKind.LeftOuter)) =>
+        val jt = if (kind == JoinKind.LeftOuter) "LEFT JOIN" else "JOIN"
+        s" $jt ${starSql(s)} g_$s ON ${e.leftCol} = ${e.rightCol}"
+    }.mkString
+    val cycleConds = steps.collect { case Cycle(e) => s"${e.leftCol} = ${e.rightCol}" }
 
     // ---- bare-variable resolution (the shared rule)
     val resolution = body.resolution
     require(resolution.nonEmpty, "query resolves no variables")
-    val innerConds = cycleConds.result() ++ existsConds
+    val innerConds = cycleConds ++ existsConds
     val innerWhere =
       if (innerConds.isEmpty) "" else innerConds.mkString(" WHERE ", " AND ", "")
     val innerSql =
       s"SELECT ${resolution.map { case (v, c) => s"$c AS $v" }.mkString(", ")}" +
-        s" FROM ${fromSql.result()}$innerWhere"
+        s" FROM $fromSql$innerWhere"
     (innerSql, resolution)
     }
 
@@ -478,10 +450,7 @@ object SqlGenExecutor {
         val (sql, res) = resolvedSql(q)
         (sql, res.map(_._1))
       } else {
-        val parts = q.unionBranches.map { case (ps, fs) =>
-          resolvedSql(q.copy(patterns = ps, filters = fs,
-            unionBranches = Nil, optionalStars = Set.empty))
-        }
+        val parts = StarSpec.unionBranches(q).map(resolvedSql)
         val allVars = parts.flatMap(_._2.map(_._1)).distinct.sorted
         (parts.map { case (sql, res) =>
           val have = res.map(_._1).toSet

@@ -7,7 +7,8 @@ import graft.model._
   * column) projections each source contributes (with FnO transform
   * chains), which skp(v) row filters and FILTER/VALUES constraints land
   * on which columns, the source expansions of DESCRIBE, negated property
-  * sets and path edges, the join edges and the variable resolution.
+  * sets and path edges, the join edges, the join chain over them
+  * ([[joinPlan]]) and the variable resolution.
   *
   * Both engines render THIS single plan — [[GraftEngine]] and
   * [[StarCompiler]] as DataFrame Columns, [[SqlGenExecutor]] as SQL text
@@ -51,6 +52,30 @@ object StarSpec {
     def leftCol: String = StarCompiler.varCol(fromStar, toStar)
     def rightCol: String = StarCompiler.idCol(toStar)
   }
+
+  /** How a star attaches to the stars joined before it, named by its
+    * Spark join type: a required star joins inner, an OPTIONAL star left
+    * outer, a MINUS / FILTER NOT EXISTS star left anti and a FILTER
+    * EXISTS star left semi. */
+  sealed abstract class JoinKind(val sparkType: String)
+  object JoinKind {
+    case object Inner extends JoinKind("inner")
+    case object LeftOuter extends JoinKind("left_outer")
+    case object LeftAnti extends JoinKind("left_anti")
+    case object LeftSemi extends JoinKind("left_semi")
+  }
+
+  /** One step of a body's left-deep star join chain ([[joinPlan]]). */
+  sealed trait JoinStep
+  /** The chain starts from this star. */
+  final case class Seed(star: String) extends JoinStep
+  /** Join `star` to the chain on `edge`, whose other endpoint is joined. */
+  final case class Attach(star: String, edge: JoinEdge, kind: JoinKind) extends JoinStep
+  /** Both endpoints are joined: the edge is one more condition. */
+  final case class Cycle(edge: JoinEdge) extends JoinStep
+  /** Cross join `star`: the seed of a component no joined star reaches,
+    * or a star with no join edge at all. */
+  final case class Cross(star: String) extends JoinStep
 
   /** One WHERE body, planned. */
   final case class Body(
@@ -227,6 +252,73 @@ object StarSpec {
       }
     Body(qb, deferredFilters, deferredValues, needed, edges, resolution)
   }
+
+  /** The join chain over `edges` (the body's, in the order the caller
+    * wants them tried), with the reference's pending-queue semantics
+    * (SparkExecutor.scala:247-359): inner edges first, so every required
+    * star is joined before an outer, anti or semi attachment can touch
+    * it; each component seeded on a required endpoint, so outer joins
+    * preserve it; an edge between two joined stars is a cycle condition;
+    * a component no joined star reaches, and a star with no edge, is
+    * cross joined (the reference would never drain it). Both engines
+    * render these steps, so neither decides an order, a kind or a
+    * refusal of its own. Refused: more than one star and no edge (a
+    * cartesian query), a MINUS/EXISTS star joined only to another one,
+    * and a required star reachable only through a non-required one. */
+  def joinPlan(body: Body, edges: Seq[JoinEdge]): Seq[JoinStep] = {
+    val q = body.query
+    def kind(s: String): JoinKind =
+      if (q.minusStars(s)) JoinKind.LeftAnti
+      else if (q.existsStars(s)) JoinKind.LeftSemi
+      else if (q.optionalStars(s)) JoinKind.LeftOuter
+      else JoinKind.Inner
+    def required(s: String) = kind(s) == JoinKind.Inner
+    def dropped(s: String) = q.minusStars(s) || q.existsStars(s)
+    val stars = q.stars.keys.toSeq.sorted
+    if (edges.isEmpty) {
+      require(stars.size == 1, s"${stars.size} stars but no join conditions (cartesian query)")
+      return Seq(Seed(stars.head))
+    }
+    for (e <- edges) require(!(dropped(e.fromStar) && dropped(e.toStar)),
+      s"MINUS/EXISTS star ?${e.fromStar} may not join another MINUS/EXISTS star")
+
+    val (inner, outer) = edges.partition(e => required(e.fromStar) && required(e.toStar))
+    val steps = Vector.newBuilder[JoinStep]
+    var joined = Set.empty[String]
+    var pending = (inner ++ outer).toList
+    while (pending.nonEmpty) {
+      pending.indexWhere(e => joined(e.fromStar) || joined(e.toStar)) match {
+        case -1 =>
+          val e = pending.find(e => required(e.fromStar) || required(e.toStar))
+            .getOrElse(pending.head)
+          val seed = if (required(e.fromStar)) e.fromStar else e.toStar
+          steps += (if (joined.isEmpty) Seed(seed) else Cross(seed))
+          joined += seed
+        case i =>
+          val e = pending(i)
+          pending = pending.patch(i, Nil, 1)
+          if (joined(e.fromStar) && joined(e.toStar)) steps += Cycle(e)
+          else {
+            val (star, from) =
+              if (joined(e.fromStar)) (e.toStar, e.fromStar) else (e.fromStar, e.toStar)
+            require(required(from) || !required(star),
+              s"required star ?$star is reachable only through an OPTIONAL edge — " +
+                "rewrite the query so it joins a required star")
+            steps += Attach(star, e, kind(star))
+            joined += star
+          }
+      }
+    }
+    steps ++= stars.filterNot(joined).map(Cross)
+    steps.result()
+  }
+
+  /** `{ A } UNION { B }`: each branch as a query of its own, with the
+    * branch's patterns and filters and no OPTIONAL stars. */
+  def unionBranches(q: ParsedQuery): Seq[ParsedQuery] =
+    q.unionBranches.map { case (ps, fs) =>
+      q.copy(patterns = ps, filters = fs, unionBranches = Nil, optionalStars = Set.empty)
+    }
 
   /** FILTERs on vars no star binds (BIND outputs, subquery outputs): the
     * per-star compile never sees them, so they apply after the body,

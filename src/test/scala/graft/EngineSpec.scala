@@ -98,6 +98,16 @@ class EngineSpec extends AnyFunSuite {
     assert(none.count() == 0)
   }
 
+  test("a star with no join edge is cross joined onto the chain") {
+    // 1500 orders with their customer, times the 5 regions ?r ranges over
+    val df = graft.fixtures.TpchLake.run(spark, sf,
+      """PREFIX g: <http://graft.io/schema/>
+        |SELECT ?n ?o ?rn WHERE {
+        |  ?c g:custName ?n . ?o g:customer ?c . ?r g:regionName ?rn .
+        |}""".stripMargin)
+    assert(df.count() == 7500)
+  }
+
   test("unsatisfiable star fails with a clear error") {
     val e = intercept[IllegalArgumentException] {
       graft.fixtures.TpchLake.run(spark, sf,

@@ -96,6 +96,13 @@ class SqlGenSpec extends AnyFunSuite {
         |      ?o g:customer ?c . ?o g:totalprice ?tp .
         |    } GROUP BY ?c }
         |}""".stripMargin, "SELECT *")
+    // a star with no join edge beside joined ones is a Cross step of the
+    // shared join plan: the Column engine cross-joins it, SQL refuses
+    // (the lowering once left ?r out of the FROM)
+    refuse(
+      """SELECT ?n ?o ?rn WHERE {
+        |  ?c g:custName ?n . ?o g:customer ?c . ?r g:regionName ?rn .
+        |}""".stripMargin, "disconnected join graph is not SQL-lowered")
   }
 
   test("both engines refuse the same bad queries with the same message") {
@@ -110,7 +117,18 @@ class SqlGenSpec extends AnyFunSuite {
       "SELECT ?r ?v WHERE { ?r a g:Region . ?r !g:regionName ?v }" ->
         "excludes every mapped predicate",
       "SELECT ?r ?t WHERE { ?r (g:regionName/g:noSuchHop)+ ?t }" ->
-        "no relevant source maps the path predicate <http://graft.io/schema/noSuchHop>")
+        "no relevant source maps the path predicate <http://graft.io/schema/noSuchHop>",
+      // the join plan's refusals: a required star behind an OPTIONAL one
+      // (SQL once lowered it as an inner join after the LEFT JOIN) and a
+      // MINUS group whose two stars join only each other (the Column
+      // engine once cross-joined it, removing nothing)
+      """SELECT ?l ?cn WHERE {
+        |  ?l g:order ?o . OPTIONAL { ?o g:customer ?c } ?c g:custName ?cn .
+        |}""".stripMargin -> "required star ?c is reachable only through an OPTIONAL edge",
+      """SELECT ?c ?n WHERE {
+        |  ?c g:custName ?n .
+        |  MINUS { ?m1 g:order ?m2 . ?m2 g:totalprice ?tp }
+        |}""".stripMargin -> "MINUS/EXISTS star ?m1 may not join another MINUS/EXISTS star")
     for ((sparql, needle) <- bad) {
       val q = SparqlParser.parse(FixP + sparql)
       val viaColumns = intercept[IllegalArgumentException] {
