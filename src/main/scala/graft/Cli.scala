@@ -41,7 +41,7 @@ object Cli {
   def main(args: Array[String]): Unit = {
     if (args.length < 3) {
       System.err.println("usage: graft.Cli <query.sparql> <mappings.ttl> <config.json> " +
-        "[master] [reorder|sqlgen]")
+        "[master] [sqlgen]")
       sys.exit(Usage)
     }
     val master = args.lift(3).getOrElse("local[*]")
@@ -66,7 +66,7 @@ object Cli {
         if (mode == "sqlgen") {
           println(s"-- generated SQL:\n${SqlGenExecutor.lower(q, m, c).sql}")
           SqlGenExecutor.execute(spark, q, m, c)
-        } else GraftEngine.executeParsed(spark, q, m, c, reorderJoins = mode == "reorder")
+        } else GraftEngine.executeParsed(spark, q, m, c)
       df.show(20, truncate = false)
       println(s"total: ${df.count()} rows")
       0

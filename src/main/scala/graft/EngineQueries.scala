@@ -290,8 +290,8 @@ object EngineQueries {
       "SELECT DISTINCT CAST(l_orderkey AS VARCHAR) AS s, " +
         "'http://graft.io/schema/flagged' AS p, l_returnflag AS o FROM lineitem"),
 
-    // FILTER EXISTS → left-semi star attachment (solutions kept iff the
-    // group matches; the group's star contributes no columns)
+    // FILTER EXISTS → the group's body left-semi joined on the shared
+    // ?c (solutions kept iff the group matches; it contributes no columns)
     ("q37_exists",
       """SELECT ?cname ?bal WHERE {
         |  ?c g:custName ?cname . ?c g:acctbal ?bal .
@@ -301,9 +301,8 @@ object EngineQueries {
       "SELECT c_name AS cname, c_acctbal AS bal FROM customer " +
         "WHERE c_acctbal > 9000 AND EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)"),
 
-    // FILTER NOT EXISTS → the MINUS (left-anti) machinery; on this star
-    // fragment (group must join the outer query on a variable) the two
-    // constructs coincide
+    // FILTER NOT EXISTS → a MINUS group (left anti join on the shared
+    // ?o): for a group sharing a variable the two constructs coincide
     ("q38_not_exists",
       """SELECT ?o ?total WHERE {
         |  ?o g:totalprice ?total . ?o g:orderstatus ?status .

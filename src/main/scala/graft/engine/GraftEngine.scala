@@ -11,11 +11,12 @@ import org.apache.spark.sql.functions._
   * Pipeline (reference Run.scala:17-318, re-expressed declaratively):
   * parse → star decomposition → join planning → per-star compile (scan,
   * semantic column pruning, filters below joins) → inner equi-join chain →
+  * nested groups (left outer / anti / semi joins on shared variables) →
   * GROUP BY/aggregates → ORDER BY → projection (+DISTINCT) → LIMIT.
   *
   * Every plan fact (sources per star, expansions, join edges and the
-  * join chain over them, variable resolution, residual filters) comes
-  * from [[StarSpec]], shared with
+  * join chain over them, variable resolution, group attachments, residual
+  * filters) comes from [[StarSpec]], shared with
   * [[SqlGenExecutor]]; this object renders it as Columns.
   *
   * Everything stays a lazy logical plan; Catalyst applies predicate
@@ -27,13 +28,12 @@ object GraftEngine {
   import StarSpec.Scan
 
   def execute(spark: SparkSession, queryText: String, mappingsText: String,
-      configText: String, reorderJoins: Boolean = false): DataFrame =
+      configText: String): DataFrame =
     executeParsed(spark, SparqlParser.parse(queryText),
-      RmlParser.parse(mappingsText), ConfigParser.parse(configText), reorderJoins)
+      RmlParser.parse(mappingsText), ConfigParser.parse(configText))
 
   def executeParsed(spark: SparkSession, q: ParsedQuery,
-      mappings: MappingsDoc, config: LakeConfig,
-      reorderJoins: Boolean = false): DataFrame = {
+      mappings: MappingsDoc, config: LakeConfig): DataFrame = {
 
     val describeScans = q.describe.map(StarSpec.describeScans(q, _, mappings))
 
@@ -42,17 +42,16 @@ object GraftEngine {
     var df =
       if (q.unionBranches.nonEmpty)
         StarSpec.unionBranches(q)
-          .map(compileBody(spark, _, mappings, config, reorderJoins))
+          .map(b => compileBody(spark, StarSpec.body(b), mappings, config))
           .reduce(_.unionByName(_, allowMissingColumns = true))
-      else if (q.patterns.isEmpty && q.subqueries.nonEmpty) null
-      else compileBody(spark, q, mappings, config, reorderJoins)
+      else if (q.patterns.isEmpty && q.groups.isEmpty && q.subqueries.nonEmpty) null
+      else compileBody(spark, StarSpec.body(q), mappings, config)
 
     // --- SPARQL 1.1 §12 subqueries: each evaluates independently (its
     // own modifiers included) and natural-joins the outer solutions on
     // the variables they share — cross join when none (rare, legal)
     for (sub <- q.subqueries) {
-      val subDF = executeParsed(spark,
-        sub.copy(transforms = Nil), mappings, config, reorderJoins)
+      val subDF = executeParsed(spark, sub.copy(transforms = Nil), mappings, config)
       df =
         if (df == null) subDF
         else {
@@ -156,34 +155,14 @@ object GraftEngine {
     } else sliced
   }
 
-  /** Compile the WHERE body (stars → join chain → bare-variable columns),
-    * without solution modifiers: the Column rendering of [[StarSpec.body]]
-    * and its [[StarSpec.joinPlan]]. */
-  private def compileBody(spark: SparkSession, q: ParsedQuery,
-      mappings: MappingsDoc, config: LakeConfig,
-      reorderJoins: Boolean): DataFrame = {
+  /** Compile a planned WHERE body (stars → join chain → bare-variable
+    * columns → nested groups), without solution modifiers: the Column
+    * rendering of a [[StarSpec.Body]]. */
+  private def compileBody(spark: SparkSession, plan: StarSpec.Body,
+      mappings: MappingsDoc, config: LakeConfig): DataFrame = {
 
-    val plan = StarSpec.body(q)
+    val q = plan.query
     val starNames = q.stars.keys.toSeq.sorted
-
-    // optional weight-heuristic join ordering (reference
-    // Planner.scala:90-170: per-store weight from config + filter bonus;
-    // the reference computes but never applies it — Run.scala:236/240).
-    // AQE re-plans physically at runtime either way; this only hands the
-    // plan the heaviest edges first. Planned before any star is built, so
-    // a refused join graph fails here in both engines.
-    val steps = StarSpec.joinPlan(plan,
-      if (!reorderJoins) plan.edges
-      else {
-        val weight: Map[String, Int] = starNames.map { s =>
-          val storeW = StarSpec.relevant(q, s, mappings)._2.headOption
-            .flatMap(m => config.weights.get(m.storeType)).getOrElse(1)
-          val vars = q.stars(s).collect { case TriplePattern(_, _, ObjVar(v)) => v }.toSet
-          val filterBonus = if (q.filters.exists(f => vars(f.varName) || f.varName == s)) 1 else 0
-          s -> (storeW + filterBonus)
-        }.toMap
-        plan.edges.sortBy(e => -(weight(e.fromStar) + weight(e.toStar)))
-      })
 
     // --- per-star ParSets (reference SparkExecutor.query, stage 6 of §3.1)
     val baseDFs: Map[String, DataFrame] = starNames.map { s =>
@@ -230,9 +209,9 @@ object GraftEngine {
           // here the same way Closure.transitive drops them — a null dst
           // is "no hop", not a pair.
           edges.filter(col("src").isNotNull && col("dst").isNotNull)
-        else if (closureSeeded(q, cl))
+        else if (closureSeeded(plan, cl))
           graft.ops.Closure.fromSeeds(edges, base.select(col(sCol).as("src")))
-        else objectSeedLits(q, cl) match {
+        else objectSeedLits(plan, cl) match {
           // the REACHABLE endpoint is pinned to literals (= / VALUES):
           // reverse BFS from those seeds over the flipped edge relation
           // is O(reverse-reachable), vs materializing the full closure
@@ -271,13 +250,24 @@ object GraftEngine {
 
     // --- the join chain, then bare variable names; star prefixes
     // disappear here
-    steps.foldLeft(null: DataFrame) {
+    val solutions = plan.steps.foldLeft(null: DataFrame) {
       case (_, StarSpec.Seed(s)) => starDFs(s)
-      case (df, StarSpec.Attach(s, e, kind)) =>
-        df.join(starDFs(s), col(e.leftCol) === col(e.rightCol), kind.sparkType)
+      case (df, StarSpec.Attach(s, e)) => df.join(starDFs(s), col(e.leftCol) === col(e.rightCol))
       case (df, StarSpec.Cycle(e)) => df.filter(col(e.leftCol) === col(e.rightCol))
       case (df, StarSpec.Cross(s)) => df.crossJoin(starDFs(s))
     }.select(plan.resolution.map { case (v, c) => col(c).as(v) }: _*)
+
+    // --- nested groups, in query order: each group's body joins the
+    // solutions on the variables they share (SPARQL 1.1 §18.5)
+    if (plan.groups.isEmpty) solutions
+    else plan.groups.foldLeft(solutions) { (df, a) =>
+      val joinType = a.group.kind match {
+        case GroupKind.Optional => "left_outer"
+        case GroupKind.Minus => "left_anti"
+        case GroupKind.Exists => "left_semi"
+      }
+      df.join(compileBody(spark, a.body, mappings, config), a.shared, joinType)
+    }.select(plan.vars.map(col): _*)
   }
 
   /** Scan DataFrames of a source expansion, one source load per mapping. */
@@ -316,11 +306,11 @@ object GraftEngine {
     * suffices as the seed (constraints are ANDed and all re-apply after
     * the closure); inequality/regex forms are not enumerable and fall
     * back to the full closure. */
-  private def objectSeedLits(q: ParsedQuery, cl: PathClosure): Option[Seq[String]] = {
-    val eq = q.filters.collectFirst {
+  private def objectSeedLits(plan: StarSpec.Body, cl: PathClosure): Option[Seq[String]] = {
+    val eq = plan.deferredFilters.collectFirst {
       case f if f.varName == cl.objVar && f.op == "=" => Seq(f.value)
     }
-    eq.orElse(q.values.collectFirst { case (v, vals) if v == cl.objVar => vals })
+    eq.orElse(plan.deferredValues.collectFirst { case (v, vals) if v == cl.objVar => vals })
   }
 
   /** A closure star carrying any FILTER/VALUES on its subject or sibling
@@ -328,13 +318,15 @@ object GraftEngine {
     * full closure. Constraints on the closure's own object var don't
     * count: they are deferred past the closure (they bound the REACHABLE
     * end, not the start). */
-  private def closureSeeded(q: ParsedQuery, cl: PathClosure): Boolean = {
+  private def closureSeeded(plan: StarSpec.Body, cl: PathClosure): Boolean = {
+    val q = plan.query
     val deferred = q.closures.filter(_.subjVar == cl.subjVar).map(_.objVar).toSet
     val starVars = q.stars(cl.subjVar).collect {
       case TriplePattern(_, p, ObjVar(v)) if p != TriplePattern.RdfType => v
     }.toSet
     val vars = (starVars -- deferred) + cl.subjVar
-    q.filters.exists(f => vars(f.varName)) || q.values.exists(v => vars(v._1))
+    (q.filters ++ plan.deferredFilters).exists(f => vars(f.varName)) ||
+      (q.values ++ plan.deferredValues).exists(v => vars(v._1))
   }
 
   /** BIND expression → Column: arithmetic stays numeric (integer literals

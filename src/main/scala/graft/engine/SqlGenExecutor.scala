@@ -24,18 +24,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   SELECT [DISTINCT] vars/aggs FROM (
   *     SELECT star cols AS bare vars FROM
   *       (per-star SELECT+rename+filter [UNION ALL ...]) g_star
-  *       [LEFT] JOIN (...) g_other ON fk = id ...
+  *       JOIN (...) g_other ON fk = id ...
   *     [WHERE cycle-edge conds]
   *   ) g_q [GROUP BY][HAVING][ORDER BY][LIMIT]
+  * }}}
+  * and, when the body has nested groups, the resolved body wrapped as
+  * {{{
+  *   SELECT vars FROM (body) g_gb
+  *     LEFT JOIN (OPTIONAL group's body) g_g0 ON g_g0.v = g_gb.v ...
+  *   [WHERE [NOT] EXISTS (SELECT 1 FROM (group's body) g_g1 WHERE g_g1.v = g_gb.v ...)]
   * }}}
   *
   * SQL-expressible subset: parquet and csv sources (single or unioned
   * per star, reader options from the lake config),
-  * comparison/LIKE/IN filters, VALUES, the join chain
-  * [[StarSpec.joinPlan]] plans for both engines (its inner and OPTIONAL
-  * attachments as JOIN / LEFT JOIN, cycle edges as WHERE conditions,
-  * its MINUS and FILTER (NOT) EXISTS attachments as correlated [NOT]
-  * EXISTS subqueries), UNION branches (positional NULL-padded UNION ALL),
+  * comparison/LIKE/IN filters, VALUES, the inner join chain
+  * [[StarSpec.joinPlan]] plans for both engines (cycle edges as WHERE
+  * conditions), OPTIONAL, MINUS and FILTER [NOT] EXISTS groups (each a
+  * body of its own, rendered like the outer one, joined on the shared
+  * variables [[StarSpec.attachments]] picks: LEFT JOIN, correlated NOT
+  * EXISTS, correlated EXISTS), UNION branches (positional NULL-padded UNION ALL),
   * SPARQL 1.1 §12 subqueries (recursively lowered derived tables joined
   * USING the shared projected vars), negated property sets (UNION ALL
   * over the non-excluded mapped predicates), BIND arithmetic and the
@@ -57,7 +64,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * GROUP_CONCAT/SAMPLE aggregates.
   */
 object SqlGenExecutor {
-  import StarSpec.{Attach, Cross, Cycle, JoinKind, Seed}
+  import StarSpec.{Attach, Cross, Cycle, Seed}
 
   /** A base table the generated SQL reads: view name, source path, store
     * type (parquet or csv) and the lake config's reader options. */
@@ -251,12 +258,11 @@ object SqlGenExecutor {
       case other => sys.error(s"unsupported filter operator '$other'")
     }
 
-    /** One WHERE body (stars → join chain → bare-var resolution) → its
-      * resolution SELECT plus the resolved (var, column) list: the SQL
-      * rendering of [[StarSpec.body]]. Called once for a plain query, once
-      * per branch for UNION bodies. */
-    def resolvedSql(q0: ParsedQuery): (String, Seq[(String, String)]) = {
-    val body = StarSpec.body(q0)
+    /** One planned WHERE body (stars → join chain → bare-var resolution
+      * → nested groups) → its SELECT plus its output vars: the SQL
+      * rendering of a [[StarSpec.Body]]. Called once for a plain query,
+      * once per branch for UNION bodies, once per nested group. */
+    def resolvedSql(body: StarSpec.Body): (String, Seq[String]) = {
     val qb = body.query
 
     /** One star → aliased subquery: per-source SELECT+rename (+UNION ALL),
@@ -401,41 +407,47 @@ object SqlGenExecutor {
       sql
     }
 
-    // ---- join chain: StarSpec.joinPlan's steps; anti/semi attachments
-    // leave the FROM as correlated [NOT] EXISTS conditions, in edge order
-    val steps = StarSpec.joinPlan(body, body.edges)
-    require(!steps.exists(_.isInstanceOf[Cross]),
+    // ---- join chain: StarSpec.joinPlan's steps
+    require(!body.steps.exists(_.isInstanceOf[Cross]),
       "disconnected join graph is not SQL-lowered")
-    val existsConds = steps.collect {
-      case a @ Attach(_, _, JoinKind.LeftAnti | JoinKind.LeftSemi) => a
-    }.sortBy(a => body.edges.indexOf(a.edge)).map { case Attach(m, e, kind) =>
-      // correlate on the join edge: the subquery side qualified by its
-      // alias; the outer side's column name is unique (star-prefixed), so
-      // it resolves against the enclosing FROM
-      val corr =
-        if (m == e.toStar) s"g_x_$m.${e.rightCol} = ${e.leftCol}"
-        else s"g_x_$m.${e.leftCol} = ${e.rightCol}"
-      val kw = if (kind == JoinKind.LeftAnti) "NOT EXISTS" else "EXISTS"
-      s"$kw (SELECT 1 FROM ${starSql(m)} g_x_$m WHERE $corr)"
-    }
-    val fromSql = steps.collect {
+    val fromSql = body.steps.collect {
       case Seed(s) => s"${starSql(s)} g_$s"
-      case Attach(s, e, kind @ (JoinKind.Inner | JoinKind.LeftOuter)) =>
-        val jt = if (kind == JoinKind.LeftOuter) "LEFT JOIN" else "JOIN"
-        s" $jt ${starSql(s)} g_$s ON ${e.leftCol} = ${e.rightCol}"
+      case Attach(s, e) => s" JOIN ${starSql(s)} g_$s ON ${e.leftCol} = ${e.rightCol}"
     }.mkString
-    val cycleConds = steps.collect { case Cycle(e) => s"${e.leftCol} = ${e.rightCol}" }
+    val cycleConds = body.steps.collect { case Cycle(e) => s"${e.leftCol} = ${e.rightCol}" }
 
     // ---- bare-variable resolution (the shared rule)
     val resolution = body.resolution
     require(resolution.nonEmpty, "query resolves no variables")
-    val innerConds = cycleConds ++ existsConds
     val innerWhere =
-      if (innerConds.isEmpty) "" else innerConds.mkString(" WHERE ", " AND ", "")
+      if (cycleConds.isEmpty) "" else cycleConds.mkString(" WHERE ", " AND ", "")
     val innerSql =
       s"SELECT ${resolution.map { case (v, c) => s"$c AS $v" }.mkString(", ")}" +
         s" FROM $fromSql$innerWhere"
-    (innerSql, resolution)
+    if (body.groups.isEmpty) (innerSql, body.vars)
+    else {
+      // ---- nested groups: an OPTIONAL group LEFT JOINs on the shared
+      // vars and adds its own; MINUS / EXISTS groups become correlated
+      // [NOT] EXISTS conditions on the shared vars, which the body binds
+      // (StarSpec.attachments), so they commute with the LEFT JOINs
+      val (joins, conds) = body.groups.zipWithIndex.partitionMap { case (a, i) =>
+        val sql = resolvedSql(a.body)._1
+        val on = a.shared.map(v => s"g_g$i.$v = g_gb.$v").mkString(" AND ")
+        a.group.kind match {
+          case GroupKind.Optional => Left(s" LEFT JOIN ($sql) g_g$i ON $on")
+          case GroupKind.Minus => Right(s"NOT EXISTS (SELECT 1 FROM ($sql) g_g$i WHERE $on)")
+          case GroupKind.Exists => Right(s"EXISTS (SELECT 1 FROM ($sql) g_g$i WHERE $on)")
+        }
+      }
+      // a var the body does not bind is one OPTIONAL group's own
+      def from(v: String): String =
+        if (resolution.exists(_._1 == v)) "g_gb"
+        else "g_g" + body.groups.indexWhere(a =>
+          a.group.kind == GroupKind.Optional && a.body.vars.contains(v))
+      val where = if (conds.isEmpty) "" else conds.mkString(" WHERE ", " AND ", "")
+      (s"SELECT ${body.vars.map(v => s"${from(v)}.$v").mkString(", ")} " +
+        s"FROM ($innerSql) g_gb${joins.mkString}$where", body.vars)
+    }
     }
 
     // ---- body: one resolved block, or the positional NULL-padded
@@ -444,16 +456,15 @@ object SqlGenExecutor {
     // so every branch projects the union of all branches' variables in
     // one fixed sorted order, NULL where a branch leaves a var unbound)
     val (bodyBase, bodyBaseVars): (String, Seq[String]) =
-      if (q.patterns.isEmpty && q.unionBranches.isEmpty && q.subqueries.nonEmpty)
+      if (q.patterns.isEmpty && q.groups.isEmpty && q.unionBranches.isEmpty &&
+        q.subqueries.nonEmpty)
         (null, Nil) // subquery-only body: the first subquery IS the body
-      else if (q.unionBranches.isEmpty) {
-        val (sql, res) = resolvedSql(q)
-        (sql, res.map(_._1))
-      } else {
-        val parts = StarSpec.unionBranches(q).map(resolvedSql)
-        val allVars = parts.flatMap(_._2.map(_._1)).distinct.sorted
-        (parts.map { case (sql, res) =>
-          val have = res.map(_._1).toSet
+      else if (q.unionBranches.isEmpty) resolvedSql(StarSpec.body(q))
+      else {
+        val parts = StarSpec.unionBranches(q).map(b => resolvedSql(StarSpec.body(b)))
+        val allVars = parts.flatMap(_._2).distinct.sorted
+        (parts.map { case (sql, vars) =>
+          val have = vars.toSet
           val sel = allVars.map(v => if (have(v)) v else s"NULL AS $v")
           s"SELECT ${sel.mkString(", ")} FROM ($sql) g_ub"
         }.mkString(" UNION ALL "), allVars)

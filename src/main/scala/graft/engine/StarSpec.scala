@@ -8,7 +8,8 @@ import graft.model._
   * chains), which skp(v) row filters and FILTER/VALUES constraints land
   * on which columns, the source expansions of DESCRIBE, negated property
   * sets and path edges, the join edges, the join chain over them
-  * ([[joinPlan]]) and the variable resolution.
+  * ([[joinPlan]]), the variable resolution and how each nested group
+  * attaches ([[attachments]]).
   *
   * Both engines render THIS single plan — [[GraftEngine]] and
   * [[StarCompiler]] as DataFrame Columns, [[SqlGenExecutor]] as SQL text
@@ -53,24 +54,12 @@ object StarSpec {
     def rightCol: String = StarCompiler.idCol(toStar)
   }
 
-  /** How a star attaches to the stars joined before it, named by its
-    * Spark join type: a required star joins inner, an OPTIONAL star left
-    * outer, a MINUS / FILTER NOT EXISTS star left anti and a FILTER
-    * EXISTS star left semi. */
-  sealed abstract class JoinKind(val sparkType: String)
-  object JoinKind {
-    case object Inner extends JoinKind("inner")
-    case object LeftOuter extends JoinKind("left_outer")
-    case object LeftAnti extends JoinKind("left_anti")
-    case object LeftSemi extends JoinKind("left_semi")
-  }
-
-  /** One step of a body's left-deep star join chain ([[joinPlan]]). */
+  /** One step of a body's left-deep inner star join chain ([[joinPlan]]). */
   sealed trait JoinStep
   /** The chain starts from this star. */
   final case class Seed(star: String) extends JoinStep
   /** Join `star` to the chain on `edge`, whose other endpoint is joined. */
-  final case class Attach(star: String, edge: JoinEdge, kind: JoinKind) extends JoinStep
+  final case class Attach(star: String, edge: JoinEdge) extends JoinStep
   /** Both endpoints are joined: the edge is one more condition. */
   final case class Cycle(edge: JoinEdge) extends JoinStep
   /** Cross join `star`: the seed of a component no joined star reaches,
@@ -87,14 +76,28 @@ object StarSpec {
       query: ParsedQuery,
       deferredFilters: Seq[FilterCond],
       deferredValues: Seq[(String, Seq[String])],
-      /** [[neededVars]] of `query` */
+      /** [[neededVars]] of `query`, plus every var the enclosing body
+        * needs when this is a group's body */
       needed: Set[String],
-      /** distinct, in sorted-star order; every MINUS/EXISTS star touches
-        * exactly one */
+      /** distinct, in sorted-star order */
       edges: Seq[JoinEdge],
-      /** bare var → post-join column: [[resolveKept]], then the
-        * negated-set vars, first binding wins */
-      resolution: Seq[(String, String)])
+      /** the join chain over `edges` ([[joinPlan]]) */
+      steps: Seq[JoinStep],
+      /** bare var → post-join column: [[resolve]], then the negated-set
+        * vars, first binding wins */
+      resolution: Seq[(String, String)],
+      /** the query's nested groups in query order, each planned as a body
+        * of its own and joined to the chain's solutions once */
+      groups: Seq[Attachment],
+      /** the body's variables once its groups are attached, in output
+        * order: the star-bound ones and an OPTIONAL group's own ones,
+        * sorted, then the negated-set ones */
+      vars: Seq[String])
+
+  /** A nested group planned as a body of its own, joined to the
+    * enclosing body on `shared` — the group's variables the body binds —
+    * by one join of its kind ([[GroupKind]]). */
+  final case class Attachment(group: Group, body: Body, shared: Seq[String])
 
   /** A star's non-type predicates, its rdf:type class, and the sources
     * that map all of them (reference Mapper.scala:102-129). */
@@ -192,9 +195,6 @@ object StarSpec {
     * predicate of the subject star's relevant sources, into the star's
     * ID column and the var's column. */
   def negationScans(q: ParsedQuery, ng: NegatedPath, mappings: MappingsDoc): Seq[Scan] = {
-    require(q.stars.contains(ng.subjVar),
-      s"negated path subject ?${ng.subjVar} needs at least one other pattern " +
-        "(typically `a <Class>`) to select its sources")
     val scans = expansion(relevant(q, ng.subjVar, mappings)._2,
       p => !ng.excluded.contains(p),
       StarCompiler.idCol(ng.subjVar), StarCompiler.varCol(ng.subjVar, ng.objVar))
@@ -221,77 +221,114 @@ object StarSpec {
   }
 
   /** Plan one WHERE body: closure-endpoint deferral, needed vars, join
-    * edges (with the MINUS/EXISTS leaf check) and the var resolution. */
-  def body(q: ParsedQuery): Body = {
+    * edges and their chain, the var resolution, then each nested group
+    * as a body of its own ([[groupQuery]]) with its join variables. */
+  def body(q: ParsedQuery): Body = body(q, Set.empty)
+
+  private def body(q: ParsedQuery, outerNeeded: Set[String]): Body = {
     val closureVars = q.closures.map(_.objVar).toSet
     val (deferredFilters, filters) = q.filters.partition(f => closureVars(f.varName))
     val (deferredValues, values) = q.values.partition(v => closureVars(v._1))
     val qb = if (closureVars.isEmpty) q else q.copy(filters = filters, values = values)
-    val needed = neededVars(qb)
+    val needed = neededVars(qb) ++ outerNeeded
 
     val edges = (for {
       s <- qb.stars.keys.toSeq.sorted
       TriplePattern(_, p, ObjVar(o)) <- qb.stars(s)
       if p != TriplePattern.RdfType && qb.stars.contains(o) && o != s
     } yield JoinEdge(s, o)).distinct
-    // a MINUS/EXISTS star leaves no columns behind (anti/semi join) — it
-    // must be a leaf of the join graph
-    for (m <- qb.minusStars ++ qb.existsStars) {
-      val touching = edges.count(e => e.fromStar == m || e.toStar == m)
-      require(touching == 1,
-        s"MINUS/EXISTS star ?$m must connect to the rest of the query by exactly one join")
-    }
+    val steps = joinPlan(qb, edges)
+    for (n <- qb.negations) require(qb.stars.contains(n.subjVar),
+      s"negated path subject ?${n.subjVar} needs at least one other pattern " +
+        "outside any group (typically `a <Class>`) to select its sources")
 
     // negated-path vars (bound by the expansion, not by a pattern) resolve
     // to their star's expansion column
     val negRes = qb.negations.filter(n => needed(n.objVar))
       .map(n => n.objVar -> StarCompiler.varCol(n.subjVar, n.objVar))
-    val resolution = (resolveKept(qb, needed) ++ negRes)
+    val starRes = resolve(qb, needed)
+    val resolution = (starRes ++ negRes)
       .foldLeft(Vector.empty[(String, String)]) { (acc, vc) =>
         if (acc.exists(_._1 == vc._1)) acc else acc :+ vc
       }
-    Body(qb, deferredFilters, deferredValues, needed, edges, resolution)
+    val groups = q.groups.zip(attachments(qb, edges, resolution.map(_._1), q.groups))
+      .map { case (g, shared) => Attachment(g, body(groupQuery(q, g), needed), shared) }
+    val optionalVars = groups.filter(_.group.kind == GroupKind.Optional)
+      .flatMap(_.body.vars)
+    val vars = ((starRes.map(_._1) ++ optionalVars).distinct.sorted ++
+      negRes.map(_._1)).distinct
+    Body(qb, deferredFilters, deferredValues, needed, edges, steps, resolution, groups, vars)
   }
 
-  /** The join chain over `edges` (the body's, in the order the caller
-    * wants them tried), with the reference's pending-queue semantics
-    * (SparkExecutor.scala:247-359): inner edges first, so every required
-    * star is joined before an outer, anti or semi attachment can touch
-    * it; each component seeded on a required endpoint, so outer joins
-    * preserve it; an edge between two joined stars is a cycle condition;
-    * a component no joined star reaches, and a star with no edge, is
-    * cross joined (the reference would never drain it). Both engines
-    * render these steps, so neither decides an order, a kind or a
-    * refusal of its own. Refused: more than one star and no edge (a
-    * cartesian query), a MINUS/EXISTS star joined only to another one,
-    * and a required star reachable only through a non-required one. */
-  def joinPlan(body: Body, edges: Seq[JoinEdge]): Seq[JoinStep] = {
-    val q = body.query
-    def kind(s: String): JoinKind =
-      if (q.minusStars(s)) JoinKind.LeftAnti
-      else if (q.existsStars(s)) JoinKind.LeftSemi
-      else if (q.optionalStars(s)) JoinKind.LeftOuter
-      else JoinKind.Inner
-    def required(s: String) = kind(s) == JoinKind.Inner
-    def dropped(s: String) = q.minusStars(s) || q.existsStars(s)
+  /** A nested group as a query of its own, the way [[unionBranches]]
+    * builds a branch: the group's patterns and filters under the
+    * enclosing query's VALUES and inline transforms. */
+  private def groupQuery(q: ParsedQuery, g: Group): ParsedQuery =
+    q.copy(patterns = g.patterns, filters = g.filters, groups = Nil,
+      closures = Nil, negations = Nil, subqueries = Nil)
+
+  /** The join variables of each nested group, in query order: the
+    * group's variables the body binds (`bound`, in resolution order).
+    * Refused, in both engines alike: a FILTER inside the group on a
+    * variable the group does not bind; a group variable that only an
+    * earlier OPTIONAL group binds (not a well-designed pattern: its join
+    * would depend on whether that group matched); a group that shares no
+    * variable with the body; and shared variables in two components of
+    * the body's join graph (the group would join parts the chain only
+    * cross joins). */
+  def attachments(q: ParsedQuery, edges: Seq[JoinEdge], bound: Seq[String],
+      groups: Seq[Group]): Seq[Seq[String]] = {
+    val components = edges.foldLeft(q.stars.keys.toSeq.map(Set(_))) { (cs, e) =>
+      val (touched, rest) = cs.partition(c => c(e.fromStar) || c(e.toStar))
+      rest :+ touched.flatten.toSet
+    }
+    // the stars binding each var: its own star, the stars naming it as an
+    // object, the star of a negated set it is the value of
+    val binders: Map[String, Seq[String]] = (q.patterns.flatMap {
+      case TriplePattern(s, _, ObjVar(o)) => Seq(s -> s, o -> s)
+      case t => Seq(t.subject -> t.subject)
+    } ++ q.negations.map(n => n.objVar -> n.subjVar)).groupMap(_._1)(_._2)
+    groups.zipWithIndex.map { case (g, i) =>
+      val kw = g.kind.keyword
+      for (f <- g.filters) require(g.vars(f.varName),
+        s"FILTER(?${f.varName} ...) inside $kw must reference a variable bound by the group")
+      val earlierOptional = groups.take(i).filter(_.kind == GroupKind.Optional).flatMap(_.vars)
+      for (v <- g.vars.toSeq.sorted) require(bound.contains(v) || !earlierOptional.contains(v),
+        s"?$v in a $kw group is bound only by an earlier OPTIONAL group — " +
+          "bind it in the enclosing pattern")
+      val shared = bound.filter(g.vars)
+      require(shared.nonEmpty,
+        s"$kw group shares no variable with the enclosing pattern")
+      val parts = shared.flatMap(binders).map(s => components.indexWhere(_(s))).distinct
+      require(parts.size == 1,
+        s"$kw group joins ${shared.map("?" + _).mkString(", ")}, which lie in " +
+          "disconnected parts of the enclosing pattern — rewrite the query so the " +
+          "group joins one connected part")
+      shared
+    }
+  }
+
+  /** The inner join chain over a body's `edges`, with the reference's
+    * pending-queue semantics (SparkExecutor.scala:247-359): each
+    * component seeded on its first pending edge's star; an edge between
+    * two joined stars is a cycle condition; a component no joined star
+    * reaches, and a star with no edge, is cross joined (the reference
+    * would never drain it). Both engines render these steps, so neither
+    * decides an order or a refusal of its own. Refused: more than one
+    * star and no edge (a cartesian query). */
+  def joinPlan(q: ParsedQuery, edges: Seq[JoinEdge]): Seq[JoinStep] = {
     val stars = q.stars.keys.toSeq.sorted
     if (edges.isEmpty) {
       require(stars.size == 1, s"${stars.size} stars but no join conditions (cartesian query)")
       return Seq(Seed(stars.head))
     }
-    for (e <- edges) require(!(dropped(e.fromStar) && dropped(e.toStar)),
-      s"MINUS/EXISTS star ?${e.fromStar} may not join another MINUS/EXISTS star")
-
-    val (inner, outer) = edges.partition(e => required(e.fromStar) && required(e.toStar))
     val steps = Vector.newBuilder[JoinStep]
     var joined = Set.empty[String]
-    var pending = (inner ++ outer).toList
+    var pending = edges.toList
     while (pending.nonEmpty) {
       pending.indexWhere(e => joined(e.fromStar) || joined(e.toStar)) match {
         case -1 =>
-          val e = pending.find(e => required(e.fromStar) || required(e.toStar))
-            .getOrElse(pending.head)
-          val seed = if (required(e.fromStar)) e.fromStar else e.toStar
+          val seed = pending.head.fromStar
           steps += (if (joined.isEmpty) Seed(seed) else Cross(seed))
           joined += seed
         case i =>
@@ -299,12 +336,8 @@ object StarSpec {
           pending = pending.patch(i, Nil, 1)
           if (joined(e.fromStar) && joined(e.toStar)) steps += Cycle(e)
           else {
-            val (star, from) =
-              if (joined(e.fromStar)) (e.toStar, e.fromStar) else (e.fromStar, e.toStar)
-            require(required(from) || !required(star),
-              s"required star ?$star is reachable only through an OPTIONAL edge — " +
-                "rewrite the query so it joins a required star")
-            steps += Attach(star, e, kind(star))
+            val star = if (joined(e.fromStar)) e.toStar else e.fromStar
+            steps += Attach(star, e)
             joined += star
           }
       }
@@ -314,10 +347,10 @@ object StarSpec {
   }
 
   /** `{ A } UNION { B }`: each branch as a query of its own, with the
-    * branch's patterns and filters and no OPTIONAL stars. */
+    * branch's patterns and filters. */
   def unionBranches(q: ParsedQuery): Seq[ParsedQuery] =
     q.unionBranches.map { case (ps, fs) =>
-      q.copy(patterns = ps, filters = fs, unionBranches = Nil, optionalStars = Set.empty)
+      q.copy(patterns = ps, filters = fs, unionBranches = Nil)
     }
 
   /** FILTERs on vars no star binds (BIND outputs, subquery outputs): the
@@ -335,48 +368,40 @@ object StarSpec {
     * SELECTed, filtered, grouped, ordered, aggregated, a join key, a
     * transform operand, or a repeated object var. */
   private[engine] def neededVars(q: ParsedQuery): Set[String] = {
+    val groupVars = q.groups.flatMap(_.vars)
     if (q.selectAll)
       return q.patterns.collect { case TriplePattern(_, _, ObjVar(v)) => v }.toSet ++
-        q.stars.keySet
+        q.stars.keySet ++ groupVars
     val objVars = q.patterns.collect { case TriplePattern(_, _, ObjVar(v)) => v }
+    val groupKeys = groupVars.filter(v => q.stars.contains(v) || objVars.contains(v))
     val repeated = objVars.groupBy(identity).collect { case (v, occ) if occ.size > 1 => v }
     val joinVars = objVars.filter(q.stars.contains)
     val bindOperands = q.binds.flatMap(_.expr.vars)
     val bindOutputs = q.binds.map(_.outVar).toSet
-    // a var shared with a subquery is a join key — materialize it even
-    // when the outer query neither selects nor filters it
+    // a var shared with a subquery or a nested group is a join key —
+    // materialize it even when the outer query neither selects nor
+    // filters it
     val subVars = q.subqueries.flatMap(s =>
       s.selectVarNames ++ s.aggregates.map(_.alias)) ++
-      q.negations.map(_.objVar)
+      q.negations.map(_.objVar) ++ groupKeys
     (q.selectVarNames ++ q.aggregates.map(_.varName).filter(_ != "*") ++
       q.filters.map(_.varName) ++ q.values.map(_._1) ++ q.groupBy ++
       q.orderBy.map(_.varName) ++ q.transforms.map(_.rightVar) ++
       joinVars ++ repeated ++ bindOperands ++ subVars).toSet -- bindOutputs
   }
 
-  /** var -> concrete post-join column, restricted to columns a KEPT
-    * (non-MINUS/EXISTS) star contributes — anti/semi joins keep only the
-    * preserved side's columns.
-    *
-    * A var survives iff a kept star binds it:
-    *  - subject of a kept star → that star's ID column;
-    *  - otherwise, the FIRST kept star binding it as an object var → that
-    *    star's var column (one-binding invariant, reference Run.scala:73).
-    * Note the order: a var that names a DROPPED star's subject but is
-    * also the object of a kept star (SELECT ?v WHERE { ?x :p ?v .
-    * FILTER EXISTS { ?v :q ?w } }) resolves to the kept star's column —
-    * it is part of the solution, not anti/semi-joined away. */
-  private[engine] def resolveKept(q: ParsedQuery, needed: Set[String]): Seq[(String, String)] = {
-    val dropStars = q.minusStars ++ q.existsStars
-    val keptSubjects = q.stars.keySet -- dropStars
-    val keptBinding: Map[String, String] =
+  /** var -> concrete post-join column, for each needed var a star binds:
+    *  - subject of a star → that star's ID column;
+    *  - otherwise, the FIRST star binding it as an object var → that
+    *    star's var column (one-binding invariant, reference Run.scala:73). */
+  private[engine] def resolve(q: ParsedQuery, needed: Set[String]): Seq[(String, String)] = {
+    val binding: Map[String, String] =
       q.patterns.collect {
-        case TriplePattern(s, p, ObjVar(o))
-            if p != TriplePattern.RdfType && keptSubjects.contains(s) => o -> s
+        case TriplePattern(s, p, ObjVar(o)) if p != TriplePattern.RdfType => o -> s
       }.reverse.toMap // reverse + toMap = first binding wins
     needed.toSeq.sorted.flatMap { v =>
-      if (keptSubjects.contains(v)) Some(v -> StarCompiler.idCol(v))
-      else keptBinding.get(v).map(s => v -> StarCompiler.varCol(s, v))
+      if (q.stars.contains(v)) Some(v -> StarCompiler.idCol(v))
+      else binding.get(v).map(s => v -> StarCompiler.varCol(s, v))
     }
   }
 }

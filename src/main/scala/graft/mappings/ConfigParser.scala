@@ -5,9 +5,10 @@ import graft.model.{LakeConfig, SourceConfig}
 import scala.jdk.CollectionConverters._
 
 /** Parses the data-lake config JSON (same shape as the reference's
-  * evaluation/input_files/config:2-77: `sources[{type,options,source,entity}]`
-  * + `weights[{datasource,weight}]`). Uses the Jackson that ships inside
-  * Spark — no extra dependency. */
+  * evaluation/input_files/config:2-77: `sources[{type,options,source,entity}]`;
+  * its `weights[{datasource,weight}]` join-order weights, which the
+  * reference computes but never applies, are ignored). Uses the Jackson
+  * that ships inside Spark — no extra dependency. */
 object ConfigParser {
 
   private val mapper = new ObjectMapper()
@@ -24,9 +25,7 @@ object ConfigParser {
         source = s.get("source").asText(),
         options = options)
     }
-    val weights = opt(root, "weights").map(_.elements().asScala.toSeq).getOrElse(Nil)
-      .map(w => w.get("datasource").asText() -> w.get("weight").asInt()).toMap
-    LakeConfig(sources, weights)
+    LakeConfig(sources)
   }
 
   private def opt(n: JsonNode, field: String): Option[JsonNode] =

@@ -116,6 +116,31 @@ final case class TransformFn(name: String, args: Seq[String])
   * star `rightVar`. Reference QueryAnalyser.scala:166-185. */
 final case class JoinTransform(leftVar: String, rightVar: String, side: Char, fns: Seq[TransformFn])
 
+/** An OPTIONAL, MINUS or FILTER [NOT] EXISTS group: its own triple
+  * patterns and FILTERs, each FILTER on a variable the group binds. */
+final case class Group(kind: GroupKind, patterns: Seq[TriplePattern],
+    filters: Seq[FilterCond]) {
+  /** The variables the group binds: its star subjects and object vars. */
+  def vars: Set[String] = patterns.flatMap {
+    case TriplePattern(s, _, ObjVar(o)) => Seq(s, o)
+    case t => Seq(t.subject)
+  }.toSet
+}
+
+/** How a [[Group]] joins the enclosing solutions (SPARQL 1.1 §18.5):
+  * OPTIONAL keeps every solution and adds the group's bindings where they
+  * match (left outer join), MINUS removes the solutions the group matches
+  * (left anti join), FILTER EXISTS keeps only those (left semi join).
+  * FILTER NOT EXISTS parses to Minus: for a group that shares a variable
+  * with the enclosing pattern and filters only its own variables (the
+  * attachment refuses any other) the two coincide. */
+sealed abstract class GroupKind(val keyword: String)
+object GroupKind {
+  case object Optional extends GroupKind("OPTIONAL")
+  case object Minus extends GroupKind("MINUS")
+  case object Exists extends GroupKind("FILTER EXISTS")
+}
+
 final case class ParsedQuery(
     prefixes: Map[String, String],
     distinct: Boolean,
@@ -128,11 +153,13 @@ final case class ParsedQuery(
     limit: Option[Int],
     offset: Option[Int] = None,
     transforms: Seq[JoinTransform] = Nil,
-    /** Stars whose patterns all come from OPTIONAL { } groups — they join
-      * with left-outer semantics (net-new vs the reference, which has no
-      * OPTIONAL: QueryAnalyser.scala:163 TODO). Their patterns/filters are
-      * merged into `patterns`/`filters`. */
-    optionalStars: Set[String] = Set.empty,
+    /** OPTIONAL, MINUS and FILTER [NOT] EXISTS groups, in query order
+      * (net-new vs the reference, which has no OPTIONAL:
+      * QueryAnalyser.scala:163 TODO). A group's patterns and filters stay
+      * out of `patterns`/`filters`: each group compiles as a body of its
+      * own and joins the solutions of `patterns` on the variables they
+      * share ([[graft.engine.StarSpec.Attachment]]). */
+    groups: Seq[Group] = Nil,
     /** `{ A } UNION { B }` branches (patterns, filters). When non-empty,
       * `patterns` is empty and the result is the bag-union of the branches
       * (net-new vs the reference: BSBM Q11 dropped as unsupported). */
@@ -141,10 +168,6 @@ final case class ParsedQuery(
       * (net-new vs the reference). The aggregate must also appear in the
       * SELECT list (matched by fn+var). */
     having: Seq[(AggSpec, String, String)] = Nil,
-    /** Stars bound only inside MINUS { } groups — attached with
-      * left-anti semantics (solutions matching the group are removed).
-      * Must be leaves of the join graph. Net-new vs the reference. */
-    minusStars: Set[String] = Set.empty,
     /** VALUES ?v { lit... } inline data, single-variable form — compiled
       * to an isin filter pushed below the joins. Net-new vs reference. */
     values: Seq[(String, Seq[String])] = Nil,
@@ -156,13 +179,6 @@ final case class ParsedQuery(
     /** ASK query form: the result is one boolean row (`ask`) — true iff
       * the WHERE body has at least one solution. Net-new vs reference. */
     ask: Boolean = false,
-    /** Stars bound only inside FILTER EXISTS { } groups — attached with
-      * left-semi semantics (solutions kept iff the group matches; no
-      * columns contributed). FILTER NOT EXISTS groups reuse the MINUS
-      * (left-anti) machinery: on this star fragment — where the group
-      * must share a join variable with the outer query — the two
-      * constructs coincide. Net-new vs the reference. */
-    existsStars: Set[String] = Set.empty,
     /** CONSTRUCT template triples: the result is the deduplicated triple
       * set (s, p, o — all strings) produced by instantiating the
       * template per solution. Net-new vs the reference. */
@@ -236,7 +252,7 @@ final case class SourceConfig(
     source: String,
     options: Map[String, String])
 
-final case class LakeConfig(sources: Seq[SourceConfig], weights: Map[String, Int]) {
+final case class LakeConfig(sources: Seq[SourceConfig]) {
   def optionsFor(source: String): Map[String, String] =
     sources.find(_.source == source).map(_.options).getOrElse(Map.empty)
 }

@@ -242,14 +242,15 @@ object SparqlParser {
       expectSym("{")
       val patterns = Seq.newBuilder[TriplePattern]
       val filters = Seq.newBuilder[FilterCond]
-      val optionalPatterns = Seq.newBuilder[TriplePattern]
-      val minusPatterns = Seq.newBuilder[TriplePattern]
-      val optionalFilters = Seq.newBuilder[FilterCond]
+      val groups = Seq.newBuilder[Group]
+      def group(kind: GroupKind): Unit = {
+        val (ps, fs) = parseGroup(prefixes)
+        groups += Group(kind, ps, fs)
+      }
       val valuesClauses = Seq.newBuilder[(String, Seq[String])]
       val bindClauses = Seq.newBuilder[BindSpec]
       val unionBranches = Seq.newBuilder[(Seq[TriplePattern], Seq[FilterCond])]
       var inBody = true
-      val existsPatterns = Seq.newBuilder[TriplePattern]
       val altTriples = Seq.newBuilder[Seq[Seq[TriplePattern]]]
       val closureSpecs = Seq.newBuilder[PathClosure]
       val subqueryClauses = Seq.newBuilder[ParsedQuery]
@@ -258,30 +259,15 @@ object SparqlParser {
         case Some(Sym("}")) => next(); inBody = false
         case Some(w) if isKw(w, "FILTER") =>
           next()
-          // FILTER EXISTS { } → semi star; FILTER NOT EXISTS { } shares
-          // the MINUS (anti) machinery — identical on this fragment,
-          // where the group must join the outer query on a variable
-          if (takeKw("EXISTS")) {
-            val (ps, fs) = parseGroup(prefixes)
-            existsPatterns ++= ps
-            optionalFilters ++= fs
-          } else if (peek.exists(isKw(_, "NOT"))) {
+          // FILTER NOT EXISTS { } parses to a MINUS group ([[GroupKind]])
+          if (takeKw("EXISTS")) group(GroupKind.Exists)
+          else if (peek.exists(isKw(_, "NOT"))) {
             next()
             require(takeKw("EXISTS"), "expected EXISTS after FILTER NOT")
-            val (ps, fs) = parseGroup(prefixes)
-            minusPatterns ++= ps
-            optionalFilters ++= fs
+            group(GroupKind.Minus)
           } else filters += parseFilter()
-        case Some(w) if isKw(w, "OPTIONAL") =>
-          next()
-          val (ps, fs) = parseGroup(prefixes)
-          optionalPatterns ++= ps
-          optionalFilters ++= fs
-        case Some(w) if isKw(w, "MINUS") =>
-          next()
-          val (ps, fs) = parseGroup(prefixes)
-          minusPatterns ++= ps
-          optionalFilters ++= fs // same scoping rule as OPTIONAL filters
+        case Some(w) if isKw(w, "OPTIONAL") => next(); group(GroupKind.Optional)
+        case Some(w) if isKw(w, "MINUS") => next(); group(GroupKind.Minus)
         case Some(w) if isKw(w, "BIND") =>
           next(); expectSym("(")
           val expr = parseBindExpr()
@@ -367,9 +353,7 @@ object SparqlParser {
         case t => sys.error(s"unexpected trailing token: $t")
       }
       val required = patterns.result()
-      val optional = optionalPatterns.result()
-      val minus = minusPatterns.result()
-      val exists = existsPatterns.result()
+      val nestedGroups = groups.result()
       val closures = closureSpecs.result()
       val negations = negationClauses.result()
       // path alternatives (`p1|p2`): each alternative of each alt-triple
@@ -381,8 +365,7 @@ object SparqlParser {
         else {
           require(unionBranches.result().isEmpty,
             "path alternatives cannot be mixed with explicit UNION branches")
-          require(optional.isEmpty && minus.isEmpty && exists.isEmpty &&
-            closures.isEmpty && negations.isEmpty,
+          require(nestedGroups.isEmpty && closures.isEmpty && negations.isEmpty,
             "path alternatives cannot be combined with OPTIONAL/MINUS/EXISTS/closure/negated paths")
           val combos = altChoices.foldLeft(Seq(Seq.empty[TriplePattern])) { (acc, opts) =>
             for (a <- acc; o <- opts) yield a ++ o
@@ -390,33 +373,14 @@ object SparqlParser {
           combos.map(c => (required ++ c, filters.result()))
         }
       val requiredBody = if (altChoices.isEmpty) required else Nil
-      require(branches.isEmpty ||
-        (requiredBody.isEmpty && optional.isEmpty && minus.isEmpty && exists.isEmpty),
+      require(branches.isEmpty || (requiredBody.isEmpty && nestedGroups.isEmpty),
         "UNION branches cannot be mixed with top-level triple patterns")
-      // a star is optional/minus/exists only if none of its patterns are required
-      val requiredSubjects = required.map(_.subject).toSet
-      val optStars = optional.map(_.subject).toSet -- requiredSubjects
-      val mStars = minus.map(_.subject).toSet -- requiredSubjects -- optStars
-      val eStars = exists.map(_.subject).toSet -- requiredSubjects -- optStars -- mStars
-      // filters inside OPTIONAL/MINUS/EXISTS groups apply per-star before
-      // the outer/anti/semi join — correct only when they constrain the
-      // group's own stars; a filter on an outer/required var would drop
-      // preserved rows
-      val groupStars = optStars ++ mStars ++ eStars
-      val groupVars = (groupStars ++ (optional ++ minus ++ exists).collect {
-        case TriplePattern(s, _, ObjVar(v)) if groupStars.contains(s) => v
-      }) -- requiredSubjects // a join var IS an outer binding
-      for (f <- optionalFilters.result())
-        require(groupVars.contains(f.varName),
-          s"FILTER(?${f.varName} ...) inside OPTIONAL/MINUS/EXISTS must reference a " +
-            "variable bound by the group's own stars")
-      ParsedQuery(prefixes, distinct, items.result(), selectAll,
-        requiredBody ++ optional ++ minus ++ exists,
-        filters.result() ++ optionalFilters.result(),
-        groupBy, orderBy, limit, offset, transforms, optStars, branches,
-        having, mStars, valuesClauses.result(), bindClauses.result(), ask,
-        eStars, construct, closures, describe, subqueryClauses.result(),
-        negations)
+      ParsedQuery(prefixes, distinct, items.result(), selectAll, requiredBody,
+        filters.result(), groupBy, orderBy, limit, offset, transforms,
+        groups = nestedGroups, unionBranches = branches, having = having,
+        values = valuesClauses.result(), binds = bindClauses.result(), ask = ask,
+        construct = construct, closures = closures, describe = describe,
+        subqueries = subqueryClauses.result(), negations = negations)
     }
 
     /** BIND expression: precedence-climbing over the token stream
@@ -468,7 +432,8 @@ object SparqlParser {
       expr()
     }
 
-    /** `{ triples/filters }` group used by OPTIONAL and UNION. */
+    /** `{ triples/filters }` group of OPTIONAL, MINUS, FILTER [NOT]
+      * EXISTS and UNION. */
     private def parseGroup(prefixes: Map[String, String]): (Seq[TriplePattern], Seq[FilterCond]) = {
       expectSym("{")
       val ps = Seq.newBuilder[TriplePattern]

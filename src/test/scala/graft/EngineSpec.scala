@@ -45,8 +45,8 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("EXISTS group whose subject is an outer object var keeps that var in the solution") {
-    // ?c names the EXISTS star (anti/semi-joined away) but the kept star
-    // ?o binds it as an object var — SELECT ?c must resolve to o's column,
+    // ?c names the EXISTS group's star (semi-joined away) but the body's
+    // star ?o binds it as an object var — SELECT ?c must resolve to o's column,
     // not drop it (valid SPARQL in the supported fragment)
     val df = graft.fixtures.TpchLake.run(spark, sf,
       """PREFIX g: <http://graft.io/schema/>
@@ -63,7 +63,7 @@ class EngineSpec extends AnyFunSuite {
       .collect().map(_.mkString("|")).sorted.toSeq
     val got = df.collect().map(_.mkString("|")).sorted.toSeq
     assert(got == exp && got.nonEmpty)
-    // same direction through NOT EXISTS (the left-anti machinery)
+    // same direction through NOT EXISTS (a MINUS group, left anti join)
     val anti = graft.fixtures.TpchLake.run(spark, sf,
       """PREFIX g: <http://graft.io/schema/>
         |SELECT ?c ?t WHERE {
@@ -75,6 +75,59 @@ class EngineSpec extends AnyFunSuite {
       .selectExpr("o_custkey", "o_totalprice")
       .collect().map(_.mkString("|")).sorted.toSeq
     assert(anti == expAnti)
+  }
+
+  test("OPTIONAL, MINUS and NOT EXISTS groups join on their shared variables in both engines") {
+    import org.apache.spark.sql.functions.col
+    def read(t: String) = spark.read.parquet(s"$sf/$t.parquet")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.mkString("|")).sorted.toSeq
+    def both(body: String): Seq[Seq[String]] = {
+      val (m, c) = graft.fixtures.TpchLake.lake(sf)
+      val q = graft.sparql.SparqlParser.parse("PREFIX g: <http://graft.io/schema/>\n" + body)
+      val viaColumns = graft.fixtures.TpchLake.run(spark, sf,
+        "PREFIX g: <http://graft.io/schema/>\n" + body)
+      Seq(rows(viaColumns), rows(graft.engine.SqlGenExecutor.execute(spark, q, m, c)))
+    }
+    // an OPTIONAL group of three patterns binds ?tp only where all of
+    // them match: the order's customer must be Customer#000000001
+    val cust1 = read("customer").filter(col("c_name") === "Customer#000000001")
+    val tpOf = read("orders").join(cust1, col("o_custkey") === col("c_custkey"))
+      .select(col("o_orderkey"), col("o_totalprice"))
+    val expOpt = rows(read("lineitem").join(tpOf, col("l_orderkey") === col("o_orderkey"), "left_outer")
+      .select(col("l_orderkey"), col("o_totalprice")))
+    assert(expOpt.size == 6000 && expOpt.count(!_.endsWith("|null")) == 21)
+    for (got <- both(
+      """SELECT ?l ?tp WHERE { ?l g:order ?o .
+        |  OPTIONAL { ?o g:totalprice ?tp . ?o g:customer ?c . ?c g:custName ?cn .
+        |    FILTER(?cn = "Customer#000000001") }
+        |}""".stripMargin)) assert(got == expOpt)
+    // a MINUS / NOT EXISTS group on the body's own star still removes:
+    // every customer has an account balance
+    val expNone = rows(read("customer").join(read("customer").filter(col("c_acctbal").isNotNull),
+      Seq("c_custkey"), "left_anti").select("c_custkey", "c_name"))
+    assert(expNone.isEmpty)
+    for (kw <- Seq("MINUS", "FILTER NOT EXISTS"); got <- both(
+      s"SELECT ?c ?n WHERE { ?c g:custName ?n . $kw { ?c g:acctbal ?b } }"))
+      assert(got == expNone, kw)
+    // a MINUS group of three stars: customers with no line of quantity > 49
+    val big = read("orders").join(read("lineitem").filter(col("l_quantity") > 49),
+      col("o_orderkey") === col("l_orderkey"))
+    val expChain = rows(read("customer").join(big, col("c_custkey") === col("o_custkey"), "left_anti")
+      .select("c_custkey", "c_name"))
+    assert(expChain.size == 65)
+    for (got <- both(
+      """SELECT ?c ?n WHERE { ?c g:custName ?n .
+        |  MINUS { ?o g:customer ?c . ?l g:order ?o . ?l g:quantity ?q . FILTER(?q > 49) }
+        |}""".stripMargin)) assert(got == expChain)
+    // SELECT * lists an OPTIONAL group's own variables among the body's,
+    // sorted, in both engines
+    val (m, c) = graft.fixtures.TpchLake.lake(sf)
+    val star = graft.sparql.SparqlParser.parse("PREFIX g: <http://graft.io/schema/>\n" +
+      "SELECT * WHERE { ?c g:custName ?n . OPTIONAL { ?o g:customer ?c . ?o g:totalprice ?t } }")
+    val a = graft.engine.GraftEngine.executeParsed(spark, star, m, c)
+    val b = graft.engine.SqlGenExecutor.execute(spark, star, m, c)
+    assert(a.columns.toSeq == Seq("c", "n", "o", "t") && b.columns.toSeq == a.columns.toSeq)
+    assert(rows(a) == rows(b))
   }
 
   test("VALUES types literals per-column: mixed list keeps numeric members on a long column") {

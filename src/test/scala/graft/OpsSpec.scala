@@ -707,16 +707,6 @@ class OpsSpec extends AnyFunSuite {
     assert(none.getMessage.contains("no non-null"))
   }
 
-  test("salted skew join equals the plain equi-join") {
-    val li = spark.read.parquet(s"$sf/lineitem.parquet").select("l_orderkey", "l_quantity")
-    val o = spark.read.parquet(s"$sf/orders.parquet").select("o_orderkey", "o_totalprice")
-    val plain = li.join(o, li("l_orderkey") === o("o_orderkey")).count()
-    val salted = graft.ops.SkewJoin.saltedEquiJoin(
-      li, o, li("l_orderkey"), o("o_orderkey"), buckets = 8)
-    assert(salted.count() == plain)
-    assert(salted.columns.toSet == Set("l_orderkey", "l_quantity", "o_orderkey", "o_totalprice"))
-  }
-
   test("sessionize splits on the gap and counts events") {
     def ts(min: Int) = new java.sql.Timestamp(1700000000000L + min * 60000L)
     val df = Seq(

@@ -101,9 +101,14 @@ class SparqlParserSpec extends AnyFunSuite {
         |  ?c s:name ?n .
         |  OPTIONAL { ?o s:cust ?c . ?o s:total ?t . FILTER(?t > 5) }
         |}""".stripMargin)
-    assert(q.optionalStars == Set("o"))
-    assert(q.stars.keySet == Set("c", "o"))
-    assert(q.filters == Seq(FilterCond("t", ">", "5")))
+    // the group keeps its own patterns and filters, out of the body's
+    assert(q.groups == Seq(Group(GroupKind.Optional,
+      Seq(TriplePattern("o", "http://s/cust", ObjVar("c")),
+        TriplePattern("o", "http://s/total", ObjVar("t"))),
+      Seq(FilterCond("t", ">", "5")))))
+    assert(q.groups.head.vars == Set("o", "c", "t"))
+    assert(q.stars.keySet == Set("c"))
+    assert(q.filters.isEmpty)
   }
 
   test("OPTIONAL predicates on a required star do not make it optional") {
@@ -113,19 +118,24 @@ class SparqlParserSpec extends AnyFunSuite {
         |  ?c s:name ?n .
         |  OPTIONAL { ?c s:phone ?p . }
         |}""".stripMargin)
-    assert(q.optionalStars.isEmpty)
-    assert(q.stars("c").size == 2)
+    // the required star keeps only its required pattern; the OPTIONAL
+    // one joins it on ?c as a group of its own
+    assert(q.stars("c") == Seq(TriplePattern("c", "http://s/name", ObjVar("n"))))
+    assert(q.groups == Seq(Group(GroupKind.Optional,
+      Seq(TriplePattern("c", "http://s/phone", ObjVar("p"))), Nil)))
   }
 
   test("OPTIONAL filter on an outer variable is rejected") {
-    intercept[IllegalArgumentException] {
-      SparqlParser.parse(
-        """PREFIX s: <http://s/>
-          |SELECT ?n WHERE {
-          |  ?c s:name ?n .
-          |  OPTIONAL { ?o s:cust ?c . FILTER(?n = "x") }
-          |}""".stripMargin)
-    }
+    // the query parses; planning the group's attachment refuses it
+    val q = SparqlParser.parse(
+      """PREFIX s: <http://s/>
+        |SELECT ?n WHERE {
+        |  ?c s:name ?n .
+        |  OPTIONAL { ?o s:cust ?c . FILTER(?n = "x") }
+        |}""".stripMargin)
+    val e = intercept[IllegalArgumentException](graft.engine.StarSpec.body(q))
+    assert(e.getMessage.contains("FILTER(?n ...) inside OPTIONAL must reference a variable " +
+      "bound by the group"), e.getMessage)
   }
 
   test("MINUS group: star with only minus patterns is a minus star") {
@@ -135,8 +145,9 @@ class SparqlParserSpec extends AnyFunSuite {
         |  ?c s:name ?n .
         |  MINUS { ?o s:cust ?c . ?o s:total ?t . }
         |}""".stripMargin)
-    assert(q.minusStars == Set("o"))
-    assert(q.optionalStars.isEmpty)
+    assert(q.groups.map(g => (g.kind, g.patterns.map(_.subject).toSet)) ==
+      Seq((GroupKind.Minus, Set("o"))))
+    assert(q.stars.keySet == Set("c"))
   }
 
   test("UNION branches parse separately; mixing with top-level triples fails") {
@@ -205,9 +216,11 @@ class SparqlParserSpec extends AnyFunSuite {
         |  FILTER EXISTS { ?y s:ref ?x . }
         |  FILTER NOT EXISTS { ?z s:neg ?x . }
         |}""".stripMargin)
-    assert(q.existsStars == Set("y"))
-    assert(q.minusStars == Set("z"))
-    assert(q.stars.keySet == Set("x", "y", "z"))
+    // FILTER EXISTS → an Exists (semi) group, NOT EXISTS → a Minus (anti) one
+    assert(q.groups == Seq(
+      Group(GroupKind.Exists, Seq(TriplePattern("y", "http://s/ref", ObjVar("x"))), Nil),
+      Group(GroupKind.Minus, Seq(TriplePattern("z", "http://s/neg", ObjVar("x"))), Nil)))
+    assert(q.stars.keySet == Set("x"))
   }
 
   test("sequence property path desugars to chained triples over fresh vars") {

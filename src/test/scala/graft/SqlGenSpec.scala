@@ -112,23 +112,39 @@ class SqlGenSpec extends AnyFunSuite {
       """SELECT ?o WHERE {
         |  ?o g:customer ?c . ?o2 g:customer ?c .
         |  MINUS { ?c g:custName ?n }
-        |}""".stripMargin -> "must connect to the rest of the query by exactly one join",
+        |}""".stripMargin -> "2 stars but no join conditions (cartesian query)",
       "DESCRIBE ?n WHERE { ?c g:custName ?n }" -> "DESCRIBE ?n requires ?n to be a star subject",
       "SELECT ?r ?v WHERE { ?r a g:Region . ?r !g:regionName ?v }" ->
         "excludes every mapped predicate",
       "SELECT ?r ?t WHERE { ?r (g:regionName/g:noSuchHop)+ ?t }" ->
         "no relevant source maps the path predicate <http://graft.io/schema/noSuchHop>",
-      // the join plan's refusals: a required star behind an OPTIONAL one
-      // (SQL once lowered it as an inner join after the LEFT JOIN) and a
-      // MINUS group whose two stars join only each other (the Column
-      // engine once cross-joined it, removing nothing)
+      // the join plan's and the group attachment's refusals: required
+      // stars joined only through an OPTIONAL group (SQL once lowered it
+      // as an inner join after the LEFT JOIN); a MINUS group sharing no
+      // variable (the Column engine once cross-joined it, removing
+      // nothing); an OPTIONAL group joining two cross-joined parts; a
+      // group variable only an earlier OPTIONAL group binds; a group
+      // FILTER on an outer variable
       """SELECT ?l ?cn WHERE {
         |  ?l g:order ?o . OPTIONAL { ?o g:customer ?c } ?c g:custName ?cn .
-        |}""".stripMargin -> "required star ?c is reachable only through an OPTIONAL edge",
+        |}""".stripMargin -> "2 stars but no join conditions (cartesian query)",
       """SELECT ?c ?n WHERE {
         |  ?c g:custName ?n .
         |  MINUS { ?m1 g:order ?m2 . ?m2 g:totalprice ?tp }
-        |}""".stripMargin -> "MINUS/EXISTS star ?m1 may not join another MINUS/EXISTS star")
+        |}""".stripMargin -> "MINUS group shares no variable with the enclosing pattern",
+      """SELECT ?l ?cn WHERE {
+        |  ?l g:order ?o . ?o g:totalprice ?tp . ?c g:custName ?cn .
+        |  OPTIONAL { ?o g:customer ?c }
+        |}""".stripMargin -> "OPTIONAL group joins ?c, ?o, which lie in disconnected parts",
+      """SELECT ?c ?n WHERE {
+        |  ?c g:custName ?n .
+        |  OPTIONAL { ?o g:customer ?c . ?o g:totalprice ?tp }
+        |  MINUS { ?o2 g:totalprice ?tp }
+        |}""".stripMargin -> "?tp in a MINUS group is bound only by an earlier OPTIONAL group",
+      """SELECT ?c ?n WHERE {
+        |  ?c g:custName ?n .
+        |  FILTER EXISTS { ?o g:customer ?c . FILTER(?n = "x") }
+        |}""".stripMargin -> "FILTER(?n ...) inside FILTER EXISTS must reference a variable")
     for ((sparql, needle) <- bad) {
       val q = SparqlParser.parse(FixP + sparql)
       val viaColumns = intercept[IllegalArgumentException] {

@@ -82,21 +82,4 @@ class TransformsSpec extends AnyFunSuite {
       "url" -> "h1,h2:27002", "database" -> "db", "collection" -> "offer",
       "options" -> "replicaSet=rs")) == "mongodb://h1,h2:27002/db.offer?replicaSet=rs")
   }
-
-  test("weighted join reordering returns identical results") {
-    val sf = "/root/testdata/sf0.001"
-    graft.fixtures.TpchLake.ensureDerived(spark, sf)
-    val (m, c) = graft.fixtures.TpchLake.lake(sf)
-    val q = graft.sparql.SparqlParser.parse(
-      """PREFIX g: <http://graft.io/schema/>
-        |SELECT ?cname ?nname ?rname WHERE {
-        |  ?c g:custName ?cname . ?c g:custNation ?n .
-        |  ?n g:nationName ?nname . ?n g:region ?r .
-        |  ?r g:regionName ?rname .
-        |  FILTER(?rname = "ASIA")
-        |}""".stripMargin)
-    val plain = graft.engine.GraftEngine.executeParsed(spark, q, m, c)
-    val reordered = graft.engine.GraftEngine.executeParsed(spark, q, m, c, reorderJoins = true)
-    assert(plain.collect().toSet == reordered.collect().toSet)
-  }
 }
