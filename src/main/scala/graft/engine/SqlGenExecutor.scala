@@ -278,18 +278,19 @@ object SqlGenExecutor {
         // skp(v) row filters on the transformed expression (the engine
         // filters the selected column — same value)
         val skps = src.skips.map { case (t, v) => s"${tx(t)} <> ${litSql(v)}" }
-        val where = if (skps.isEmpty) "" else skps.mkString(" WHERE ", " AND ", "")
+        val conds = src.required.map(c => s"${tx(c)} IS NOT NULL") ++ skps
+        val where = if (conds.isEmpty) "" else conds.mkString(" WHERE ", " AND ", "")
         s"SELECT ${cols.mkString(", ")} FROM $tbl$where"
       }
       val unioned = selects.mkString(" UNION ALL ")
-      // this star's filters + VALUES, on the renamed columns (both
-      // engines push these through the wrapper into the scan)
+      // this star's filters + VALUES, then its non-null projected
+      // columns, on the renamed columns (both engines push these through
+      // the wrapper into the scan)
       val conds = spec.filters.map { case (c, f) => condSql(c, f) } ++
         spec.values.map { case (c, vals) =>
           s"$c IN (${vals.map(litSql).mkString(", ")})"
-        }
-      if (conds.isEmpty) s"($unioned)"
-      else s"(SELECT * FROM ($unioned) g_${s}_src WHERE ${conds.mkString(" AND ")})"
+        } ++ spec.notNull.map(c => s"$c IS NOT NULL")
+      s"(SELECT * FROM ($unioned) g_${s}_src WHERE ${conds.mkString(" AND ")})"
     }
 
     /** Negated property set `?s !(p…) ?v` → UNION ALL over the values of

@@ -40,7 +40,7 @@ object StarCompiler {
     // SparkExecutor.scala:113-117 — but by name, not position; SURVEY §7.4.4)
     val perSource = spec.sources.map(src => compileOne(spark, src, config))
     val unioned = perSource.reduce(_.unionByName(_))
-    applyStarFilters(unioned, spec)
+    applyStarFilters(unioned, spec).filter(spec.notNull.map(col(_).isNotNull).reduce(_ && _))
   }
 
   /** A column spec's source attribute through its FnO transform chain. */
@@ -62,7 +62,8 @@ object StarCompiler {
       src: StarSpec.SourceSpec,
       config: LakeConfig): DataFrame = {
     val raw = loadSource(spark, src.mapping, config)
-    var df = raw.select(src.cols.map(cs => render(cs).as(cs.outCol)): _*)
+    var df = src.required.map(render(_).isNotNull).reduceOption(_ && _).fold(raw)(c => raw.filter(c))
+      .select(src.cols.map(cs => render(cs).as(cs.outCol)): _*)
     // FnO skp(v) = row filter on the transformed target column
     for ((target, v) <- src.skips) df = df.filter(col(target.outCol) =!= lit(v))
     df

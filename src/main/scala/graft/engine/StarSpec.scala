@@ -30,16 +30,25 @@ object StarSpec {
   /** One source feeding the star. `skips` are skp(v) row filters:
     * (target column spec, skipped value) — the target is resolved with
     * the same rule in both engines (the transformed attribute's column;
-    * the ID column when the transform is on the subject attribute). */
+    * the ID column when the transform is on the subject attribute).
+    * `required` are the star's pattern attributes the scan does not
+    * project, through their FnO chains: non-null, as [[Spec]]`.notNull`. */
   final case class SourceSpec(mapping: EntityMapping, cols: Seq[ColSpec],
-      skips: Seq[(ColSpec, String)])
+      skips: Seq[(ColSpec, String)], required: Seq[ColSpec])
 
   final case class Spec(star: String, sources: Seq[SourceSpec],
       /** (output column, condition) from the query's FILTERs that target
         * this star's bound vars or its subject. */
       filters: Seq[(String, FilterCond)],
       /** (output column, literal list) from VALUES clauses on this star. */
-      values: Seq[(String, Seq[String])])
+      values: Seq[(String, Seq[String])],
+      /** the subject column and every projected pattern column, non-null
+        * after the star's filters: a NULL generates no term, so no triple
+        * (R2RML), and a row with one — here or in a source's `required`
+        * attribute — answers no solution. A path closure's one-hop pattern
+        * is in neither: the closure replaces it, and a subject with no hop
+        * still has its zero-hop pair. */
+      notNull: Seq[String])
 
   /** One per-source scan of a source expansion: the mapping's subject
     * column and one mapped predicate's value column. `value` is None only
@@ -121,6 +130,7 @@ object StarSpec {
       case TriplePattern(_, p, ObjVar(v)) if p != TriplePattern.RdfType => p -> v
     }.toMap
 
+    val closureHops = q.closures.filter(_.subjVar == star).map(c => (c.predicate, c.objVar)).toSet
     val (preds, relevantSources) = relevant(q, star, mappings)
     if (relevantSources.isEmpty) throw new NoRelevantSource(
       s"no relevant source for star ?$star (predicates: ${preds.mkString(", ")})")
@@ -145,8 +155,15 @@ object StarSpec {
           (target, v)
         }
       }
-      SourceSpec(m, idSpec +: objSpecs, skips)
+      val unprojected = predToVar.toSeq.sortBy(_._2).collect {
+        case (p, v) if !closureHops((p, v)) && !needed(v) =>
+          attrOf(m, m.predicateToAttr(p), StarCompiler.varCol(star, v))
+      }
+      SourceSpec(m, idSpec +: objSpecs, skips, unprojected)
     }
+    val notNull = StarCompiler.idCol(star) +: predToVar.toSeq.sortBy(_._2).collect {
+      case (p, v) if !closureHops((p, v)) && needed(v) => StarCompiler.varCol(star, v)
+    }.distinct
 
     // FILTER/VALUES targeting: an object var of this star → its var
     // column; the star's own subject var → the ID column
@@ -157,7 +174,7 @@ object StarSpec {
       else None
     val filters = q.filters.flatMap(f => target(f.varName).map(_ -> f))
     val values = q.values.flatMap { case (v, vals) => target(v).map(_ -> vals) }
-    Spec(star, sources, filters, values)
+    Spec(star, sources, filters, values, notNull)
   }
 
   private def idOf(m: EntityMapping, outCol: String): ColSpec =
