@@ -9,15 +9,18 @@ import org.apache.spark.sql.functions._
 /** The engine: SPARQL fragment + RML mappings + lake config → DataFrame.
   *
   * Pipeline (reference Run.scala:17-318, re-expressed declaratively):
-  * parse → star decomposition → join planning → per-star compile (scan,
-  * semantic column pruning, filters below joins) → inner equi-join chain →
-  * nested groups (left outer / anti / semi joins on shared variables) →
+  * parse → WHERE tree → per leaf: star decomposition, join planning,
+  * per-star compile (scan, semantic column pruning, filters below joins),
+  * inner equi-join chain → one fold over the tree (joins on the shared
+  * variables, left outer / anti / semi joins for OPTIONAL / MINUS /
+  * EXISTS, union, BIND, VALUES, subqueries, residual filters) →
   * GROUP BY/aggregates → ORDER BY → projection (+DISTINCT) → LIMIT.
   *
-  * Every plan fact (sources per star, expansions, join edges and the
-  * join chain over them, variable resolution, group attachments, residual
-  * filters) comes from [[StarSpec]], shared with
-  * [[SqlGenExecutor]]; this object renders it as Columns.
+  * Every plan fact (where each FILTER and VALUES applies, sources per
+  * star, expansions, join edges and the join chain over them, variable
+  * resolution, the variables each join matches on) comes from
+  * [[StarSpec]], shared with [[SqlGenExecutor]]; this object renders it
+  * as Columns.
   *
   * Everything stays a lazy logical plan; Catalyst applies predicate
   * pushdown / column pruning / join selection, and AQE (Spark's default)
@@ -36,39 +39,32 @@ object GraftEngine {
       mappings: MappingsDoc, config: LakeConfig): DataFrame = {
 
     val describeScans = q.describe.map(StarSpec.describeScans(q, _, mappings))
-
-    // { A } UNION { B }: compile each branch body independently, bag-union
-    // by name (a var unbound in one branch surfaces as null there)
-    var df =
-      if (q.unionBranches.nonEmpty)
-        StarSpec.unionBranches(q)
-          .map(b => compileBody(spark, StarSpec.body(b), mappings, config))
-          .reduce(_.unionByName(_, allowMissingColumns = true))
-      else if (q.patterns.isEmpty && q.groups.isEmpty && q.subqueries.nonEmpty) null
-      else compileBody(spark, StarSpec.body(q), mappings, config)
-
-    // --- SPARQL 1.1 §12 subqueries: each evaluates independently (its
-    // own modifiers included) and natural-joins the outer solutions on
-    // the variables they share — cross join when none (rare, legal)
-    for (sub <- q.subqueries) {
-      val subDF = executeParsed(spark, sub.copy(transforms = Nil), mappings, config)
-      df =
-        if (df == null) subDF
-        else {
-          val shared = df.columns.intersect(subDF.columns).toSeq
-          if (shared.nonEmpty) df.join(subDF, shared) else df.crossJoin(subDF)
-        }
+    val plan = StarSpec.plan(q)
+    // the WHERE tree's solutions, folded once, each node rendered once
+    def fold(p: Pattern): DataFrame = p match {
+      case b: Bgp => compileBody(spark, plan.body(b), q.transforms, mappings, config)
+      case u: Union => StarSpec.branches(u).map(fold)
+        .reduce(_.unionByName(_, allowMissingColumns = true))
+      case Join(l, r) => join(fold(l), fold(r), StarSpec.shared(l, r), "inner")
+      case LeftJoin(l, r) => join(fold(l), fold(r), StarSpec.shared(l, r), "left_outer")
+      case Minus(l, r) => join(fold(l), fold(r), StarSpec.shared(l, r), "left_anti")
+      case Filter(es, i) => es.foldLeft(fold(i)) {
+        case (df, Exists(g, negated)) =>
+          join(df, fold(g), StarSpec.shared(i, g), if (negated) "left_anti" else "left_semi")
+        // an unknown var fails analysis instead of silently dropping the
+        // condition
+        case (df, f: FilterCond) => df.filter(StarCompiler.predicate(col(f.varName), f))
+      }
+      // later BINDs may reference earlier outputs
+      case Extend(i, b) => fold(i).withColumn(b.outVar, bindColumn(b.expr))
+      // VALUES as an inline relation, each literal typed by its own form
+      // (the SQL engine's rule)
+      case Table(v, vals) =>
+        spark.range(1).select(explode(array(vals.map(x => lit(StarCompiler.typed(x))): _*)).as(v))
+      // SPARQL 1.1 §12: evaluated on its own, its modifiers included
+      case SubSelect(sub) => executeParsed(spark, sub.copy(transforms = Nil), mappings, config)
     }
-
-    // --- BIND computed variables (before modifiers so bound vars are
-    // usable in SELECT / aggregates / ORDER BY)
-    // sequential withColumn: later BINDs may reference earlier outputs
-    for (b <- q.binds) df = df.withColumn(b.outVar, bindColumn(b.expr))
-
-    // --- residual FILTERs (vars no star binds); an unknown var fails
-    // analysis instead of silently dropping the condition
-    for (f <- StarSpec.residualFilters(q))
-      df = df.filter(StarCompiler.predicate(col(f.varName), f))
+    var df = fold(plan.where)
 
     // --- modifiers (reference Run.scala:266-306 order:
     // groupBy → orderBy → project(+distinct) → limit)
@@ -96,7 +92,7 @@ object GraftEngine {
     }
 
     val projected =
-      if (q.selectAll) df
+      if (q.selectAll) df.select(plan.columns(plan.where).map(col): _*)
       else df.select(q.selectItems.map {
         case SelectVar(v) => col(v)
         case SelectAgg(a) => col(a.alias)
@@ -155,19 +151,39 @@ object GraftEngine {
     } else sliced
   }
 
-  /** Compile a planned WHERE body (stars → join chain → bare-variable
-    * columns → nested groups), without solution modifiers: the Column
-    * rendering of a [[StarSpec.Body]]. */
-  private def compileBody(spark: SparkSession, plan: StarSpec.Body,
-      mappings: MappingsDoc, config: LakeConfig): DataFrame = {
+  /** One join of two nodes' solutions on the variables they share
+    * ([[StarSpec.Shared]]): USING them when both sides certainly bind
+    * each, a cross join when there is none, else the compatibility
+    * condition with the shared vars coalesced (an inner or left outer
+    * join: [[StarSpec.plan]] refuses it for MINUS and EXISTS). */
+  private def join(l: DataFrame, r: DataFrame, on: Seq[StarSpec.Shared],
+      how: String): DataFrame =
+    if (on.isEmpty) l.crossJoin(r)
+    else if (on.forall(_.certain)) l.join(r, on.map(_.v), how)
+    else {
+      val (a, b) = (l.as("l"), r.as("r"))
+      val joined = a.join(b, on.map { s =>
+        val (x, y) = (col(s"l.${s.v}"), col(s"r.${s.v}"))
+        if (s.certain) x === y else x === y || x.isNull || y.isNull
+      }.reduce(_ && _), how)
+      val shared = on.map(_.v).toSet
+      joined.select(l.columns.toSeq.map(c =>
+        if (shared(c)) coalesce(col(s"l.$c"), col(s"r.$c")).as(c) else col(s"l.$c")) ++
+        r.columns.filterNot(shared).map(c => col(s"r.$c")): _*)
+    }
 
-    val q = plan.query
+  /** Compile a planned leaf (stars → join chain → bare-variable columns):
+    * the Column rendering of a [[StarSpec.Body]]. */
+  private def compileBody(spark: SparkSession, plan: StarSpec.Body,
+      transforms: Seq[JoinTransform], mappings: MappingsDoc, config: LakeConfig): DataFrame = {
+
+    val q = plan.bgp
     val starNames = q.stars.keys.toSeq.sorted
 
     // --- per-star ParSets (reference SparkExecutor.query, stage 6 of §3.1)
     val baseDFs: Map[String, DataFrame] = starNames.map { s =>
-      val df = StarCompiler.compile(spark, plan.query, s, mappings, config, plan.needed)
-      s -> StarCompiler.applyInlineTransforms(df, s, q)
+      val df = StarCompiler.compile(spark, q, s, mappings, config, plan.needed)
+      s -> StarCompiler.applyInlineTransforms(df, s, transforms)
     }.toMap
 
     // --- negated property sets: ?s !(p…) ?v fans each subject out over
@@ -239,35 +255,19 @@ object GraftEngine {
       val rejoined = base.join(
         pairs.select(col("src").as(sCol), col("dst").as(oCol)), Seq(sCol))
       // deferred endpoint constraints on the REACHABLE var
-      val filtered = plan.deferredFilters.filter(_.varName == cl.objVar)
-        .foldLeft(rejoined)((d, f) => d.filter(StarCompiler.predicate(col(oCol), f)))
-      val valued = plan.deferredValues.filter(_._1 == cl.objVar)
-        .foldLeft(filtered) { case (d, (_, vals)) =>
-          d.filter(StarCompiler.valuesCondition(d, oCol, vals))
-        }
-      m.updated(cl.subjVar, valued)
+      m.updated(cl.subjVar, plan.deferredFilters.filter(_.varName == cl.objVar)
+        .foldLeft(rejoined)((d, f) => d.filter(StarCompiler.condition(d, oCol, f))))
     }
 
     // --- the join chain, then bare variable names; star prefixes
     // disappear here
-    val solutions = plan.steps.foldLeft(null: DataFrame) {
-      case (_, StarSpec.Seed(s)) => starDFs(s)
+    val (StarSpec.Seed(seed) +: rest) = plan.steps: @unchecked
+    rest.foldLeft(starDFs(seed)) {
       case (df, StarSpec.Attach(s, e)) => df.join(starDFs(s), col(e.leftCol) === col(e.rightCol))
       case (df, StarSpec.Cycle(e)) => df.filter(col(e.leftCol) === col(e.rightCol))
       case (df, StarSpec.Cross(s)) => df.crossJoin(starDFs(s))
+      case (df, StarSpec.Seed(s)) => sys.error(s"a second seed ?$s")
     }.select(plan.resolution.map { case (v, c) => col(c).as(v) }: _*)
-
-    // --- nested groups, in query order: each group's body joins the
-    // solutions on the variables they share (SPARQL 1.1 §18.5)
-    if (plan.groups.isEmpty) solutions
-    else plan.groups.foldLeft(solutions) { (df, a) =>
-      val joinType = a.group.kind match {
-        case GroupKind.Optional => "left_outer"
-        case GroupKind.Minus => "left_anti"
-        case GroupKind.Exists => "left_semi"
-      }
-      df.join(compileBody(spark, a.body, mappings, config), a.shared, joinType)
-    }.select(plan.vars.map(col): _*)
   }
 
   /** Scan DataFrames of a source expansion, one source load per mapping. */
@@ -281,7 +281,7 @@ object GraftEngine {
   /** Unconstrained one-hop edge relation of a closure ([[StarSpec.pathHops]]):
     * per hop, the union of its (src, dst) scans with dst cast to src's
     * type; a composite group (p1/p2/…) joins the hops into one chain. */
-  private def closureEdges(spark: SparkSession, q: ParsedQuery, cl: PathClosure,
+  private def closureEdges(spark: SparkSession, q: Bgp, cl: PathClosure,
       mappings: MappingsDoc, config: LakeConfig): DataFrame = {
     val hops = StarSpec.pathHops(q, cl, mappings).map { scans =>
       scanDFs(spark, scans, config) { sc =>
@@ -302,16 +302,15 @@ object GraftEngine {
   }
 
   /** Finite literal seed set for a closure's OBJECT endpoint: an `=`
-    * filter or a VALUES list on the reachable var. One constraint's set
-    * suffices as the seed (constraints are ANDed and all re-apply after
-    * the closure); inequality/regex forms are not enumerable and fall
-    * back to the full closure. */
-  private def objectSeedLits(plan: StarSpec.Body, cl: PathClosure): Option[Seq[String]] = {
-    val eq = plan.deferredFilters.collectFirst {
+    * or `in` condition (a VALUES list is one) on the reachable var. One
+    * constraint's set suffices as the seed (constraints are ANDed and all
+    * re-apply after the closure); inequality/regex forms are not
+    * enumerable and fall back to the full closure. */
+  private def objectSeedLits(plan: StarSpec.Body, cl: PathClosure): Option[Seq[String]] =
+    plan.deferredFilters.collectFirst {
       case f if f.varName == cl.objVar && f.op == "=" => Seq(f.value)
+      case f if f.varName == cl.objVar && f.op == "in" => f.values
     }
-    eq.orElse(plan.deferredValues.collectFirst { case (v, vals) if v == cl.objVar => vals })
-  }
 
   /** A closure star carrying any FILTER/VALUES on its subject or sibling
     * vars has a restricted start set — frontier BFS from it beats the
@@ -319,14 +318,13 @@ object GraftEngine {
     * count: they are deferred past the closure (they bound the REACHABLE
     * end, not the start). */
   private def closureSeeded(plan: StarSpec.Body, cl: PathClosure): Boolean = {
-    val q = plan.query
+    val q = plan.bgp
     val deferred = q.closures.filter(_.subjVar == cl.subjVar).map(_.objVar).toSet
     val starVars = q.stars(cl.subjVar).collect {
       case TriplePattern(_, p, ObjVar(v)) if p != TriplePattern.RdfType => v
     }.toSet
     val vars = (starVars -- deferred) + cl.subjVar
-    (q.filters ++ plan.deferredFilters).exists(f => vars(f.varName)) ||
-      (q.values ++ plan.deferredValues).exists(v => vars(v._1))
+    (q.filters ++ plan.deferredFilters).exists(f => vars(f.varName))
   }
 
   /** BIND expression → Column: arithmetic stays numeric (integer literals

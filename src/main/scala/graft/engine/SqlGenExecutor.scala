@@ -19,40 +19,42 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * driver's DuckDB oracle — the lowering is validated by two independent
   * SQL engines agreeing on it.
   *
-  * Query shape (mirrors DataQueryFrame's nesting):
+  * Query shape (mirrors DataQueryFrame's nesting): one level per node of
+  * the WHERE tree, the modifiers around the root.
   * {{{
-  *   SELECT [DISTINCT] vars/aggs FROM (
-  *     SELECT star cols AS bare vars FROM
-  *       (per-star SELECT+rename+filter [UNION ALL ...]) g_star
-  *       JOIN (...) g_other ON fk = id ...
-  *     [WHERE cycle-edge conds]
-  *   ) g_q [GROUP BY][HAVING][ORDER BY][LIMIT]
-  * }}}
-  * and, when the body has nested groups, the resolved body wrapped as
-  * {{{
-  *   SELECT vars FROM (body) g_gb
-  *     LEFT JOIN (OPTIONAL group's body) g_g0 ON g_g0.v = g_gb.v ...
-  *   [WHERE [NOT] EXISTS (SELECT 1 FROM (group's body) g_g1 WHERE g_g1.v = g_gb.v ...)]
+  *   SELECT [DISTINCT] vars/aggs FROM (<root>) g_q [GROUP BY][HAVING][ORDER BY][LIMIT]
+  *   leaf:      SELECT star cols AS bare vars FROM
+  *                (per-star SELECT+rename+filter [UNION ALL ...]) g_star
+  *                JOIN (...) g_other ON fk = id ... [WHERE cycle-edge conds]
+  *   join:      SELECT * FROM (<l>) g_sqN JOIN (<r>) g_subN USING (shared)
+  *              (ON the compatibility condition, COALESCE in the select
+  *              list, when a shared var is maybe-bound; CROSS JOIN when none)
+  *   OPTIONAL:  SELECT vars FROM (<l>) g_gb LEFT JOIN (<r>) g_g0 ON g_g0.v = g_gb.v ...
+  *   MINUS / [NOT] EXISTS:
+  *              SELECT vars FROM (<l>) g_gb
+  *              WHERE [NOT] EXISTS (SELECT 1 FROM (<r>) g_g0 WHERE g_g0.v = g_gb.v ...)
+  *   UNION:     SELECT all vars, NULL AS v for a missing one, FROM (<branch>) g_ub UNION ALL ...
+  *   BIND:      SELECT g_bN.*, expr AS v FROM (<inner>) g_bN
+  *   VALUES:    SELECT * FROM (VALUES (lit), ...) AS g_tN(v)
+  *   FILTER:    SELECT * FROM (<inner>) g_rf WHERE conds
   * }}}
   *
   * SQL-expressible subset: parquet and csv sources (single or unioned
   * per star, reader options from the lake config),
   * comparison/LIKE/IN filters, VALUES, the inner join chain
   * [[StarSpec.joinPlan]] plans for both engines (cycle edges as WHERE
-  * conditions), OPTIONAL, MINUS and FILTER [NOT] EXISTS groups (each a
-  * body of its own, rendered like the outer one, joined on the shared
-  * variables [[StarSpec.attachments]] picks: LEFT JOIN, correlated NOT
-  * EXISTS, correlated EXISTS), UNION branches (positional NULL-padded UNION ALL),
-  * SPARQL 1.1 §12 subqueries (recursively lowered derived tables joined
-  * USING the shared projected vars), negated property sets (UNION ALL
+  * conditions), every node of the WHERE tree joined on the variables
+  * [[StarSpec.shared]] picks (OPTIONAL, MINUS and FILTER [NOT] EXISTS
+  * groups, UNION branches, nested groups, VALUES tables, SPARQL 1.1 §12
+  * subqueries as recursively lowered derived tables), negated property sets (UNION ALL
   * over the non-excluded mapped predicates), BIND arithmetic and the
   * SPARQL 1.1 builtin family (CONCAT/STR/ABS/STRLEN/UCASE/LCASE/
   * CONTAINS/STRSTARTS/STRENDS/SUBSTR/REPLACE/CEIL/FLOOR/ROUND/COALESCE/
   * IF), GROUP BY/aggregates/HAVING, ORDER BY, DISTINCT, LIMIT/OFFSET,
   * ASK (non-correlated EXISTS probe), CONSTRUCT (CTE-shared body, UNION
   * of template instantiations), DESCRIBE (predicate expansion semi-
-  * joined with the bound-id set), SELECT * (where column order provably
-  * coincides), `p+`/`p*` closures (SQL:2016 recursive CTEs — Spark 4's
+  * joined with the bound-id set), SELECT * (the root node's variables,
+  * the order both engines emit), `p+`/`p*` closures (SQL:2016 recursive CTEs — Spark 4's
   * WITH RECURSIVE and DuckDB evaluate the identical string; DAG inputs,
   * see [[closureWrap]]), the FnO attribute transforms, and inline join
   * TRANSFORMs (FK/ID column rewrites with skp filters on the
@@ -60,8 +62,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * full-coverage path, exactly as the reference keeps Spark beside
   * Presto): jdbc/rdf/connector stores, streaming, a plan with a Cross
   * step (a disconnected join graph or a star with no join edge beside
-  * others: the Column engine cross-joins them), and the
-  * GROUP_CONCAT/SAMPLE aggregates.
+  * others: the Column engine cross-joins them), an empty VALUES, and
+  * the GROUP_CONCAT/SAMPLE aggregates.
   */
 object SqlGenExecutor {
   import StarSpec.{Attach, Cross, Cycle, Seed}
@@ -258,12 +260,12 @@ object SqlGenExecutor {
       case other => sys.error(s"unsupported filter operator '$other'")
     }
 
-    /** One planned WHERE body (stars → join chain → bare-var resolution
-      * → nested groups) → its SELECT plus its output vars: the SQL
-      * rendering of a [[StarSpec.Body]]. Called once for a plain query,
-      * once per branch for UNION bodies, once per nested group. */
-    def resolvedSql(body: StarSpec.Body): (String, Seq[String]) = {
-    val qb = body.query
+    val plan = StarSpec.plan(q)
+
+    /** One planned leaf (stars → join chain → bare-var resolution) → its
+      * SELECT: the SQL rendering of a [[StarSpec.Body]]. */
+    def resolvedSql(body: StarSpec.Body): String = {
+    val qb = body.bgp
 
     /** One star → aliased subquery: per-source SELECT+rename (+UNION ALL),
       * wrapped with this star's filters/VALUES on the renamed columns —
@@ -283,13 +285,11 @@ object SqlGenExecutor {
         s"SELECT ${cols.mkString(", ")} FROM $tbl$where"
       }
       val unioned = selects.mkString(" UNION ALL ")
-      // this star's filters + VALUES, then its non-null projected
-      // columns, on the renamed columns (both engines push these through
-      // the wrapper into the scan)
+      // this star's filters (VALUES among them), then its non-null
+      // projected columns, on the renamed columns (both engines push
+      // these through the wrapper into the scan)
       val conds = spec.filters.map { case (c, f) => condSql(c, f) } ++
-        spec.values.map { case (c, vals) =>
-          s"$c IN (${vals.map(litSql).mkString(", ")})"
-        } ++ spec.notNull.map(c => s"$c IS NOT NULL")
+        spec.notNull.map(c => s"$c IS NOT NULL")
       s"(SELECT * FROM ($unioned) g_${s}_src WHERE ${conds.mkString(" AND ")})"
     }
 
@@ -348,10 +348,7 @@ object SqlGenExecutor {
         if (cl.reflexive) s" UNION SELECT $sCol AS src, $sCol AS dst FROM g_cb_$tag"
         else ""
       val conds = body.deferredFilters.filter(_.varName == cl.objVar)
-        .map(f => condSql("p.dst", f)) ++
-        body.deferredValues.filter(_._1 == cl.objVar).map { case (_, vals) =>
-          s"p.dst IN (${vals.map(litSql).mkString(", ")})"
-        }
+        .map(f => condSql("p.dst", f))
       val where = if (conds.isEmpty) "" else conds.mkString(" WHERE ", " AND ", "")
       // `p?` (ZeroOrOne) needs no recursion: pairs = one-hop edges (+ the
       // zero-hop branch). `p+`/`p*` walk the recursive CTE.
@@ -383,7 +380,7 @@ object SqlGenExecutor {
       // values filtered on the TRANSFORMED value in an outer wrapper
       // (SQL cannot reference a select alias in its own WHERE) — the
       // image of StarCompiler.applyInlineTransforms
-      for ((t, i) <- qb.transforms.zipWithIndex
+      for ((t, i) <- q.transforms.zipWithIndex
           if (t.side == 'l' && t.leftVar == s) || (t.side == 'r' && t.rightVar == s)) {
         val target = if (t.side == 'l') vc(s, t.rightVar) else idc(s)
         require(cols.contains(target),
@@ -422,79 +419,85 @@ object SqlGenExecutor {
     require(resolution.nonEmpty, "query resolves no variables")
     val innerWhere =
       if (cycleConds.isEmpty) "" else cycleConds.mkString(" WHERE ", " AND ", "")
-    val innerSql =
-      s"SELECT ${resolution.map { case (v, c) => s"$c AS $v" }.mkString(", ")}" +
-        s" FROM $fromSql$innerWhere"
-    if (body.groups.isEmpty) (innerSql, body.vars)
-    else {
-      // ---- nested groups: an OPTIONAL group LEFT JOINs on the shared
-      // vars and adds its own; MINUS / EXISTS groups become correlated
-      // [NOT] EXISTS conditions on the shared vars, which the body binds
-      // (StarSpec.attachments), so they commute with the LEFT JOINs
-      val (joins, conds) = body.groups.zipWithIndex.partitionMap { case (a, i) =>
-        val sql = resolvedSql(a.body)._1
-        val on = a.shared.map(v => s"g_g$i.$v = g_gb.$v").mkString(" AND ")
-        a.group.kind match {
-          case GroupKind.Optional => Left(s" LEFT JOIN ($sql) g_g$i ON $on")
-          case GroupKind.Minus => Right(s"NOT EXISTS (SELECT 1 FROM ($sql) g_g$i WHERE $on)")
-          case GroupKind.Exists => Right(s"EXISTS (SELECT 1 FROM ($sql) g_g$i WHERE $on)")
-        }
-      }
-      // a var the body does not bind is one OPTIONAL group's own
-      def from(v: String): String =
-        if (resolution.exists(_._1 == v)) "g_gb"
-        else "g_g" + body.groups.indexWhere(a =>
-          a.group.kind == GroupKind.Optional && a.body.vars.contains(v))
-      val where = if (conds.isEmpty) "" else conds.mkString(" WHERE ", " AND ", "")
-      (s"SELECT ${body.vars.map(v => s"${from(v)}.$v").mkString(", ")} " +
-        s"FROM ($innerSql) g_gb${joins.mkString}$where", body.vars)
-    }
+    s"SELECT ${resolution.map { case (v, c) => s"$c AS $v" }.mkString(", ")}" +
+      s" FROM $fromSql$innerWhere"
     }
 
-    // ---- body: one resolved block, or the positional NULL-padded
-    // UNION ALL of the branch bodies (the SQL image of the engine's
-    // unionByName(allowMissingColumns = true); SQL UNION is positional,
-    // so every branch projects the union of all branches' variables in
-    // one fixed sorted order, NULL where a branch leaves a var unbound)
-    val (bodyBase, bodyBaseVars): (String, Seq[String]) =
-      if (q.patterns.isEmpty && q.groups.isEmpty && q.unionBranches.isEmpty &&
-        q.subqueries.nonEmpty)
-        (null, Nil) // subquery-only body: the first subquery IS the body
-      else if (q.unionBranches.isEmpty) resolvedSql(StarSpec.body(q))
-      else {
-        val parts = StarSpec.unionBranches(q).map(b => resolvedSql(StarSpec.body(b)))
-        val allVars = parts.flatMap(_._2).distinct.sorted
-        (parts.map { case (sql, vars) =>
+    // ---- the WHERE tree, folded once (the image of GraftEngine's fold).
+    // A join USING the shared vars when both sides certainly bind each
+    // (both target engines coalesce USING keys), else ON the
+    // compatibility condition with the shared vars coalesced; OPTIONAL a
+    // LEFT JOIN, MINUS / EXISTS correlated [NOT] EXISTS conditions;
+    // UNION the positional NULL-padded UNION ALL of the branches (SQL
+    // UNION is positional, so every branch projects the union of all
+    // branches' variables in one sorted order, NULL where a branch
+    // leaves a var unbound); BIND one wrapper per output; residual
+    // FILTERs a WHERE over the node.
+    var aliases = 0
+    def fresh(): Int = { aliases += 1; aliases - 1 }
+    def patternSql(p: Pattern): String = p match {
+      case b: Bgp => resolvedSql(plan.body(b))
+      case u: Union =>
+        val parts = StarSpec.branches(u).map(b => (patternSql(b), plan.columns(b)))
+        val allVars = plan.columns(u)
+        parts.map { case (sql, vars) =>
           val have = vars.toSet
           val sel = allVars.map(v => if (have(v)) v else s"NULL AS $v")
           s"SELECT ${sel.mkString(", ")} FROM ($sql) g_ub"
-        }.mkString(" UNION ALL "), allVars)
-      }
-
-    // ---- SPARQL 1.1 §12 subqueries (image of GraftEngine's subquery
-    // natural join, executed BEFORE binds exactly like the engine): each
-    // subquery lowers recursively — its own modifiers ride inside the
-    // derived table — and joins the outer body USING the shared projected
-    // vars (both target engines coalesce USING keys), CROSS JOIN when
-    // none are shared (rare, legal)
-    val (bodyInner, bodyVars) = q.subqueries.zipWithIndex
-      .foldLeft((bodyBase, bodyBaseVars)) { case ((prev, vars), (sub, i)) =>
+        }.mkString(" UNION ALL ")
+      case Join(l, r) =>
+        val (i, on) = (fresh(), StarSpec.shared(l, r))
+        if (on.exists(!_.certain)) joinSql(p, l, r, "JOIN", s"g_sq$i", s"g_sub$i")
+        else s"SELECT * FROM (${patternSql(l)}) g_sq$i " +
+          (if (on.isEmpty) s"CROSS JOIN (${patternSql(r)}) g_sub$i"
+           else s"JOIN (${patternSql(r)}) g_sub$i USING (${on.map(_.v).mkString(", ")})")
+      case LeftJoin(l, r) => joinSql(p, l, r, "LEFT JOIN", "g_gb", "g_g0")
+      case Minus(l, r) => existsSql(l, Seq(Exists(r, negated = true)))
+      case Filter(es, i) =>
+        val exists = es.collect { case e: Exists => e }
+        val conds = es.collect { case f: FilterCond => condSql(f.varName, f) }
+        val base = if (exists.isEmpty) patternSql(i) else existsSql(i, exists)
+        if (conds.isEmpty) base
+        else s"SELECT * FROM ($base) g_rf WHERE ${conds.mkString(" AND ")}"
+      case Extend(i, b) =>
+        val inner = patternSql(i)
+        val n = fresh()
+        s"SELECT g_b$n.*, ${bindSql(b.expr)} AS ${b.outVar} FROM ($inner) g_b$n"
+      case Table(v, vals) =>
+        require(vals.nonEmpty, "an empty VALUES is not SQL-lowered")
+        s"SELECT * FROM (VALUES ${vals.map(x => s"(${litSql(x)})").mkString(", ")}) AS g_t${fresh()}($v)"
+      case SubSelect(sub) =>
         val subL = lower(sub.copy(transforms = Nil), mappings, config)
         subL.tables.foreach(t => tables(t.name) = t)
-        val subVars = sub.selectItems.map {
-          case SelectVar(v) => v
-          case SelectAgg(a) => a.alias
-        }
-        if (prev == null) (s"SELECT * FROM (${subL.sql}) g_sub$i", subVars)
-        else {
-          val shared = vars.intersect(subVars)
-          val joinSql =
-            if (shared.nonEmpty)
-              s"JOIN (${subL.sql}) g_sub$i USING (${shared.mkString(", ")})"
-            else s"CROSS JOIN (${subL.sql}) g_sub$i"
-          (s"SELECT * FROM ($prev) g_sq$i $joinSql", (vars ++ subVars).distinct)
-        }
+        subL.sql
+    }
+
+    /** `p`, a join of `l` (alias `a`) and `r` (alias `b`) ON their shared
+      * vars: each output var from the side binding it, a maybe-bound shared
+      * one coalesced under the compatibility condition ([[StarSpec.Shared]]). */
+    def joinSql(p: Pattern, l: Pattern, r: Pattern, kind: String, a: String, b: String): String = {
+      val (on, left) = (StarSpec.shared(l, r), plan.columns(l).toSet)
+      val sel = plan.columns(p).map(v => on.find(_.v == v) match {
+        case Some(s) if !s.certain => s"COALESCE($a.$v, $b.$v) AS $v"
+        case _ => s"${if (left(v)) a else b}.$v"
+      })
+      val conds = on.map(s => if (s.certain) s"$b.${s.v} = $a.${s.v}"
+        else s"($a.${s.v} = $b.${s.v} OR $a.${s.v} IS NULL OR $b.${s.v} IS NULL)")
+      s"SELECT ${sel.mkString(", ")} FROM (${patternSql(l)}) $a $kind (${patternSql(r)}) $b " +
+        s"ON ${conds.mkString(" AND ")}"
+    }
+
+    /** MINUS and FILTER [NOT] EXISTS: correlated [NOT] EXISTS conditions
+      * on the shared vars, which `l` certainly binds ([[StarSpec.plan]]). */
+    def existsSql(l: Pattern, groups: Seq[Exists]): String = {
+      val left = patternSql(l)
+      val conds = groups.zipWithIndex.map { case (Exists(g, negated), i) =>
+        val on = StarSpec.shared(l, g).map(s => s"g_g$i.${s.v} = g_gb.${s.v}").mkString(" AND ")
+        s"${if (negated) "NOT " else ""}EXISTS (SELECT 1 FROM (${patternSql(g)}) g_g$i WHERE $on)"
       }
+      s"SELECT ${plan.columns(l).map("g_gb." + _).mkString(", ")} FROM ($left) g_gb " +
+        s"WHERE ${conds.mkString(" AND ")}"
+    }
 
     // ---- BIND computed variables (image of GraftEngine.bindColumn,
     // arithmetic and the SPARQL 1.1 builtins). One wrapper per BIND so
@@ -541,18 +544,7 @@ object SqlGenExecutor {
         s"CASE WHEN ${bindSql(c0)} THEN ${bindSql(t)} ELSE ${bindSql(f0)} END"
       case BFun(f, _) => sys.error(s"BIND function '$f' is not SQL-lowered")
     }
-    val bodyBound = q.binds.zipWithIndex.foldLeft(bodyInner) {
-      case (prev, (b, i)) =>
-        s"SELECT g_b$i.*, ${bindSql(b.expr)} AS ${b.outVar} FROM ($prev) g_b$i"
-    }
-
-    // ---- residual FILTERs (vars no star binds), applied after binds so
-    // bind outputs are filterable
-    val residual = StarSpec.residualFilters(q)
-    val bodySql =
-      if (residual.isEmpty) bodyBound
-      else s"SELECT * FROM ($bodyBound) g_rf WHERE " +
-        residual.map(f => condSql(f.varName, f)).mkString(" AND ")
+    val bodySql = patternSql(plan.where)
 
     // ---- modifiers ----------------------------------------------------
     def aggExpr(a: AggSpec): String = {
@@ -563,18 +555,11 @@ object SqlGenExecutor {
         case other => sys.error(s"unsupported aggregate '$other'")
       }
     }
-    // SELECT *: project the body's variables in the Column engine's
-    // order (sorted resolution, then BIND outputs) so both engines emit
-    // identical column sequences; refused where the engines' column
-    // orders would diverge (subquery USING joins put keys first in SQL,
-    // union branches sort vars here but keep first-branch order there)
+    // SELECT *: the root node's variables, the order both engines emit
     val items =
       if (q.selectAll) {
-        require(q.subqueries.isEmpty && q.unionBranches.isEmpty &&
-          q.aggregates.isEmpty,
-          "SELECT * with subqueries/UNION/aggregates is not SQL-lowered " +
-            "(column order diverges) — name the variables")
-        bodyVars ++ q.binds.map(_.outVar)
+        require(q.aggregates.isEmpty, "SELECT * with aggregates is not SQL-lowered — name the variables")
+        plan.columns(plan.where)
       } else q.selectItems.map {
         case SelectVar(v) => v
         case SelectAgg(a) => s"${aggExpr(a)} AS ${a.alias}"

@@ -3,6 +3,7 @@ package graft.engine
 import graft.model._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Compiles one star-shaped BGP into a DataFrame.
   *
@@ -29,13 +30,13 @@ object StarCompiler {
     */
   def compile(
       spark: SparkSession,
-      query: ParsedQuery,
+      bgp: Bgp,
       star: String,
       mappings: MappingsDoc,
       config: LakeConfig,
       needed: Set[String]): DataFrame = {
 
-    val spec = StarSpec.build(query, star, mappings, needed)
+    val spec = StarSpec.build(bgp, star, mappings, needed)
     // one DF per relevant source, then union (reference
     // SparkExecutor.scala:113-117 — but by name, not position; SURVEY §7.4.4)
     val perSource = spec.sources.map(src => compileOne(spark, src, config))
@@ -73,59 +74,47 @@ object StarCompiler {
     * side 'l' rewrites this star's FK column toward rightVar; side 'r'
     * rewrites this star's ID column (reference Run.scala:159-180 +
     * SparkExecutor.scala:127-141). */
-  def applyInlineTransforms(df: DataFrame, star: String, query: ParsedQuery): DataFrame =
-    query.transforms.foldLeft(df) { (d, t) =>
-      if (t.side == 'l' && t.leftVar == star) {
-        val c = varCol(star, t.rightVar)
-        val skips = Transforms.skipValues(t.fns)
-        val d2 = d.withColumn(c, Transforms(col(c), t.fns))
-        skips.foldLeft(d2)((dd, v) => dd.filter(col(c) =!= lit(v)))
-      } else if (t.side == 'r' && t.rightVar == star) {
-        val c = idCol(star)
-        val skips = Transforms.skipValues(t.fns)
-        val d2 = d.withColumn(c, Transforms(col(c), t.fns))
-        skips.foldLeft(d2)((dd, v) => dd.filter(col(c) =!= lit(v)))
-      } else d
+  def applyInlineTransforms(df: DataFrame, star: String,
+      transforms: Seq[JoinTransform]): DataFrame =
+    transforms.foldLeft(df) { (d, t) =>
+      val target =
+        if (t.side == 'l' && t.leftVar == star) Some(varCol(star, t.rightVar))
+        else if (t.side == 'r' && t.rightVar == star) Some(idCol(star))
+        else None
+      target.fold(d) { c =>
+        Transforms.skipValues(t.fns).foldLeft(d.withColumn(c, Transforms(col(c), t.fns)))(
+          (dd, v) => dd.filter(col(c) =!= lit(v)))
+      }
     }
 
-  private def applyStarFilters(df: DataFrame, spec: StarSpec.Spec): DataFrame = {
-    val filtered = spec.filters.foldLeft(df) { case (d, (c, f)) =>
-      d.filter(predicate(col(c), f))
-    }
-    // VALUES ?v { ... } → isin filter on this star's binding (pushed to
-    // the scan like any other per-star predicate). Literals are typed
-    // per-column from the BOUND COLUMN's schema, not from the literal
-    // list: a mixed numeric/string value list against a long column keeps
-    // its numeric members and drops the unparseable ones (which could
-    // never match a numeric binding) instead of comparing post-cast
-    // strings all-or-nothing.
-    spec.values.foldLeft(filtered) { case (d, (c, vals)) =>
-      d.filter(valuesCondition(d, c, vals))
-    }
-  }
+  private def applyStarFilters(df: DataFrame, spec: StarSpec.Spec): DataFrame =
+    spec.filters.foldLeft(df) { case (d, (c, f)) => d.filter(condition(d, c, f)) }
 
-  /** VALUES literal list → typed isin condition on `c` — literals typed
-    * per-column from the BOUND COLUMN's schema (see applyStarFilters doc).
-    * Shared with the closure handling, which defers VALUES on a p+/p*
-    * object var past the closure. */
-  private[graft] def valuesCondition(df: DataFrame, c: String, vals: Seq[String]): Column = {
-    import org.apache.spark.sql.types._
-    val typed: Seq[Any] = df.schema(c).dataType match {
-      case ByteType | ShortType | IntegerType | LongType =>
-        vals.flatMap(_.toLongOption)
-      case FloatType | DoubleType | _: DecimalType =>
-        vals.flatMap(_.toDoubleOption)
-      case _ => vals
+  /** `f` on column `c` of `df`. An `in` list — a FILTER's, or a VALUES
+    * table's moved into the star — types its literals from the bound
+    * column's schema, not from the list: a mixed numeric/string list
+    * against a long column keeps its numeric members and drops the
+    * unparseable ones (which could never match a numeric binding)
+    * instead of comparing post-cast strings all-or-nothing. */
+  private[engine] def condition(df: DataFrame, c: String, f: FilterCond): Column =
+    if (f.op != "in") predicate(col(c), f)
+    else {
+      val typed = df.schema(c).dataType match {
+        case ByteType | ShortType | IntegerType | LongType => f.values.flatMap(_.toLongOption)
+        case FloatType | DoubleType | _: DecimalType => f.values.flatMap(_.toDoubleOption)
+        case _ => f.values
+      }
+      if (typed.isEmpty) lit(false) else col(c).isin(typed: _*)
     }
-    if (typed.isEmpty) lit(false) else col(c).isin(typed: _*)
-  }
+
+  /** A literal typed by its own form: numeric if it parses, else string. */
+  private[engine] def typed(s: String): Any =
+    s.toLongOption.getOrElse(s.toDoubleOption.getOrElse(s))
 
   /** Literal typing: numeric if it parses, else string. The reference passes
     * raw SQL strings (SparkExecutor.scala:160-175); typed lits let Catalyst
     * push comparisons into the scan. */
   private[engine] def predicate(c: Column, f: FilterCond): Column = {
-    def typed(s: String): Any =
-      s.toLongOption.getOrElse(s.toDoubleOption.getOrElse(s))
     val v: Any = typed(f.value)
     f.op match {
       case "=" => c === lit(v)

@@ -6,7 +6,9 @@ package graft.model
   * (see /root/reference/evaluation/input_files/README.md:15-29): star-shaped
   * BGPs, comparison/regex FILTERs, GROUP BY + {sum,min,max,avg,count},
   * ORDER BY, DISTINCT, LIMIT, plus the TRANSFORM pseudo-clause
-  * (reference Run.scala:33-37).
+  * (reference Run.scala:33-37). Beyond the reference, a WHERE clause is
+  * a SPARQL 1.1 §18 algebra tree ([[Pattern]]) whose leaves are those
+  * BGPs.
   */
 
 /** One triple pattern `?s <pred> obj`. Predicate is the fully-expanded IRI,
@@ -26,7 +28,15 @@ final case class ObjLit(lexical: String) extends ObjectTerm
   * `not in` with the member literals in `values`. Value keeps its
   * lexical form; typing is decided at compile time against the column. */
 final case class FilterCond(varName: String, op: String, value: String,
-    values: Seq[String] = Nil)
+    values: Seq[String] = Nil) extends FilterExpr
+
+/** One expression of a [[Filter]]: a condition on one variable, or
+  * [[Exists]]. */
+sealed trait FilterExpr
+
+/** `FILTER [NOT] EXISTS { group }`: keeps the solutions the group does
+  * (not) match on the variables they share. */
+final case class Exists(group: Pattern, negated: Boolean) extends FilterExpr
 
 final case class OrderKey(varName: String, ascending: Boolean)
 
@@ -66,8 +76,9 @@ final case class BStr(value: String) extends BindExpr
 final case class BOp(op: String, left: BindExpr, right: BindExpr) extends BindExpr
 final case class BFun(name: String, args: Seq[BindExpr]) extends BindExpr
 
-/** One BIND(expr AS ?outVar): `expr` is any [[BindExpr]] — arithmetic,
-  * a rename, or a builtin call. */
+/** One BIND(expr AS ?outVar): `expr` is any [[BindExpr]] — arithmetic
+  * (+ - * /), a rename BIND(?x AS ?y), or a builtin call; a later BIND
+  * may use an earlier one's output. */
 final case class BindSpec(outVar: String, expr: BindExpr)
 
 /** Length modifier of a property path (SPARQL 1.1 §9.1): `+` one or
@@ -116,66 +127,98 @@ final case class TransformFn(name: String, args: Seq[String])
   * star `rightVar`. Reference QueryAnalyser.scala:166-185. */
 final case class JoinTransform(leftVar: String, rightVar: String, side: Char, fns: Seq[TransformFn])
 
-/** An OPTIONAL, MINUS or FILTER [NOT] EXISTS group: its own triple
-  * patterns and FILTERs, each FILTER on a variable the group binds. */
-final case class Group(kind: GroupKind, patterns: Seq[TriplePattern],
-    filters: Seq[FilterCond]) {
-  /** The variables the group binds: its star subjects and object vars. */
-  def vars: Set[String] = patterns.flatMap {
-    case TriplePattern(s, _, ObjVar(o)) => Seq(s, o)
-    case t => Seq(t.subject)
-  }.toSet
+/** A WHERE clause as a SPARQL 1.1 §18 algebra tree. The parser emits one
+  * tree per group `{ … }`: the group's triple patterns form one [[Bgp]]
+  * leaf, which its other elements (OPTIONAL, MINUS, UNION, a nested group
+  * or subquery, VALUES, BIND) then combine with in query order; its
+  * FILTERs, [[Exists]] included, wrap the whole group. Every binary node
+  * joins on the variables both sides may bind
+  * ([[graft.engine.StarSpec.shared]]). */
+sealed trait Pattern {
+
+  /** The group's own leaf: the BGP its other elements combine with;
+    * empty when the group has no triple patterns or they expand into
+    * UNION branches (path alternatives). */
+  def bgp: Bgp = this match {
+    case b: Bgp => b
+    case Join(l, _) => l.bgp
+    case LeftJoin(l, _) => l.bgp
+    case Minus(l, _) => l.bgp
+    case Filter(_, i) => i.bgp
+    case Extend(i, _) => i.bgp
+    case _ => Bgp(Nil)
+  }
 }
 
-/** How a [[Group]] joins the enclosing solutions (SPARQL 1.1 §18.5):
-  * OPTIONAL keeps every solution and adds the group's bindings where they
-  * match (left outer join), MINUS removes the solutions the group matches
-  * (left anti join), FILTER EXISTS keeps only those (left semi join).
-  * FILTER NOT EXISTS parses to Minus: for a group that shares a variable
-  * with the enclosing pattern and filters only its own variables (the
-  * attachment refuses any other) the two coincide. */
-sealed abstract class GroupKind(val keyword: String)
-object GroupKind {
-  case object Optional extends GroupKind("OPTIONAL")
-  case object Minus extends GroupKind("MINUS")
-  case object Exists extends GroupKind("FILTER EXISTS")
+/** A basic graph pattern: star-shaped triple patterns, with the path
+  * closures and negated property sets on its stars. The parser leaves
+  * `filters` empty; [[graft.engine.StarSpec.plan]] moves into it each
+  * FILTER condition and each VALUES table (as an `in` condition) that a
+  * star of the leaf certainly binds, and the star scans apply them. */
+final case class Bgp(patterns: Seq[TriplePattern],
+    /** `?s p+ ?o` / `p*` / `p?` (SPARQL 1.1 §9.1): the one-hop triple
+      * stays in `patterns` (so star detection and join planning see it),
+      * and the engine replaces the star's (subject, object) pairs with
+      * the pairs the modifier denotes */
+    closures: Seq[PathClosure] = Nil,
+    /** `!p` / `!(p1|p2)`: not part of `patterns` — the subject star
+      * needs at least one other pattern (typically `a g:Class`) so source
+      * selection has something to work with */
+    negations: Seq[NegatedPath] = Nil,
+    filters: Seq[FilterCond] = Nil) extends Pattern {
+
+  /** Star-shaped decomposition: subject var -> its triple patterns,
+    * in query order (reference QueryAnalyser.getStars, but structural). */
+  lazy val stars: Map[String, Seq[TriplePattern]] = patterns.groupBy(_.subject)
 }
 
+/** A group's elements joined: the solutions of both, compatible on the
+  * variables they share. */
+final case class Join(left: Pattern, right: Pattern) extends Pattern
+
+/** OPTIONAL: every solution of `left`, extended by the compatible ones of
+  * `right` where there are any (net-new vs the reference, which has no
+  * OPTIONAL: QueryAnalyser.scala:163 TODO). */
+final case class LeftJoin(left: Pattern, right: Pattern) extends Pattern
+
+/** MINUS: the solutions of `left` that no solution of `right` matches. */
+final case class Minus(left: Pattern, right: Pattern) extends Pattern
+
+/** The solutions of `inner` that pass every expression. */
+final case class Filter(exprs: Seq[FilterExpr], inner: Pattern) extends Pattern
+
+/** `{ A } UNION { B }`: the bag union, a variable one branch leaves
+  * unbound null there (net-new vs the reference: BSBM Q11 dropped). */
+final case class Union(left: Pattern, right: Pattern) extends Pattern
+
+/** BIND(expr AS ?v) over `inner`'s solutions (net-new vs the reference). */
+final case class Extend(inner: Pattern, bind: BindSpec) extends Pattern
+
+/** VALUES ?v { lit... }: an inline relation of one variable (net-new vs
+  * the reference). */
+final case class Table(v: String, values: Seq[String]) extends Pattern
+
+/** SPARQL 1.1 §12 subquery `{ SELECT ... }`: evaluated on its own, its
+  * modifiers included, then joined like any other node. */
+final case class SubSelect(query: ParsedQuery) extends Pattern
+
+/** A parsed query: the solution modifiers and the query form around one
+  * WHERE tree. */
 final case class ParsedQuery(
     prefixes: Map[String, String],
     distinct: Boolean,
     selectItems: Seq[SelectItem],
     selectAll: Boolean,
-    patterns: Seq[TriplePattern],
-    filters: Seq[FilterCond],
+    where: Pattern,
     groupBy: Seq[String],
     orderBy: Seq[OrderKey],
     limit: Option[Int],
     offset: Option[Int] = None,
     transforms: Seq[JoinTransform] = Nil,
-    /** OPTIONAL, MINUS and FILTER [NOT] EXISTS groups, in query order
-      * (net-new vs the reference, which has no OPTIONAL:
-      * QueryAnalyser.scala:163 TODO). A group's patterns and filters stay
-      * out of `patterns`/`filters`: each group compiles as a body of its
-      * own and joins the solutions of `patterns` on the variables they
-      * share ([[graft.engine.StarSpec.Attachment]]). */
-    groups: Seq[Group] = Nil,
-    /** `{ A } UNION { B }` branches (patterns, filters). When non-empty,
-      * `patterns` is empty and the result is the bag-union of the branches
-      * (net-new vs the reference: BSBM Q11 dropped as unsupported). */
-    unionBranches: Seq[(Seq[TriplePattern], Seq[FilterCond])] = Nil,
     /** HAVING conditions: (aggregate, op, literal) applied after GROUP BY
       * (net-new vs the reference). The aggregate must also appear in the
       * SELECT list (matched by fn+var). */
     having: Seq[(AggSpec, String, String)] = Nil,
-    /** VALUES ?v { lit... } inline data, single-variable form — compiled
-      * to an isin filter pushed below the joins. Net-new vs reference. */
-    values: Seq[(String, Seq[String])] = Nil,
-    /** BIND(expr AS ?v) computed variables, in query order (a later BIND
-      * may use an earlier one's output): arithmetic (+ - * /), a plain
-      * rename BIND(?x AS ?y), or a builtin call ([[BindExpr]]). Net-new
-      * vs the reference. */
-    binds: Seq[BindSpec] = Nil,
     /** ASK query form: the result is one boolean row (`ask`) — true iff
       * the WHERE body has at least one solution. Net-new vs reference. */
     ask: Boolean = false,
@@ -183,38 +226,26 @@ final case class ParsedQuery(
       * set (s, p, o — all strings) produced by instantiating the
       * template per solution. Net-new vs the reference. */
     construct: Seq[TriplePattern] = Nil,
-    /** Arbitrary-length property paths (`?s p+ ?o` / `?s p* ?o`,
-      * SPARQL 1.1 §9.1): the one-hop triple stays in `patterns` (so star
-      * detection and join planning see it), and the engine replaces the
-      * star's (subject, object) pairs with their transitive closure —
-      * reflexive for `*`. Net-new vs the reference. */
-    closures: Seq[PathClosure] = Nil,
     /** DESCRIBE ?v query form: the result is the deduplicated (s, p, o)
       * triple set describing every resource the WHERE body binds to ?v —
       * all mapped predicates (plus rdf:type) of the star's relevant
-      * sources. ?v must be a star subject. Net-new vs the reference. */
-    describe: Option[String] = None,
-    /** SPARQL 1.1 §12 subqueries: `{ SELECT ... WHERE { ... } ... }`
-      * groups inside the WHERE body. Each is evaluated independently and
-      * natural-joined with the outer solutions on the variables they
-      * share (cross join when none). Net-new vs the reference. */
-    subqueries: Seq[ParsedQuery] = Nil,
-    /** Negated property sets (`!p` / `!(p1|p2)`); not part of `patterns`
-      * — the subject star needs at least one other pattern (typically
-      * `a g:Class`) so source selection has something to work with. */
-    negations: Seq[NegatedPath] = Nil) {
+      * sources. ?v must be a star subject of [[bgp]]. Net-new vs the
+      * reference. */
+    describe: Option[String] = None) {
 
-  /** Star-shaped decomposition: subject var -> its triple patterns,
-    * in query order (reference QueryAnalyser.getStars, but structural). */
-  lazy val stars: Map[String, Seq[TriplePattern]] =
-    patterns.groupBy(_.subject)
+  /** The outer BGP: the WHERE group's own triple patterns, outside any
+    * nested group. */
+  lazy val bgp: Bgp = where.bgp
 
-  /** object var -> (star subject var, predicate IRI). The fragment
-    * guarantees at most one (star,pred) per object var in practice;
-    * first wins (reference Run.scala:73 TODO notes the same invariant). */
-  lazy val varToStarPred: Map[String, (String, String)] =
-    patterns.collect { case TriplePattern(s, p, ObjVar(o)) => o -> (s, p) }
-      .reverse.toMap
+  def patterns: Seq[TriplePattern] = bgp.patterns
+
+  def stars: Map[String, Seq[TriplePattern]] = bgp.stars
+
+  /** The WHERE group's own FILTER conditions. */
+  def filters: Seq[FilterCond] = where match {
+    case Filter(es, _) => es.collect { case f: FilterCond => f }
+    case _ => Nil
+  }
 
   def selectVarNames: Seq[String] =
     selectItems.collect { case SelectVar(v) => v }

@@ -122,8 +122,7 @@ object SparqlParser {
     val toks = Vector.newBuilder[Tok]
     var i = 0
     def isWordChar(c: Char) =
-      c.isLetterOrDigit || c == '_' || c == ':' || c == '-' || c == '+' ||
-        (c == '.' && false)
+      c.isLetterOrDigit || c == '_' || c == ':' || c == '-' || c == '+'
     while (i < s.length) {
       val c = s.charAt(i)
       if (c.isWhitespace) i += 1
@@ -156,23 +155,13 @@ object SparqlParser {
         if (CmpOps.contains(two)) { toks += Sym(two); i += 2 }
         else { toks += Sym(c.toString); i += 1 }
       } else if (c == '.') {
-        // distinguish triple terminator from decimal point: digit.digit
-        val prevDigit = toks.result().lastOption.exists {
-          case Word(w) => w.nonEmpty && w.last.isDigit; case _ => false
-        }
-        val nextDigit = i + 1 < s.length && s.charAt(i + 1).isDigit
-        if (prevDigit && nextDigit) {
-          // merge into previous number word
-          var j = i + 1
-          while (j < s.length && s.charAt(j).isDigit) j += 1
-          val all = toks.result()
-          val Word(prev) = all.last: @unchecked
-          toks.clear(); toks ++= all.init
-          toks += Word(prev + s.substring(i, j)); i = j
-        } else { toks += Sym("."); i += 1 }
+        toks += Sym("."); i += 1
       } else if (isWordChar(c)) {
+        // a '.' between two digits is a decimal point, not a terminator
+        def decimalPoint(j: Int) = s.charAt(j) == '.' && s.charAt(j - 1).isDigit &&
+          j + 1 < s.length && s.charAt(j + 1).isDigit
         var j = i
-        while (j < s.length && isWordChar(s.charAt(j))) j += 1
+        while (j < s.length && (isWordChar(s.charAt(j)) || decimalPoint(j))) j += 1
         toks += Word(s.substring(i, j)); i = j
       } else sys.error(s"unexpected char '$c' at offset $i")
     }
@@ -211,10 +200,9 @@ object SparqlParser {
       }
       val ask = takeKw("ASK")
       val construct =
-        if (!ask && takeKw("CONSTRUCT")) {
-          val (ps, fs) = parseGroup(prefixes)
-          require(fs.isEmpty, "FILTER is not allowed in a CONSTRUCT template")
-          ps
+        if (!ask && takeKw("CONSTRUCT")) group(prefixes, top = false) match {
+          case b: Bgp => b.patterns
+          case _ => throw new IllegalArgumentException("a CONSTRUCT template takes triple patterns only")
         } else Nil
       val describe =
         if (!ask && construct.isEmpty && takeKw("DESCRIBE")) {
@@ -239,73 +227,7 @@ object SparqlParser {
         case _ => reading = false
       }
       require(takeKw("WHERE"), "expected WHERE")
-      expectSym("{")
-      val patterns = Seq.newBuilder[TriplePattern]
-      val filters = Seq.newBuilder[FilterCond]
-      val groups = Seq.newBuilder[Group]
-      def group(kind: GroupKind): Unit = {
-        val (ps, fs) = parseGroup(prefixes)
-        groups += Group(kind, ps, fs)
-      }
-      val valuesClauses = Seq.newBuilder[(String, Seq[String])]
-      val bindClauses = Seq.newBuilder[BindSpec]
-      val unionBranches = Seq.newBuilder[(Seq[TriplePattern], Seq[FilterCond])]
-      var inBody = true
-      val altTriples = Seq.newBuilder[Seq[Seq[TriplePattern]]]
-      val closureSpecs = Seq.newBuilder[PathClosure]
-      val subqueryClauses = Seq.newBuilder[ParsedQuery]
-      val negationClauses = Seq.newBuilder[NegatedPath]
-      while (inBody) peek match {
-        case Some(Sym("}")) => next(); inBody = false
-        case Some(w) if isKw(w, "FILTER") =>
-          next()
-          // FILTER NOT EXISTS { } parses to a MINUS group ([[GroupKind]])
-          if (takeKw("EXISTS")) group(GroupKind.Exists)
-          else if (peek.exists(isKw(_, "NOT"))) {
-            next()
-            require(takeKw("EXISTS"), "expected EXISTS after FILTER NOT")
-            group(GroupKind.Minus)
-          } else filters += parseFilter()
-        case Some(w) if isKw(w, "OPTIONAL") => next(); group(GroupKind.Optional)
-        case Some(w) if isKw(w, "MINUS") => next(); group(GroupKind.Minus)
-        case Some(w) if isKw(w, "BIND") =>
-          next(); expectSym("(")
-          val expr = parseBindExpr()
-          require(takeKw("AS"), "BIND needs AS ?var")
-          val Var(out) = next(): @unchecked
-          expectSym(")")
-          bindClauses += BindSpec(out, expr)
-        case Some(w) if isKw(w, "VALUES") =>
-          next()
-          val Var(v) = next(): @unchecked
-          expectSym("{")
-          val vs = Seq.newBuilder[String]
-          var inVals = true
-          while (inVals) peek match {
-            case Some(Sym("}")) => next(); inVals = false
-            case Some(Word(x)) => next(); vs += x
-            case Some(Str(x)) => next(); vs += x
-            case t => sys.error(s"unsupported VALUES entry: $t")
-          }
-          valuesClauses += v -> vs.result()
-        case Some(Sym("{")) if pos + 1 < toks.length && isKw(toks(pos + 1), "SELECT") =>
-          // { SELECT ... } — SPARQL 1.1 §12 subquery
-          next()
-          subqueryClauses += parseQuery(Nil, nested = true, prefixes)
-        case Some(Sym("{")) =>
-          // { branch } UNION { branch } [UNION { branch }]*
-          unionBranches += parseGroup(prefixes)
-          while (peek.exists(isKw(_, "UNION"))) {
-            next()
-            unionBranches += parseGroup(prefixes)
-          }
-        case Some(Var(_)) =>
-          parseTriplesSameSubject(patterns, prefixes,
-            altsInto = Some(altTriples), closuresInto = Some(closureSpecs),
-            negationsInto = Some(negationClauses))
-        case Some(Sym(".")) => next() // stray terminator
-        case t => sys.error(s"unexpected token in WHERE: $t")
-      }
+      val where = group(prefixes, top = true)
       // modifiers, any order
       var groupBy = Seq.empty[String]
       var orderBy = Seq.empty[OrderKey]
@@ -319,11 +241,7 @@ object SparqlParser {
           val agg = parseAggExpr(closeParen = false).agg
           val Sym(op) = next(): @unchecked
           require(CmpOps.contains(op), s"unsupported HAVING op $op")
-          val value = next() match {
-            case Word(v) => v
-            case Str(s) => s
-            case t => sys.error(s"unsupported HAVING literal: $t")
-          }
+          val value = literal("HAVING")
           expectSym(")")
           having :+= ((agg, op, value))
         case Some(w) if isKw(w, "GROUP") =>
@@ -352,35 +270,82 @@ object SparqlParser {
         case None if !nested => inMods = false
         case t => sys.error(s"unexpected trailing token: $t")
       }
-      val required = patterns.result()
-      val nestedGroups = groups.result()
-      val closures = closureSpecs.result()
-      val negations = negationClauses.result()
-      // path alternatives (`p1|p2`): each alternative of each alt-triple
-      // is one choice; the WHERE body expands into the cross product of
-      // the choices as UNION branches (SPARQL 1.1 §9.3: AltPath ≡ union)
-      val altChoices = altTriples.result()
-      val branches =
-        if (altChoices.isEmpty) unionBranches.result()
-        else {
-          require(unionBranches.result().isEmpty,
-            "path alternatives cannot be mixed with explicit UNION branches")
-          require(nestedGroups.isEmpty && closures.isEmpty && negations.isEmpty,
-            "path alternatives cannot be combined with OPTIONAL/MINUS/EXISTS/closure/negated paths")
-          val combos = altChoices.foldLeft(Seq(Seq.empty[TriplePattern])) { (acc, opts) =>
-            for (a <- acc; o <- opts) yield a ++ o
-          }
-          combos.map(c => (required ++ c, filters.result()))
-        }
-      val requiredBody = if (altChoices.isEmpty) required else Nil
-      require(branches.isEmpty || (requiredBody.isEmpty && nestedGroups.isEmpty),
-        "UNION branches cannot be mixed with top-level triple patterns")
-      ParsedQuery(prefixes, distinct, items.result(), selectAll, requiredBody,
-        filters.result(), groupBy, orderBy, limit, offset, transforms,
-        groups = nestedGroups, unionBranches = branches, having = having,
-        values = valuesClauses.result(), binds = bindClauses.result(), ask = ask,
-        construct = construct, closures = closures, describe = describe,
-        subqueries = subqueryClauses.result(), negations = negations)
+      ParsedQuery(prefixes, distinct, items.result(), selectAll, where, groupBy, orderBy,
+        limit, offset, transforms, having = having, ask = ask, construct = construct,
+        describe = describe)
+    }
+
+    /** One group `{ … }` as an algebra tree (SPARQL 1.1 §18.2.2). Its
+      * triple patterns form one [[Bgp]] leaf, wherever they appear in the
+      * group; path alternatives (`p1|p2`, §9.3) expand that leaf into the
+      * UNION of one leaf per choice. The group's other elements then
+      * combine with the leaf in query order, and its FILTERs, EXISTS ones
+      * included, wrap the whole group. Closures and negated property sets
+      * are parsed in a query's own WHERE group only (`top`). */
+    private def group(prefixes: Map[String, String], top: Boolean): Pattern = {
+      expectSym("{")
+      val patterns = Seq.newBuilder[TriplePattern]
+      val alts = Seq.newBuilder[Seq[Seq[TriplePattern]]]
+      val closures = Seq.newBuilder[PathClosure]
+      val negations = Seq.newBuilder[NegatedPath]
+      val filters = Seq.newBuilder[FilterExpr]
+      // each element applied to the solutions before it (none before the
+      // first element of a group without triple patterns)
+      val elements = Seq.newBuilder[Option[Pattern] => Pattern]
+      def joined(p: Pattern): Unit = elements += (_.fold(p)(Join(_, p)))
+      def onLeft(f: Pattern => Pattern): Unit = elements += (acc => f(acc.getOrElse(Bgp(Nil))))
+      var in = true
+      while (in) peek match {
+        case Some(Sym("}")) => next(); in = false
+        case Some(w) if isKw(w, "FILTER") =>
+          next()
+          if (takeKw("EXISTS")) filters += Exists(group(prefixes, top = false), negated = false)
+          else if (takeKw("NOT")) {
+            require(takeKw("EXISTS"), "expected EXISTS after FILTER NOT")
+            filters += Exists(group(prefixes, top = false), negated = true)
+          } else filters += parseFilter()
+        case Some(w) if isKw(w, "OPTIONAL") =>
+          next(); val g = group(prefixes, top = false); onLeft(LeftJoin(_, g))
+        case Some(w) if isKw(w, "MINUS") =>
+          next(); val g = group(prefixes, top = false); onLeft(Minus(_, g))
+        case Some(w) if isKw(w, "BIND") =>
+          next(); expectSym("(")
+          val expr = parseBindExpr()
+          require(takeKw("AS"), "BIND needs AS ?var")
+          val Var(out) = next(): @unchecked
+          expectSym(")")
+          onLeft(Extend(_, BindSpec(out, expr)))
+        case Some(w) if isKw(w, "VALUES") =>
+          next()
+          val Var(v) = next(): @unchecked
+          expectSym("{")
+          val vs = Seq.newBuilder[String]
+          while (!peek.contains(Sym("}"))) vs += literal("VALUES")
+          next()
+          joined(Table(v, vs.result()))
+        case Some(Sym("{")) if pos + 1 < toks.length && isKw(toks(pos + 1), "SELECT") =>
+          // { SELECT ... } — SPARQL 1.1 §12 subquery
+          next()
+          joined(SubSelect(parseQuery(Nil, nested = true, prefixes)))
+        case Some(Sym("{")) =>
+          // a nested group, or { A } UNION { B } [UNION { C }]*
+          var g = group(prefixes, top = false)
+          while (takeKw("UNION")) g = Union(g, group(prefixes, top = false))
+          joined(g)
+        case Some(Var(_)) =>
+          parseTriplesSameSubject(patterns, prefixes, alts,
+            Option.when(top)(closures), Option.when(top)(negations))
+        case Some(Sym(".")) => next() // stray terminator
+        case t => sys.error(s"unexpected token in WHERE: $t")
+      }
+      val (ps, cl, ng, choices) = (patterns.result(), closures.result(), negations.result(), alts.result())
+      val leaf =
+        if (ps.isEmpty && ng.isEmpty && choices.isEmpty) None
+        else Some(choices.foldLeft(Seq(ps)) { (acc, opts) => for (a <- acc; o <- opts) yield a ++ o }
+          .map(b => Bgp(b, cl, ng): Pattern).reduceLeft(Union))
+      val body = elements.result().foldLeft(leaf)((acc, e) => Some(e(acc))).getOrElse(Bgp(Nil))
+      val fs = filters.result()
+      if (fs.isEmpty) body else Filter(fs, body)
     }
 
     /** BIND expression: precedence-climbing over the token stream
@@ -432,23 +397,6 @@ object SparqlParser {
       expr()
     }
 
-    /** `{ triples/filters }` group of OPTIONAL, MINUS, FILTER [NOT]
-      * EXISTS and UNION. */
-    private def parseGroup(prefixes: Map[String, String]): (Seq[TriplePattern], Seq[FilterCond]) = {
-      expectSym("{")
-      val ps = Seq.newBuilder[TriplePattern]
-      val fs = Seq.newBuilder[FilterCond]
-      var in = true
-      while (in) peek match {
-        case Some(Sym("}")) => next(); in = false
-        case Some(w) if isKw(w, "FILTER") => next(); fs += parseFilter()
-        case Some(Var(_)) => parseTriplesSameSubject(ps, prefixes)
-        case Some(Sym(".")) => next()
-        case t => sys.error(s"unexpected token in group: $t")
-      }
-      (ps.result(), fs.result())
-    }
-
     /** AGG '(' ?v ')' [AS ?alias] [')'] — the surrounding '(' was already
       * consumed when closeParen is true. */
     private def parseAggExpr(closeParen: Boolean): SelectAgg = {
@@ -479,61 +427,49 @@ object SparqlParser {
       SelectAgg(AggSpec(fn, v, alias, distinctAgg, separator))
     }
 
+    /** `regex(?v, "pat")`, `(regex(?v, "pat"))`, `(?v op lit)` or
+      * `(?v [NOT] IN (lit, …))`. */
     private def parseFilter(): FilterCond = {
-      peek match {
-        case Some(w) if isKw(w, "regex") =>
-          next(); expectSym("(")
+      val wrapped = peek.contains(Sym("("))
+      if (wrapped) next()
+      val f =
+        if (takeKw("regex")) {
+          expectSym("(")
           val Var(v) = next(): @unchecked
           expectSym(",")
           val Str(pat) = next(): @unchecked
           expectSym(")")
           FilterCond(v, "regex", pat)
-        case _ =>
-          expectSym("(")
-          peek match {
-            case Some(w) if isKw(w, "regex") =>
-              next(); expectSym("(")
-              val Var(v) = next(): @unchecked
-              expectSym(",")
-              val Str(pat) = next(): @unchecked
-              expectSym(")"); expectSym(")")
-              FilterCond(v, "regex", pat)
-            case _ =>
-              val Var(v) = next(): @unchecked
-              peek match {
-                case Some(w) if isKw(w, "IN") || isKw(w, "NOT") =>
-                  val negated = isKw(w, "NOT")
-                  next()
-                  if (negated) {
-                    val t = next()
-                    require(isKw(t, "IN"), s"expected IN after NOT, got $t")
-                  }
-                  expectSym("(")
-                  val vals = Seq.newBuilder[String]
-                  var more = !peek.contains(Sym(")"))
-                  while (more) {
-                    vals += (next() match {
-                      case Word(w0) => w0
-                      case Str(s) => s
-                      case t => sys.error(s"unsupported IN-list literal: $t")
-                    })
-                    if (peek.contains(Sym(","))) next() else more = false
-                  }
-                  expectSym(")"); expectSym(")")
-                  FilterCond(v, if (negated) "not in" else "in", "", vals.result())
-                case _ =>
-                  val Sym(op) = next(): @unchecked
-                  require(CmpOps.contains(op), s"unsupported filter op $op")
-                  val value = next() match {
-                    case Word(w) => w
-                    case Str(s) => s
-                    case t => sys.error(s"unsupported filter literal: $t")
-                  }
-                  expectSym(")")
-                  FilterCond(v, op, value)
-              }
+        } else {
+          require(wrapped, s"expected '(' after FILTER, got $peek")
+          val Var(v) = next(): @unchecked
+          val negated = takeKw("NOT")
+          if (takeKw("IN")) {
+            expectSym("(")
+            val vals = Seq.newBuilder[String]
+            var more = !peek.contains(Sym(")"))
+            while (more) {
+              vals += literal("IN-list")
+              if (peek.contains(Sym(","))) next() else more = false
+            }
+            expectSym(")")
+            FilterCond(v, if (negated) "not in" else "in", "", vals.result())
+          } else {
+            require(!negated, "expected IN after NOT")
+            val Sym(op) = next(): @unchecked
+            require(CmpOps.contains(op), s"unsupported filter op $op")
+            FilterCond(v, op, literal("filter"))
           }
-      }
+        }
+      if (wrapped) expectSym(")")
+      f
+    }
+
+    /** A literal: a number or word, or a string. */
+    private def literal(what: String): String = next() match {
+      case Word(w) => w
+      case Str(s) => s
+      case t => sys.error(s"unsupported $what literal: $t")
     }
 
     /** Fresh intermediate variable for sequence-path desugaring. */
@@ -548,17 +484,18 @@ object SparqlParser {
       * always standalone `Sym`s. */
     private type PathElem = (String, Boolean, Option[PathMod])
 
-    /** Triples-block parser. `altsInto`/`closuresInto` are present only for
-      * the top-level WHERE body: path alternatives (`p1|p2`) collect the
-      * per-alternative desugared triples (expanded to UNION branches by the
-      * caller); `p+`/`p*` collect [[PathClosure]] specs. Inside
-      * OPTIONAL/MINUS/EXISTS/UNION groups both forms are rejected. */
+    /** Triples-block parser. Path alternatives (`p1|p2`) collect the
+      * per-alternative desugared triples into `altsInto` (expanded to
+      * UNION branches by the caller). `closuresInto`/`negationsInto` are
+      * present in a query's own WHERE group only: `p+`/`p*`/`p?` collect
+      * [[PathClosure]] specs and `!p` [[NegatedPath]]s; inside a nested
+      * group both are rejected. */
     private def parseTriplesSameSubject(
         out: scala.collection.mutable.Builder[TriplePattern, Seq[TriplePattern]],
         prefixes: Map[String, String],
-        altsInto: Option[scala.collection.mutable.Builder[Seq[Seq[TriplePattern]], Seq[Seq[Seq[TriplePattern]]]]] = None,
-        closuresInto: Option[scala.collection.mutable.Builder[PathClosure, Seq[PathClosure]]] = None,
-        negationsInto: Option[scala.collection.mutable.Builder[NegatedPath, Seq[NegatedPath]]] = None): Unit = {
+        altsInto: scala.collection.mutable.Builder[Seq[Seq[TriplePattern]], Seq[Seq[Seq[TriplePattern]]]],
+        closuresInto: Option[scala.collection.mutable.Builder[PathClosure, Seq[PathClosure]]],
+        negationsInto: Option[scala.collection.mutable.Builder[NegatedPath, Seq[NegatedPath]]]): Unit = {
       val Var(subj) = next(): @unchecked
       var more = true
       while (more) {
@@ -680,11 +617,9 @@ object SparqlParser {
           emit(cur, pred, lastInv, obj)
         }
         if (altChains.size > 1) {
-          require(altsInto.isDefined,
-            "path alternatives (p1|p2) are supported in the top-level WHERE body only")
           require(altChains.forall(_.forall(_._3.isEmpty)),
             "+/*/? modifiers inside path alternatives are not supported")
-          altsInto.get += altChains.map { ch =>
+          altsInto += altChains.map { ch =>
             val b = Seq.newBuilder[TriplePattern]
             desugarChain(ch, b)
             b.result()

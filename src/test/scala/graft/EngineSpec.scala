@@ -1,5 +1,10 @@
 package graft
 
+import graft.engine.{GraftEngine, SqlGenExecutor}
+import graft.fixtures.TpchLake
+import graft.sparql.SparqlParser
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end engine smoke on the sf0.001 tables (the full DuckDB-hash
@@ -10,6 +15,19 @@ class EngineSpec extends AnyFunSuite {
   private lazy val spark = GraftSession.builder("local[4]", 4).getOrCreate()
 
   private val sf = "/root/testdata/sf0.001"
+
+  private def read(t: String) = spark.read.parquet(s"$sf/$t.parquet")
+
+  private def rows(df: DataFrame) = df.collect().map(_.mkString("|")).sorted.toSeq
+
+  /** `body`'s rows through the Column engine and the SQL engine, on the
+    * lake at `dir`. */
+  private def both(body: String, dir: String = sf): Seq[Seq[String]] = {
+    val text = "PREFIX g: <http://graft.io/schema/>\n" + body
+    val viaColumns = rows(TpchLake.run(spark, dir, text))
+    val (m, c) = TpchLake.lake(dir)
+    Seq(viaColumns, rows(SqlGenExecutor.execute(spark, SparqlParser.parse(text), m, c)))
+  }
 
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
@@ -78,16 +96,6 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("OPTIONAL, MINUS and NOT EXISTS groups join on their shared variables in both engines") {
-    import org.apache.spark.sql.functions.col
-    def read(t: String) = spark.read.parquet(s"$sf/$t.parquet")
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.mkString("|")).sorted.toSeq
-    def both(body: String): Seq[Seq[String]] = {
-      val (m, c) = graft.fixtures.TpchLake.lake(sf)
-      val q = graft.sparql.SparqlParser.parse("PREFIX g: <http://graft.io/schema/>\n" + body)
-      val viaColumns = graft.fixtures.TpchLake.run(spark, sf,
-        "PREFIX g: <http://graft.io/schema/>\n" + body)
-      Seq(rows(viaColumns), rows(graft.engine.SqlGenExecutor.execute(spark, q, m, c)))
-    }
     // an OPTIONAL group of three patterns binds ?tp only where all of
     // them match: the order's customer must be Customer#000000001
     val cust1 = read("customer").filter(col("c_name") === "Customer#000000001")
@@ -121,13 +129,173 @@ class EngineSpec extends AnyFunSuite {
         |}""".stripMargin)) assert(got == expChain)
     // SELECT * lists an OPTIONAL group's own variables among the body's,
     // sorted, in both engines
-    val (m, c) = graft.fixtures.TpchLake.lake(sf)
-    val star = graft.sparql.SparqlParser.parse("PREFIX g: <http://graft.io/schema/>\n" +
+    val (m, c) = TpchLake.lake(sf)
+    val star = SparqlParser.parse("PREFIX g: <http://graft.io/schema/>\n" +
       "SELECT * WHERE { ?c g:custName ?n . OPTIONAL { ?o g:customer ?c . ?o g:totalprice ?t } }")
-    val a = graft.engine.GraftEngine.executeParsed(spark, star, m, c)
-    val b = graft.engine.SqlGenExecutor.execute(spark, star, m, c)
+    val a = GraftEngine.executeParsed(spark, star, m, c)
+    val b = SqlGenExecutor.execute(spark, star, m, c)
     assert(a.columns.toSeq == Seq("c", "n", "o", "t") && b.columns.toSeq == a.columns.toSeq)
     assert(rows(a) == rows(b))
+  }
+
+  test("VALUES on a BIND output joins it like any other binding, in both engines") {
+    import spark.implicits._
+    def expected(vals: Long*) = rows(read("customer").select(col("c_name"), lit(1L).as("x"))
+      .join(vals.toDF("x"), "x").select("c_name", "x"))
+    assert(expected(2).isEmpty && expected(1, 2).size == 150)
+    for (got <- both("SELECT ?n ?x WHERE { ?c g:custName ?n . BIND(1 AS ?x) VALUES ?x { 2 } }"))
+      assert(got == expected(2))
+    for (got <- both("SELECT ?n ?x WHERE { ?c g:custName ?n . BIND(1 AS ?x) VALUES ?x { 1 2 } }"))
+      assert(got == expected(1, 2))
+  }
+
+  test("VALUES on a variable only OPTIONAL binds joins by compatibility, in both engines") {
+    import spark.implicits._
+    val priced = read("customer").join(read("orders"), col("c_custkey") === col("o_custkey"), "left_outer")
+    val cheapest = read("orders").agg(min("o_totalprice")).head.getDouble(0)
+    def expected(vals: Double*) = rows(priced
+      .join(vals.toDF("v"), col("o_totalprice").isNull || col("o_totalprice") === col("v"))
+      .select(col("c_name"), coalesce(col("o_totalprice"), col("v"))))
+    assert(expected(1).isEmpty && expected(1, cheapest).nonEmpty)
+    val q = "SELECT ?n ?t WHERE { ?c g:custName ?n . " +
+      "OPTIONAL { ?o g:customer ?c . ?o g:totalprice ?t } VALUES ?t { %s } }"
+    for (got <- both(q.format("1"))) assert(got == expected(1))
+    for (got <- both(q.format(s"1 $cheapest"))) assert(got == expected(1, cheapest))
+  }
+
+  test("an OPTIONAL group on a variable an earlier OPTIONAL group binds joins by compatibility, in both engines") {
+    val priced = read("customer").join(read("orders"), col("c_custkey") === col("o_custkey"), "left_outer")
+      .select(col("c_name"), col("o_totalprice").as("t"))
+    val statuses = read("orders").select(col("o_totalprice").as("t2"), col("o_orderstatus").as("s"))
+    val exp = rows(priced.join(statuses, col("t") === col("t2") || col("t").isNull, "left_outer")
+      .select(col("c_name"), coalesce(col("t"), col("t2")), col("s")))
+    assert(exp.size >= 1500)
+    for (got <- both(
+      """SELECT ?n ?t ?s WHERE { ?c g:custName ?n .
+        |  OPTIONAL { ?o g:customer ?c . ?o g:totalprice ?t }
+        |  OPTIONAL { ?o2 g:totalprice ?t . ?o2 g:orderstatus ?s }
+        |}""".stripMargin)) assert(got == exp)
+  }
+
+  test("a variable one UNION branch leaves unbound joins a subquery by compatibility, in both engines") {
+    // the customer branch leaves ?t unbound, so all 150 customers join the
+    // subquery's one row; of the orders only the cheapest does
+    val cheapest = read("orders").agg(min("o_totalprice").as("t"))
+    val exp = rows(read("customer").crossJoin(cheapest).select(col("c_name"), col("t"))
+      .union(read("orders").join(cheapest, col("o_totalprice") === col("t"))
+        .select(lit(null).cast("string"), col("t"))))
+    assert(exp.size == 151)
+    for (got <- both(
+      """SELECT ?n ?t WHERE {
+        |  { ?c g:custName ?n } UNION { ?o g:totalprice ?t }
+        |  { SELECT ?t WHERE { ?o2 g:totalprice ?t } ORDER BY ?t LIMIT 1 }
+        |}""".stripMargin)) assert(got == exp)
+  }
+
+  test("a NULL source attribute makes no triple, in both engines") {
+    // the sf0.001 lake with every third customer name NULL
+    val dir = new java.io.File("target/null_lake")
+    def rmTree(f: java.io.File): Unit = {
+      if (f.isDirectory && !java.nio.file.Files.isSymbolicLink(f.toPath))
+        f.listFiles().foreach(rmTree)
+      f.delete()
+    }
+    rmTree(dir)
+    dir.mkdirs()
+    for (entry <- new java.io.File(sf).listFiles() if entry.getName != "customer.parquet")
+      java.nio.file.Files.createSymbolicLink(
+        new java.io.File(dir, entry.getName).toPath, entry.toPath)
+    read("customer")
+      .withColumn("c_name", when(col("c_custkey") % 3 =!= 0, col("c_name")))
+      .write.parquet(s"$dir/customer.parquet")
+    val exp = rows(spark.read.parquet(s"$dir/customer.parquet")
+      .filter(col("c_name").isNotNull).select("c_custkey", "c_name"))
+    assert(exp.size == 100)
+    for (got <- both("SELECT ?c ?n WHERE { ?c g:custName ?n }", dir.getAbsolutePath))
+      assert(got == exp)
+  }
+
+  test("UNION beside triple patterns or a group joins them, in both engines") {
+    val names = read("customer").select(col("c_custkey").as("k"), col("c_name").as("v"))
+    val segs = read("customer").select(col("c_custkey").as("k"), col("c_mktsegment").as("v"))
+    val exp = rows(read("orders").join(names.union(segs), col("o_custkey") === col("k"))
+      .select("o_orderkey", "v"))
+    assert(exp.size == 3000)
+    for (got <- both(
+      "SELECT ?o ?v WHERE { ?o g:customer ?c . { ?c g:custName ?v } UNION { ?c g:mktsegment ?v } }"))
+      assert(got == exp)
+    val big = read("orders").filter(col("o_totalprice") > 300000)
+    val expOpt = rows(names.union(segs).join(big, col("k") === col("o_custkey"), "left_outer")
+      .select("k", "v", "o_totalprice"))
+    for (got <- both(
+      """SELECT ?c ?v ?t WHERE {
+        |  { ?c g:custName ?v } UNION { ?c g:mktsegment ?v }
+        |  OPTIONAL { ?o g:customer ?c . ?o g:totalprice ?t . FILTER(?t > 300000) }
+        |}""".stripMargin)) assert(got == expOpt)
+  }
+
+  test("a FILTER beside a UNION applies to the union's solutions, in both engines") {
+    val names = read("customer").select(col("c_name").as("name"))
+      .union(read("supplier").select(col("s_name")))
+    val exp = rows(names.filter(col("name") === "Customer#000000001"))
+    assert(exp.size == 1)
+    for (got <- both(
+      """SELECT ?name WHERE {
+        |  { ?c g:custName ?name } UNION { ?s g:suppName ?name }
+        |  FILTER(?name = "Customer#000000001")
+        |}""".stripMargin)) assert(got == exp)
+  }
+
+  test("path alternatives beside OPTIONAL, MINUS, EXISTS, closures, negated sets and UNION, in both engines") {
+    val names = read("customer").select(col("c_custkey").as("k"), col("c_name").as("v"))
+    val segs = read("customer").select(col("c_custkey").as("k"), col("c_mktsegment").as("v"))
+    val alts = names.union(segs)
+    val big = read("orders").filter(col("o_totalprice") > 300000)
+    val bigGroup = "{ ?o g:customer ?c . ?o g:totalprice ?t . FILTER(?t > 300000) }"
+    val alt = "?c g:custName|g:mktsegment ?v ."
+    val cases = Seq(
+      s"SELECT ?c ?v ?t WHERE { $alt OPTIONAL $bigGroup }" ->
+        alts.join(big, col("k") === col("o_custkey"), "left_outer").select("k", "v", "o_totalprice"),
+      s"SELECT ?c ?v WHERE { $alt MINUS $bigGroup }" ->
+        alts.join(big, col("k") === col("o_custkey"), "left_anti"),
+      s"SELECT ?c ?v WHERE { $alt FILTER EXISTS $bigGroup }" ->
+        alts.join(big, col("k") === col("o_custkey"), "left_semi"),
+      // emp 12's managers are 6, 3 and 1 (emp k reports to k/2)
+      "SELECT ?e ?m ?v WHERE { ?e g:mgr+ ?m . ?m g:custName|g:mktsegment ?v . FILTER(?e = 12) }" ->
+        alts.filter(col("k").isin(6, 3, 1)).select(lit(12L), col("k"), col("v")),
+      // the set leaves g:mktsegment, the one unexcluded customer predicate
+      s"SELECT ?c ?v ?w WHERE { ?c a g:Customer . $alt ?c !(g:custName|g:custNation|g:acctbal) ?w }" ->
+        alts.join(segs.select(col("k"), col("v").as("w")), "k"),
+      s"SELECT ?c ?v ?x WHERE { $alt { ?c g:acctbal ?x } UNION { ?c g:custNation ?x } }" ->
+        alts.join(read("customer").select(col("c_custkey").as("k"), col("c_acctbal").as("x"))
+          .union(read("customer").select(col("c_custkey"), col("c_nationkey"))), "k"))
+    for ((query, expected) <- cases) {
+      val exp = rows(expected)
+      assert(exp.nonEmpty, query)
+      for (got <- both(query)) assert(got == exp, query)
+    }
+  }
+
+  test("SELECT * beside a subquery or a UNION lists the root node's variables, in both engines") {
+    val (m, c) = TpchLake.lake(sf)
+    val maxT = read("orders").groupBy(col("o_custkey").as("c")).agg(max("o_totalprice").as("maxT"))
+    val cases = Seq(
+      """SELECT * WHERE { ?c g:custName ?cn .
+        |  { SELECT ?c (MAX(?tp) AS ?maxT) WHERE { ?o g:customer ?c . ?o g:totalprice ?tp } GROUP BY ?c }
+        |}""".stripMargin ->
+        (Seq("c", "cn", "maxT"),
+          read("customer").join(maxT, col("c_custkey") === col("c")).select("c", "c_name", "maxT")),
+      "SELECT * WHERE { { ?c g:custName ?n } UNION { ?s g:suppName ?n } }" ->
+        (Seq("c", "n", "s"),
+          read("customer").select(col("c_custkey"), col("c_name"), lit(null).cast("long"))
+            .union(read("supplier").select(lit(null).cast("long"), col("s_name"), col("s_suppkey")))))
+    for ((body, (columns, expected)) <- cases) {
+      val q = SparqlParser.parse("PREFIX g: <http://graft.io/schema/>\n" + body)
+      val a = GraftEngine.executeParsed(spark, q, m, c)
+      val b = SqlGenExecutor.execute(spark, q, m, c)
+      assert(a.columns.toSeq == columns && b.columns.toSeq == columns, body)
+      assert(rows(a) == rows(expected) && rows(b) == rows(expected), body)
+    }
   }
 
   test("VALUES types literals per-column: mixed list keeps numeric members on a long column") {

@@ -19,25 +19,29 @@ class PathSpec extends AnyFunSuite {
   test("alternative path desugars to UNION branches sharing the rest of the body") {
     val q = SparqlParser.parse(P +
       "SELECT ?cn ?v WHERE { ?o g:customer ?c . ?o g:orderpriority|g:orderstatus ?v . ?c g:custName ?cn . }")
-    assert(q.unionBranches.size == 2)
+    // the group's one leaf expands into a UNION of two leaves
+    val branches = graft.engine.StarSpec.branches(q.where)
+    assert(q.where.isInstanceOf[graft.model.Union] && branches.size == 2)
     assert(q.patterns.isEmpty)
     // each branch carries the join triple, the custName leg, and one alternative
-    for ((ps, _) <- q.unionBranches) assert(ps.size == 3)
-    val preds = q.unionBranches.flatMap(_._1.map(_.predicate)).toSet
+    val leaves = branches.collect { case b: graft.model.Bgp => b.patterns }
+    assert(leaves.size == 2 && leaves.forall(_.size == 3))
+    val preds = leaves.flatten.map(_.predicate).toSet
     assert(preds.exists(_.endsWith("orderpriority")) && preds.exists(_.endsWith("orderstatus")))
   }
 
   test("two alternative triples expand to the cross product of choices") {
     val q = SparqlParser.parse(P +
       "SELECT ?a ?b WHERE { ?p g:partName|g:brand ?a . ?p g:ptype|g:psize ?b . }")
-    assert(q.unionBranches.size == 4)
+    val branches = graft.engine.StarSpec.branches(q.where)
+    assert(branches.size == 4 && branches.forall(_.isInstanceOf[graft.model.Bgp]))
   }
 
   test("p+ / p* record closure specs; modifiers are rejected inside groups") {
     val q = SparqlParser.parse(P + "SELECT ?e ?m WHERE { ?e g:mgr+ ?m . }")
-    assert(q.closures == Seq(graft.model.PathClosure("e", TpchLake.NS + "mgr", "m", graft.model.PathMod.OneOrMore)))
+    assert(q.bgp.closures == Seq(graft.model.PathClosure("e", TpchLake.NS + "mgr", "m", graft.model.PathMod.OneOrMore)))
     val q2 = SparqlParser.parse(P + "SELECT ?e ?m WHERE { ?e g:mgr* ?m . }")
-    assert(q2.closures.head.reflexive)
+    assert(q2.bgp.closures.head.reflexive)
     intercept[RuntimeException] {
       SparqlParser.parse(P + "SELECT ?e WHERE { ?x g:a ?e . OPTIONAL { ?e g:mgr+ ?m . } }")
     }
@@ -48,19 +52,19 @@ class PathSpec extends AnyFunSuite {
 
   test("p? records a ZeroOrOne closure; bare ? is not confused with ?var") {
     val q = SparqlParser.parse(P + "SELECT ?e ?m WHERE { ?e g:mgr? ?m . }")
-    assert(q.closures == Seq(graft.model.PathClosure("e", TpchLake.NS + "mgr", "m",
+    assert(q.bgp.closures == Seq(graft.model.PathClosure("e", TpchLake.NS + "mgr", "m",
       graft.model.PathMod.ZeroOrOne)))
-    val cl = q.closures.head
+    val cl = q.bgp.closures.head
     assert(cl.reflexive && !cl.transitive)
   }
 
   test("(p1/p2)+ parses as a composite-hop closure; malformed groups are rejected") {
     val q = SparqlParser.parse(P + "SELECT ?e ?m WHERE { ?e (g:mgr/g:mgr)+ ?m . }")
-    assert(q.closures == Seq(graft.model.PathClosure("e", TpchLake.NS + "mgr", "m",
+    assert(q.bgp.closures == Seq(graft.model.PathClosure("e", TpchLake.NS + "mgr", "m",
       graft.model.PathMod.OneOrMore, morePredicates = Seq(TpchLake.NS + "mgr"))))
-    assert(q.closures.head.predicates.size == 2)
+    assert(q.bgp.closures.head.predicates.size == 2)
     val qz = SparqlParser.parse(P + "SELECT ?e ?m WHERE { ?e (g:mgr/g:mgr)? ?m . }")
-    assert(qz.closures.head.mod == graft.model.PathMod.ZeroOrOne)
+    assert(qz.bgp.closures.head.mod == graft.model.PathMod.ZeroOrOne)
     intercept[RuntimeException] { // modifier inside the group
       SparqlParser.parse(P + "SELECT ?e ?m WHERE { ?e (g:mgr+/g:mgr)+ ?m . }")
     }
@@ -123,7 +127,7 @@ class PathSpec extends AnyFunSuite {
   test("negated property set expands to every non-excluded mapped predicate") {
     val q = SparqlParser.parse(P +
       "SELECT ?c ?v WHERE { ?c a g:Customer . ?c !(g:custNation|g:acctbal) ?v . }")
-    assert(q.negations ==
+    assert(q.bgp.negations ==
       Seq(graft.model.NegatedPath("c",
         Seq(TpchLake.NS + "custNation", TpchLake.NS + "acctbal"), "v")))
     val rows = SparkEntry.queries("q47_negated_set")(spark, sf).count()

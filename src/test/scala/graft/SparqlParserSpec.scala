@@ -29,7 +29,7 @@ class SparqlParserSpec extends AnyFunSuite {
     assert(q.filters == Seq(FilterCond("p1", ">", "630")))
     assert(q.orderBy == Seq(OrderKey("label", ascending = true)))
     assert(q.limit.contains(10))
-    assert(q.varToStarPred("c") == ("pcr", "http://bsbm.org/v/country"))
+    assert(q.patterns.contains(TriplePattern("pcr", "http://bsbm.org/v/country", ObjVar("c"))))
   }
 
   test("rdf:type via 'a' keyword and explicit qname") {
@@ -102,11 +102,11 @@ class SparqlParserSpec extends AnyFunSuite {
         |  OPTIONAL { ?o s:cust ?c . ?o s:total ?t . FILTER(?t > 5) }
         |}""".stripMargin)
     // the group keeps its own patterns and filters, out of the body's
-    assert(q.groups == Seq(Group(GroupKind.Optional,
-      Seq(TriplePattern("o", "http://s/cust", ObjVar("c")),
-        TriplePattern("o", "http://s/total", ObjVar("t"))),
-      Seq(FilterCond("t", ">", "5")))))
-    assert(q.groups.head.vars == Set("o", "c", "t"))
+    val group = Filter(Seq(FilterCond("t", ">", "5")),
+      Bgp(Seq(TriplePattern("o", "http://s/cust", ObjVar("c")),
+        TriplePattern("o", "http://s/total", ObjVar("t")))))
+    assert(q.where == LeftJoin(Bgp(Seq(TriplePattern("c", "http://s/name", ObjVar("n")))), group))
+    assert(graft.engine.StarSpec.bound(group).maybe == Set("o", "c", "t"))
     assert(q.stars.keySet == Set("c"))
     assert(q.filters.isEmpty)
   }
@@ -121,8 +121,7 @@ class SparqlParserSpec extends AnyFunSuite {
     // the required star keeps only its required pattern; the OPTIONAL
     // one joins it on ?c as a group of its own
     assert(q.stars("c") == Seq(TriplePattern("c", "http://s/name", ObjVar("n"))))
-    assert(q.groups == Seq(Group(GroupKind.Optional,
-      Seq(TriplePattern("c", "http://s/phone", ObjVar("p"))), Nil)))
+    assert(q.where == LeftJoin(q.bgp, Bgp(Seq(TriplePattern("c", "http://s/phone", ObjVar("p"))))))
   }
 
   test("OPTIONAL filter on an outer variable is rejected") {
@@ -133,7 +132,7 @@ class SparqlParserSpec extends AnyFunSuite {
         |  ?c s:name ?n .
         |  OPTIONAL { ?o s:cust ?c . FILTER(?n = "x") }
         |}""".stripMargin)
-    val e = intercept[IllegalArgumentException](graft.engine.StarSpec.body(q))
+    val e = intercept[IllegalArgumentException](graft.engine.StarSpec.plan(q))
     assert(e.getMessage.contains("FILTER(?n ...) inside OPTIONAL must reference a variable " +
       "bound by the group"), e.getMessage)
   }
@@ -145,23 +144,25 @@ class SparqlParserSpec extends AnyFunSuite {
         |  ?c s:name ?n .
         |  MINUS { ?o s:cust ?c . ?o s:total ?t . }
         |}""".stripMargin)
-    assert(q.groups.map(g => (g.kind, g.patterns.map(_.subject).toSet)) ==
-      Seq((GroupKind.Minus, Set("o"))))
+    val Minus(_, group: Bgp) = q.where: @unchecked
+    assert(group.stars.keySet == Set("o"))
     assert(q.stars.keySet == Set("c"))
   }
 
-  test("UNION branches parse separately; mixing with top-level triples fails") {
+  test("UNION branches parse separately; beside top-level triples they join the group's leaf") {
     val q = SparqlParser.parse(
       """PREFIX s: <http://s/>
         |SELECT ?n WHERE {
         |  { ?c s:cname ?n . } UNION { ?x s:sname ?n . } UNION { ?y s:pname ?n . }
         |}""".stripMargin)
-    assert(q.unionBranches.size == 3)
+    assert(graft.engine.StarSpec.branches(q.where).map(_.bgp.stars.keySet) ==
+      Seq(Set("c"), Set("x"), Set("y")))
     assert(q.patterns.isEmpty)
-    intercept[IllegalArgumentException] {
-      SparqlParser.parse(
-        "PREFIX s: <http://s/> SELECT ?n WHERE { ?a s:p ?n . { ?c s:c ?n . } UNION { ?x s:s ?n . } }")
-    }
+    val mixed = SparqlParser.parse(
+      "PREFIX s: <http://s/> SELECT ?n WHERE { ?a s:p ?n . { ?c s:c ?n . } UNION { ?x s:s ?n . } }")
+    assert(mixed.where == Join(Bgp(Seq(TriplePattern("a", "http://s/p", ObjVar("n")))),
+      Union(Bgp(Seq(TriplePattern("c", "http://s/c", ObjVar("n")))),
+        Bgp(Seq(TriplePattern("x", "http://s/s", ObjVar("n")))))))
   }
 
   test("decimal literals in filters survive tokenization") {
@@ -188,7 +189,7 @@ class SparqlParserSpec extends AnyFunSuite {
         |  BIND(SUBSTR(?a, 1, 5) AS ?s5)
         |  BIND(IF(CONTAINS(?a, "x"), 1, 0) AS ?f)
         |}""".stripMargin)
-    val byOut = q.binds.map(b => b.outVar -> b.expr).toMap
+    val byOut = binds(q.where).map(b => b.outVar -> b.expr).toMap
     assert(byOut("u") == BFun("ucase", Seq(BVar("a"))))
     assert(byOut("s5") == BFun("substr", Seq(BVar("a"), BNum("1"), BNum("5"))))
     assert(byOut("f") == BFun("if",
@@ -216,10 +217,11 @@ class SparqlParserSpec extends AnyFunSuite {
         |  FILTER EXISTS { ?y s:ref ?x . }
         |  FILTER NOT EXISTS { ?z s:neg ?x . }
         |}""".stripMargin)
-    // FILTER EXISTS → an Exists (semi) group, NOT EXISTS → a Minus (anti) one
-    assert(q.groups == Seq(
-      Group(GroupKind.Exists, Seq(TriplePattern("y", "http://s/ref", ObjVar("x"))), Nil),
-      Group(GroupKind.Minus, Seq(TriplePattern("z", "http://s/neg", ObjVar("x"))), Nil)))
+    // both wrap the group: EXISTS a semi join, NOT EXISTS an anti join
+    assert(q.where == Filter(Seq(
+      Exists(Bgp(Seq(TriplePattern("y", "http://s/ref", ObjVar("x")))), negated = false),
+      Exists(Bgp(Seq(TriplePattern("z", "http://s/neg", ObjVar("x")))), negated = true)),
+      Bgp(Seq(TriplePattern("x", "http://s/v", ObjVar("v"))))))
     assert(q.stars.keySet == Set("x"))
   }
 
@@ -256,7 +258,7 @@ class SparqlParserSpec extends AnyFunSuite {
         |  BIND(?a - 3 AS ?r)
         |  BIND(CONCAT(?a, "_", ?b) AS ?z)
         |}""".stripMargin)
-    val byOut = q.binds.map(b => b.outVar -> b.expr).toMap
+    val byOut = binds(q.where).map(b => b.outVar -> b.expr).toMap
     // * binds tighter than +
     assert(byOut("p") == BOp("+", BVar("a"), BOp("*", BVar("b"), BNum("2"))))
     // parens override precedence
@@ -265,6 +267,12 @@ class SparqlParserSpec extends AnyFunSuite {
     assert(byOut("r") == BOp("-", BVar("a"), BNum("3")))
     assert(byOut("z") == BFun("concat", Seq(BVar("a"), BStr("_"), BVar("b"))))
     // pruning sees all operand vars, not bind outputs
-    assert(q.binds.flatMap(_.expr.vars).toSet == Set("a", "b"))
+    assert(binds(q.where).flatMap(_.expr.vars).toSet == Set("a", "b"))
+  }
+
+  /** The BIND specs of a group, in query order. */
+  private def binds(p: Pattern): Seq[BindSpec] = p match {
+    case Extend(i, b) => binds(i) :+ b
+    case _ => Nil
   }
 }

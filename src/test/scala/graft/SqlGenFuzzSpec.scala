@@ -75,7 +75,15 @@ class SqlGenFuzzSpec extends AnyFunSuite {
       negSet: Boolean = false,
       /** an AVG-per-customer SPARQL 1.1 subquery joined on ?c — the
         * derived-table lowering in both engines */
-      subquery: Boolean = false)
+      subquery: Boolean = false,
+      /** `VALUES ?v { … }` (var, rendered literals) on a star variable, a
+        * BIND output or a variable only the OPTIONAL star binds: pushed
+        * into the star, or joined as an inline table */
+      values: Option[(String, Seq[String])] = None,
+      /** a UNION beside the outer pattern binding ?ux: "both" branches
+        * join it on ?c, "one" branch leaves ?c unbound (a compatibility
+        * join) */
+      union: Option[String] = None)
 
   private def subset[A](xs: Seq[A], min: Int): Gen[Seq[A]] =
     Gen.someOf(xs).map(_.toSeq).retryUntil(_.size >= min).map(s => xs.filter(s.contains))
@@ -190,8 +198,23 @@ class SqlGenFuzzSpec extends AnyFunSuite {
     subquery <-
       if (plainC) Gen.frequency(3 -> Gen.const(false), 1 -> Gen.const(true))
       else Gen.const(false)
+    optPreds = stars.filter(s => optStar.contains(s.subj)).flatMap(_.preds)
+    valueTargets = keptPreds.filter(_.domain.nonEmpty).map(p => (p.objVar, p.domain)) ++
+      bind.map(b => (b.outVar, if (b.expr.startsWith("(?")) Seq("101", "150") else Seq("BUILDING", "BUILDING_x"))) ++
+      optPreds.map(p => (p.objVar, if (p.domain.nonEmpty) p.domain else Seq("1", "2")))
+    values <-
+      if (valueTargets.isEmpty) Gen.const(Option.empty[(String, Seq[String])])
+      else Gen.frequency(3 -> Gen.const(Option.empty[(String, Seq[String])]), 1 -> (for {
+        (v, domain) <- Gen.oneOf(valueTargets)
+        n <- Gen.choose(1, math.min(2, domain.size))
+        vs <- Gen.pick(n, domain)
+      } yield Some((v, vs.toSeq))))
+    union <-
+      if (plainC) Gen.frequency(3 -> Gen.const(Option.empty[String]),
+        1 -> Gen.oneOf("both", "one").map(Option(_)))
+      else Gen.const(Option.empty[String])
   } yield Model(stars, optStar, drop, filters, agg, bind, distinct,
-    includeSubject, slice, altPred, negSet, subquery)
+    includeSubject, slice, altPred, negSet, subquery, values, union)
 
   private def selectVars(m: Model): Seq[String] = m.agg match {
     case Some(a) => Seq(a.groupVar, "agg1")
@@ -199,7 +222,8 @@ class SqlGenFuzzSpec extends AnyFunSuite {
       (if (m.includeSubject) Seq(m.stars.head.subj) else Nil) ++
         m.stars.flatMap(_.preds.map(_.objVar)) ++ m.bind.map(_.outVar).toSeq ++
         (if (m.negSet) Seq("nv") else Nil) ++
-        (if (m.subquery) Seq("sqv") else Nil)
+        (if (m.subquery) Seq("sqv") else Nil) ++
+        (if (m.union.nonEmpty) Seq("ux") else Nil)
   }
 
   private def render(m: Model): String = {
@@ -237,6 +261,14 @@ class SqlGenFuzzSpec extends AnyFunSuite {
       if (op == "regex") sb ++= s"  FILTER regex(?${p.objVar}, $rhs)\n"
       else sb ++= s"  FILTER(?${p.objVar} $op $rhs)\n"
     for (b <- m.bind) sb ++= s"  BIND(${b.expr} AS ?${b.outVar})\n"
+    for ((v, vs) <- m.values) {
+      val lits = vs.map(x => if (x.toDoubleOption.isDefined) x else "\"" + x + "\"")
+      sb ++= s"  VALUES ?$v { ${lits.mkString(" ")} }\n"
+    }
+    m.union.foreach {
+      case "both" => sb ++= "  { ?c g:custName ?ux } UNION { ?c g:mktsegment ?ux }\n"
+      case _ => sb ++= "  { ?c g:custName ?ux } UNION { ?r g:regionName ?ux }\n"
+    }
     sb ++= "}\n"
     for (a <- m.agg) {
       sb ++= s"GROUP BY ?${a.groupVar}\n"
@@ -274,6 +306,8 @@ class SqlGenFuzzSpec extends AnyFunSuite {
     var nDistinctSliced = 0
     var nNegSet = 0
     var nSubquery = 0
+    var nUnion = 0
+    val nValues = scala.collection.mutable.Set.empty[String] // targets lowered
     // three canonical models seed the space so the called-out shapes are
     // covered regardless of what the random seeds happen to produce; the
     // random tail can still re-hit them in richer compositions
@@ -284,7 +318,20 @@ class SqlGenFuzzSpec extends AnyFunSuite {
       Model(Seq(cStar), None, None, Nil, None, None, distinct = false,
         includeSubject = true, slice = None, negSet = true),
       Model(Seq(cStar), None, None, Nil, None, None, distinct = false,
-        includeSubject = true, slice = Some((5, 0)), subquery = true))
+        includeSubject = true, slice = Some((5, 0)), subquery = true),
+      // VALUES on a star variable, on a BIND output, on a variable only
+      // the OPTIONAL star binds; a UNION beside the outer pattern
+      Model(Seq(StarM("c", Nil, custPreds.take(3))), None, None, Nil, None, None,
+        distinct = false, includeSubject = false, slice = None,
+        values = Some(("seg", Seq("BUILDING", "FURNITURE")))),
+      Model(Seq(cStar), None, None, Nil, None,
+        Some(BindM("bv", "(UCASE(?cn))", Seq("cn"))), distinct = false,
+        includeSubject = true, slice = None, values = Some(("bv", Seq("BUILDING")))),
+      Model(Seq(StarM("o", Seq("customer" -> "c"), ordPreds.take(2)), cStar), Some("o"), None,
+        Nil, None, None, distinct = false, includeSubject = false, slice = None,
+        values = Some(("tp", Seq("1", "2")))),
+      Model(Seq(cStar), None, None, Nil, None, None, distinct = false,
+        includeSubject = true, slice = None, union = Some("one")))
     while (checked < 60) {
       val m =
         if (checked < forced.size) forced(checked)
@@ -305,6 +352,11 @@ class SqlGenFuzzSpec extends AnyFunSuite {
           if (m.distinct && m.slice.nonEmpty) nDistinctSliced += 1
           if (m.negSet) nNegSet += 1
           if (m.subquery) nSubquery += 1
+          if (m.union.nonEmpty) nUnion += 1
+          for ((v, _) <- m.values)
+            nValues += (if (m.bind.exists(_.outVar == v)) "bind"
+              else if (m.stars.exists(s => m.optStar.contains(s.subj) && s.preds.exists(_.objVar == v))) "optional"
+              else "star")
           val a = GraftEngine.executeParsed(spark, q, mappings, config)
           val b = SqlGenExecutor.execute(spark, q, mappings, config)
           assert(a.columns.toSeq == b.columns.toSeq, s"columns differ for:\n$text")
@@ -322,6 +374,9 @@ class SqlGenFuzzSpec extends AnyFunSuite {
       "no lowered model combined DISTINCT with ORDER BY+LIMIT/OFFSET")
     assert(nNegSet >= 1, "no lowered model carried a negated property set")
     assert(nSubquery >= 1, "no lowered model carried a subquery")
+    assert(nUnion >= 1, "no lowered model carried a UNION beside the outer pattern")
+    assert(nValues == Set("star", "bind", "optional"),
+      s"lowered VALUES targets: ${nValues.mkString(", ")}")
   }
 
   test("fuzzed closure models: recursive-CTE lowering agrees with the Column engine (20 seeded cases)") {

@@ -87,15 +87,6 @@ class SqlGenSpec extends AnyFunSuite {
       }
       assert(e.getMessage.contains(needle), e.getMessage)
     }
-    // SELECT * lowers only where both engines' column orders provably
-    // coincide — subquery USING joins reorder keys in SQL
-    refuse(
-      """SELECT * WHERE {
-        |  ?c g:custName ?cn .
-        |  { SELECT ?c (AVG(?tp) AS ?avgT) WHERE {
-        |      ?o g:customer ?c . ?o g:totalprice ?tp .
-        |    } GROUP BY ?c }
-        |}""".stripMargin, "SELECT *")
     // a star with no join edge beside joined ones is a Cross step of the
     // shared join plan: the Column engine cross-joins it, SQL refuses
     // (the lowering once left ?r out of the FROM)

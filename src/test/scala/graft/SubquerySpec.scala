@@ -21,8 +21,9 @@ class SubquerySpec extends AnyFunSuite {
         |      ?o g:customer ?c . ?o g:totalprice ?tp .
         |    } GROUP BY ?c }
         |}""".stripMargin)
-    assert(q.subqueries.size == 1)
-    val sub = q.subqueries.head
+    // the subquery joins the outer group's leaf
+    val graft.model.Join(outer: graft.model.Bgp, graft.model.SubSelect(sub)) = q.where: @unchecked
+    assert(outer == q.bgp)
     assert(sub.groupBy == Seq("c"))
     assert(sub.aggregates.map(_.alias) == Seq("avgT"))
     assert(sub.stars.keySet == Set("o"))
