@@ -149,7 +149,7 @@ class SparqlParserSpec extends AnyFunSuite {
     assert(q.stars.keySet == Set("c"))
   }
 
-  test("UNION branches parse separately; beside top-level triples they join the group's leaf") {
+  test("UNION branches parse separately; beside top-level triples they join a leaf") {
     val q = SparqlParser.parse(
       """PREFIX s: <http://s/>
         |SELECT ?n WHERE {
