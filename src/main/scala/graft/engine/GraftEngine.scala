@@ -145,6 +145,7 @@ object GraftEngine {
           sc.value.fold(lit(sc.mapping.classIri.get))(
             StarCompiler.render(_).cast("string")).as("o"))
       }.reduce(_.unionByName(_))
+        .filter(col("o").isNotNull)
         .join(ids, Seq("sid"), "left_semi")
         .select(col("sid").cast("string").as("s"), col("p"), col("o"))
         .distinct()
@@ -194,6 +195,7 @@ object GraftEngine {
         Seq(StarCompiler.render(sc.id).as(sc.id.outCol),
           StarCompiler.render(sc.value.get).cast("string").as(sc.value.get.outCol))
       }.reduce(_.unionByName(_))
+        .filter(col(StarCompiler.varCol(ng.subjVar, ng.objVar)).isNotNull)
       m.updated(ng.subjVar,
         m(ng.subjVar).join(expansion, Seq(StarCompiler.idCol(ng.subjVar))))
     }

@@ -239,8 +239,9 @@ object SqlGenExecutor {
         val tbl = registerTable(sc.mapping, s"DESCRIBE ?$v")
         val o = sc.value.fold(litSql(sc.mapping.classIri.get))(c =>
           s"CAST(${tx(c)} AS STRING)")
+        val where = sc.value.fold("")(c => s" WHERE ${tx(c)} IS NOT NULL")
         s"SELECT ${tx(sc.id)} AS ${sc.id.outCol}, ${litSql(sc.predicate)} AS p, " +
-          s"$o AS o FROM $tbl"
+          s"$o AS o FROM $tbl$where"
       }
       return Lowered(
         s"WITH g_ids AS (SELECT DISTINCT $v AS sid FROM (${inner.sql}) g_d) " +
@@ -302,7 +303,7 @@ object SqlGenExecutor {
         val tbl = registerTable(sc.mapping, s"negated set on ?${ng.subjVar}")
         val v = sc.value.get
         s"SELECT ${tx(sc.id)} AS ${sc.id.outCol}, " +
-          s"CAST(${tx(v)} AS STRING) AS ${v.outCol} FROM $tbl"
+          s"CAST(${tx(v)} AS STRING) AS ${v.outCol} FROM $tbl WHERE ${tx(v)} IS NOT NULL"
       }.mkString(" UNION ALL ")
 
     /** `p+`/`p*` star: replace the one-hop binding column with the

@@ -77,14 +77,17 @@ object StarCompiler {
   def applyInlineTransforms(df: DataFrame, star: String,
       transforms: Seq[JoinTransform]): DataFrame =
     transforms.foldLeft(df) { (d, t) =>
-      val target =
-        if (t.side == 'l' && t.leftVar == star) Some(varCol(star, t.rightVar))
-        else if (t.side == 'r' && t.rightVar == star) Some(idCol(star))
-        else None
-      target.fold(d) { c =>
-        Transforms.skipValues(t.fns).foldLeft(d.withColumn(c, Transforms(col(c), t.fns)))(
-          (dd, v) => dd.filter(col(c) =!= lit(v)))
-      }
+      if (t.side == 'l' && t.leftVar == star) {
+        val c = varCol(star, t.rightVar)
+        val skips = Transforms.skipValues(t.fns)
+        val d2 = d.withColumn(c, Transforms(col(c), t.fns))
+        skips.foldLeft(d2)((dd, v) => dd.filter(col(c) =!= lit(v)))
+      } else if (t.side == 'r' && t.rightVar == star) {
+        val c = idCol(star)
+        val skips = Transforms.skipValues(t.fns)
+        val d2 = d.withColumn(c, Transforms(col(c), t.fns))
+        skips.foldLeft(d2)((dd, v) => dd.filter(col(c) =!= lit(v)))
+      } else d
     }
 
   private def applyStarFilters(df: DataFrame, spec: StarSpec.Spec): DataFrame =

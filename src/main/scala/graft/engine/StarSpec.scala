@@ -53,7 +53,11 @@ object StarSpec {
 
   /** One per-source scan of a source expansion: the mapping's subject
     * column and one mapped predicate's value column. `value` is None only
-    * on DESCRIBE's rdf:type row, whose object is the mapping's class IRI. */
+    * on DESCRIBE's rdf:type row, whose object is the mapping's class IRI.
+    * A row whose value is NULL is no triple, as in a star scan
+    * ([[Spec]]`.notNull`): both engines keep a DESCRIBE or negated-set
+    * scan's non-null values only, and a closure's edge relation drops null
+    * endpoints itself. */
   final case class Scan(mapping: EntityMapping, id: ColSpec, predicate: String,
       value: Option[ColSpec])
 
@@ -259,20 +263,20 @@ object StarSpec {
     * (every UNION branch's) when the leaf's stars certainly bind its
     * variable, and the scan applies it ([[pushed]]); the rest stay on
     * their node. The needed vars are the query's projected, aggregated,
-    * grouped, ordered and transform ones, plus every FILTER, VALUES and
-    * BIND operand, every variable a join matches on, every repeated
-    * object var and every negated-set var (reference
-    * Planner.getNeededPredicates, Planner.scala:24-60; all of them for
-    * SELECT *). Planning each leaf
-    * and each nested group's refusals ([[checkGroup]]) happens here, in
-    * tree order, so both engines refuse a query alike before reading a
-    * source. */
+    * grouped, ordered and transform ones (every variable the tree may
+    * bind, for SELECT *, ASK and CONSTRUCT), plus every FILTER, VALUES
+    * and BIND operand, every variable a join matches on, every repeated
+    * object var and every negated-set var, in a MINUS or EXISTS group too
+    * (reference Planner.getNeededPredicates, Planner.scala:24-60).
+    * Planning each leaf and each nested group's refusals ([[checkGroup]])
+    * happens here, in tree order, so both engines refuse a query alike
+    * before reading a source. */
   def plan(q: ParsedQuery): Plan = {
     val where = pushDown(q.where)
-    val needed =
-      if (q.selectAll) bound(where).maybe
-      else (q.selectVarNames ++ q.aggregates.map(_.varName).filter(_ != "*") ++ q.groupBy ++
-        q.orderBy.map(_.varName) ++ q.transforms.map(_.rightVar)).toSet ++ referenced(where)
+    val needed = referenced(where) ++
+      (if (q.selectAll) bound(where).maybe
+      else q.selectVarNames ++ q.aggregates.map(_.varName).filter(_ != "*") ++ q.groupBy ++
+        q.orderBy.map(_.varName) ++ q.transforms.map(_.rightVar))
     val plan = new Plan(where, needed)
     def check(p: Pattern): Unit = p match {
       case b: Bgp => plan.body(b)

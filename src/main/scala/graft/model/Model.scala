@@ -133,7 +133,13 @@ final case class JoinTransform(leftVar: String, rightVar: String, side: Char, fn
   * or subquery, VALUES, BIND) then combine with in query order; its
   * FILTERs, [[Exists]] included, wrap the whole group. Every binary node
   * joins on the variables both sides may bind
-  * ([[graft.engine.StarSpec.shared]]). */
+  * ([[graft.engine.StarSpec.shared]]).
+  *
+  * One exception to §18: a triple pattern AFTER an OPTIONAL, MINUS or
+  * BIND joins the leaf before that element, not the element's result.
+  * `{ A OPTIONAL { B } C }` is `LeftJoin(A ∪ C, B)`, not §18's
+  * `Join(LeftJoin(A, B), C)`. The two agree when every variable B and C
+  * share is bound in A; when one is not, the answers can differ. */
 sealed trait Pattern {
 
   /** The group's own leaf: the BGP its other elements combine with;

@@ -122,7 +122,8 @@ object SparqlParser {
     val toks = Vector.newBuilder[Tok]
     var i = 0
     def isWordChar(c: Char) =
-      c.isLetterOrDigit || c == '_' || c == ':' || c == '-' || c == '+'
+      c.isLetterOrDigit || c == '_' || c == ':' || c == '-' || c == '+' ||
+        (c == '.' && false)
     while (i < s.length) {
       val c = s.charAt(i)
       if (c.isWhitespace) i += 1
@@ -155,13 +156,23 @@ object SparqlParser {
         if (CmpOps.contains(two)) { toks += Sym(two); i += 2 }
         else { toks += Sym(c.toString); i += 1 }
       } else if (c == '.') {
-        toks += Sym("."); i += 1
+        // distinguish triple terminator from decimal point: digit.digit
+        val prevDigit = toks.result().lastOption.exists {
+          case Word(w) => w.nonEmpty && w.last.isDigit; case _ => false
+        }
+        val nextDigit = i + 1 < s.length && s.charAt(i + 1).isDigit
+        if (prevDigit && nextDigit) {
+          // merge into previous number word
+          var j = i + 1
+          while (j < s.length && s.charAt(j).isDigit) j += 1
+          val all = toks.result()
+          val Word(prev) = all.last: @unchecked
+          toks.clear(); toks ++= all.init
+          toks += Word(prev + s.substring(i, j)); i = j
+        } else { toks += Sym("."); i += 1 }
       } else if (isWordChar(c)) {
-        // a '.' between two digits is a decimal point, not a terminator
-        def decimalPoint(j: Int) = s.charAt(j) == '.' && s.charAt(j - 1).isDigit &&
-          j + 1 < s.length && s.charAt(j + 1).isDigit
         var j = i
-        while (j < s.length && (isWordChar(s.charAt(j)) || decimalPoint(j))) j += 1
+        while (j < s.length && isWordChar(s.charAt(j))) j += 1
         toks += Word(s.substring(i, j)); i = j
       } else sys.error(s"unexpected char '$c' at offset $i")
     }
@@ -241,7 +252,11 @@ object SparqlParser {
           val agg = parseAggExpr(closeParen = false).agg
           val Sym(op) = next(): @unchecked
           require(CmpOps.contains(op), s"unsupported HAVING op $op")
-          val value = literal("HAVING")
+          val value = next() match {
+            case Word(v) => v
+            case Str(s) => s
+            case t => sys.error(s"unsupported HAVING literal: $t")
+          }
           expectSym(")")
           having :+= ((agg, op, value))
         case Some(w) if isKw(w, "GROUP") =>
@@ -280,8 +295,11 @@ object SparqlParser {
       * group; path alternatives (`p1|p2`, §9.3) expand that leaf into the
       * UNION of one leaf per choice. The group's other elements then
       * combine with the leaf in query order, and its FILTERs, EXISTS ones
-      * included, wrap the whole group. Closures and negated property sets
-      * are parsed in a query's own WHERE group only (`top`). */
+      * included, wrap the whole group. A triple pattern after an OPTIONAL,
+      * MINUS or BIND so joins the leaf before that element, which departs
+      * from §18 when it shares a variable with the element that the
+      * patterns before it do not bind ([[Pattern]]). Closures and negated
+      * property sets are parsed in a query's own WHERE group only (`top`). */
     private def group(prefixes: Map[String, String], top: Boolean): Pattern = {
       expectSym("{")
       val patterns = Seq.newBuilder[TriplePattern]
@@ -320,8 +338,13 @@ object SparqlParser {
           val Var(v) = next(): @unchecked
           expectSym("{")
           val vs = Seq.newBuilder[String]
-          while (!peek.contains(Sym("}"))) vs += literal("VALUES")
-          next()
+          var inVals = true
+          while (inVals) peek match {
+            case Some(Sym("}")) => next(); inVals = false
+            case Some(Word(x)) => next(); vs += x
+            case Some(Str(x)) => next(); vs += x
+            case t => sys.error(s"unsupported VALUES entry: $t")
+          }
           joined(Table(v, vs.result()))
         case Some(Sym("{")) if pos + 1 < toks.length && isKw(toks(pos + 1), "SELECT") =>
           // { SELECT ... } — SPARQL 1.1 §12 subquery
@@ -427,49 +450,61 @@ object SparqlParser {
       SelectAgg(AggSpec(fn, v, alias, distinctAgg, separator))
     }
 
-    /** `regex(?v, "pat")`, `(regex(?v, "pat"))`, `(?v op lit)` or
-      * `(?v [NOT] IN (lit, …))`. */
     private def parseFilter(): FilterCond = {
-      val wrapped = peek.contains(Sym("("))
-      if (wrapped) next()
-      val f =
-        if (takeKw("regex")) {
-          expectSym("(")
+      peek match {
+        case Some(w) if isKw(w, "regex") =>
+          next(); expectSym("(")
           val Var(v) = next(): @unchecked
           expectSym(",")
           val Str(pat) = next(): @unchecked
           expectSym(")")
           FilterCond(v, "regex", pat)
-        } else {
-          require(wrapped, s"expected '(' after FILTER, got $peek")
-          val Var(v) = next(): @unchecked
-          val negated = takeKw("NOT")
-          if (takeKw("IN")) {
-            expectSym("(")
-            val vals = Seq.newBuilder[String]
-            var more = !peek.contains(Sym(")"))
-            while (more) {
-              vals += literal("IN-list")
-              if (peek.contains(Sym(","))) next() else more = false
-            }
-            expectSym(")")
-            FilterCond(v, if (negated) "not in" else "in", "", vals.result())
-          } else {
-            require(!negated, "expected IN after NOT")
-            val Sym(op) = next(): @unchecked
-            require(CmpOps.contains(op), s"unsupported filter op $op")
-            FilterCond(v, op, literal("filter"))
+        case _ =>
+          expectSym("(")
+          peek match {
+            case Some(w) if isKw(w, "regex") =>
+              next(); expectSym("(")
+              val Var(v) = next(): @unchecked
+              expectSym(",")
+              val Str(pat) = next(): @unchecked
+              expectSym(")"); expectSym(")")
+              FilterCond(v, "regex", pat)
+            case _ =>
+              val Var(v) = next(): @unchecked
+              peek match {
+                case Some(w) if isKw(w, "IN") || isKw(w, "NOT") =>
+                  val negated = isKw(w, "NOT")
+                  next()
+                  if (negated) {
+                    val t = next()
+                    require(isKw(t, "IN"), s"expected IN after NOT, got $t")
+                  }
+                  expectSym("(")
+                  val vals = Seq.newBuilder[String]
+                  var more = !peek.contains(Sym(")"))
+                  while (more) {
+                    vals += (next() match {
+                      case Word(w0) => w0
+                      case Str(s) => s
+                      case t => sys.error(s"unsupported IN-list literal: $t")
+                    })
+                    if (peek.contains(Sym(","))) next() else more = false
+                  }
+                  expectSym(")"); expectSym(")")
+                  FilterCond(v, if (negated) "not in" else "in", "", vals.result())
+                case _ =>
+                  val Sym(op) = next(): @unchecked
+                  require(CmpOps.contains(op), s"unsupported filter op $op")
+                  val value = next() match {
+                    case Word(w) => w
+                    case Str(s) => s
+                    case t => sys.error(s"unsupported filter literal: $t")
+                  }
+                  expectSym(")")
+                  FilterCond(v, op, value)
+              }
           }
-        }
-      if (wrapped) expectSym(")")
-      f
-    }
-
-    /** A literal: a number or word, or a string. */
-    private def literal(what: String): String = next() match {
-      case Word(w) => w
-      case Str(s) => s
-      case t => sys.error(s"unsupported $what literal: $t")
+      }
     }
 
     /** Fresh intermediate variable for sequence-path desugaring. */

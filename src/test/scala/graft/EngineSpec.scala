@@ -138,6 +138,36 @@ class EngineSpec extends AnyFunSuite {
     assert(rows(a) == rows(b))
   }
 
+  test("SELECT * and ASK keep a MINUS or NOT EXISTS group's own join and FILTER variables, in both engines") {
+    val (m, c) = TpchLake.lake(sf)
+    def run(body: String): Seq[(Seq[String], Seq[String])] = {
+      val q = SparqlParser.parse("PREFIX g: <http://graft.io/schema/>\n" + body)
+      Seq(GraftEngine.executeParsed(spark, q, m, c), SqlGenExecutor.execute(spark, q, m, c))
+        .map(df => (df.columns.toSeq, rows(df)))
+    }
+    val names = read("customer").select("c_custkey", "c_name")
+    // customers with no line of quantity > 49, through a three-star group
+    val big = read("orders").join(read("lineitem").filter(col("l_quantity") > 49),
+      col("o_orderkey") === col("l_orderkey"))
+    val expChain = rows(names.join(big, col("c_custkey") === col("o_custkey"), "left_anti"))
+    // customers whose balance is at most 9000, through a one-star group
+    val expBal = rows(read("customer").filter(col("c_acctbal") <= 9000).select("c_custkey", "c_name"))
+    assert(expChain.size == 65 && expBal.nonEmpty && expBal.size < 150)
+    val chain = "{ ?o g:customer ?c . ?l g:order ?o . ?l g:quantity ?q . FILTER(?q > 49) }"
+    val bal = "{ ?c g:acctbal ?b FILTER(?b > 9000) }"
+    for ((kw, group, exp) <- Seq(("MINUS", chain, expChain), ("FILTER NOT EXISTS", chain, expChain),
+        ("MINUS", bal, expBal), ("FILTER NOT EXISTS", bal, expBal))) {
+      val query = s"SELECT * WHERE { ?c g:custName ?n . $kw $group }"
+      for (got <- run(query)) assert(got == (Seq("c", "n"), exp), query)
+      val ask = s"ASK WHERE { ?c g:custName ?n . $kw $group }"
+      for ((_, got) <- run(ask)) assert(got == Seq("true"), ask)
+    }
+    // every balance is above -1000, so nothing survives the group
+    assert(read("customer").filter(col("c_acctbal") <= -1000).isEmpty)
+    val none = "ASK WHERE { ?c g:custName ?n . FILTER NOT EXISTS { ?c g:acctbal ?b FILTER(?b > -1000) } }"
+    for ((_, got) <- run(none)) assert(got == Seq("false"), none)
+  }
+
   test("VALUES on a BIND output joins it like any other binding, in both engines") {
     import spark.implicits._
     def expected(vals: Long*) = rows(read("customer").select(col("c_name"), lit(1L).as("x"))
@@ -213,6 +243,23 @@ class EngineSpec extends AnyFunSuite {
     assert(exp.size == 100)
     for (got <- both("SELECT ?c ?n WHERE { ?c g:custName ?n }", dir.getAbsolutePath))
       assert(got == exp)
+    // a negated set expands into the names left, a NULL one included
+    for (got <- both("SELECT ?c ?v WHERE { ?c a g:Customer . " +
+        "?c !(g:custNation|g:acctbal|g:mktsegment) ?v }", dir.getAbsolutePath))
+      assert(got == exp)
+    // DESCRIBE lists no triple for a NULL name
+    val described = spark.read.parquet(s"$dir/customer.parquet").filter(col("c_acctbal") > 9000)
+    val attrs = Seq("custName" -> "c_name", "custNation" -> "c_nationkey",
+      "acctbal" -> "c_acctbal", "mktsegment" -> "c_mktsegment")
+    val triples = attrs.map { case (p, a) =>
+      described.select(col("c_custkey").cast("string"), lit(s"http://graft.io/schema/$p"),
+        col(a).cast("string"))
+    }.reduce(_.union(_)).union(described.select(col("c_custkey").cast("string"),
+      lit(graft.model.TriplePattern.RdfType), lit("http://graft.io/schema/Customer")))
+    val expDescribe = rows(triples.na.drop())
+    assert(expDescribe.size < rows(triples).size)
+    for (got <- both("DESCRIBE ?c WHERE { ?c g:acctbal ?b . FILTER(?b > 9000) }",
+        dir.getAbsolutePath)) assert(got == expDescribe)
   }
 
   test("UNION beside triple patterns or a group joins them, in both engines") {
